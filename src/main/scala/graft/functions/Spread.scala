@@ -73,17 +73,33 @@ object Spread {
       // OPTIMIZATION_r18.md pins the default). `size > floor`
       // guarantees at least workFactor partitions; the wave cap and
       // the floor/ceiling gates are unchanged.
-      // Default 16 from the measured sweep (OPTIMIZATION_r18.md): at
-      // sf0.1/local[32], workFactor 16 beat both the r17 full-wave
-      // target (d03 2.34 vs 2.54 s, t34 2.37 vs 2.42, t30 1.80 vs
-      // 1.95) and the one-partition-per-split literal (d03 4.61, t34
-      // 4.65 — starves the CPU-amplified consumers). Env-overridable
-      // for re-tuning on other hosts; everything stays derived from
-      // session conf, never a host constant.
-      val div = sys.env.getOrElse("SPARK_GRAFT_SPREAD_DIV", "16").toInt
-      val unit = (floor / div).max(BigInt(1))
-      val parts = ((size + unit - 1) / unit).toInt
-      df.repartition(math.min(waveCap, parts))
+      df.repartition(parts(size, floor, WorkFactor, waveCap))
     } else df
   }
+
+  /** Spread unit = `floor / div` bytes; the partition count covers
+    * `size` in units, capped at `waveCap` — clamped in BigInt, so a
+    * multi-GB input with a 1-byte unit cannot wrap a negative Int. */
+  private[graft] def parts(size: BigInt, floor: BigInt, div: Int,
+      waveCap: Int): Int = {
+    val unit = (floor / div).max(BigInt(1))
+    ((size + unit - 1) / unit).min(BigInt(waveCap)).toInt
+  }
+
+  /** `SPARK_GRAFT_SPREAD_DIV`, validated once. Default 16 from the
+    * measured sweep (OPTIMIZATION_r18.md): at sf0.1/local[32],
+    * workFactor 16 beat both the r17 full-wave target (d03 2.34 vs
+    * 2.54 s, t34 2.37 vs 2.42, t30 1.80 vs 1.95) and the
+    * one-partition-per-split literal (d03 4.61, t34 4.65 — starves the
+    * CPU-amplified consumers). Env-overridable for re-tuning on other
+    * hosts; everything else stays derived from session conf. */
+  private[graft] def parseDiv(raw: Option[String]): Int = {
+    val div = raw.fold(16)(v => v.trim.toIntOption.getOrElse(
+      throw new IllegalArgumentException(
+        s"SPARK_GRAFT_SPREAD_DIV must be an integer, got '$v'")))
+    require(div >= 1, s"SPARK_GRAFT_SPREAD_DIV must be >= 1, got $div")
+    div
+  }
+
+  private lazy val WorkFactor = parseDiv(sys.env.get("SPARK_GRAFT_SPREAD_DIV"))
 }

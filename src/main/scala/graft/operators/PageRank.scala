@@ -55,6 +55,9 @@ object PageRank {
     require(dampNum > 0 && dampNum < dampDen,
       s"PageRank.ranks: damping must satisfy 0 < num < den, " +
         s"got $dampNum/$dampDen")
+    // (1-d) * Unit in pico-units: a damping denominator past ~9.2e6
+    // overflows a long, so fail loudly before any job runs
+    val teleport = Math.multiplyExact(Unit, (dampDen - dampNum).toLong)
     // every round references the edge list, and the node/out-weight
     // tables derive from it — persist once (hashed on src, the
     // partitioning every per-round join and the wsum aggregation
@@ -83,7 +86,7 @@ object PageRank {
       .persist()
     // teleport inflow (1-d) * Unit / N, received every round — all
     // operands positive, so Scala's truncating / matches SQL div
-    val base = ((Unit * (dampDen - dampNum)) / dampDen) / n
+    val base = (teleport / dampDen) / n
     var r = nodes.select(col("node"), lit(Unit / n).as("r"))
     (1 to iters).foreach { _ =>
       val contrib = ew

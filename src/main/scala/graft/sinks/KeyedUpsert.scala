@@ -4,6 +4,7 @@ import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** MERGE-semantics keyed upsert onto plain Parquet (SURVEY.md K4): the
@@ -32,7 +33,9 @@ import org.apache.spark.sql.functions._
   * Cost per micro-batch is O(|batch| + |touched buckets|), independent
   * of total table size — the property that makes MERGE viable at 100 TB
   * (with N sized so a bucket fits an executor; compose with a date
-  * partition for time-series tables). Replaying the same batch is
+  * partition for time-series tables). A commit runs ONE shuffle (the
+  * batch and the touched buckets' live rows, clustered by bucket) and
+  * writes ONE file per touched bucket. Replaying the same batch is
   * idempotent: the merge converges to the same rows. Writers are
   * single-owner per table (as in the reference's one-stream-per-table
   * layout); a racing writer loses the manifest rename and fails loudly.
@@ -42,6 +45,7 @@ object KeyedUpsert {
   val BucketCol = "__bucket"
   private val ManifestDir = "_manifests"
   private val DataDir = "data"
+  private val SrcCol = "__src" // merge tag: 1 incoming, 0 existing
 
   private def bucketed(df: DataFrame, keyCols: Seq[String], n: Int): DataFrame =
     df.withColumn(BucketCol,
@@ -71,13 +75,14 @@ object KeyedUpsert {
     * manifest header at commit time (`Query the Metric tables/Query the
     * delta tables.scala:702`). `touchedBuckets` is the number of bucket
     * directories the commit rewrote — the unit of work the layout
-    * promises stays O(batch), not O(table). */
+    * promises stays O(batch), not O(table) — and `filesWritten` the
+    * parquet files it wrote (one per rewritten bucket). */
   case class Commit(version: Long, operation: String, commitMs: Long,
-      touchedBuckets: Long)
+      touchedBuckets: Long, filesWritten: Long)
 
   /** DESCRIBE HISTORY analog, ascending by version. Manifests written
     * before headers existed surface as operation "unknown" with the
-    * file modification time. */
+    * file modification time; a count the header lacks reads as -1. */
   def history(spark: SparkSession, targetDir: String): Seq[Commit] = {
     val target = new Path(targetDir)
     val dir = new Path(target, ManifestDir)
@@ -87,10 +92,11 @@ object KeyedUpsert {
       .flatMap { s =>
         versionOf(s.getPath.getName).map { v =>
           val h = readHeader(fs, target, v)
+          def count(k: String) = h.get(k).flatMap(_.toLongOption)
           Commit(v, h.getOrElse("operation", "unknown"),
-            h.get("commitMs").flatMap(_.toLongOption)
-              .getOrElse(s.getModificationTime),
-            h.get("touchedBuckets").flatMap(_.toLongOption).getOrElse(-1L))
+            count("commitMs").getOrElse(s.getModificationTime),
+            count("touchedBuckets").getOrElse(-1L),
+            count("filesWritten").getOrElse(-1L))
         }
       }
       .sortBy(_.version)
@@ -128,17 +134,18 @@ object KeyedUpsert {
     * the rename IS the commit; it fails (loudly) if the version was
     * concurrently taken. The header records the DESCRIBE HISTORY
     * metadata: operation name, wall-clock commit time, and how many
-    * bucket directories this commit (re)wrote. */
+    * bucket directories and files this commit (re)wrote. */
   private def commitManifest(fs: FileSystem, target: Path, v: Long,
       mapping: Map[Long, String], operation: String,
-      touchedBuckets: Long): Unit = {
+      touchedBuckets: Long, filesWritten: Long): Unit = {
     val dir = new Path(target, ManifestDir)
     fs.mkdirs(dir)
     val tmp = new Path(dir, s".tmp-$v-${System.nanoTime()}")
     val out = fs.create(tmp, false)
     val header = s"#operation=$operation\n" +
       s"#commitMs=${System.currentTimeMillis()}\n" +
-      s"#touchedBuckets=$touchedBuckets\n"
+      s"#touchedBuckets=$touchedBuckets\n" +
+      s"#filesWritten=$filesWritten\n"
     try out.write((header + mapping.toSeq.sortBy(_._1)
       .map { case (bk, rel) => s"$bk\t$rel" }
       .mkString("\n")).getBytes(StandardCharsets.UTF_8))
@@ -153,27 +160,20 @@ object KeyedUpsert {
 
   /** Upsert `batch` into `targetDir` matching on `keyCols`. Within a
     * batch, later rows win per `tieBreak` (descending) when given,
-    * otherwise any one row per key is kept. With `keepMaxOnMerge` the
-    * tieBreak also arbitrates against EXISTING rows — the conditional
-    * MERGE ("update only if newer") the reference's latest-table
-    * maintenance needs, which makes the sink correct under
-    * out-of-order batch replay. Each call commits one new version;
-    * versions older than the newest `retainVersions` are vacuumed. */
+    * otherwise any one row per key is kept. Against EXISTING rows the
+    * incoming row wins — unless `keepMaxOnMerge`, where the tieBreak
+    * also arbitrates against them and an incoming row wins only on a
+    * greater-or-equal tieBreak: the conditional MERGE ("update only if
+    * newer") the reference's latest-table maintenance needs, which
+    * makes the sink correct under out-of-order batch replay. Each call
+    * commits one new version; versions older than the newest
+    * `retainVersions` are vacuumed. */
   def upsert(spark: SparkSession, targetDir: String, batch: DataFrame,
       keyCols: Seq[String], numBuckets: Int = 64,
       tieBreak: Option[String] = None,
       keepMaxOnMerge: Boolean = false,
       retainVersions: Int = 8): Unit = {
-    def top1(df: DataFrame): DataFrame = tieBreak match {
-      case Some(tb) =>
-        import org.apache.spark.sql.expressions.Window
-        val w = Window.partitionBy(keyCols.map(col): _*).orderBy(col(tb).desc)
-        df.withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") === 1).drop("__rn")
-      case None => df.dropDuplicates(keyCols)
-    }
-    // one row per key within the batch
-    val b = bucketed(top1(batch), keyCols, numBuckets).persist()
+    val b = bucketed(batch, keyCols, numBuckets).persist()
     try {
       // ONE pass decides emptiness AND the touched buckets (filling
       // the persist on the way): the former separate
@@ -181,7 +181,7 @@ object KeyedUpsert {
       // the batch plan — often an aggregation — per upsert call
       // (guide §1.2: don't compute things twice)
       val touched = b.select(BucketCol).distinct()
-        .collect().map(_.getLong(0)).sorted // bounded by numBuckets
+        .collect().map(_.getLong(0)).toSet // bounded by numBuckets
       if (touched.isEmpty) return // empty batch: nothing to commit
       val target = new Path(targetDir)
       val fs = fsOf(spark, target)
@@ -207,41 +207,59 @@ object KeyedUpsert {
           "directory (or delete the legacy data) first")
       val mapping = current.map(loadManifest(fs, target, _))
         .getOrElse(Map.empty[Long, String])
-      val newVersion = current.getOrElse(0L) + 1
-      val commitRel = f"$DataDir/c$newVersion%08d-${System.nanoTime()}"
-      val commitDir = new Path(target, commitRel)
       // live dirs of ONLY the touched buckets — pruning by manifest,
       // no full-table listing or scan
-      val existingDirs = touched.toSeq.flatMap(mapping.get)
+      val existingDirs = touched.toSeq.sorted.flatMap(mapping.get)
         .map(rel => new Path(target, rel).toString)
-      val merged = if (existingDirs.isEmpty) b else {
-        val existing = bucketed( // leaf dirs carry no bucket col; recompute
+      val incoming = b.withColumn(SrcCol, lit(1))
+      val rows = if (existingDirs.isEmpty) incoming else
+        bucketed( // leaf dirs carry no bucket col; recompute
           spark.read.parquet(existingDirs: _*), keyCols, numBuckets)
-        if (keepMaxOnMerge && tieBreak.isDefined)
-          // conditional MERGE: existing and incoming rows compete on
-          // the tieBreak; replayed/out-of-order batches cannot
-          // regress a key to an older row
-          top1(existing.select(b.columns.map(col): _*).union(b))
-        else {
-          val keep = existing.join(
-            b.select(keyCols.map(col): _*), keyCols, "left_anti")
-          keep.select(b.columns.map(col): _*).union(b)
-        }
-      }
-      // rows sorted by key within each task (and so within each bucket
-      // file): parquet row-group min/max on the leading key column then
-      // lets a point lookup (read().filter(key === x)) skip row groups
-      // — the layout cost is a local sort, no extra shuffle
-      merged.sortWithinPartitions((BucketCol +: keyCols).map(col): _*)
-        .write.partitionBy(BucketCol).parquet(commitDir.toString)
-      val written = fs.listStatus(commitDir).toSeq
-        .map(_.getPath.getName).filter(_.startsWith(s"$BucketCol="))
-        .map(_.stripPrefix(s"$BucketCol=").toLong)
-      commitManifest(fs, target, newVersion,
-        mapping ++ written.map(bk => bk -> s"$commitRel/$BucketCol=$bk"),
-        "MERGE", written.size.toLong)
-      vacuum(fs, target, newVersion, retainVersions)
+          .select(b.columns.map(col): _*).withColumn(SrcCol, lit(0))
+          .union(incoming)
+      // ONE bucket-clustered pass: the in-batch dedup and the merge
+      // against live rows are the same top-1 per key. A key lives in
+      // one bucket, so the exchange by bucket satisfies the window's
+      // clustering AND the writer's — no second shuffle, no join
+      val tb = tieBreak.map(col(_).desc).toSeq
+      val src = Seq(col(SrcCol).desc)
+      val w = Window.partitionBy((BucketCol +: keyCols).map(col): _*)
+        .orderBy((if (keepMaxOnMerge) tb ++ src else src ++ tb): _*)
+      writeBuckets(fs, target, current.getOrElse(0L) + 1,
+        rows.repartition(col(BucketCol))
+          .withColumn("__rn", row_number().over(w))
+          .filter(col("__rn") === 1).drop("__rn", SrcCol),
+        keyCols, mapping, touched, "MERGE", retainVersions)
     } finally b.unpersist()
+  }
+
+  /** The one bucket writer behind MERGE, DELETE and OPTIMIZE: cluster
+    * `rows` (carrying [[BucketCol]]) by bucket so each bucket is whole
+    * in one task — one file per bucket — sorted by `sortCols` inside
+    * it: parquet row-group min/max on the leading sort column then
+    * lets a point lookup (read().filter(key === x)) skip row groups.
+    * Publishes version `v` as `base` with the `replaced` buckets
+    * remapped to the fresh commit dir; a replaced bucket that received
+    * no rows leaves the manifest. `repartition` (not rebalance) lets
+    * AQE coalesce small buckets into one task but never split one. */
+  private def writeBuckets(fs: FileSystem, target: Path, v: Long,
+      rows: DataFrame, sortCols: Seq[String], base: Map[Long, String],
+      replaced: Set[Long], operation: String, retain: Int): Unit = {
+    val commitRel = f"$DataDir/c$v%08d-${System.nanoTime()}"
+    val commitDir = new Path(target, commitRel)
+    rows.repartition(col(BucketCol))
+      .sortWithinPartitions((BucketCol +: sortCols).map(col): _*)
+      .write.partitionBy(BucketCol).parquet(commitDir.toString)
+    // ONE recursive listing yields both the written buckets and files
+    val it = fs.listFiles(commitDir, true)
+    val files = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+      .map(_.getPath).filter(_.getName.endsWith(".parquet")).toSeq
+    val written = files.map(_.getParent.getName.stripPrefix(s"$BucketCol="))
+      .distinct.map(_.toLong)
+    commitManifest(fs, target, v, base -- replaced ++
+      written.map(bk => bk -> s"$commitRel/$BucketCol=$bk"),
+      operation, replaced.size.toLong, files.size.toLong)
+    vacuum(fs, target, v, retain)
   }
 
   /** MERGE WHEN MATCHED THEN DELETE: remove every row whose key appears
@@ -259,43 +277,32 @@ object KeyedUpsert {
       // one pass decides emptiness AND the touched buckets (the former
       // separate isEmpty cost a full extra evaluation of `keys`)
       val touchedAll = k.select(BucketCol).distinct()
-        .collect().map(_.getLong(0)).sorted // bounded by numBuckets
+        .collect().map(_.getLong(0)) // bounded by numBuckets
       if (touchedAll.isEmpty) return // no keys: nothing to delete
       val target = new Path(targetDir)
       val fs = fsOf(spark, target)
       val current = resolveVersion(spark, targetDir, None)
       val mapping = loadManifest(fs, target, current)
-      val touched = touchedAll.filter(mapping.contains)
+      val touched = touchedAll.filter(mapping.contains).toSet
       if (touched.isEmpty) return // no key hashes into a live bucket
-      val newVersion = current + 1
-      val commitRel = f"$DataDir/c$newVersion%08d-${System.nanoTime()}"
-      val commitDir = new Path(target, commitRel)
       val existing = bucketed(
-        spark.read.parquet(touched.toSeq.flatMap(mapping.get)
+        spark.read.parquet(touched.toSeq.sorted.flatMap(mapping.get)
           .map(rel => new Path(target, rel).toString): _*),
         keyCols, numBuckets)
-      existing.join(k.select(keyCols.map(col): _*), keyCols, "left_anti")
-        .sortWithinPartitions((BucketCol +: keyCols).map(col): _*)
-        .write.partitionBy(BucketCol).parquet(commitDir.toString)
-      val written = fs.listStatus(commitDir).toSeq
-        .map(_.getPath.getName).filter(_.startsWith(s"$BucketCol="))
-        .map(_.stripPrefix(s"$BucketCol=").toLong)
-      // touched buckets with no surviving rows leave the manifest
-      commitManifest(fs, target, newVersion,
-        (mapping -- (touched.toSet -- written.toSet)) ++
-          written.map(bk => bk -> s"$commitRel/$BucketCol=$bk"),
-        "DELETE", touched.length.toLong)
-      vacuum(fs, target, newVersion, retainVersions)
+      writeBuckets(fs, target, current + 1,
+        existing.join(k.select(keyCols.map(col): _*), keyCols, "left_anti"),
+        keyCols, mapping, touched, "DELETE", retainVersions)
     } finally k.unpersist()
   }
 
   /** OPTIMIZE analog for the versioned table: rewrite the live snapshot
-    * into one fresh commit with one file per bucket (optionally sorted
-    * by `sortCols` inside each bucket for row-group skipping). Long
-    * upsert histories fragment a bucket across many commit dirs and
-    * files; compaction restores the one-dir-one-file layout without
-    * changing any row. Commits a new version — readers never see a
-    * partial rewrite, and pre-compaction versions stay pinnable. */
+    * into one fresh commit (optionally sorted by `sortCols` inside each
+    * bucket for row-group skipping). Every commit already writes one
+    * file per bucket it touches, but a long history spreads the live
+    * buckets across many commit dirs; compaction gathers them into one
+    * dir without changing any row. Commits a new version — readers
+    * never see a partial rewrite, and pre-compaction versions stay
+    * pinnable. */
   def compact(spark: SparkSession, targetDir: String,
       sortCols: Seq[String] = Seq.empty, retainVersions: Int = 8): Unit = {
     val target = new Path(targetDir)
@@ -303,25 +310,13 @@ object KeyedUpsert {
     val current = resolveVersion(spark, targetDir, None)
     val mapping = loadManifest(fs, target, current)
     if (mapping.isEmpty) return
-    val newVersion = current + 1
-    val commitRel = f"$DataDir/c$newVersion%08d-${System.nanoTime()}"
-    val commitDir = new Path(target, commitRel)
     // leaf dirs don't store the bucket value; tag each bucket's frame
     val parts = mapping.toSeq.sortBy(_._1).map { case (bk, rel) =>
       spark.read.parquet(new Path(target, rel).toString)
         .withColumn(BucketCol, lit(bk))
     }
-    parts.reduce(_.unionByName(_))
-      .repartition(col(BucketCol)) // whole buckets per task -> 1 file each
-      .sortWithinPartitions((BucketCol +: sortCols).map(col): _*)
-      .write.partitionBy(BucketCol).parquet(commitDir.toString)
-    val written = fs.listStatus(commitDir).toSeq
-      .map(_.getPath.getName).filter(_.startsWith(s"$BucketCol="))
-      .map(_.stripPrefix(s"$BucketCol=").toLong)
-    commitManifest(fs, target, newVersion,
-      written.map(bk => bk -> s"$commitRel/$BucketCol=$bk").toMap,
-      "OPTIMIZE", written.size.toLong)
-    vacuum(fs, target, newVersion, retainVersions)
+    writeBuckets(fs, target, current + 1, parts.reduce(_.unionByName(_)),
+      sortCols, Map.empty, mapping.keySet, "OPTIMIZE", retainVersions)
   }
 
   /** RESTORE analog (Delta's `RESTORE TABLE ... TO VERSION AS OF v`):
@@ -339,7 +334,7 @@ object KeyedUpsert {
     val v = resolveVersion(spark, targetDir, Some(version))
     val latest = resolveVersion(spark, targetDir, None)
     val mapping = loadManifest(fs, target, v)
-    commitManifest(fs, target, latest + 1, mapping, "RESTORE", 0L)
+    commitManifest(fs, target, latest + 1, mapping, "RESTORE", 0L, 0L)
     vacuum(fs, target, latest + 1, retainVersions)
   }
 

@@ -62,4 +62,17 @@ class FnsSpec extends SparkSpec {
     df.collect().map(r => (r.getString(0), r.getString(1))).toSet shouldBe
       Set(("a", "1.5"), ("b", "2"))
   }
+
+  test("Spread div is validated and the partition count cannot wrap") {
+    import graft.functions.Spread
+    Spread.parseDiv(None) shouldBe 16
+    Spread.parseDiv(Some(" 4 ")) shouldBe 4
+    an[IllegalArgumentException] should be thrownBy Spread.parseDiv(Some("0"))
+    an[IllegalArgumentException] should be thrownBy Spread.parseDiv(Some("-3"))
+    an[IllegalArgumentException] should be thrownBy Spread.parseDiv(Some("x"))
+    val mb = BigInt(128L << 20)
+    Spread.parts(mb * 3, mb, 16, 200) shouldBe 48
+    // a 1-byte unit over a 3 GB input: capped at the wave, not negative
+    Spread.parts(mb * 24, mb, Int.MaxValue, 200) shouldBe 200
+  }
 }

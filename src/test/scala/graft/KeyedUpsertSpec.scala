@@ -10,6 +10,21 @@ class KeyedUpsertSpec extends SparkSpec {
   private def tmp(): String =
     Files.createTempDirectory("graft-upsert").toString + "/t"
 
+  /** Distinct commit dirs the live snapshot spans. */
+  private def commitDirs(dir: String): Int =
+    KeyedUpsert.snapshot(spark, dir).values.map(_.split('/')(1)).toSet.size
+
+  /** Parquet files in each live bucket dir, by bucket. */
+  private def filesPerBucket(dir: String): Map[Long, Int] =
+    KeyedUpsert.snapshot(spark, dir).map { case (bk, rel) =>
+      bk -> new java.io.File(s"$dir/$rel").list()
+        .count(_.endsWith(".parquet"))
+    }
+
+  private def contents(dir: String): Map[Int, (Int, String)] =
+    KeyedUpsert.read(spark, dir).as[(Int, Int, String)].collect()
+      .map { case (k, t, v) => k -> ((t, v)) }.toMap
+
   test("insert then update then insert-new merges by key") {
     val dir = tmp()
     KeyedUpsert.upsert(spark, dir,
@@ -159,6 +174,23 @@ class KeyedUpsertSpec extends SparkSpec {
       Map("a" -> 1, "c" -> 3)
   }
 
+  test("history reports files written; a manifest without the count reads -1") {
+    val dir = tmp()
+    KeyedUpsert.upsert(spark, dir,
+      (0 until 40).map(k => (k, k)).toDF("k", "v"), Seq("k"), numBuckets = 4)
+    KeyedUpsert.restore(spark, dir, 1L)
+    KeyedUpsert.history(spark, dir).map(c => (c.touchedBuckets, c.filesWritten)) shouldBe
+      Seq((4L, 4L), (0L, 0L))
+    // a manifest committed before the header existed
+    val m = java.nio.file.Paths.get(s"$dir/_manifests/v00000001.txt")
+    val lines = java.nio.file.Files.readAllLines(m)
+    lines.removeIf(_.startsWith("#filesWritten="))
+    java.nio.file.Files.write(m, lines)
+    java.nio.file.Files.deleteIfExists(m.resolveSibling(".v00000001.txt.crc"))
+    KeyedUpsert.history(spark, dir).head.filesWritten shouldBe -1L
+    KeyedUpsert.read(spark, dir, Some(1L)).count() shouldBe 40L
+  }
+
   test("restore re-publishes an old snapshot as a new pinnable commit") {
     val dir = tmp()
     KeyedUpsert.upsert(spark, dir,
@@ -218,14 +250,18 @@ class KeyedUpsertSpec extends SparkSpec {
       KeyedUpsert.upsert(spark, dir,
         (i * 100 until i * 100 + 50).map(j => (s"k$j", j)).toDF("k", "v"),
         Seq("k"), numBuckets = 4)
+    // a one-key upsert remaps only its bucket: the live buckets now span
+    // two commit dirs
+    KeyedUpsert.upsert(spark, dir, Seq(("solo", 1)).toDF("k", "v"),
+      Seq("k"), numBuckets = 4)
     val before = KeyedUpsert.read(spark, dir).as[(String, Int)].collect().toSet
-    KeyedUpsert.read(spark, dir).inputFiles.length should be > 4
+    commitDirs(dir) should be > 1
     KeyedUpsert.compact(spark, dir, sortCols = Seq("k"))
     val after = KeyedUpsert.read(spark, dir)
     after.as[(String, Int)].collect().toSet shouldBe before
     after.inputFiles.length shouldBe KeyedUpsert.snapshot(spark, dir).size
     // every live dir now points at the single compaction commit
-    KeyedUpsert.snapshot(spark, dir).values.map(_.split('/')(1)).toSet.size shouldBe 1
+    commitDirs(dir) shouldBe 1
   }
 
   test("bucket files are written sorted by key (row-group skip layout)") {
@@ -316,5 +352,119 @@ class KeyedUpsertSpec extends SparkSpec {
     KeyedUpsert.read(spark, dir).count() shouldBe 5
     // pinned reads inside the retained window still work
     KeyedUpsert.read(spark, dir, version = Some(4L)).count() shouldBe 4
+  }
+
+  test("every commit writes one file per touched bucket, however spread the batch") {
+    val dir = tmp()
+    def batch(lo: Int, hi: Int, ts: Int) =
+      (lo until hi).map(k => (k, ts, s"v$k")).toDF("k", "ts", "v").repartition(8)
+    KeyedUpsert.upsert(spark, dir, batch(0, 400, 1), Seq("k"), numBuckets = 8)
+    all(filesPerBucket(dir).values) shouldBe 1
+    KeyedUpsert.upsert(spark, dir, batch(200, 600, 2), Seq("k"), numBuckets = 8)
+    all(filesPerBucket(dir).values) shouldBe 1
+    KeyedUpsert.upsert(spark, dir, batch(100, 500, 3), Seq("k"), numBuckets = 8,
+      tieBreak = Some("ts"), keepMaxOnMerge = true)
+    all(filesPerBucket(dir).values) shouldBe 1
+    // a key set too large to broadcast: the anti-join shuffles by key
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try KeyedUpsert.delete(spark, dir, (0 until 600 by 3).toDF("k").repartition(8),
+      Seq("k"), numBuckets = 8)
+    finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    all(filesPerBucket(dir).values) shouldBe 1
+    filesPerBucket(dir).size shouldBe 8
+    KeyedUpsert.history(spark, dir).map(_.filesWritten) shouldBe
+      Seq(8L, 8L, 8L, 8L)
+    KeyedUpsert.read(spark, dir).count() shouldBe 400L
+  }
+
+  test("merge matches a Map fold over seeded random batches, replay idempotent") {
+    for (keepMax <- Seq(false, true)) {
+      val dir = tmp()
+      val rng = new scala.util.Random(42)
+      var model = Map.empty[Int, (Int, String)]
+      val batches = (1 to 6).map { b =>
+        // 30 keys over 4 buckets: keys collide in every bucket; a key
+        // repeats in a batch with distinct tieBreaks, and equal
+        // tieBreaks recur ACROSS batches
+        (1 to 40).map(i => (rng.nextInt(30), rng.nextInt(12), s"b$b-r$i"))
+          .groupBy(r => (r._1, r._2)).values.map(_.head).toSeq
+      }
+      def upsert(rows: Seq[(Int, Int, String)]): Unit =
+        KeyedUpsert.upsert(spark, dir, rows.toDF("k", "ts", "v").repartition(3),
+          Seq("k"), numBuckets = 4, tieBreak = Some("ts"),
+          keepMaxOnMerge = keepMax)
+      batches.foreach { rows =>
+        upsert(rows)
+        rows.groupBy(_._1).foreach { case (k, rs) =>
+          val top = rs.maxBy(_._2)
+          // incoming wins unless keepMax and the live row is strictly newer
+          if (!keepMax || model.get(k).forall(_._1 <= top._2))
+            model += k -> ((top._2, top._3))
+        }
+        withClue(s"keepMaxOnMerge=$keepMax: ") { contents(dir) shouldBe model }
+      }
+      upsert(batches.last) // replay of the last batch changes nothing
+      withClue(s"keepMaxOnMerge=$keepMax replay: ") { contents(dir) shouldBe model }
+    }
+  }
+
+  test("keepMaxOnMerge: an incoming row with an equal tieBreak wins") {
+    val dir = tmp()
+    KeyedUpsert.upsert(spark, dir, Seq((1, 5, "old")).toDF("k", "ts", "v"),
+      Seq("k"), numBuckets = 4, tieBreak = Some("ts"), keepMaxOnMerge = true)
+    KeyedUpsert.upsert(spark, dir, Seq((1, 5, "new")).toDF("k", "ts", "v"),
+      Seq("k"), numBuckets = 4, tieBreak = Some("ts"), keepMaxOnMerge = true)
+    contents(dir) shouldBe Map(1 -> ((5, "new")))
+  }
+
+  test("an upsert onto live rows plans one shuffle and no broadcast") {
+    import org.apache.spark.sql.execution.{CommandResultExec, SparkPlan}
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val dir = tmp()
+    KeyedUpsert.upsert(spark, dir,
+      (0 until 100).map(k => (k, 1)).toDF("k", "v"), Seq("k"), numBuckets = 4)
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val helper = new AdaptiveSparkPlanHelper {}
+    def nodes(p: SparkPlan): Seq[SparkPlan] = helper.collect(p) {
+      case c: CommandResultExec => nodes(c.commandPhysicalPlan)
+      case n => Seq(n)
+    }.flatten
+    def isWrite(p: SparkPlan) = nodes(p).exists(_.isInstanceOf[DataWritingCommandExec])
+    // with and without AQE: a streaming foreachBatch sink runs without it
+    for (aqe <- Seq("true", "false")) {
+      plans.clear()
+      spark.conf.set("spark.sql.adaptive.enabled", aqe)
+      spark.listenerManager.register(listener)
+      try {
+        KeyedUpsert.upsert(spark, dir,
+          (50 until 150).map(k => (k, 2)).toDF("k", "v").repartition(3),
+          Seq("k"), numBuckets = 4)
+        val deadline = System.currentTimeMillis() + 30000
+        while (!plans.toArray.exists(p => isWrite(p.asInstanceOf[SparkPlan])) &&
+            System.currentTimeMillis() < deadline) Thread.sleep(20)
+      } finally {
+        spark.listenerManager.unregister(listener)
+        spark.conf.unset("spark.sql.adaptive.enabled")
+      }
+      val write = plans.toArray.map(_.asInstanceOf[SparkPlan]).filter(isWrite)
+      write should not be empty
+      write.foreach { p =>
+        val ns = nodes(p)
+        withClue(s"AQE $aqe: ${p.treeString}") {
+          ns.count(_.isInstanceOf[ShuffleExchangeExec]) shouldBe 1
+          ns.count(_.isInstanceOf[BroadcastExchangeExec]) shouldBe 0
+        }
+      }
+    }
+    KeyedUpsert.read(spark, dir).count() shouldBe 150L
   }
 }

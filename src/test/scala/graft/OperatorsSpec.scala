@@ -280,6 +280,16 @@ class OperatorsSpec extends SparkSpec {
     r2 shouldBe r
   }
 
+  test("pagerank rejects a damping denominator that overflows the teleport mass") {
+    import graft.operators.PageRank
+    val edges = Seq((1L, 2L, 1L), (2L, 1L, 1L)).toDF("src", "dst", "w")
+    // (den - num) * Unit > Long.MaxValue: must fail, not wrap negative
+    an[ArithmeticException] should be thrownBy
+      PageRank.ranks(edges, dampNum = 1, dampDen = 10000000)
+    // the largest safe denominator still runs
+    PageRank.ranks(edges, dampNum = 1, dampDen = 9000000).count() shouldBe 2L
+  }
+
   test("range join respects equi-keys and drops empty intervals") {
     val pts = Seq((1L, "x", 10L), (2L, "y", 10L)).toDF("pid", "k", "pt")
     val iv = Seq((100L, "x", 0L, 20L), (200L, "y", 30L, 30L))
