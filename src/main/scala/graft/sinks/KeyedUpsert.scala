@@ -1,11 +1,13 @@
 package graft.sinks
 
+import java.io.FileNotFoundException
 import java.nio.charset.StandardCharsets
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** MERGE-semantics keyed upsert onto plain Parquet (SURVEY.md K4): the
   * reference uses `DeltaTable.merge(batch, keys).whenMatched.updateAll.
@@ -23,6 +25,10 @@ import org.apache.spark.sql.functions._
   *    directory that currently holds it. A crash before the rename
   *    leaves the previous version fully intact (the half-written commit
   *    dir is unreferenced garbage, reclaimed by vacuum).
+  *  - the manifest header records the table schema (as Delta's log
+  *    `metaData` action does), and bucket dirs are scanned with it: a
+  *    read costs one manifest listing plus one manifest read and runs
+  *    no Spark job (an older, schema-less manifest is read by inference).
   *
   * The manifest chain doubles as a version log (the reference's
   * `DESCRIBE HISTORY` / `startingVersion` replay, `Query the Metric
@@ -62,13 +68,17 @@ object KeyedUpsert {
       name.stripPrefix("v").stripSuffix(".txt").toLongOption
     else None
 
+  /** (version, status) of every manifest, ascending, from ONE listing;
+    * a missing manifest dir (a table never written) lists as empty. */
+  private def manifests(fs: FileSystem, target: Path): Seq[(Long, FileStatus)] =
+    try fs.listStatus(new Path(target, ManifestDir)).toSeq
+      .flatMap(s => versionOf(s.getPath.getName).map(_ -> s)).sortBy(_._1)
+    catch { case _: FileNotFoundException => Seq.empty }
+
   /** Committed versions, ascending; empty for a table never written. */
   def versions(spark: SparkSession, targetDir: String): Seq[Long] = {
-    val dir = new Path(new Path(targetDir), ManifestDir)
-    val fs = fsOf(spark, dir)
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq
-      .flatMap(s => versionOf(s.getPath.getName)).sorted
+    val target = new Path(targetDir)
+    manifests(fsOf(spark, target), target).map(_._1)
   }
 
   /** One DESCRIBE HISTORY row: the commit metadata recorded in the
@@ -85,59 +95,63 @@ object KeyedUpsert {
     * file modification time; a count the header lacks reads as -1. */
   def history(spark: SparkSession, targetDir: String): Seq[Commit] = {
     val target = new Path(targetDir)
-    val dir = new Path(target, ManifestDir)
-    val fs = fsOf(spark, dir)
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq
-      .flatMap { s =>
-        versionOf(s.getPath.getName).map { v =>
-          val h = readHeader(fs, target, v)
-          def count(k: String) = h.get(k).flatMap(_.toLongOption)
-          Commit(v, h.getOrElse("operation", "unknown"),
-            count("commitMs").getOrElse(s.getModificationTime),
-            count("touchedBuckets").getOrElse(-1L),
-            count("filesWritten").getOrElse(-1L))
-        }
-      }
-      .sortBy(_.version)
+    val fs = fsOf(spark, target)
+    manifests(fs, target).map { case (v, s) =>
+      val h = loadManifest(fs, target, v).header
+      def count(k: String) = h.get(k).flatMap(_.toLongOption)
+      Commit(v, h.getOrElse("operation", "unknown"),
+        count("commitMs").getOrElse(s.getModificationTime),
+        count("touchedBuckets").getOrElse(-1L),
+        count("filesWritten").getOrElse(-1L))
+    }
   }
 
-  private def manifestText(fs: FileSystem, target: Path, v: Long): String = {
-    val in = fs.open(manifestFile(target, v))
-    try new String(in.readAllBytes(), StandardCharsets.UTF_8)
-    finally in.close()
+  /** One version's manifest: the `#key=value` header (commit metadata,
+    * the table schema) and bucket -> table-relative live directory. */
+  private case class Manifest(header: Map[String, String],
+      buckets: Map[Long, String]) {
+    lazy val schema: Option[StructType] =
+      header.get("schema").map(DataType.fromJson(_).asInstanceOf[StructType])
   }
 
-  /** `#key=value` header lines of the version's manifest. */
-  private def readHeader(fs: FileSystem, target: Path,
-      version: Long): Map[String, String] =
-    manifestText(fs, target, version).linesIterator
-      .filter(_.startsWith("#"))
-      .flatMap { line =>
+  /** Read and parse the version's manifest in ONE file read. */
+  private def loadManifest(fs: FileSystem, target: Path,
+      version: Long): Manifest = {
+    val in = fs.open(manifestFile(target, version))
+    val text = try new String(in.readAllBytes(), StandardCharsets.UTF_8)
+      finally in.close()
+    val (header, body) = text.linesIterator.filter(_.nonEmpty).toSeq
+      .partition(_.startsWith("#"))
+    Manifest(
+      header.flatMap { line =>
         line.stripPrefix("#").split("=", 2) match {
           case Array(k, v) => Some(k -> v)
           case _ => None
         }
-      }.toMap
-
-  /** bucket -> table-relative live directory at `version`. Header
-    * (`#`-prefixed) lines carry commit metadata, not mappings. */
-  private def loadManifest(fs: FileSystem, target: Path,
-      version: Long): Map[Long, String] =
-    manifestText(fs, target, version).linesIterator
-      .filter(l => l.nonEmpty && !l.startsWith("#")).map { line =>
+      }.toMap,
+      body.map { line =>
         val Array(bk, rel) = line.split('\t')
         bk.toLong -> rel
-      }.toMap
+      }.toMap)
+  }
+
+  /** Scan table-relative bucket dirs with the recorded `schema`: no
+    * inference job reads a footer. Without one, infer it. */
+  private def scan(spark: SparkSession, target: Path,
+      schema: Option[StructType], rels: Iterable[String]): DataFrame =
+    schema.fold(spark.read)(spark.read.schema(_))
+      .parquet(rels.toSeq.sorted.map(rel => new Path(target, rel).toString): _*)
 
   /** Publish `mapping` as version `v`: write a temp file, then rename —
     * the rename IS the commit; it fails (loudly) if the version was
     * concurrently taken. The header records the DESCRIBE HISTORY
     * metadata: operation name, wall-clock commit time, and how many
-    * bucket directories and files this commit (re)wrote. */
+    * bucket directories and files this commit (re)wrote; plus the
+    * table schema as one JSON line. */
   private def commitManifest(fs: FileSystem, target: Path, v: Long,
       mapping: Map[Long, String], operation: String,
-      touchedBuckets: Long, filesWritten: Long): Unit = {
+      touchedBuckets: Long, filesWritten: Long,
+      schemaJson: Option[String]): Unit = {
     val dir = new Path(target, ManifestDir)
     fs.mkdirs(dir)
     val tmp = new Path(dir, s".tmp-$v-${System.nanoTime()}")
@@ -145,7 +159,8 @@ object KeyedUpsert {
     val header = s"#operation=$operation\n" +
       s"#commitMs=${System.currentTimeMillis()}\n" +
       s"#touchedBuckets=$touchedBuckets\n" +
-      s"#filesWritten=$filesWritten\n"
+      s"#filesWritten=$filesWritten\n" +
+      schemaJson.fold("")(j => s"#schema=$j\n")
     try out.write((header + mapping.toSeq.sortBy(_._1)
       .map { case (bk, rel) => s"$bk\t$rel" }
       .mkString("\n")).getBytes(StandardCharsets.UTF_8))
@@ -205,16 +220,15 @@ object KeyedUpsert {
           "initialize over an unmanaged/legacy layout; migrate the " +
           "existing rows with an explicit initial upsert into a fresh " +
           "directory (or delete the legacy data) first")
-      val mapping = current.map(loadManifest(fs, target, _))
-        .getOrElse(Map.empty[Long, String])
+      val m = current.map(loadManifest(fs, target, _))
+        .getOrElse(Manifest(Map.empty, Map.empty))
       // live dirs of ONLY the touched buckets — pruning by manifest,
       // no full-table listing or scan
-      val existingDirs = touched.toSeq.sorted.flatMap(mapping.get)
-        .map(rel => new Path(target, rel).toString)
+      val existing = touched.toSeq.flatMap(m.buckets.get)
       val incoming = b.withColumn(SrcCol, lit(1))
-      val rows = if (existingDirs.isEmpty) incoming else
+      val rows = if (existing.isEmpty) incoming else
         bucketed( // leaf dirs carry no bucket col; recompute
-          spark.read.parquet(existingDirs: _*), keyCols, numBuckets)
+          scan(spark, target, m.schema, existing), keyCols, numBuckets)
           .select(b.columns.map(col): _*).withColumn(SrcCol, lit(0))
           .union(incoming)
       // ONE bucket-clustered pass: the in-batch dedup and the merge
@@ -229,7 +243,7 @@ object KeyedUpsert {
         rows.repartition(col(BucketCol))
           .withColumn("__rn", row_number().over(w))
           .filter(col("__rn") === 1).drop("__rn", SrcCol),
-        keyCols, mapping, touched, "MERGE", retainVersions)
+        keyCols, m.buckets, touched, "MERGE", retainVersions)
     } finally b.unpersist()
   }
 
@@ -240,8 +254,9 @@ object KeyedUpsert {
     * lets a point lookup (read().filter(key === x)) skip row groups.
     * Publishes version `v` as `base` with the `replaced` buckets
     * remapped to the fresh commit dir; a replaced bucket that received
-    * no rows leaves the manifest. `repartition` (not rebalance) lets
-    * AQE coalesce small buckets into one task but never split one. */
+    * no rows leaves the manifest, and `rows`' schema is recorded.
+    * `repartition` (not rebalance) lets AQE coalesce small buckets into
+    * one task but never split one. */
   private def writeBuckets(fs: FileSystem, target: Path, v: Long,
       rows: DataFrame, sortCols: Seq[String], base: Map[Long, String],
       replaced: Set[Long], operation: String, retain: Int): Unit = {
@@ -258,7 +273,8 @@ object KeyedUpsert {
       .distinct.map(_.toLong)
     commitManifest(fs, target, v, base -- replaced ++
       written.map(bk => bk -> s"$commitRel/$BucketCol=$bk"),
-      operation, replaced.size.toLong, files.size.toLong)
+      operation, replaced.size.toLong, files.size.toLong,
+      Some(StructType(rows.schema.filterNot(_.name == BucketCol)).json))
     vacuum(fs, target, v, retain)
   }
 
@@ -282,16 +298,17 @@ object KeyedUpsert {
       val target = new Path(targetDir)
       val fs = fsOf(spark, target)
       val current = resolveVersion(spark, targetDir, None)
-      val mapping = loadManifest(fs, target, current)
-      val touched = touchedAll.filter(mapping.contains).toSet
+      val m = loadManifest(fs, target, current)
+      val touched = touchedAll.filter(m.buckets.contains).toSet
       if (touched.isEmpty) return // no key hashes into a live bucket
       val existing = bucketed(
-        spark.read.parquet(touched.toSeq.sorted.flatMap(mapping.get)
-          .map(rel => new Path(target, rel).toString): _*),
+        scan(spark, target, m.schema, touched.toSeq.flatMap(m.buckets.get)),
         keyCols, numBuckets)
+      // a USING join moves the keys first; keep the table's column order
       writeBuckets(fs, target, current + 1,
-        existing.join(k.select(keyCols.map(col): _*), keyCols, "left_anti"),
-        keyCols, mapping, touched, "DELETE", retainVersions)
+        existing.join(k.select(keyCols.map(col): _*), keyCols, "left_anti")
+          .select(existing.columns.map(col): _*),
+        keyCols, m.buckets, touched, "DELETE", retainVersions)
     } finally k.unpersist()
   }
 
@@ -308,15 +325,14 @@ object KeyedUpsert {
     val target = new Path(targetDir)
     val fs = fsOf(spark, target)
     val current = resolveVersion(spark, targetDir, None)
-    val mapping = loadManifest(fs, target, current)
-    if (mapping.isEmpty) return
+    val m = loadManifest(fs, target, current)
+    if (m.buckets.isEmpty) return
     // leaf dirs don't store the bucket value; tag each bucket's frame
-    val parts = mapping.toSeq.sortBy(_._1).map { case (bk, rel) =>
-      spark.read.parquet(new Path(target, rel).toString)
-        .withColumn(BucketCol, lit(bk))
+    val parts = m.buckets.toSeq.sortBy(_._1).map { case (bk, rel) =>
+      scan(spark, target, m.schema, Seq(rel)).withColumn(BucketCol, lit(bk))
     }
     writeBuckets(fs, target, current + 1, parts.reduce(_.unionByName(_)),
-      sortCols, Map.empty, mapping.keySet, "OPTIMIZE", retainVersions)
+      sortCols, Map.empty, m.buckets.keySet, "OPTIMIZE", retainVersions)
   }
 
   /** RESTORE analog (Delta's `RESTORE TABLE ... TO VERSION AS OF v`):
@@ -325,16 +341,17 @@ object KeyedUpsert {
     * versions stay pinnable until vacuum reclaims them. No data moves:
     * commit directories are immutable, the restored manifest simply
     * references the old ones again (and vacuum keeps any directory a
-    * retained manifest references). O(manifest), independent of table
-    * size. */
+    * retained manifest references), and the header keeps the restored
+    * version's schema. O(manifest), independent of table size. */
   def restore(spark: SparkSession, targetDir: String, version: Long,
       retainVersions: Int = 8): Unit = {
     val target = new Path(targetDir)
     val fs = fsOf(spark, target)
     val v = resolveVersion(spark, targetDir, Some(version))
     val latest = resolveVersion(spark, targetDir, None)
-    val mapping = loadManifest(fs, target, v)
-    commitManifest(fs, target, latest + 1, mapping, "RESTORE", 0L, 0L)
+    val m = loadManifest(fs, target, v)
+    commitManifest(fs, target, latest + 1, m.buckets, "RESTORE", 0L, 0L,
+      m.header.get("schema"))
     vacuum(fs, target, latest + 1, retainVersions)
   }
 
@@ -344,11 +361,9 @@ object KeyedUpsert {
     * not-yet-committed directory is never reclaimed from under it. */
   private def vacuum(fs: FileSystem, target: Path, latest: Long,
       retain: Int): Unit = {
-    val mDir = new Path(target, ManifestDir)
-    val all = fs.listStatus(mDir).toSeq
-      .flatMap(s => versionOf(s.getPath.getName)).sorted
-    val (expired, kept) = all.partition(_ <= latest - retain)
-    val referenced = kept.flatMap(v => loadManifest(fs, target, v).values)
+    val (expired, kept) = manifests(fs, target).map(_._1)
+      .partition(_ <= latest - retain)
+    val referenced = kept.flatMap(v => loadManifest(fs, target, v).buckets.values)
       .map(_.split('/')(1)).toSet // data/<commit>/__bucket=K -> <commit>
     val dataDir = new Path(target, DataDir)
     if (fs.exists(dataDir)) fs.listStatus(dataDir).toSeq
@@ -388,30 +403,22 @@ object KeyedUpsert {
       version: Option[Long] = None): Map[Long, String] = {
     val target = new Path(targetDir)
     val v = resolveVersion(spark, targetDir, version)
-    loadManifest(fsOf(spark, target), target, v)
+    loadManifest(fsOf(spark, target), target, v).buckets
   }
 
-  /** Read the table at `version` (default: latest committed snapshot).
-    * A fully-deleted snapshot (empty manifest) reads as zero rows with
-    * the schema of the most recent non-empty retained version. */
+  /** Read the table at `version` (default: latest committed snapshot)
+    * with the schema its manifest records: one manifest listing, one
+    * manifest read and a listing of the live dirs; no Spark job runs.
+    * A fully-deleted snapshot (no live bucket) reads as zero rows of
+    * that schema. */
   def read(spark: SparkSession, targetDir: String,
       version: Option[Long] = None): DataFrame = {
     val target = new Path(targetDir)
-    val fs = fsOf(spark, target)
     val v = resolveVersion(spark, targetDir, version)
-    val dirs = loadManifest(fs, target, v).values.toSeq.sorted
-      .map(rel => new Path(target, rel).toString)
-    if (dirs.nonEmpty) spark.read.parquet(dirs: _*)
-    else {
-      val withData = versions(spark, targetDir).filter(_ < v).reverse
-        .map(pv => loadManifest(fs, target, pv))
-        .find(_.nonEmpty)
-        .getOrElse(throw new IllegalStateException(
-          s"$targetDir at version $v is empty and no retained version " +
-          "carries a schema"))
-      spark.read.parquet(withData.values.toSeq.sorted
-        .map(rel => new Path(target, rel).toString): _*).limit(0)
-    }
+    val m = loadManifest(fsOf(spark, target), target, v)
+    require(m.buckets.nonEmpty || m.schema.nonEmpty,
+      s"$targetDir at version $v is empty and its manifest records no schema")
+    scan(spark, target, m.schema, m.buckets.values)
   }
 
   /** startingVersion-style incremental replay: the current rows of
@@ -424,14 +431,13 @@ object KeyedUpsert {
     val fs = fsOf(spark, target)
     val latest = resolveVersion(spark, targetDir, None)
     val base = loadManifest(fs, target,
-      resolveVersion(spark, targetDir, Some(sinceVersion)))
+      resolveVersion(spark, targetDir, Some(sinceVersion))).buckets
     val now = loadManifest(fs, target, latest)
-    val changed = now.filter { case (bk, rel) => !base.get(bk).contains(rel) }
+    val changed = now.buckets.filter { case (bk, rel) => !base.get(bk).contains(rel) }
     if (changed.isEmpty)
-      read(spark, targetDir).limit(0)
+      scan(spark, target, now.schema, now.buckets.values).limit(0)
     else
-      spark.read.parquet(changed.values.toSeq.sorted
-        .map(rel => new Path(target, rel).toString): _*)
+      scan(spark, target, now.schema, changed.values)
   }
 
   /** Semantic row-level diff between two committed versions: one row
@@ -458,13 +464,12 @@ object KeyedUpsert {
       resolveVersion(spark, targetDir, Some(fromVersion)))
     val mTo = loadManifest(fs, target,
       resolveVersion(spark, targetDir, toVersion))
-    val changed = (mFrom.keySet ++ mTo.keySet)
-      .filter(bk => mFrom.get(bk) != mTo.get(bk))
-    def side(m: Map[Long, String]): DataFrame = {
-      val dirs = m.view.filterKeys(changed).values.toSeq.sorted
-        .map(rel => new Path(target, rel).toString)
-      if (dirs.nonEmpty) spark.read.parquet(dirs: _*)
-      else read(spark, targetDir, toVersion).limit(0)
+    val changed = (mFrom.buckets.keySet ++ mTo.buckets.keySet)
+      .filter(bk => mFrom.buckets.get(bk) != mTo.buckets.get(bk))
+    def side(m: Manifest): DataFrame = {
+      val rels = m.buckets.view.filterKeys(changed).values.toSeq
+      if (rels.nonEmpty) scan(spark, target, m.schema, rels)
+      else scan(spark, target, mTo.schema, mTo.buckets.values).limit(0)
     }
     def fingerprinted(df: DataFrame, as: String): DataFrame = {
       val others = df.columns.filterNot(keyCols.contains).sorted

@@ -1,7 +1,9 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import graft.sinks.KeyedUpsert
 
 class KeyedUpsertSpec extends SparkSpec {
@@ -181,14 +183,20 @@ class KeyedUpsertSpec extends SparkSpec {
     KeyedUpsert.restore(spark, dir, 1L)
     KeyedUpsert.history(spark, dir).map(c => (c.touchedBuckets, c.filesWritten)) shouldBe
       Seq((4L, 4L), (0L, 0L))
-    // a manifest committed before the header existed
+    val v1 = KeyedUpsert.read(spark, dir, Some(1L))
+    val (schema, rows) = (v1.schema, v1.as[(Int, Int)].collect().toSet)
+    // a manifest committed before the header lines existed: the count
+    // reads -1 and the snapshot is read by schema inference
     val m = java.nio.file.Paths.get(s"$dir/_manifests/v00000001.txt")
     val lines = java.nio.file.Files.readAllLines(m)
-    lines.removeIf(_.startsWith("#filesWritten="))
+    lines.removeIf(l => l.startsWith("#filesWritten=") || l.startsWith("#schema="))
     java.nio.file.Files.write(m, lines)
     java.nio.file.Files.deleteIfExists(m.resolveSibling(".v00000001.txt.crc"))
     KeyedUpsert.history(spark, dir).head.filesWritten shouldBe -1L
-    KeyedUpsert.read(spark, dir, Some(1L)).count() shouldBe 40L
+    val inferred = KeyedUpsert.read(spark, dir, Some(1L))
+    inferred.schema shouldBe schema
+    inferred.as[(Int, Int)].collect().toSet shouldBe rows
+    rows.size shouldBe 40
   }
 
   test("restore re-publishes an old snapshot as a new pinnable commit") {
@@ -231,6 +239,19 @@ class KeyedUpsertSpec extends SparkSpec {
     // pre-delete snapshot still pinnable
     KeyedUpsert.read(spark, dir, version = Some(1L)).count() shouldBe 4
     KeyedUpsert.versions(spark, dir) shouldBe Seq(1L, 2L)
+  }
+
+  test("an empty snapshot whose non-empty versions were vacuumed reads as zero rows") {
+    val dir = tmp()
+    KeyedUpsert.upsert(spark, dir, Seq(("solo", 1)).toDF("k", "v"),
+      Seq("k"), numBuckets = 4)
+    KeyedUpsert.delete(spark, dir, Seq("solo").toDF("k"), Seq("k"),
+      numBuckets = 4, retainVersions = 1)
+    KeyedUpsert.versions(spark, dir) shouldBe Seq(2L)
+    val out = KeyedUpsert.read(spark, dir)
+    out.count() shouldBe 0L
+    out.schema.map(f => (f.name, f.dataType)) shouldBe
+      Seq(("k", StringType), ("v", IntegerType))
   }
 
   test("delete that empties a bucket removes it from the manifest") {
@@ -466,5 +487,90 @@ class KeyedUpsertSpec extends SparkSpec {
       }
     }
     KeyedUpsert.read(spark, dir).count() shouldBe 150L
+  }
+
+  /** A table whose key sits between columns of every storage-relevant
+    * type, some nullable, run through MERGE (twice: the second onto live
+    * rows), DELETE, OPTIMIZE and RESTORE with `check(dir, version)` after
+    * each commit. */
+  private def afterEachOperation(check: (String, Long) => Unit): Unit = {
+    val schema = StructType(Seq(
+      StructField("amount", DecimalType(18, 2)),
+      StructField("at", TimestampType, nullable = false),
+      StructField("id", IntegerType, nullable = false),
+      StructField("day", DateType),
+      StructField("blob", BinaryType),
+      StructField("name", StringType),
+      StructField("tags", ArrayType(StringType, containsNull = true)),
+      StructField("attrs", MapType(StringType, LongType, valueContainsNull = false)),
+      StructField("loc", StructType(Seq(
+        StructField("lat", DoubleType, nullable = false),
+        StructField("label", StringType))))))
+    def rows(ids: Range, gen: Int): DataFrame = spark.createDataFrame(
+      spark.sparkContext.parallelize(ids.map { i =>
+        Row(if (i % 5 == 0) null else new java.math.BigDecimal(s"$i$gen.25"),
+          java.sql.Timestamp.valueOf(f"2024-01-${i % 28 + 1}%02d 10:00:0$gen"),
+          i,
+          if (i % 7 == 0) null else java.sql.Date.valueOf(f"2024-02-${i % 28 + 1}%02d"),
+          Array[Byte](i.toByte, gen.toByte),
+          if (i % 3 == 0) null else s"n$i-$gen",
+          Seq(s"t$i", null),
+          Map(s"a$gen" -> i.toLong),
+          Row(i * 0.5, if (i % 2 == 0) null else s"l$i"))
+      }, 2), schema)
+    val dir = tmp()
+    KeyedUpsert.upsert(spark, dir, rows(0 until 40, 1), Seq("id"), numBuckets = 4)
+    check(dir, 1L)
+    KeyedUpsert.upsert(spark, dir, rows(30 until 50, 2), Seq("id"), numBuckets = 4)
+    check(dir, 2L)
+    // two keys leave at least two buckets untouched: the live dirs mix
+    // commits, and the oldest one is what inference reads
+    KeyedUpsert.delete(spark, dir, Seq(3, 7).toDF("id"), Seq("id"),
+      numBuckets = 4)
+    check(dir, 3L)
+    KeyedUpsert.compact(spark, dir, sortCols = Seq("id"))
+    check(dir, 4L)
+    KeyedUpsert.restore(spark, dir, 2L)
+    check(dir, 5L)
+  }
+
+  test("resolving a snapshot runs no Spark job after MERGE, DELETE, OPTIMIZE, RESTORE") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val group = "keyed-upsert-read-guard"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try afterEachOperation { (dir, v) =>
+      org.apache.spark.ListenerBusDrain(sc)
+      jobs.set(0)
+      sc.setJobGroup(group, "KeyedUpsert.read")
+      try {
+        KeyedUpsert.read(spark, dir)
+        KeyedUpsert.read(spark, dir, Some(v))
+      } finally sc.clearJobGroup()
+      org.apache.spark.ListenerBusDrain(sc)
+      withClue(s"version $v: ") { jobs.get shouldBe 0 }
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("the recorded schema reads back what parquet inference reads") {
+    afterEachOperation { (dir, v) =>
+      val live = KeyedUpsert.snapshot(spark, dir).values.toSeq.sorted
+        .map(rel => s"$dir/$rel")
+      val inferred = spark.read.parquet(live: _*)
+      val out = KeyedUpsert.read(spark, dir)
+      def sorted(df: DataFrame) = df.collect().sortBy(_.getAs[Int]("id")).toSeq
+      withClue(s"version $v: ") {
+        out.schema shouldBe inferred.schema
+        sorted(out) shouldBe sorted(inferred)
+        sorted(out) should not be empty
+      }
+    }
   }
 }
