@@ -53,11 +53,35 @@ object GraftExtensions {
         }
       }))
 
-  /** Register on an existing session (extensions only run at build). */
+  /** Spark's session key that picks the streaming checkpoint manager. */
+  val CheckpointManagerConf = "spark.sql.streaming.checkpointFileManagerClass"
+
+  /** Spark's own FileSystem-API checkpoint manager. */
+  val FileSystemCheckpointManager = "org.apache.spark.sql.execution" +
+    ".streaming.checkpointing.FileSystemBasedCheckpointFileManager"
+
+  /** Register on an existing session (extensions only run at build).
+    *
+    * Also sets one session default: [[CheckpointManagerConf]] becomes
+    * [[FileSystemCheckpointManager]] unless the session already has a
+    * value, so an explicit choice is kept. Spark's default manager
+    * renames every offset-log, commit-log and state-store file through
+    * FileContext, whose no-overwrite rename on Hadoop's local file
+    * system forks `readlink` twice per rename when no native Hadoop
+    * library is installed. The FileSystem manager checks the
+    * destination and calls the two-argument `FileSystem.rename`, which
+    * forks nothing. The guarantee is the same: FileContext's local
+    * no-overwrite rename is itself check-then-rename, and HDFS's
+    * `rename` refuses an existing destination. Spark's checkpoint
+    * checksums wrap whichever manager is chosen. Sessions that get the
+    * extension only through `spark.sql.extensions` keep Spark's default
+    * manager: the extension hook cannot set session confs. */
   def register(spark: SparkSession): Unit = {
     functions.foreach { case (name, builder) =>
       Shim.registerFunction(spark, name, builder)
     }
+    if (spark.conf.getOption(CheckpointManagerConf).isEmpty)
+      spark.conf.set(CheckpointManagerConf, FileSystemCheckpointManager)
     if (!spark.experimental.extraOptimizations
         .contains(graft.plans.TopOnePerKeyToArgmax)) {
       spark.experimental.extraOptimizations =

@@ -24,8 +24,7 @@ object JobProfiler {
       .master(s"local[$cores]")
       .config("spark.sql.shuffle.partitions", cores)
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.files.maxPartitionBytes", "524288")
-      .config("spark.sql.files.openCostInBytes", "65536")
+      .config(BenchSplits.confs)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

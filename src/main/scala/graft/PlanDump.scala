@@ -21,8 +21,7 @@ object PlanDump {
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.files.maxPartitionBytes", "524288")
-      .config("spark.sql.files.openCostInBytes", "65536")
+      .config(BenchSplits.confs)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

@@ -163,8 +163,7 @@ object ScaleProbe {
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.files.maxPartitionBytes", "524288")
-      .config("spark.sql.files.openCostInBytes", "65536")
+      .config(BenchSplits.confs)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -376,8 +375,7 @@ object EventScaleProbe {
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.files.maxPartitionBytes", "524288")
-      .config("spark.sql.files.openCostInBytes", "65536")
+      .config(BenchSplits.confs)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -473,8 +471,7 @@ object SkewProbe {
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.files.maxPartitionBytes", "524288")
-      .config("spark.sql.files.openCostInBytes", "65536")
+      .config(BenchSplits.confs)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -634,8 +631,7 @@ object StreamScaleProbe {
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.files.maxPartitionBytes", "524288")
-      .config("spark.sql.files.openCostInBytes", "65536")
+      .config(BenchSplits.confs)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -826,8 +822,7 @@ object ZipfScaleProbe {
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.files.maxPartitionBytes", "524288")
-      .config("spark.sql.files.openCostInBytes", "65536")
+      .config(BenchSplits.confs)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -958,8 +953,7 @@ object PageRankScaleProbe {
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.files.maxPartitionBytes", "524288")
-      .config("spark.sql.files.openCostInBytes", "65536")
+      .config(BenchSplits.confs)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -1044,8 +1038,7 @@ object CcChainProbe {
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.files.maxPartitionBytes", "524288")
-      .config("spark.sql.files.openCostInBytes", "65536")
+      .config(BenchSplits.confs)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -1170,8 +1163,7 @@ object CoresProbe {
       .master(s"local[$cores]")
       .config("spark.sql.shuffle.partitions", cores)
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.files.maxPartitionBytes", "524288")
-      .config("spark.sql.files.openCostInBytes", "65536")
+      .config(BenchSplits.confs)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

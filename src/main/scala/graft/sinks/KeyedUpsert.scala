@@ -264,11 +264,15 @@ object KeyedUpsert {
     val commitDir = new Path(target, commitRel)
     rows.repartition(col(BucketCol))
       .sortWithinPartitions((BucketCol +: sortCols).map(col): _*)
-      .write.partitionBy(BucketCol).parquet(commitDir.toString)
-    // ONE recursive listing yields both the written buckets and files
-    val it = fs.listFiles(commitDir, true)
-    val files = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
-      .map(_.getPath).filter(_.getName.endsWith(".parquet")).toSeq
+      .write
+      // the manifest rename is the commit point; nothing reads _SUCCESS
+      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+      .partitionBy(BucketCol).parquet(commitDir.toString)
+    // one glob yields both the written buckets and files; a plain
+    // FileStatus never loads permissions, where listFiles' located
+    // status forks `ls -ld` per file on a local FS without native IO
+    val files = fs.globStatus(new Path(commitDir, s"$BucketCol=*/*.parquet"))
+      .toSeq.map(_.getPath)
     val written = files.map(_.getParent.getName.stripPrefix(s"$BucketCol="))
       .distinct.map(_.toLong)
     commitManifest(fs, target, v, base -- replaced ++

@@ -13,8 +13,6 @@ import org.apache.spark.sql.functions._
 class ArgmaxRuleSpec extends SparkSpec {
   import spark.implicits._
 
-  GraftExtensions.register(spark)
-
   private val df = Seq(
     ("a", 30L, 1.5, 1L), ("a", 10L, 2.5, 2L), ("a", 20L, 3.5, 3L),
     ("b", 5L, 4.5, 4L), ("b", 7L, 0.5, 5L))

@@ -396,6 +396,11 @@ class KeyedUpsertSpec extends SparkSpec {
     KeyedUpsert.history(spark, dir).map(_.filesWritten) shouldBe
       Seq(8L, 8L, 8L, 8L)
     KeyedUpsert.read(spark, dir).count() shouldBe 400L
+    // commit dirs hold bucket dirs only: no _SUCCESS marker or its .crc
+    for (c <- new java.io.File(s"$dir/data").listFiles(); f <- c.listFiles()) {
+      f.getName should startWith("__bucket=")
+      f.isDirectory shouldBe true
+    }
   }
 
   test("merge matches a Map fold over seeded random batches, replay idempotent") {

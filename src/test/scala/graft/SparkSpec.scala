@@ -6,7 +6,9 @@ import org.scalatest.matchers.should.Matchers
 
 /** Shared local SparkSession for all specs. One JVM-wide session (Spark
   * sessions are cheap to share, expensive to churn); small shuffle
-  * partition count keeps micro-fixture tests fast.
+  * partition count keeps micro-fixture tests fast. The session is
+  * registered like every engine entry point's (native functions, the
+  * argmax rule, the checkpoint manager default).
   */
 trait SparkSpec extends AnyFunSuite with Matchers {
   lazy val spark: SparkSession = SparkSpec.session
@@ -30,6 +32,7 @@ object SparkSpec {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    GraftExtensions.register(s)
     s
   }
 }
