@@ -2,11 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
-import graft.sources.Topic
 import graft.streaming.{StreamDrift, StreamLineage, StreamPromote,
-  StreamQuarantine, StreamRefit}
+  StreamQuarantine}
 
 /** SAME-STEAL A/B for the st24 composition seam (round 16): through
   * round 15 the composed curation lineage ran its two actors
@@ -68,20 +66,10 @@ object St24ComposeAbProbe {
         perBatch: (org.apache.spark.sql.DataFrame, Long, String) => Unit)
         : (Double, Long) = {
       val root = freshRoot(name)
-      StreamRefit.hfs(spark, root)
-        .mkdirs(new org.apache.hadoop.fs.Path(root))
-      StreamDrift.publishSliced(docs, s"$root/topic", 4)
+      // the window includes the topic publish, a constant both legs
+      // share (it dilutes the ratio toward 1.0 slightly)
       val t0 = System.nanoTime()
-      val q = Topic.decodeDocuments(
-          Topic.readStream(spark, s"$root/topic", maxFilesPerTrigger = 1))
-        .writeStream.outputMode("append")
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-          perBatch(b, id, root)
-        }
-        .option("checkpointLocation", s"$root/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      StreamDrift.runSliced(spark, docs, root, 4)(perBatch(_, _, root))
       // elapsed closes HERE: the lineage row-count parity check below
       // is verification, not part of either composition's per-batch
       // cost — inside the window it would dilute the single-vs-double

@@ -455,19 +455,14 @@ object AnnQueries {
       // 4 delta files / 2 per trigger: still two MERGE cycles (the
       // topology under test) but each micro-batch carries >1 file
       delta.repartition(4).write.parquet(s"$root/delta")
-      val q = s.readStream.schema(delta.schema)
-        .option("maxFilesPerTrigger", 2).parquet(s"$root/delta")
-        .writeStream
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-          KeyedUpsert.upsert(s, out,
-            Ann.ivfAssignTo(b, cents).drop("vn")
-              .withColumn("is_delta", lit(true)),
-            Seq("id"), numBuckets = 8)
-        }
-        .option("checkpointLocation", s"$root/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      graft.streaming.StreamOps.runBounded(s.readStream.schema(delta.schema)
+          .option("maxFilesPerTrigger", 2).parquet(s"$root/delta"),
+          s"$root/ckpt") { (b, _) =>
+        KeyedUpsert.upsert(s, out,
+          Ann.ivfAssignTo(b, cents).drop("vn")
+            .withColumn("is_delta", lit(true)),
+          Seq("id"), numBuckets = 8)
+      }
       KeyedUpsert.read(s, out)
         .groupBy("cid")
         .agg(count(when(!col("is_delta"), 1)).as("n_base"),

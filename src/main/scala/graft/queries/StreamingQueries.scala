@@ -6,10 +6,10 @@ import java.util.Comparator
 import org.apache.spark.sql.functions._
 import graft.sinks.KeyedUpsert
 import graft.sources.{Tables, Topic}
-import graft.streaming.StreamingMedallion
+import graft.streaming.{StreamOps, StreamingMedallion}
 
 /** Streaming operators surfaced through the batch correctness gate: the
-  * bounded (Trigger.AvailableNow) streaming medallion must converge to
+  * bounded ([[StreamOps.runBounded]]) streaming medallion must converge to
   * exactly the state the batch pipeline computes, so the day-rollup
   * oracle from PipelineQueries verifies the whole streaming topology —
   * topic source, watermark dedup, stream–static joins, update-mode
@@ -447,12 +447,7 @@ object StreamingQueries {
           .dropDuplicatesWithinWatermark("event_id")
           .select(col("event_id"), unix_timestamp(col("ts")).as("ts_s"),
             col("user_id"), col("event_type"), col("value"))
-        val q = deduped.writeStream.format("parquet")
-          .option("path", s"$root/out")
-          .option("checkpointLocation", s"$root/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+        StreamOps.runBoundedToParquet(deduped, s"$root/ckpt", s"$root/out")
       }
       s.read.parquet(s"$root/out").orderBy("event_id")
     },
@@ -492,17 +487,11 @@ object StreamingQueries {
           col("user_id") === col("p_user") &&
             col("purchase_ts") >= col("view_ts") &&
             col("purchase_ts") <= col("view_ts") + expr("INTERVAL 12 HOURS"))
-        val q = joined
+        StreamOps.runBoundedToParquet(joined
           .select(col("user_id"), col("view_id"), col("purchase_id"),
             unix_timestamp(col("view_ts")).as("view_ts_s"),
             unix_timestamp(col("purchase_ts")).as("purchase_ts_s"),
-            col("purchase_value"))
-          .writeStream.format("parquet")
-          .option("path", s"$root/out")
-          .option("checkpointLocation", s"$root/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+            col("purchase_value")), s"$root/ckpt", s"$root/out")
       }
       s.read.parquet(s"$root/out").orderBy("view_id", "purchase_id")
     },
@@ -552,14 +541,9 @@ object StreamingQueries {
             sum("v").cast("double").as("total_value"))
           .select("user_id", "session_start", "session_end", "n_events",
             "total_value")
-        val q = agg.writeStream.outputMode("complete")
-          .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
-            df.write.mode("overwrite").parquet(s"$root/out")
-          }
-          .option("checkpointLocation", s"$root/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+        StreamOps.runBounded(agg, s"$root/ckpt", "complete") { (df, _) =>
+          df.write.mode("overwrite").parquet(s"$root/out")
+        }
       }
       s.read.parquet(s"$root/out").orderBy("user_id", "session_start")
     },
@@ -591,20 +575,15 @@ object StreamingQueries {
         val agg = src
           .groupBy(window(col("ts"), "1 hour"), col("event_type"))
           .agg(count(lit(1)).as("n"))
-        val q = agg.writeStream.outputMode("complete")
-          .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
-            val w = org.apache.spark.sql.expressions.Window
-              .partitionBy("window").orderBy(col("n").desc, col("event_type"))
-            df.withColumn("rank", row_number().over(w))
-              .filter(col("rank") <= 3)
-              .select(unix_timestamp(col("window.start")).as("w_start"),
-                col("rank"), col("event_type"), col("n"))
-              .write.mode("overwrite").parquet(s"$root/out")
-          }
-          .option("checkpointLocation", s"$root/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+        StreamOps.runBounded(agg, s"$root/ckpt", "complete") { (df, _) =>
+          val w = org.apache.spark.sql.expressions.Window
+            .partitionBy("window").orderBy(col("n").desc, col("event_type"))
+          df.withColumn("rank", row_number().over(w))
+            .filter(col("rank") <= 3)
+            .select(unix_timestamp(col("window.start")).as("w_start"),
+              col("rank"), col("event_type"), col("n"))
+            .write.mode("overwrite").parquet(s"$root/out")
+        }
       }
       s.read.parquet(s"$root/out").orderBy("w_start", "rank")
     },
@@ -640,18 +619,11 @@ object StreamingQueries {
           .select(concat(col("user_id"), lit("|"), col("event_type")).as("key"),
             col("event_id").as("ts"), col("value"))
           .as[StatefulOps.KeyedReading]
-        val q = StatefulOps.track(s, readings)
-          .writeStream.outputMode("update")
-          .foreachBatch {
-            (b: org.apache.spark.sql.Dataset[StatefulOps.TrackOutput],
-                _: Long) =>
-              KeyedUpsert.upsert(s, s"$root/state", b.toDF(), Seq("key"),
-                numBuckets = 8, tieBreak = Some("n"), keepMaxOnMerge = true)
-          }
-          .option("checkpointLocation", s"$root/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+        StreamOps.runBounded(StatefulOps.track(s, readings), s"$root/ckpt",
+            "update") { (b, _) =>
+          KeyedUpsert.upsert(s, s"$root/state", b.toDF(), Seq("key"),
+            numBuckets = 8, tieBreak = Some("n"), keepMaxOnMerge = true)
+        }
       }
       KeyedUpsert.read(s, s"$root/state")
         .select(col("key"), col("n"), col("maxTs").as("max_event_id"),
@@ -791,17 +763,11 @@ object StreamingQueries {
             col("purchase_ts") >= col("view_ts") &&
             col("purchase_ts") <= col("view_ts") + expr("INTERVAL 12 HOURS"),
           "leftOuter")
-        val q = joined
+        StreamOps.runBoundedToParquet(joined
           .select(col("user_id"), col("view_id"), col("purchase_id"),
             unix_timestamp(col("view_ts")).as("view_ts_s"),
             unix_timestamp(col("purchase_ts")).as("purchase_ts_s"),
-            col("purchase_value"))
-          .writeStream.format("parquet")
-          .option("path", s"$root/out")
-          .option("checkpointLocation", s"$root/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+            col("purchase_value")), s"$root/ckpt", s"$root/out")
       }
       s.read.parquet(s"$root/out")
         .filter(col("user_id") >= 0) // the sentinels are not data
@@ -846,20 +812,15 @@ object StreamingQueries {
       withShufflePartitions(s, 8) {
         val src = Topic.decodeEvents(
           Topic.readStream(s, s"$root/topic", maxFilesPerTrigger = 2))
-        val q = src.writeStream
-          .option("checkpointLocation", s"$root/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-            val (clean, quar) = Expectations.split(batch, rules)
-            clean.write.mode("overwrite")
-              .parquet(s"$root/clean/batch=$id")
-            quar.withColumn("failed", array_join(col("failed_rules"), ","))
-              .drop("failed_rules")
-              .write.mode("overwrite")
-              .parquet(s"$root/quarantine/batch=$id")
-          }
-          .start()
-        q.awaitTermination()
+        StreamOps.runBounded(src, s"$root/ckpt") { (batch, id) =>
+          val (clean, quar) = Expectations.split(batch, rules)
+          clean.write.mode("overwrite")
+            .parquet(s"$root/clean/batch=$id")
+          quar.withColumn("failed", array_join(col("failed_rules"), ","))
+            .drop("failed_rules")
+            .write.mode("overwrite")
+            .parquet(s"$root/quarantine/batch=$id")
+        }
       }
       val clean = s.read.parquet(s"$root/clean")
         .groupBy(col("event_type").as("grp"))

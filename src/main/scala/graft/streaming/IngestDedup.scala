@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{ArrayType, LongType, StringType, StructField, StructType}
 
 import graft.sources.Topic
@@ -56,16 +55,9 @@ object IngestDedup {
       nFiles: Int = 4, maxFilesPerTrigger: Int = 1, k: Int = 12,
       bands: Int = 4, minEst: Double = 0.5): DataFrame = {
     Topic.publishDocuments(docs, s"$root/topic", nFiles = nFiles)
-    val src = Topic.decodeDocuments(
-      Topic.readStream(spark, s"$root/topic", maxFilesPerTrigger))
-    val q = src.writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, root, k, bands, minEst)
-      }
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    StreamOps.runBounded(Topic.decodeDocuments(
+      Topic.readStream(spark, s"$root/topic", maxFilesPerTrigger)),
+      s"$root/ckpt")(processBatch(_, _, root, k, bands, minEst))
     spark.read.parquet(s"$root/pairs").select("a", "b", "est_jaccard")
   }
 

@@ -1,11 +1,8 @@
 package graft.streaming
 
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
-
-import org.apache.spark.sql.Column
 
 import graft.sources.Topic
 import graft.text.{QualityClassifier, TextFns}
@@ -100,60 +97,39 @@ object StreamDrift {
         nFiles = 1, append = append)
     }
 
+  /** The per-batch histogram store `hist/` and its running checkpoint
+    * `cumhist/` (bucket-wise SUM — associative, so `cumhist/b` is the
+    * histogram of every batch ≤ b). */
+  private[streaming] val histStore = FoldedStore("hist", "cumhist",
+    Seq("bucket", "cnt"),
+    _.groupBy("bucket").agg(sum("cnt").cast("long").as("cnt")))
+
   /** One micro-batch's work: the batch's bucket histogram, written
     * idempotently to its own subdirectory. With `cumulative = true`
-    * it is then folded into a RUNNING CHECKPOINT `cumhist/batch=b` =
-    * bucket-wise SUM of the predecessor checkpoint and this batch
-    * (sums are associative — the same argument as the st22 sketch
-    * checkpoint). The checkpoint is what keeps
+    * it is then folded into the running checkpoint `cumhist/batch=b`
+    * ([[FoldedStore]]). The checkpoint is what keeps
     * [[StreamRefit.decisionFor]]'s prev side at O(cells) per batch
     * FOREVER: without it, every arrival re-collected the whole hist
     * store (O(batches × cells) per batch, quadratic over the stream's
     * lifetime at the metadata level). The fold costs one extra tiny
     * read + commit per batch, so it is OPT-IN: only the DECISION
     * consumers (refit/quarantine/promote) pay it — the pure monitors
-    * (st17/st18/st19) never call decisionFor and skip it.
-    * Replay-idempotent: `cumhist/b` is a pure function of `cumhist/b-1`
-    * and batch b's rows. A missing predecessor on a PRE-UPGRADE root
-    * (hist/ batches written before the checkpoint existed, with the
-    * threshold marker intact — a markerless hist-bearing root never
-    * reaches decisionFor: enforceThresholdLineage refuses it first)
-    * self-heals in decisionFor by summing the stored per-batch hists
-    * < b once. */
+    * (st17/st18/st19) never call decisionFor and skip it. A missing
+    * predecessor on a PRE-UPGRADE root (hist/ batches written before
+    * the checkpoint existed, with the threshold marker intact — a
+    * markerless hist-bearing root never reaches decisionFor:
+    * enforceThresholdLineage refuses it first) self-heals from the
+    * stored per-batch hists. */
   def processBatch(batch: DataFrame, batchId: Long, root: String,
       bucket: Column = scoreBucket, cumulative: Boolean = false): Unit = {
-    val spark = batch.sparkSession
     // respread (guide §2.5): the bucket axis is per-word hash-fold
     // work (t31 scoring / token counts) and a 1-file micro-batch
     // arrives as one partition — the scan-side of the histogram agg
     // would run on one task
-    graft.functions.Spread.across(batch)
+    histStore.writePartial(graft.functions.Spread.across(batch)
       .select(coalesce(bucket, lit(NullBucket)).as("bucket"))
-      .groupBy("bucket").agg(count(lit(1)).as("cnt"))
-      .write.mode("overwrite").parquet(s"$root/hist/batch=$batchId")
-    if (cumulative) {
-      val own = spark.read.parquet(s"$root/hist/batch=$batchId")
-        .select(col("bucket"), col("cnt"))
-      val prevDir = new org.apache.hadoop.fs.Path(
-        s"$root/cumhist/batch=${batchId - 1}")
-      val prevFs = prevDir.getFileSystem(
-        spark.sparkContext.hadoopConfiguration)
-      val cum =
-        if (batchId == 0L) own
-        else if (prevFs.exists(prevDir))
-          spark.read.parquet(prevDir.toString)
-            .select(col("bucket"), col("cnt"))
-            .unionByName(own)
-            .groupBy("bucket").agg(sum("cnt").cast("long").as("cnt"))
-        else
-          // self-heal: sum every stored per-batch hist <= b (later
-          // batches' hists, present during a replay, filtered out)
-          spark.read.parquet(s"$root/hist")
-            .filter(col("batch").cast("long") <= batchId)
-            .groupBy("bucket").agg(sum("cnt").cast("long").as("cnt"))
-      cum.write.mode("overwrite")
-        .parquet(s"$root/cumhist/batch=$batchId")
-    }
+      .groupBy("bucket").agg(count(lit(1)).as("cnt")), root, batchId)
+    if (cumulative) histStore.fold(batch.sparkSession, root, batchId)
   }
 
   /** The drift report from the accumulated histogram store: one row
@@ -167,20 +143,22 @@ object StreamDrift {
     * (`bucket` selects the monitored axis). */
   def run(spark: SparkSession, docs: DataFrame, root: String,
       nSlices: Int = 4, bucket: Column = scoreBucket): DataFrame = {
-    StreamRefit.hfs(spark, root)
-      .mkdirs(new org.apache.hadoop.fs.Path(root))
-    publishSliced(docs, s"$root/topic", nSlices)
-    val src = Topic.decodeDocuments(
-      Topic.readStream(spark, s"$root/topic", maxFilesPerTrigger = 1))
-    val q = src.writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, root, bucket)
-      }
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    runSliced(spark, docs, root, nSlices)(processBatch(_, _, root, bucket))
     report(spark, root)
+  }
+
+  /** The sliced-documents entry every drift-family actor shares: create
+    * `root`, publish `docs` as `nSlices` ordered arrival waves under
+    * `root/topic` ([[publishSliced]]), and stream them one file per
+    * micro-batch through `perBatch` with the checkpoint at
+    * `root/ckpt` ([[StreamOps.runBounded]]). */
+  def runSliced(spark: SparkSession, docs: DataFrame, root: String,
+      nSlices: Int)(perBatch: (DataFrame, Long) => Unit): Unit = {
+    StreamRefit.hfs(spark, root).mkdirs(new org.apache.hadoop.fs.Path(root))
+    publishSliced(docs, s"$root/topic", nSlices)
+    StreamOps.runBounded(Topic.decodeDocuments(
+      Topic.readStream(spark, s"$root/topic", maxFilesPerTrigger = 1)),
+      s"$root/ckpt")(perBatch)
   }
 
   /** The same report computed in one batch pass (batch = doc_id mod

@@ -2,9 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
-
-import graft.sources.Topic
 
 /** Curation LINEAGE (st24) — the whole actor family composed against
   * ONE shared store-root, which is the point the individual operators
@@ -50,24 +47,13 @@ object StreamLineage {
   /** One micro-batch: the shared store/decide step ONCE, then route
     * the data and gate the model off the same derived decision. */
   def processBatch(batch: DataFrame, batchId: Long, root: String,
-      thresholdPpm: Long = StreamRefit.ThresholdPpm): Unit = {
-    val spark = batch.sparkSession
-    StreamRefit.enforceThresholdLineage(spark, root, thresholdPpm)
-    // three actions consume the raw micro-batch (docs store, histogram
-    // scoring, routed write); cache it for the batch's scope so the
-    // topic file is decoded once, not per action (guide §1.2)
-    val b = batch.persist()
-    try {
-      b.select(col("doc_id"), col("text"), col("lang"))
-        .write.mode("overwrite").parquet(s"$root/docs/batch=$batchId")
-      StreamDrift.processBatch(b, batchId, root, StreamRefit.axis,
-        cumulative = true)
-      val fired = StreamRefit.ownDecision(spark, root, batchId,
-        thresholdPpm)
+      thresholdPpm: Long = StreamRefit.ThresholdPpm): Unit =
+    StreamRefit.withDecision(batch, batchId, root, thresholdPpm,
+        keepDocs = true) { (b, fired) =>
       StreamQuarantine.routeBatch(b, batchId, root, fired)
-      StreamPromote.gateBatch(spark, batchId, root, thresholdPpm, fired)
-    } finally b.unpersist()
-  }
+      StreamPromote.gateBatch(b.sparkSession, batchId, root, thresholdPpm,
+        fired)
+    }
 
   /** The per-document lineage: (doc_id, batch, route,
     * serving_version) — serving_version 0 for batch 0 (no model
@@ -94,19 +80,8 @@ object StreamLineage {
   def run(spark: SparkSession, docs: DataFrame, root: String,
       nSlices: Int = 4,
       thresholdPpm: Long = StreamRefit.ThresholdPpm): DataFrame = {
-    StreamRefit.hfs(spark, root)
-      .mkdirs(new org.apache.hadoop.fs.Path(root))
-    StreamDrift.publishSliced(docs, s"$root/topic", nSlices)
-    val src = Topic.decodeDocuments(
-      Topic.readStream(spark, s"$root/topic", maxFilesPerTrigger = 1))
-    val q = src.writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, root, thresholdPpm)
-      }
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    StreamDrift.runSliced(spark, docs, root, nSlices)(
+      processBatch(_, _, root, thresholdPpm))
     lineage(spark, root)
   }
 

@@ -1,14 +1,47 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import graft.functions.Fns
 
-/** Streaming building blocks (SURVEY.md §2.11). All helpers are plain
-  * DataFrame transforms so they compose with both streaming and batch
-  * frames (batch: watermark is a no-op).
+/** Streaming building blocks (SURVEY.md §2.11). The transforms are
+  * plain DataFrame functions so they compose with both streaming and
+  * batch frames (batch: watermark is a no-op); the bounded runners are
+  * the one place a query is given its checkpoint and trigger.
   */
 object StreamOps {
+
+  /** Run `ds` to completion over everything available now, handing
+    * each micro-batch and its id to `perBatch` — the ONE bounded-run
+    * wiring of every actor and streaming query: `checkpointLocation`,
+    * `Trigger.AvailableNow()`, start, `awaitTermination`. The
+    * exactly-once contract rests on the three parts Structured
+    * Streaming combines here: the replayable topic source, the offset
+    * log under `checkpoint`, and a `perBatch` that is idempotent in
+    * the batch id (a batch whose `perBatch` threw — or whose process
+    * died before the commit log recorded it — is re-delivered whole on
+    * restart). A batch failure is rethrown by `awaitTermination`. */
+  def runBounded[T](ds: Dataset[T], checkpoint: String,
+      outputMode: String = "append")(perBatch: (Dataset[T], Long) => Unit)
+      : Unit =
+    startAndAwait(ds.writeStream.outputMode(outputMode)
+      .foreachBatch(perBatch), checkpoint)
+
+  /** [[runBounded]] through Spark's own parquet file sink (its
+    * `_spark_metadata` log is the idempotent commit) — the append-mode
+    * stateful queries whose output Spark writes itself. */
+  def runBoundedToParquet(df: DataFrame, checkpoint: String,
+      path: String): Unit =
+    startAndAwait(df.writeStream.format("parquet").option("path", path),
+      checkpoint)
+
+  private def startAndAwait[T](w: DataStreamWriter[T],
+      checkpoint: String): Unit =
+    w.option("checkpointLocation", checkpoint)
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
 
   /** ST1 keyed dedup with bounded state: sha1 fingerprint over
     * `keyCols`, `withWatermark(tsCol, retention)` then

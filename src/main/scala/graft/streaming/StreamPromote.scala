@@ -3,9 +3,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
-import graft.sources.Topic
 import graft.text.{ClassifierTrain, TextFns}
 
 /** Model PROMOTION gate (st23) — the champion/challenger evaluation
@@ -74,16 +72,11 @@ object StreamPromote {
   /** One micro-batch: store → decide → on firing, fit the challenger,
     * evaluate both models out-of-sample, promote or reject. */
   def processBatch(batch: DataFrame, batchId: Long, root: String,
-      thresholdPpm: Long = StreamRefit.ThresholdPpm): Unit = {
-    val spark = batch.sparkSession
-    StreamRefit.enforceThresholdLineage(spark, root, thresholdPpm)
-    batch.select(col("doc_id"), col("text"), col("lang"))
-      .write.mode("overwrite").parquet(s"$root/docs/batch=$batchId")
-    StreamDrift.processBatch(batch, batchId, root, StreamRefit.axis,
-      cumulative = true)
-    val own = StreamRefit.ownDecision(spark, root, batchId, thresholdPpm)
-    gateBatch(spark, batchId, root, thresholdPpm, own)
-  }
+      thresholdPpm: Long = StreamRefit.ThresholdPpm): Unit =
+    StreamRefit.withDecision(batch, batchId, root, thresholdPpm,
+        keepDocs = true) { (_, own) =>
+      gateBatch(batch.sparkSession, batchId, root, thresholdPpm, own)
+    }
 
   /** Promotion state STRICTLY BEFORE `batchId`:
     * (published count, fired batch of the latest published candidate —
@@ -98,34 +91,12 @@ object StreamPromote {
     * the candidate store once, exactly like dec/'s decisionFor heal.
     * This is what keeps a firing batch's read O(64) champion rows
     * forever instead of the whole candidate history. */
-  /** Batch ids under `root/dir` whose entry names carry `prefix`
-    * (optionally only those `< below`) — the ONE listing rule both
-    * trail readers share: [[pubStateBefore]] and [[publishedVersions]]
-    * must parse the pub/cand trails identically for their
-    * completeness checks to agree, so the parse lives here, once. */
-  private def trailEntries(fs: org.apache.hadoop.fs.FileSystem,
-      root: String, dir: String, prefix: String,
-      below: Option[Long] = None): Seq[Long] = {
-    val p = new org.apache.hadoop.fs.Path(root, dir)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq.map(_.getPath.getName)
-      // digits-only guard: a foreign entry (stray temp file, partial
-      // copy) is SKIPPED, not a NumberFormatException — these readers
-      // are also the self-heal path for damaged roots, exactly where
-      // a foreign file is most plausible; the completeness check
-      // still decides heal-vs-trust on what remains
-      .collect { case n if n.startsWith(prefix) &&
-          n.length > prefix.length &&
-          n.drop(prefix.length).forall(_.isDigit) =>
-        n.stripPrefix(prefix).toLong }
-      .filter(b => below.forall(b < _))
-  }
-
   private[graft] def pubStateBefore(spark: SparkSession,
       root: String, batchId: Long): (Long, Long) = {
     val fs = StreamRefit.hfs(spark, root)
-    val pubBatches = trailEntries(fs, root, "pub", "batch-", Some(batchId))
-    val candBatches = trailEntries(fs, root, "cand", "batch=", Some(batchId))
+    val pubBatches =
+      StreamRefit.batchIdsUnder(fs, root, "pub", batchId - 1, "batch-")
+    val candBatches = StreamRefit.batchIdsUnder(fs, root, "cand", batchId - 1)
     if (candBatches.isEmpty) (0L, -1L)
     else if (pubBatches.nonEmpty && pubBatches.max >= candBatches.max) {
       val raw = StreamRefit.readSmall(fs, new org.apache.hadoop.fs.Path(
@@ -156,8 +127,9 @@ object StreamPromote {
   private[graft] def publishedVersions(spark: SparkSession,
       root: String): Seq[(Long, Long)] = {
     val fs = StreamRefit.hfs(spark, root)
-    val pubBatches = trailEntries(fs, root, "pub", "batch-")
-    val candBatches = trailEntries(fs, root, "cand", "batch=")
+    val pubBatches = StreamRefit.batchIdsUnder(fs, root, "pub",
+      prefix = "batch-")
+    val candBatches = StreamRefit.batchIdsUnder(fs, root, "cand")
     // enumeration needs the trail COMPLETE (every candidate batch has
     // its pub entry) — a max-based check suffices for pubStateBefore,
     // whose single latest entry carries cumulative state, but here a
@@ -165,7 +137,7 @@ object StreamPromote {
     // silently drop the missing batches' publications from the map
     if (candBatches.isEmpty) Seq.empty
     else if (candBatches.toSet.subsetOf(pubBatches.toSet))
-      pubBatches.sorted.flatMap { f =>
+      pubBatches.flatMap { f =>
         val raw = StreamRefit.readSmall(fs,
           new org.apache.hadoop.fs.Path(s"$root/pub/batch-$f"))
           .trim.split(',')
@@ -191,17 +163,8 @@ object StreamPromote {
       root: String, thresholdPpm: Long, own: Boolean): Unit = {
     import spark.implicits._
     if (batchId == 0L || own) {
-      val dec = StreamRefit.decisionsUpTo(spark, root, batchId,
-        thresholdPpm)
-      // clean pool as the COMPLEMENT of the (rare) fired set plus the
-      // (in-contract empty) torn set — the plan carries
-      // O(firings + torn) literals, not O(batches); same construction
-      // and rationale as StreamRefit.processBatch
-      val firedBatches = dec.toSeq.collect {
-        case (c, f) if c <= batchId && f => c
-      }.sorted
-      val excluded = (firedBatches ++
-        StreamRefit.tornBatches(spark, root, batchId)).distinct.sorted
+      val (_, cleanDocs) =
+        StreamRefit.cleanPool(spark, root, batchId, thresholdPpm)
       // promotion state before b: one pub/ checkpoint read; the
       // champion's weights then come from ONE ≤64-row candidate
       // directory — never the whole candidate history
@@ -219,10 +182,6 @@ object StreamPromote {
           Some(IndexedSeq.tabulate(ClassifierTrain.Dim)(b =>
             w.getOrElse(b.toLong, 0L)))
         }
-      val cleanDocs = spark.read.parquet(s"$root/docs")
-        .filter(col("batch").cast("long") <= batchId &&
-          (if (excluded.isEmpty) lit(true)
-           else !col("batch").cast("long").isin(excluded: _*)))
       val trainPool = ClassifierTrain.pool(
         cleanDocs.filter(
           TextFns.splitAssign(col("doc_id")) === "train"),
@@ -277,19 +236,8 @@ object StreamPromote {
   def run(spark: SparkSession, docs: DataFrame, root: String,
       nSlices: Int = 4,
       thresholdPpm: Long = StreamRefit.ThresholdPpm): DataFrame = {
-    StreamRefit.hfs(spark, root)
-      .mkdirs(new org.apache.hadoop.fs.Path(root))
-    StreamDrift.publishSliced(docs, s"$root/topic", nSlices)
-    val src = Topic.decodeDocuments(
-      Topic.readStream(spark, s"$root/topic", maxFilesPerTrigger = 1))
-    val q = src.writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, root, thresholdPpm)
-      }
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    StreamDrift.runSliced(spark, docs, root, nSlices)(
+      processBatch(_, _, root, thresholdPpm))
     candidates(spark, root)
   }
 

@@ -3,9 +3,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
-
-import graft.sources.Topic
 
 /** Drift → QUARANTINE routing (st21) — st20's DATA-plane twin: st20
   * acts on the MODEL (refit on the clean pool when a batch's drift
@@ -51,28 +48,17 @@ object StreamQuarantine {
 
   /** One micro-batch: histogram → decision → routed write. */
   def processBatch(batch: DataFrame, batchId: Long, root: String,
-      thresholdPpm: Long = StreamRefit.ThresholdPpm): Unit = {
+      thresholdPpm: Long = StreamRefit.ThresholdPpm): Unit =
     // same lineage rule as StreamRefit: a restart with a different
     // threshold would re-decide old batches differently and leave a
-    // batch's docs present under BOTH route directories
-    val spark = batch.sparkSession
-    StreamRefit.enforceThresholdLineage(spark, root, thresholdPpm)
-    // two actions consume the raw micro-batch (histogram scoring, the
-    // routed write); cache it for the batch's scope so the topic file
-    // is decoded once, not per action (guide §1.2)
-    val b = batch.persist()
-    try {
-      StreamDrift.processBatch(b, batchId, root, StreamRefit.axis,
-        cumulative = true)
-      // the route needs ONLY this batch's decision — one bounded
-      // decisionFor collect against strictly-earlier histograms, stored
-      // append-only so audits/replays read instead of re-deriving (an
-      // empty micro-batch has no histogram rows and its drift-test limit
-      // is clean: drift_num = 0 — see StreamRefit)
-      val fired = StreamRefit.ownDecision(spark, root, batchId, thresholdPpm)
+    // batch's docs present under BOTH route directories. The route
+    // needs ONLY this batch's decision — one bounded decisionFor
+    // collect against strictly-earlier histograms, stored append-only
+    // so audits/replays read instead of re-deriving
+    StreamRefit.withDecision(batch, batchId, root, thresholdPpm,
+        keepDocs = false) { (b, fired) =>
       routeBatch(b, batchId, root, fired)
-    } finally b.unpersist()
-  }
+    }
 
   /** The DATA-plane action alone, given an already-derived decision —
     * the piece a COMPOSING caller (st24's [[StreamLineage]]) invokes
@@ -100,19 +86,8 @@ object StreamQuarantine {
   def run(spark: SparkSession, docs: DataFrame, root: String,
       nSlices: Int = 4,
       thresholdPpm: Long = StreamRefit.ThresholdPpm): DataFrame = {
-    StreamRefit.hfs(spark, root)
-      .mkdirs(new org.apache.hadoop.fs.Path(root))
-    StreamDrift.publishSliced(docs, s"$root/topic", nSlices)
-    val src = Topic.decodeDocuments(
-      Topic.readStream(spark, s"$root/topic", maxFilesPerTrigger = 1))
-    val q = src.writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, root, thresholdPpm)
-      }
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    StreamDrift.runSliced(spark, docs, root, nSlices)(
+      processBatch(_, _, root, thresholdPpm))
     routed(spark, root)
   }
 

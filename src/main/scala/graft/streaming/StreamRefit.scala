@@ -5,10 +5,8 @@ import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.sinks.KeyedUpsert
-import graft.sources.Topic
 import graft.text.ClassifierTrain
 
 /** Drift → REFIT composition (st20) — the monitoring family finally
@@ -160,27 +158,19 @@ object StreamRefit {
     * O(cells) per batch FOREVER, independent of batches seen; the
     * exact BigInt cross-multiplied test of [[decisions]]. A root
     * without checkpoints (pre-upgrade) self-heals by summing the
-    * stored per-batch hists < b once. An empty batch (no histogram
-    * rows) is clean: drift_num = 0. */
+    * stored per-batch hists < b once ([[FoldedStore.before]]). An
+    * empty batch (no histogram rows) is clean: drift_num = 0. */
   def decisionFor(spark: SparkSession, root: String, batchId: Long,
       thresholdPpm: Long = ThresholdPpm): Boolean = {
-    def cellsOf(dir: String): Map[Long, Long] =
-      spark.read.parquet(dir)
-        .select(col("bucket"), col("cnt").cast("long").as("cnt"))
+    def cellsOf(cells: DataFrame): Map[Long, Long] =
+      cells.select(col("bucket"), col("cnt").cast("long").as("cnt"))
         .collect() // bounded: <= ~51 histogram cells
         .map(r => r.getLong(0) -> r.getLong(1))
         .groupMapReduce(_._1)(_._2)(_ + _)
-    val cur = cellsOf(s"$root/hist/batch=$batchId")
-    val prevDir = new HPath(s"$root/cumhist/batch=${batchId - 1}")
+    val cur = cellsOf(spark.read.parquet(s"$root/hist/batch=$batchId"))
     val prev =
       if (batchId == 0L) Map.empty[Long, Long]
-      else if (hfs(spark, root).exists(prevDir)) cellsOf(prevDir.toString)
-      else spark.read.parquet(s"$root/hist")
-        .filter(col("batch").cast("long") < batchId)
-        .select(col("bucket"), col("cnt").cast("long").as("cnt"))
-        .collect()
-        .map(r => r.getLong(0) -> r.getLong(1))
-        .groupMapReduce(_._1)(_._2)(_ + _)
+      else cellsOf(StreamDrift.histStore.before(spark, root, batchId))
     val n = BigInt(cur.values.sum)
     val prevN = BigInt(prev.values.sum)
     val driftNum = (cur.keySet ++ prev.keySet).toSeq.map { k =>
@@ -223,39 +213,37 @@ object StreamRefit {
       d
     }
 
-  /** Batch ids under `root/dir` from `batch=<id>` entry names, ≤
-    * `upTo` — the ONE store-listing parser every dec/hist/docs reader
-    * shares. Digits-only guard: a foreign entry (stray temp file,
-    * partial copy) is SKIPPED, not a NumberFormatException — these
-    * listings also back the self-heal paths for damaged roots,
-    * exactly where a foreign file is most plausible. */
+  /** Batch ids ≤ `upTo` under `root/dir` from `<prefix><id>` entry
+    * names (`batch=` for the parquet stores, `batch-` for the dec/ and
+    * pub/ byte trails), ascending — the ONE store-listing parser every
+    * dec/hist/docs/cand/pub reader shares, so completeness checks that
+    * compare two trails parse both identically. Digits-only guard: a
+    * foreign entry (stray temp file, partial copy) is SKIPPED, not a
+    * NumberFormatException — these listings also back the self-heal
+    * paths for damaged roots, exactly where a foreign file is most
+    * plausible. */
   private[graft] def batchIdsUnder(fs: FileSystem, root: String,
-      dir: String, upTo: Long): Seq[Long] = {
+      dir: String, upTo: Long = Long.MaxValue,
+      prefix: String = "batch="): Seq[Long] = {
     val p = new HPath(root, dir)
     if (!fs.exists(p)) Seq.empty
     else fs.listStatus(p).toSeq.map(_.getPath.getName)
-      .collect { case n if n.startsWith("batch=") &&
-          n.length > 6 && n.drop(6).forall(_.isDigit) =>
-        n.stripPrefix("batch=").toLong }
+      .collect { case n if n.startsWith(prefix) &&
+          n.length > prefix.length &&
+          n.drop(prefix.length).forall(_.isDigit) =>
+        n.stripPrefix(prefix).toLong }
       .filter(_ <= upTo).sorted
   }
 
-  /** Decisions for every histogram batch ≤ `batchId`: stored bytes
-    * where present, [[decisionFor]] (then stored — self-heal) where
-    * not. The batch set comes from the hist store's directories, so
+  /** Decisions for every histogram batch ≤ `batchId`, each through
+    * [[ownDecision]] (stored byte, or derived and stored — self-heal).
+    * The batch set comes from the hist store's directories, so
     * non-contiguous ids and replays with later batches present both
     * resolve correctly. */
   private[streaming] def decisionsUpTo(spark: SparkSession, root: String,
-      batchId: Long, thresholdPpm: Long): Map[Long, Boolean] = {
-    val known = batchIdsUnder(hfs(spark, root), root, "hist", batchId)
-    known.map { b =>
-      b -> readDecision(spark, root, b).getOrElse {
-        val d = decisionFor(spark, root, b, thresholdPpm)
-        writeDecision(spark, root, b, d)
-        d
-      }
-    }.toMap
-  }
+      batchId: Long, thresholdPpm: Long): Map[Long, Boolean] =
+    batchIdsUnder(hfs(spark, root), root, "hist", batchId)
+      .map(b => b -> ownDecision(spark, root, b, thresholdPpm)).toMap
 
   /** `docs/batch=` directories ≤ `batchId` with NO committed `hist/`
     * twin — TORN batches: reachable only by an out-of-contract direct
@@ -275,69 +263,78 @@ object StreamRefit {
       batchIdsUnder(fs, root, "hist", batchId)).toSeq.sorted
   }
 
-  /** One micro-batch's work — store, decide, maybe refit. Idempotent
-    * under whole-batch replay (see class doc). */
-  def processBatch(batch: DataFrame, batchId: Long, root: String,
-      thresholdPpm: Long = ThresholdPpm): Unit = {
+  /** The CLEAN POOL of a bootstrap/firing batch b: the fired batches
+    * ≤ b (ascending) and the stored docs of every batch ≤ b that
+    * neither fired nor is torn (a firing b itself is suspect and
+    * excluded; batch 0 has no prior so it never fires). Expressed as
+    * the COMPLEMENT — NOT isin(fired ++ torn) — so the plan carries
+    * O(firings + torn) literals, not O(batches): on a stream with
+    * millions of stored batches an isin(clean) list is itself a scale
+    * bug (plan bloat + no partition pruning), while firings stay rare
+    * by construction and torn is empty in contract. Reads the full
+    * decision map, so only bootstrap/firing batches call it — a
+    * non-firing arrival must never pay the O(batches-seen) dec/
+    * listing+reads. */
+  private[streaming] def cleanPool(spark: SparkSession, root: String,
+      batchId: Long, thresholdPpm: Long): (Seq[Long], DataFrame) = {
+    val fired = decisionsUpTo(spark, root, batchId, thresholdPpm)
+      .collect { case (c, true) => c }.toSeq.sorted
+    val excluded = (fired ++ tornBatches(spark, root, batchId)).distinct.sorted
+    val docs = spark.read.parquet(s"$root/docs")
+      .filter(col("batch").cast("long") <= batchId &&
+        (if (excluded.isEmpty) lit(true)
+         else !col("batch").cast("long").isin(excluded: _*)))
+    (fired, docs)
+  }
+
+  /** The store/decide step every decision actor opens its micro-batch
+    * with: threshold lineage check, the batch persisted for its scope
+    * (its consumers — docs store, histogram scoring, the act — would
+    * otherwise decode the topic file once per action, guide §1.2),
+    * the `docs/batch=<id>` store when `keepDocs`, the histogram +
+    * cumhist checkpoint, and ONLY this batch's decision
+    * ([[ownDecision]]); then `act(persistedBatch, fired)`. Run once
+    * per micro-batch by a composed actor (st24/st25), so hist/ and
+    * cumhist/ commit once per batch, not once per plane action. */
+  private[streaming] def withDecision(batch: DataFrame, batchId: Long,
+      root: String, thresholdPpm: Long, keepDocs: Boolean)(
+      act: (DataFrame, Boolean) => Unit): Unit = {
     val spark = batch.sparkSession
     enforceThresholdLineage(spark, root, thresholdPpm)
-    import spark.implicits._
-    // two actions consume the raw micro-batch (docs store, histogram
-    // scoring); cache it for the batch's scope so the topic file is
-    // decoded once, not per action (guide §1.2). Released in the
-    // finally at the end of this method.
     val b = batch.persist()
     try {
-    b.select(col("doc_id"), col("text"), col("lang"))
-      .write.mode("overwrite").parquet(s"$root/docs/batch=$batchId")
-    StreamDrift.processBatch(b, batchId, root, axis,
-      cumulative = true)
-    // ONLY this batch's decision is derived (one bounded collect);
-    // strictly-earlier batches' decisions come from the append-only
-    // dec/ store, so per-batch cost stays flat on the stream-lifetime
-    // axis instead of re-deriving every stored batch per arrival.
-    // An EMPTY micro-batch writes a zero-row histogram and its drift
-    // limit is clean (drift_num = 0) — decisionFor returns false.
-    val own = ownDecision(spark, root, batchId, thresholdPpm)
-    if (batchId == 0L || own) {
-      // the FULL decision map is read only on bootstrap/firing batches
-      // (the only consumers of the clean pool): a non-firing arrival
-      // must never pay the O(batches-seen) dec/ listing+reads, or
-      // per-batch work quietly grows with stream lifetime again
-      val dec = decisionsUpTo(spark, root, batchId, thresholdPpm)
-      // clean pool: batches up to b that never fired (excludes a
-      // firing b itself; batch 0 has no prior so it never fires).
-      // Expressed as the COMPLEMENT — NOT isin(fired ++ torn) — so
-      // the plan carries O(firings + torn) literals, not O(batches):
-      // on a stream with millions of stored batches an isin(clean)
-      // list is itself a scale bug (plan bloat + no partition
-      // pruning), while firings stay rare by construction and torn is
-      // empty in contract. The torn exclusion (round-17) intersects
-      // the complement with the dec-known batch set: a docs/ dir
-      // whose hist/ never committed — an out-of-contract direct
-      // caller's crash — can no longer silently join a training pool.
-      val firedBatches = dec.toSeq.collect {
-        case (c, f) if c <= batchId && f => c
-      }.sorted
-      val version = 1L + firedBatches.length
-      val excluded =
-        (firedBatches ++ tornBatches(spark, root, batchId)).distinct.sorted
-      val cleanDocs = spark.read.parquet(s"$root/docs")
-        .filter(col("batch").cast("long") <= batchId &&
-          (if (excluded.isEmpty) lit(true)
-           else !col("batch").cast("long").isin(excluded: _*)))
-      val pool = ClassifierTrain.pool(cleanDocs,
-        col("lang") === "en").persist()
-      val w = try ClassifierTrain.fitWeights(pool)
-        finally pool.unpersist()
-      val rows = w.zipWithIndex.map { case (wt, b) =>
-        (version, batchId, b.toLong, wt)
-      }.toDF("version", "fired_batch", "bucket", "weight")
-      KeyedUpsert.upsert(spark, s"$root/weights", rows,
-        keyCols = Seq("version", "bucket"), numBuckets = 8)
-    }
+      if (keepDocs)
+        b.select(col("doc_id"), col("text"), col("lang"))
+          .write.mode("overwrite").parquet(s"$root/docs/batch=$batchId")
+      StreamDrift.processBatch(b, batchId, root, axis, cumulative = true)
+      act(b, ownDecision(spark, root, batchId, thresholdPpm))
     } finally b.unpersist()
   }
+
+  /** One micro-batch's work — store, decide, maybe refit. Idempotent
+    * under whole-batch replay (see class doc). An EMPTY micro-batch
+    * writes a zero-row histogram and its drift limit is clean
+    * (drift_num = 0) — decisionFor returns false. */
+  def processBatch(batch: DataFrame, batchId: Long, root: String,
+      thresholdPpm: Long = ThresholdPpm): Unit =
+    withDecision(batch, batchId, root, thresholdPpm, keepDocs = true) {
+      (_, own) =>
+        if (batchId == 0L || own) {
+          val spark = batch.sparkSession
+          import spark.implicits._
+          val (fired, cleanDocs) =
+            cleanPool(spark, root, batchId, thresholdPpm)
+          val pool = ClassifierTrain.pool(cleanDocs,
+            col("lang") === "en").persist()
+          val w = try ClassifierTrain.fitWeights(pool)
+            finally pool.unpersist()
+          val rows = w.zipWithIndex.map { case (wt, b) =>
+            (1L + fired.length, batchId, b.toLong, wt)
+          }.toDF("version", "fired_batch", "bucket", "weight")
+          KeyedUpsert.upsert(spark, s"$root/weights", rows,
+            keyCols = Seq("version", "bucket"), numBuckets = 8)
+        }
+    }
 
   /** The published model history: every version's 64 weights plus the
     * batch whose arrival produced it (version 1 = the batch-0
@@ -353,18 +350,8 @@ object StreamRefit {
   def run(spark: SparkSession, docs: DataFrame, root: String,
       nSlices: Int = 4,
       thresholdPpm: Long = ThresholdPpm): DataFrame = {
-    hfs(spark, root).mkdirs(new HPath(root))
-    StreamDrift.publishSliced(docs, s"$root/topic", nSlices)
-    val src = Topic.decodeDocuments(
-      Topic.readStream(spark, s"$root/topic", maxFilesPerTrigger = 1))
-    val q = src.writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, root, thresholdPpm)
-      }
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    StreamDrift.runSliced(spark, docs, root, nSlices)(
+      processBatch(_, _, root, thresholdPpm))
     weights(spark, root)
   }
 

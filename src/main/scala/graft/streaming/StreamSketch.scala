@@ -3,7 +3,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.functions.Hll
 import graft.sources.Topic
@@ -48,6 +47,12 @@ object StreamSketch {
         topicDir, nFiles = 1, append = append)
     }
 
+  /** `sketch/` partials folded into `cum/` by bucket-wise max of rank —
+    * [[Hll.merge]]'s regroup ([[FoldedStore]]). */
+  private[streaming] val sketchStore = FoldedStore("sketch", "cum",
+    Seq("event_type", "bucket", "rank"),
+    _.groupBy(col("event_type"), col("bucket")).agg(max("rank").as("rank")))
+
   /** One micro-batch's work: the batch's per-(event_type, bucket) max
     * rank — ≤ |types|·256 rows at ANY batch size — written
     * idempotently to its own subdirectory, then CHECKPOINT-COMPACTED:
@@ -61,34 +66,12 @@ object StreamSketch {
     * `cum/b` is a pure function of `cum/b-1` (strictly-earlier state)
     * and batch b's rows, so a whole-batch replay overwrites identical
     * rows. A missing predecessor checkpoint (pre-upgrade root) self-
-    * heals by merging the stored per-batch partials ≤ b once. */
+    * heals by merging the stored per-batch partials ≤ b once
+    * ([[FoldedStore]]). */
   def processBatch(batch: DataFrame, batchId: Long, root: String): Unit = {
-    val spark = batch.sparkSession
-    Hll.sketch(batch, Seq("event_type"), col("user_id"))
-      .write.mode("overwrite").parquet(s"$root/sketch/batch=$batchId")
-    val own = spark.read.parquet(s"$root/sketch/batch=$batchId")
-      .select(col("event_type"), col("bucket"), col("rank"))
-    val prevDir = new org.apache.hadoop.fs.Path(
-      s"$root/cum/batch=${batchId - 1}")
-    val prevFs = prevDir.getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val cum =
-      if (batchId == 0L) own
-      else if (prevFs.exists(prevDir))
-        Hll.merge(
-          spark.read.parquet(prevDir.toString)
-            .select(col("event_type"), col("bucket"), col("rank")),
-          own, Seq("event_type"))
-      else {
-        // self-heal: merge every stored per-batch partial <= b (later
-        // batches' partials, present during a replay, filtered out)
-        val all = spark.read.parquet(s"$root/sketch")
-          .filter(col("batch").cast("long") <= batchId)
-          .select(col("event_type"), col("bucket"), col("rank"))
-        all.groupBy(col("event_type"), col("bucket"))
-          .agg(max("rank").as("rank"))
-      }
-    cum.write.mode("overwrite").parquet(s"$root/cum/batch=$batchId")
+    sketchStore.writePartial(Hll.sketch(batch, Seq("event_type"),
+      col("user_id")), root, batchId)
+    sketchStore.fold(batch.sparkSession, root, batchId)
   }
 
   /** The as-of report from the checkpoint store: for every batch b,
@@ -116,16 +99,9 @@ object StreamSketch {
     StreamRefit.hfs(spark, root)
       .mkdirs(new org.apache.hadoop.fs.Path(root))
     publishSliced(events, s"$root/topic", nSlices)
-    val src = Topic.decodeEvents(
-      Topic.readStream(spark, s"$root/topic", maxFilesPerTrigger = 1))
-    val q = src.writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, root)
-      }
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    StreamOps.runBounded(Topic.decodeEvents(
+      Topic.readStream(spark, s"$root/topic", maxFilesPerTrigger = 1)),
+      s"$root/ckpt")(processBatch(_, _, root))
     report(spark, root)
   }
 

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{ArrayType, LongType, StringType, StructField, StructType}
 
 import graft.sources.Topic
@@ -84,16 +83,9 @@ object StreamingCorpusBuild {
       nFiles: Int = 4, maxFilesPerTrigger: Int = 1,
       shardSize: Option[Int] = None): DataFrame = {
     Topic.publishDocuments(docs, s"$root/topic", nFiles = nFiles)
-    val src = Topic.decodeDocuments(
-      Topic.readStream(spark, s"$root/topic", maxFilesPerTrigger))
-    val q = src.writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, root)
-      }
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    StreamOps.runBounded(Topic.decodeDocuments(
+      Topic.readStream(spark, s"$root/topic", maxFilesPerTrigger)),
+      s"$root/ckpt")(processBatch(_, _, root))
     publish(spark, root, shardSize)
   }
 

@@ -2,9 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
-
-import graft.sources.Topic
 
 /** QUARANTINE-PROTECTED corpus build (st25) — the curation arc's last
   * unforced join, composed at the st24 seam: through round 16 the
@@ -61,25 +58,14 @@ object StreamingCuratedCorpus {
   /** One micro-batch: shared store/decide ONCE, route always, build
     * only when clean. Idempotent under whole-batch replay. */
   def processBatch(batch: DataFrame, batchId: Long, root: String,
-      thresholdPpm: Long = StreamRefit.ThresholdPpm): Unit = {
-    val spark = batch.sparkSession
-    StreamRefit.enforceThresholdLineage(spark, root, thresholdPpm)
-    // the raw micro-batch is consumed by up to THREE actions here
-    // (histogram scoring, the routed write, the build's gate scan) and
-    // an unpersisted batch frame re-decodes the topic file per action
-    // (guide §1.2) — cache it for the batch's scope
-    val b = batch.persist()
-    try {
-      StreamDrift.processBatch(b, batchId, root, StreamRefit.axis,
-        cumulative = true)
-      val fired = StreamRefit.ownDecision(spark, root, batchId,
-        thresholdPpm)
+      thresholdPpm: Long = StreamRefit.ThresholdPpm): Unit =
+    StreamRefit.withDecision(batch, batchId, root, thresholdPpm,
+        keepDocs = false) { (b, fired) =>
       StreamQuarantine.routeBatch(b, batchId, root, fired)
       if (!fired)
         StreamingCorpusBuild.processBatch(
           b.select("doc_id", "text"), batchId, root)
-    } finally b.unpersist()
-  }
+    }
 
   /** Publish, stream, route-and-build per batch, cut the release —
     * the registered st25 entry: the shard manifest a training run
@@ -91,19 +77,8 @@ object StreamingCuratedCorpus {
       nSlices: Int = 4,
       thresholdPpm: Long = StreamRefit.ThresholdPpm,
       shardSize: Option[Int] = None): DataFrame = {
-    StreamRefit.hfs(spark, root)
-      .mkdirs(new org.apache.hadoop.fs.Path(root))
-    StreamDrift.publishSliced(docs, s"$root/topic", nSlices)
-    val src = Topic.decodeDocuments(
-      Topic.readStream(spark, s"$root/topic", maxFilesPerTrigger = 1))
-    val q = src.writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, root, thresholdPpm)
-      }
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    StreamDrift.runSliced(spark, docs, root, nSlices)(
+      processBatch(_, _, root, thresholdPpm))
     // a corpus whose EVERY batch fired leaves no build state at all —
     // there is no clean release to cut, and a raw missing-path read
     // error would misreport that as an engine bug. Fail loudly with

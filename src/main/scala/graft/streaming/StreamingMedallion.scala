@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import graft.pipeline.{Dims, Medallion}
 import graft.sinks.KeyedUpsert
 import graft.sources.Topic
@@ -34,7 +33,7 @@ object StreamingMedallion {
   def goldStream(spark: SparkSession, silver: DataFrame): DataFrame =
     Medallion.gold(silver, Dims.metricMappings(spark), Dims.deviceHistory(spark))
 
-  /** Run the whole chain bounded (Trigger.AvailableNow) and upsert the
+  /** Run the whole chain bounded ([[StreamOps.runBounded]]) and upsert the
     * day rollup into `outDir`. Update-mode aggregate + keyed upsert is
     * the reference's "a lot more scalable than complete mode" pattern
     * (`Gold Aggregation/OLD - Step 05 ...scala:4-5,41-55`). Returns the
@@ -47,19 +46,13 @@ object StreamingMedallion {
     spark.sparkContext.setLocalProperty("spark.scheduler.pool", "graft-rollup")
     val gold = goldStream(spark,
       silverStream(spark, topicDir, maxFilesPerTrigger, dedupRetention))
-    val rollup = Medallion.dayRollup(gold)
     var batches = 0L
-    val q = rollup.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        batches += 1
-        KeyedUpsert.upsert(batch.sparkSession, outDir, batch,
-          keyCols = Seq("id"), numBuckets = numBuckets)
-      }
-      .start()
-    q.awaitTermination()
+    StreamOps.runBounded(Medallion.dayRollup(gold), checkpointDir,
+        "update") { (batch, _) =>
+      batches += 1
+      KeyedUpsert.upsert(batch.sparkSession, outDir, batch,
+        keyCols = Seq("id"), numBuckets = numBuckets)
+    }
     batches
   }
 
@@ -84,16 +77,10 @@ object StreamingMedallion {
       .withColumn("id", graft.functions.Fns.servingId(col("remote_id"),
         col("bucket_ts"), col("metric_id"), col("provider_id"),
         col("category_id")))
-    val q = partials.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        KeyedUpsert.upsert(batch.sparkSession, outDir, batch,
-          keyCols = Seq("id"), numBuckets = numBuckets)
-      }
-      .start()
-    q.awaitTermination()
+    StreamOps.runBounded(partials, checkpointDir, "update") { (batch, _) =>
+      KeyedUpsert.upsert(batch.sparkSession, outDir, batch,
+        keyCols = Seq("id"), numBuckets = numBuckets)
+    }
   }
 
   /** Streaming latest-value table ([O5D]:97-152 semantics): update-mode
@@ -119,18 +106,12 @@ object StreamingMedallion {
         col("top.value_string").as("value_string"))
       .withColumn("ord",
         struct(col("unix_timestamp"), col("element_ord")))
-    val q = latest.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        KeyedUpsert.upsert(batch.sparkSession, outDir, batch,
-          keyCols = Seq("remote_id", "metric_id", "provider_id",
-            "category_id"),
-          numBuckets = numBuckets, tieBreak = Some("ord"),
-          keepMaxOnMerge = true)
-      }
-      .start()
-    q.awaitTermination()
+    StreamOps.runBounded(latest, checkpointDir, "update") { (batch, _) =>
+      KeyedUpsert.upsert(batch.sparkSession, outDir, batch,
+        keyCols = Seq("remote_id", "metric_id", "provider_id",
+          "category_id"),
+        numBuckets = numBuckets, tieBreak = Some("ord"),
+        keepMaxOnMerge = true)
+    }
   }
 }

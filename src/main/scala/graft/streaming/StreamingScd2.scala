@@ -154,20 +154,15 @@ object StreamingScd2 {
   def runEventsDim(spark: SparkSession, topicDir: String, dimDir: String,
       ckptDir: String, maxFilesPerTrigger: Int = 1): DataFrame = {
     import graft.sources.Topic
-    val src = Topic.decodeEvents(
-      Topic.readStream(spark, topicDir, maxFilesPerTrigger))
-    val q = src.writeStream
-      .option("checkpointLocation", ckptDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+    StreamOps.runBounded(Topic.decodeEvents(
+        Topic.readStream(spark, topicDir, maxFilesPerTrigger)), ckptDir) {
+      (batch, _) =>
         foldBatch(
           batch.select(col("user_id"), col("event_type"),
             unix_timestamp(col("ts")).as("t"), col("event_id").as("seq")),
           dimDir, keys = Seq("user_id"), attrs = Seq("event_type"),
           tsCol = "t", seqCol = "seq")
-      }
-      .start()
-    q.awaitTermination()
+    }
     KeyedUpsert.read(spark, dimDir)
       .select("user_id", "event_type", "valid_from", "valid_to")
   }
