@@ -5,9 +5,16 @@ import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{And, Attribute, EqualTo,
+  Expression, Literal, Pmod, XxHash64}
+import org.apache.spark.sql.execution.datasources.{FileIndex,
+  HadoopFsRelation, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.graftshim.Shim
+import org.apache.spark.sql.types._
 
 /** MERGE-semantics keyed upsert onto plain Parquet (SURVEY.md K4): the
   * reference uses `DeltaTable.merge(batch, keys).whenMatched.updateAll.
@@ -25,10 +32,15 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *    directory that currently holds it. A crash before the rename
   *    leaves the previous version fully intact (the half-written commit
   *    dir is unreferenced garbage, reclaimed by vacuum).
-  *  - the manifest header records the table schema (as Delta's log
-  *    `metaData` action does), and bucket dirs are scanned with it: a
-  *    read costs one manifest listing plus one manifest read and runs
-  *    no Spark job (an older, schema-less manifest is read by inference).
+  *  - the manifest header records the table's metadata as Delta's log
+  *    `metaData` action does: the schema (`#schema=`), the key columns
+  *    (`#keys=`) and the bucket count (`#numBuckets=`). A read is one
+  *    manifest listing, one manifest read and a listing of the live
+  *    bucket dirs; the manifest, not a `DataSource` resolution, names
+  *    the files a query reads ([[SnapshotIndex]]), and no Spark job
+  *    runs. A filter that fixes every key column to a literal reads
+  *    the one bucket those literals hash into. An older, schema-less
+  *    manifest is read by inference.
   *
   * The manifest chain doubles as a version log (the reference's
   * `DESCRIBE HISTORY` / `startingVersion` replay, `Query the Metric
@@ -52,10 +64,20 @@ object KeyedUpsert {
   private val ManifestDir = "_manifests"
   private val DataDir = "data"
   private val SrcCol = "__src" // merge tag: 1 incoming, 0 existing
+  /** Header keys that describe the table, not one commit: every commit
+    * carries them forward, in this order. */
+  private val TableMeta = Seq("keys", "numBuckets", "schema")
 
+  /** `__bucket = pmod(xxhash64(keys), n)`; [[SnapshotIndex]] evaluates
+    * the same expression over a lookup's literals. */
   private def bucketed(df: DataFrame, keyCols: Seq[String], n: Int): DataFrame =
     df.withColumn(BucketCol,
       pmod(xxhash64(keyCols.map(col): _*), lit(n.toLong)))
+
+  /** The `#keys=`/`#numBuckets=` header lines of a table bucketed by
+    * `keyCols` into `n` buckets. */
+  private def layoutMeta(keyCols: Seq[String], n: Int): Map[String, String] =
+    Map("keys" -> keyCols.mkString(","), "numBuckets" -> n.toString)
 
   private def fsOf(spark: SparkSession, p: Path): FileSystem =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -107,11 +129,28 @@ object KeyedUpsert {
   }
 
   /** One version's manifest: the `#key=value` header (commit metadata,
-    * the table schema) and bucket -> table-relative live directory. */
+    * the table metadata) and bucket -> table-relative live directory. */
   private case class Manifest(header: Map[String, String],
       buckets: Map[Long, String]) {
     lazy val schema: Option[StructType] =
       header.get("schema").map(DataType.fromJson(_).asInstanceOf[StructType])
+    /** The key columns and bucket count, when the header records both. */
+    lazy val layout: Option[(Seq[String], Int)] =
+      for (k <- header.get("keys"); n <- header.get("numBuckets"))
+        yield (k.split(',').toSeq, n.toInt)
+    def tableMeta: Map[String, String] =
+      header.view.filterKeys(TableMeta.contains).toMap
+
+    /** A MERGE or DELETE must bucket keys as the table does: with other
+      * key columns or another bucket count a key would go live in a
+      * second bucket and read back twice. */
+    def requireLayout(targetDir: String, keyCols: Seq[String], n: Int): Unit = {
+      val asked = layoutMeta(keyCols, n)
+      require(asked.forall { case (k, v) => header.get(k).forall(_ == v) },
+        s"$targetDir is bucketed by keys=${header.getOrElse("keys", "?")} " +
+        s"numBuckets=${header.getOrElse("numBuckets", "?")}; this call " +
+        s"asks for keys=${asked("keys")} numBuckets=$n")
+    }
   }
 
   /** Read and parse the version's manifest in ONE file read. */
@@ -135,23 +174,31 @@ object KeyedUpsert {
       }.toMap)
   }
 
-  /** Scan table-relative bucket dirs with the recorded `schema`: no
-    * inference job reads a footer. Without one, infer it. */
-  private def scan(spark: SparkSession, target: Path,
-      schema: Option[StructType], rels: Iterable[String]): DataFrame =
-    schema.fold(spark.read)(spark.read.schema(_))
-      .parquet(rels.toSeq.sorted.map(rel => new Path(target, rel).toString): _*)
+  /** Scan `dirs` (bucket -> table-relative dir) of manifest `m`. With a
+    * recorded schema the relation is built straight on a
+    * [[SnapshotIndex]]: no path resolution, no footer read. Without
+    * one (a manifest older than the `#schema=` line), infer it. */
+  private def scan(spark: SparkSession, target: Path, m: Manifest,
+      dirs: Map[Long, String]): DataFrame = m.schema match {
+    case Some(s) => spark.baseRelationToDataFrame(HadoopFsRelation(
+      new SnapshotIndex(fsOf(spark, target), target, dirs, m.layout),
+      new StructType(), Shim.asNullable(s), None, new ParquetFileFormat,
+      Map.empty)(spark))
+    case None => spark.read.parquet(dirs.values.toSeq.sorted
+      .map(rel => new Path(target, rel).toString): _*)
+  }
 
   /** Publish `mapping` as version `v`: write a temp file, then rename —
     * the rename IS the commit; it fails (loudly) if the version was
     * concurrently taken. The header records the DESCRIBE HISTORY
     * metadata: operation name, wall-clock commit time, and how many
-    * bucket directories and files this commit (re)wrote; plus the
-    * table schema as one JSON line. */
+    * bucket directories and files this commit (re)wrote; then the
+    * table metadata `meta` (keys, bucket count, schema as one JSON
+    * line). */
   private def commitManifest(fs: FileSystem, target: Path, v: Long,
       mapping: Map[Long, String], operation: String,
       touchedBuckets: Long, filesWritten: Long,
-      schemaJson: Option[String]): Unit = {
+      meta: Map[String, String]): Unit = {
     val dir = new Path(target, ManifestDir)
     fs.mkdirs(dir)
     val tmp = new Path(dir, s".tmp-$v-${System.nanoTime()}")
@@ -160,7 +207,7 @@ object KeyedUpsert {
       s"#commitMs=${System.currentTimeMillis()}\n" +
       s"#touchedBuckets=$touchedBuckets\n" +
       s"#filesWritten=$filesWritten\n" +
-      schemaJson.fold("")(j => s"#schema=$j\n")
+      TableMeta.flatMap(k => meta.get(k).map(v => s"#$k=$v\n")).mkString
     try out.write((header + mapping.toSeq.sortBy(_._1)
       .map { case (bk, rel) => s"$bk\t$rel" }
       .mkString("\n")).getBytes(StandardCharsets.UTF_8))
@@ -182,7 +229,8 @@ object KeyedUpsert {
     * newer") the reference's latest-table maintenance needs, which
     * makes the sink correct under out-of-order batch replay. Each call
     * commits one new version; versions older than the newest
-    * `retainVersions` are vacuumed. */
+    * `retainVersions` are vacuumed. `keyCols` and `numBuckets` must be
+    * the ones the table records (`#keys=`, `#numBuckets=`). */
   def upsert(spark: SparkSession, targetDir: String, batch: DataFrame,
       keyCols: Seq[String], numBuckets: Int = 64,
       tieBreak: Option[String] = None,
@@ -222,13 +270,14 @@ object KeyedUpsert {
           "directory (or delete the legacy data) first")
       val m = current.map(loadManifest(fs, target, _))
         .getOrElse(Manifest(Map.empty, Map.empty))
+      m.requireLayout(targetDir, keyCols, numBuckets)
       // live dirs of ONLY the touched buckets — pruning by manifest,
       // no full-table listing or scan
-      val existing = touched.toSeq.flatMap(m.buckets.get)
+      val existing = m.buckets.view.filterKeys(touched).toMap
       val incoming = b.withColumn(SrcCol, lit(1))
       val rows = if (existing.isEmpty) incoming else
         bucketed( // leaf dirs carry no bucket col; recompute
-          scan(spark, target, m.schema, existing), keyCols, numBuckets)
+          scan(spark, target, m, existing), keyCols, numBuckets)
           .select(b.columns.map(col): _*).withColumn(SrcCol, lit(0))
           .union(incoming)
       // ONE bucket-clustered pass: the in-batch dedup and the merge
@@ -243,7 +292,8 @@ object KeyedUpsert {
         rows.repartition(col(BucketCol))
           .withColumn("__rn", row_number().over(w))
           .filter(col("__rn") === 1).drop("__rn", SrcCol),
-        keyCols, m.buckets, touched, "MERGE", retainVersions)
+        keyCols, m.buckets, touched, "MERGE", retainVersions,
+        layoutMeta(keyCols, numBuckets))
     } finally b.unpersist()
   }
 
@@ -254,12 +304,14 @@ object KeyedUpsert {
     * lets a point lookup (read().filter(key === x)) skip row groups.
     * Publishes version `v` as `base` with the `replaced` buckets
     * remapped to the fresh commit dir; a replaced bucket that received
-    * no rows leaves the manifest, and `rows`' schema is recorded.
+    * no rows leaves the manifest. The header records `layout` (the
+    * `#keys=`/`#numBuckets=` lines) and `rows`' schema.
     * `repartition` (not rebalance) lets AQE coalesce small buckets into
     * one task but never split one. */
   private def writeBuckets(fs: FileSystem, target: Path, v: Long,
       rows: DataFrame, sortCols: Seq[String], base: Map[Long, String],
-      replaced: Set[Long], operation: String, retain: Int): Unit = {
+      replaced: Set[Long], operation: String, retain: Int,
+      layout: Map[String, String]): Unit = {
     val commitRel = f"$DataDir/c$v%08d-${System.nanoTime()}"
     val commitDir = new Path(target, commitRel)
     rows.repartition(col(BucketCol))
@@ -277,8 +329,8 @@ object KeyedUpsert {
       .distinct.map(_.toLong)
     commitManifest(fs, target, v, base -- replaced ++
       written.map(bk => bk -> s"$commitRel/$BucketCol=$bk"),
-      operation, replaced.size.toLong, files.size.toLong,
-      Some(StructType(rows.schema.filterNot(_.name == BucketCol)).json))
+      operation, replaced.size.toLong, files.size.toLong, layout +
+        ("schema" -> StructType(rows.schema.filterNot(_.name == BucketCol)).json))
     vacuum(fs, target, v, retain)
   }
 
@@ -287,7 +339,8 @@ object KeyedUpsert {
     * only buckets the keys hash into are read and rewritten; a bucket
     * left empty drops out of the manifest entirely. Deletes commit a
     * new version, so time travel still reads the pre-delete snapshot
-    * until vacuum reclaims it. */
+    * until vacuum reclaims it. `keyCols` and `numBuckets` must be the
+    * ones the table records. */
   def delete(spark: SparkSession, targetDir: String, keys: DataFrame,
       keyCols: Seq[String], numBuckets: Int = 64,
       retainVersions: Int = 8): Unit = {
@@ -303,16 +356,18 @@ object KeyedUpsert {
       val fs = fsOf(spark, target)
       val current = resolveVersion(spark, targetDir, None)
       val m = loadManifest(fs, target, current)
+      m.requireLayout(targetDir, keyCols, numBuckets)
       val touched = touchedAll.filter(m.buckets.contains).toSet
       if (touched.isEmpty) return // no key hashes into a live bucket
       val existing = bucketed(
-        scan(spark, target, m.schema, touched.toSeq.flatMap(m.buckets.get)),
+        scan(spark, target, m, m.buckets.view.filterKeys(touched).toMap),
         keyCols, numBuckets)
       // a USING join moves the keys first; keep the table's column order
       writeBuckets(fs, target, current + 1,
         existing.join(k.select(keyCols.map(col): _*), keyCols, "left_anti")
           .select(existing.columns.map(col): _*),
-        keyCols, m.buckets, touched, "DELETE", retainVersions)
+        keyCols, m.buckets, touched, "DELETE", retainVersions,
+        layoutMeta(keyCols, numBuckets))
     } finally k.unpersist()
   }
 
@@ -333,10 +388,11 @@ object KeyedUpsert {
     if (m.buckets.isEmpty) return
     // leaf dirs don't store the bucket value; tag each bucket's frame
     val parts = m.buckets.toSeq.sortBy(_._1).map { case (bk, rel) =>
-      scan(spark, target, m.schema, Seq(rel)).withColumn(BucketCol, lit(bk))
+      scan(spark, target, m, Map(bk -> rel)).withColumn(BucketCol, lit(bk))
     }
     writeBuckets(fs, target, current + 1, parts.reduce(_.unionByName(_)),
-      sortCols, Map.empty, m.buckets.keySet, "OPTIMIZE", retainVersions)
+      sortCols, Map.empty, m.buckets.keySet, "OPTIMIZE", retainVersions,
+      m.tableMeta - "schema")
   }
 
   /** RESTORE analog (Delta's `RESTORE TABLE ... TO VERSION AS OF v`):
@@ -346,7 +402,7 @@ object KeyedUpsert {
     * commit directories are immutable, the restored manifest simply
     * references the old ones again (and vacuum keeps any directory a
     * retained manifest references), and the header keeps the restored
-    * version's schema. O(manifest), independent of table size. */
+    * version's table metadata. O(manifest), independent of table size. */
   def restore(spark: SparkSession, targetDir: String, version: Long,
       retainVersions: Int = 8): Unit = {
     val target = new Path(targetDir)
@@ -355,7 +411,7 @@ object KeyedUpsert {
     val latest = resolveVersion(spark, targetDir, None)
     val m = loadManifest(fs, target, v)
     commitManifest(fs, target, latest + 1, m.buckets, "RESTORE", 0L, 0L,
-      m.header.get("schema"))
+      m.tableMeta)
     vacuum(fs, target, latest + 1, retainVersions)
   }
 
@@ -412,9 +468,11 @@ object KeyedUpsert {
 
   /** Read the table at `version` (default: latest committed snapshot)
     * with the schema its manifest records: one manifest listing, one
-    * manifest read and a listing of the live dirs; no Spark job runs.
-    * A fully-deleted snapshot (no live bucket) reads as zero rows of
-    * that schema. */
+    * manifest read and, when the query is planned, one listing per live
+    * dir; no `DataSource` resolution and no Spark job. A filter that
+    * fixes every key column to a literal scans one bucket. A
+    * fully-deleted snapshot (no live bucket) reads as zero rows of that
+    * schema. */
   def read(spark: SparkSession, targetDir: String,
       version: Option[Long] = None): DataFrame = {
     val target = new Path(targetDir)
@@ -422,7 +480,7 @@ object KeyedUpsert {
     val m = loadManifest(fsOf(spark, target), target, v)
     require(m.buckets.nonEmpty || m.schema.nonEmpty,
       s"$targetDir at version $v is empty and its manifest records no schema")
-    scan(spark, target, m.schema, m.buckets.values)
+    scan(spark, target, m, m.buckets)
   }
 
   /** startingVersion-style incremental replay: the current rows of
@@ -438,10 +496,8 @@ object KeyedUpsert {
       resolveVersion(spark, targetDir, Some(sinceVersion))).buckets
     val now = loadManifest(fs, target, latest)
     val changed = now.buckets.filter { case (bk, rel) => !base.get(bk).contains(rel) }
-    if (changed.isEmpty)
-      scan(spark, target, now.schema, now.buckets.values).limit(0)
-    else
-      scan(spark, target, now.schema, changed.values)
+    if (changed.isEmpty) scan(spark, target, now, now.buckets).limit(0)
+    else scan(spark, target, now, changed)
   }
 
   /** Semantic row-level diff between two committed versions: one row
@@ -471,9 +527,9 @@ object KeyedUpsert {
     val changed = (mFrom.buckets.keySet ++ mTo.buckets.keySet)
       .filter(bk => mFrom.buckets.get(bk) != mTo.buckets.get(bk))
     def side(m: Manifest): DataFrame = {
-      val rels = m.buckets.view.filterKeys(changed).values.toSeq
-      if (rels.nonEmpty) scan(spark, target, m.schema, rels)
-      else scan(spark, target, mTo.schema, mTo.buckets.values).limit(0)
+      val dirs = m.buckets.view.filterKeys(changed).toMap
+      if (dirs.nonEmpty) scan(spark, target, m, dirs)
+      else scan(spark, target, mTo, mTo.buckets).limit(0)
     }
     def fingerprinted(df: DataFrame, as: String): DataFrame = {
       val others = df.columns.filterNot(keyCols.contains).sorted
@@ -488,6 +544,79 @@ object KeyedUpsert {
           .when(col("__fp_a") =!= col("__fp_b"), "updated"))
       .filter(col("change").isNotNull)
       .select(keyCols.map(col) :+ col("change"): _*)
+  }
+
+  /** The files of one snapshot as the manifest names them (Delta's
+    * log-driven file index): `dirs` (bucket -> table-relative dir) are
+    * listed once each, on first use, with a plain `listStatus` — no
+    * `InMemoryFileIndex`, glob or existence check, and no located
+    * status, which forks `ls -ld` per file on a local FS without
+    * native IO. With the table's `layout` (key columns, bucket count)
+    * known, [[listFiles]] reads only the bucket a full-key point
+    * lookup hashes into: a filter holding `key = literal` for every
+    * key column, each literal non-null and of the column's exact type.
+    * Float and double keys never prune: their equality folds `-0.0`
+    * into `0.0` and every NaN into one, and the index does not lean on
+    * the hash folding them alike. Any other filter reads every live
+    * dir. */
+  private final class SnapshotIndex(fs: FileSystem, target: Path,
+      dirs: Map[Long, String], layout: Option[(Seq[String], Int)])
+      extends FileIndex {
+
+    private val paths = dirs.toSeq.sortBy(_._1)
+      .map { case (bk, rel) => bk -> new Path(target, rel) }
+
+    private lazy val files: Seq[(Long, Seq[FileStatus])] = paths.map {
+      case (bk, p) => bk -> fs.listStatus(p).toSeq.filter { s =>
+        val n = s.getPath.getName // Spark's data-file rule: no .crc, _SUCCESS
+        s.isFile && s.getLen > 0 && !n.startsWith(".") && !n.startsWith("_")
+      }
+    }
+
+    /** The bucket every row matching `filters` lives in, if they fix
+      * each key column to a literal: `pmod(xxhash64(literals in key
+      * order), n)`, the expression [[bucketed]] writes. */
+    private def pointBucket(filters: Seq[Expression]): Option[Long] =
+      layout.flatMap { case (keys, n) =>
+        def conjuncts(e: Expression): Seq[Expression] = e match {
+          case And(l, r) => conjuncts(l) ++ conjuncts(r)
+          case other => Seq(other)
+        }
+        def hashStable(t: DataType): Boolean = t match {
+          case BooleanType | ByteType | ShortType | IntegerType | LongType |
+               DateType | TimestampType | TimestampNTZType | BinaryType |
+               StringType | _: DecimalType => true // StringType: binary collation only
+          case _ => false
+        }
+        val fixed = filters.flatMap(conjuncts).collect {
+          case EqualTo(a: Attribute, l: Literal) => a -> l
+          case EqualTo(l: Literal, a: Attribute) => a -> l
+        }.collect {
+          case (a, l) if l.value != null && l.dataType == a.dataType &&
+            hashStable(a.dataType) => a.name -> l
+        }.toMap
+        Option.when(keys.forall(fixed.contains))(
+          Pmod(new XxHash64(keys.map(fixed)), Literal(n.toLong)).eval()
+            .asInstanceOf[Long])
+      }
+
+    override def rootPaths: Seq[Path] = paths.map(_._2)
+
+    override def listFiles(partitionFilters: Seq[Expression],
+        dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
+      val read = pointBucket(dataFilters)
+        .fold(files)(bk => files.filter(_._1 == bk))
+      Seq(PartitionDirectory(InternalRow.empty, read.flatMap(_._2).toArray))
+    }
+
+    override def inputFiles: Array[String] =
+      files.flatMap(_._2).map(_.getPath.toString).toArray
+
+    override def refresh(): Unit = () // a snapshot never changes
+
+    override def sizeInBytes: Long = files.flatMap(_._2).map(_.getLen).sum
+
+    override def partitionSchema: StructType = new StructType()
   }
 
   /** foreachBatch hook for streaming update-mode aggregates (K3/K4). */

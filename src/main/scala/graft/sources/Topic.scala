@@ -66,6 +66,18 @@ object Topic {
     }
   }
 
+  /** [[publishOrderedSlices]] split on a column: wave k is the rows of
+    * `df` whose `sliceCol` mod `nSlices` is k, written by
+    * `publishSlice(rows, append)` — a membership rule an oracle replays
+    * in plain SQL. */
+  def publishSlicedBy(df: DataFrame, sliceCol: String, topicDir: String,
+      nSlices: Int)(publishSlice: (DataFrame, Boolean) => Unit): Unit =
+    publishOrderedSlices(topicDir, nSlices) { (k, append) =>
+      publishSlice(
+        df.filter(pmod(col(sliceCol), lit(nSlices.toLong)) === k.toLong),
+        append)
+    }
+
   /** Tail the topic as a stream (S1). */
   def readStream(spark: SparkSession, topicDir: String,
       maxFilesPerTrigger: Int = 1): DataFrame =

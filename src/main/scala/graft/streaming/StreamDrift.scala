@@ -90,11 +90,10 @@ object StreamDrift {
     * can replay exactly. */
   def publishSliced(docs: DataFrame, topicDir: String,
       nSlices: Int): Unit =
-    Topic.publishOrderedSlices(topicDir, nSlices) { (k, append) =>
-      Topic.publish(
-        docs.filter(pmod(col("doc_id"), lit(nSlices.toLong)) === k.toLong),
-        topicDir, tsMicros = col("doc_id"), keyCol = Some("doc_id"),
-        nFiles = 1, append = append)
+    Topic.publishSlicedBy(docs, "doc_id", topicDir, nSlices) {
+      (slice, append) => Topic.publish(slice, topicDir,
+        tsMicros = col("doc_id"), keyCol = Some("doc_id"), nFiles = 1,
+        append = append)
     }
 
   /** The per-batch histogram store `hist/` and its running checkpoint
@@ -147,19 +146,13 @@ object StreamDrift {
     report(spark, root)
   }
 
-  /** The sliced-documents entry every drift-family actor shares: create
-    * `root`, publish `docs` as `nSlices` ordered arrival waves under
-    * `root/topic` ([[publishSliced]]), and stream them one file per
-    * micro-batch through `perBatch` with the checkpoint at
-    * `root/ckpt` ([[StreamOps.runBounded]]). */
+  /** The sliced-documents entry every drift-family actor shares:
+    * [[StreamOps.runSliced]] over `docs` published as `nSlices` ordered
+    * arrival waves ([[publishSliced]]). */
   def runSliced(spark: SparkSession, docs: DataFrame, root: String,
-      nSlices: Int)(perBatch: (DataFrame, Long) => Unit): Unit = {
-    StreamRefit.hfs(spark, root).mkdirs(new org.apache.hadoop.fs.Path(root))
-    publishSliced(docs, s"$root/topic", nSlices)
-    StreamOps.runBounded(Topic.decodeDocuments(
-      Topic.readStream(spark, s"$root/topic", maxFilesPerTrigger = 1)),
-      s"$root/ckpt")(perBatch)
-  }
+      nSlices: Int)(perBatch: (DataFrame, Long) => Unit): Unit =
+    StreamOps.runSliced(spark, root, publishSliced(docs, _, nSlices),
+      Topic.decodeDocuments)(perBatch)
 
   /** The same report computed in one batch pass (batch = doc_id mod
     * nSlices) — the spec's invariance reference. */

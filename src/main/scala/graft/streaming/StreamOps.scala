@@ -1,9 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import graft.functions.Fns
+import graft.sources.Topic
 
 /** Streaming building blocks (SURVEY.md §2.11). The transforms are
   * plain DataFrame functions so they compose with both streaming and
@@ -27,6 +28,19 @@ object StreamOps {
       : Unit =
     startAndAwait(ds.writeStream.outputMode(outputMode)
       .foreachBatch(perBatch), checkpoint)
+
+  /** The sliced entry of the drift-family actors and st22: create
+    * `root`, let `publish` write the topic's ordered arrival waves to
+    * `root/topic`, and stream it one file per micro-batch, decoded by
+    * `decode`, through `perBatch` with the checkpoint at `root/ckpt`. */
+  def runSliced(spark: SparkSession, root: String, publish: String => Unit,
+      decode: DataFrame => DataFrame)(perBatch: (DataFrame, Long) => Unit)
+      : Unit = {
+    StreamRefit.hfs(spark, root).mkdirs(new org.apache.hadoop.fs.Path(root))
+    publish(s"$root/topic")
+    runBounded(decode(Topic.readStream(spark, s"$root/topic",
+      maxFilesPerTrigger = 1)), s"$root/ckpt")(perBatch)
+  }
 
   /** [[runBounded]] through Spark's own parquet file sink (its
     * `_spark_metadata` log is the idempotent commit) — the append-mode

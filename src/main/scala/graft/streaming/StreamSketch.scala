@@ -40,11 +40,9 @@ object StreamSketch {
     * the oracle replays. */
   def publishSliced(events: DataFrame, topicDir: String,
       nSlices: Int): Unit =
-    Topic.publishOrderedSlices(topicDir, nSlices) { (k, append) =>
-      Topic.publishEvents(
-        events.filter(
-          pmod(col("event_id"), lit(nSlices.toLong)) === k.toLong),
-        topicDir, nFiles = 1, append = append)
+    Topic.publishSlicedBy(events, "event_id", topicDir, nSlices) {
+      (slice, append) =>
+        Topic.publishEvents(slice, topicDir, nFiles = 1, append = append)
     }
 
   /** `sketch/` partials folded into `cum/` by bucket-wise max of rank —
@@ -96,12 +94,8 @@ object StreamSketch {
     * registered st22 entry. */
   def run(spark: SparkSession, events: DataFrame, root: String,
       nSlices: Int = 4): DataFrame = {
-    StreamRefit.hfs(spark, root)
-      .mkdirs(new org.apache.hadoop.fs.Path(root))
-    publishSliced(events, s"$root/topic", nSlices)
-    StreamOps.runBounded(Topic.decodeEvents(
-      Topic.readStream(spark, s"$root/topic", maxFilesPerTrigger = 1)),
-      s"$root/ckpt")(processBatch(_, _, root))
+    StreamOps.runSliced(spark, root, publishSliced(events, _, nSlices),
+      Topic.decodeEvents)(processBatch(_, _, root))
     report(spark, root)
   }
 

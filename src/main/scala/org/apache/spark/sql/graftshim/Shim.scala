@@ -3,15 +3,21 @@ package org.apache.spark.sql.graftshim
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.types.StructType
 
 /** Column <-> catalyst Expression bridge. Spark 4 made the converters
   * `private[sql]` (`org.apache.spark.sql.classic.ExpressionUtils`), so
   * extension libraries provide this one-file shim inside the sql
-  * namespace — the only non-`graft` package in this repo.
+  * namespace — the only non-`graft` package in this repo. It also
+  * reaches the `private[spark]` `StructType.asNullable`.
   */
 object Shim {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** `schema` with every field, element and value nullable: what
+    * Spark's file `DataSource` reads a user-given schema as. */
+  def asNullable(schema: StructType): StructType = schema.asNullable
 
   /** Register a function builder on an EXISTING session's registry
     * (SparkSessionExtensions only applies at session build time). */

@@ -564,6 +564,115 @@ class KeyedUpsertSpec extends SparkSpec {
     } finally sc.removeSparkListener(listener)
   }
 
+  test("an upsert or delete with other keys or bucket count fails, table unchanged") {
+    val dir = tmp()
+    KeyedUpsert.upsert(spark, dir,
+      Seq(("a", 1, 1), ("b", 2, 2)).toDF("k", "j", "v"), Seq("k"), numBuckets = 8)
+    def state() = (KeyedUpsert.versions(spark, dir),
+      KeyedUpsert.snapshot(spark, dir),
+      KeyedUpsert.read(spark, dir).as[(String, Int, Int)].collect().toSet)
+    val before = state()
+    // numBuckets 16 would leave "a" live twice: bucket a%8 and bucket a%16
+    val calls = Seq[(String, () => Unit)](
+      "upsert numBuckets" -> (() => KeyedUpsert.upsert(spark, dir,
+        Seq(("a", 1, 9)).toDF("k", "j", "v"), Seq("k"), numBuckets = 16)),
+      "upsert keys" -> (() => KeyedUpsert.upsert(spark, dir,
+        Seq(("a", 1, 9)).toDF("k", "j", "v"), Seq("k", "j"), numBuckets = 8)),
+      "delete numBuckets" -> (() => KeyedUpsert.delete(spark, dir,
+        Seq("a").toDF("k"), Seq("k"), numBuckets = 16)))
+    for ((name, call) <- calls) withClue(s"$name: ") {
+      intercept[IllegalArgumentException](call()).getMessage should
+        include("keys=k numBuckets=8")
+      state() shouldBe before
+    }
+  }
+
+  /** Rows and the scan's `numFiles` metric of one collected query. */
+  private def scanned(df: DataFrame): (Seq[String], Long) = {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val rows = df.collect().map(_.toString).toSeq.sorted
+    val files = new AdaptiveSparkPlanHelper {}
+      .collect(df.queryExecution.executedPlan) {
+        case s: FileSourceScanExec => s.metrics("numFiles").value
+      }
+    (rows, files.sum)
+  }
+
+  test("a full-key lookup reads one bucket; any other filter reads every live file") {
+    val dir = tmp()
+    val rng = new scala.util.Random(7)
+    // 5 x 6 (s, n) keys over 4 buckets: every bucket holds several keys
+    def batch(b: Int) = (1 to 24).map(_ =>
+      (s"u${rng.nextInt(5)}", rng.nextInt(6).toLong, s"b$b-${rng.nextInt(1000)}"))
+      .groupBy(r => (r._1, r._2)).values.map(_.head).toSeq
+    val batches = Seq(batch(1), batch(2))
+    batches.foreach(rows => KeyedUpsert.upsert(spark, dir,
+      rows.toDF("s", "n", "v"), Seq("s", "n"), numBuckets = 4))
+    val model = batches.flatten.map(r => (r._1, r._2) -> r._3).toMap
+    model.size should be > 4 * 2
+    def live() = KeyedUpsert.snapshot(spark, dir).values.toSeq.sorted
+      .map(rel => s"$dir/$rel")
+    def lookup(s: String, n: Long) = $"s" === s && $"n" === n
+    /** Each filter reads `files` files, and the rows a plain parquet
+      * read of the live dirs returns under the same filter. */
+    def check(cells: Seq[(String, org.apache.spark.sql.Column, Long)]): Unit = {
+      val reference = spark.read.parquet(live(): _*)
+      for ((name, f, files) <- cells) withClue(s"$name: ") {
+        val (rows, read) = scanned(KeyedUpsert.read(spark, dir).filter(f))
+        rows shouldBe scanned(reference.filter(f))._1
+        read shouldBe files
+      }
+    }
+    def allKeys(when: String): Unit = {
+      check(model.keys.toSeq.sorted.map { case (s, n) =>
+        (s"$when ($s, $n)", lookup(s, n), 1L) })
+      for (((s, n), v) <- model)
+        KeyedUpsert.read(spark, dir).filter(lookup(s, n))
+          .select("v").as[String].collect().toSeq shouldBe Seq(v)
+    }
+    allKeys("latest")
+    val all = live().size.toLong
+    all shouldBe 4L
+    val ((s1, n1), (s2, n2)) = (model.keys.min, model.keys.max)
+    check(Seq(
+      ("partial key", $"s" === s1, all),
+      ("or", lookup(s1, n1) || lookup(s2, n2), all),
+      ("null-safe null", $"s" <=> lit(null).cast("string") && $"n" === n1, all),
+      ("cast", $"s" === s1 && $"n" === lit(n1.toDouble), all)))
+    // absent keys read at most their own bucket and return nothing
+    check(Seq(("absent", lookup("zz", 99L), 1L)))
+    KeyedUpsert.compact(spark, dir, sortCols = Seq("s", "n"))
+    allKeys("after compact")
+    KeyedUpsert.restore(spark, dir, 1L)
+    val v1 = batches.head.map(r => (r._1, r._2) -> r._3).toMap
+    check(v1.keys.toSeq.map { case (s, n) => (s"after restore ($s, $n)", lookup(s, n), 1L) })
+    // a manifest without #keys=/#numBuckets= reads every live file
+    val latest = KeyedUpsert.versions(spark, dir).last
+    val m = java.nio.file.Paths.get(f"$dir/_manifests/v$latest%08d.txt")
+    val lines = java.nio.file.Files.readAllLines(m)
+    lines.removeIf(l => l.startsWith("#keys=") || l.startsWith("#numBuckets="))
+    java.nio.file.Files.write(m, lines)
+    java.nio.file.Files.deleteIfExists(m.resolveSibling(s".${m.getFileName}.crc"))
+    check(v1.keys.toSeq.map { case (s, n) =>
+      (s"stripped ($s, $n)", lookup(s, n), live().size.toLong) })
+  }
+
+  test("a double key column never prunes") {
+    val dir = tmp()
+    KeyedUpsert.upsert(spark, dir,
+      Seq((0.0, 1), (-0.0, 2), (1.5, 3), (Double.NaN, 4), (2.5, 5)).toDF("d", "v"),
+      Seq("d"), numBuckets = 4)
+    val live = KeyedUpsert.snapshot(spark, dir).values.toSeq
+    val reference = spark.read.parquet(live.map(rel => s"$dir/$rel"): _*)
+    for (d <- Seq(0.0, -0.0, 1.5, Double.NaN)) withClue(s"d = $d: ") {
+      val (rows, files) = scanned(KeyedUpsert.read(spark, dir).filter($"d" === d))
+      rows shouldBe scanned(reference.filter($"d" === d))._1
+      rows should not be empty
+      files shouldBe live.size.toLong
+    }
+  }
+
   test("the recorded schema reads back what parquet inference reads") {
     afterEachOperation { (dir, v) =>
       val live = KeyedUpsert.snapshot(spark, dir).values.toSeq.sorted

@@ -11,7 +11,8 @@ import graft.sources.{Tables, Topic}
 import graft.streaming.StreamingMedallion
 
 /** The streaming trigger path's metadata I/O: the checkpoint manager
-  * [[GraftExtensions.register]] picks and KeyedUpsert's commit listing.
+  * [[GraftExtensions.register]] picks, KeyedUpsert's commit listing and
+  * its snapshot reads.
   * Without a native Hadoop library, FileContext renames fork `readlink`
   * and located file statuses fork `ls -ld`; neither may run per trigger.
   */
@@ -61,6 +62,21 @@ class TriggerPathSpec extends SparkSpec {
         Seq(("b", 20), ("c", 3)).toDF("k", "v"), Seq("k"), numBuckets = 4)
       new ProcessBuilder("true").start().waitFor() // the recording sees forks
     }
+    commands.map(program) should contain("true")
+    commands.filter(c => Set("readlink", "ls").contains(program(c))) shouldBe empty
+  }
+
+  test("a KeyedUpsert read and a filtered collect fork no readlink or ls") {
+    val dir = tmp("read-spawns")
+    KeyedUpsert.upsert(spark, s"$dir/t",
+      Seq(("a", 1), ("b", 2), ("c", 3)).toDF("k", "v"), Seq("k"), numBuckets = 4)
+    var rows = Seq.empty[(String, Int)]
+    val commands = spawnsDuring {
+      rows = KeyedUpsert.read(spark, s"$dir/t").filter($"k" === "b")
+        .as[(String, Int)].collect().toSeq
+      new ProcessBuilder("true").start().waitFor() // the recording sees forks
+    }
+    rows shouldBe Seq(("b", 2))
     commands.map(program) should contain("true")
     commands.filter(c => Set("readlink", "ls").contains(program(c))) shouldBe empty
   }
