@@ -1,10 +1,10 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Codegen A-B regression harness for every custom native expression —
-  * the generalized form of the one-off `HashProfile` that found round
+/** Codegen A-B regression harness for every custom native expression,
+  * generalized from the one-off bucket-hashing profile that found round
   * 10's 37x bug: a generated consume method that exceeds the JVM
   * huge-method JIT limit drops the whole stage to the BYTECODE
   * interpreter, which is dramatically SLOWER than Catalyst's own
@@ -21,25 +21,13 @@ import org.apache.spark.sql.functions._
   *
   * Run: `sbt "runMain graft.CodegenAbProbe"`.
   */
-object CodegenAbProbe {
+object CodegenAbProbe extends Probe {
 
-  def main(args: Array[String]): Unit = {
-    ProbeLog.hostStart()
-    val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val copies = sys.env.getOrElse("SPARK_GRAFT_SCALE_COPIES", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(BenchSplits.confs)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftExtensions.register(spark)
+  private val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+  private val copies = Probe.copies(10)
 
-    val srcTag = ScaleProbe.srcTag(src)
-    val dir = s"/tmp/graft-scale-$srcTag-$copies"
+  def run(spark: SparkSession): Probe.Row = {
+    val dir = s"/tmp/graft-scale-${Probe.srcTag(src)}-$copies"
     val synthesized = ScaleProbe.synthesize(spark, src, dir, copies)
     val docs = sources.Tables.documents(spark, dir)
     val emb = sources.Tables.embeddings(spark, dir)
@@ -198,18 +186,11 @@ object CodegenAbProbe {
     // sec fields are PER-REP seconds now (pre-r13 rows in git history
     // were rep-scaled totals) — tooling diffing historical rows must
     // branch on this field, not assume a timing change
-    val line = s"""{"metric":"codegen_ab","copies":$copies,""" +
+    Probe.Row("codegen_ab", s"""{"metric":"codegen_ab","copies":$copies,""" +
       s""""synthesis_run":$synthesized,""" +
       s""""sec_unit":"per_rep",""" +
       s""""interp":${js(interp)},"gen":${js(gen)},"reps":$repsJson,""" +
-      s""""ratios":${ProbeLog.ratios(interp, gen)},"sf":"$src",${ProbeLog.hostJson()}}"""
-    println(line)
-    val regressions = ProbeLog.recordGated("codegen_ab", line) ++ inversions
-    spark.stop()
-    if (regressions.nonEmpty) {
-      regressions.foreach(r =>
-        System.err.println(s"[probe] REGRESSION/INVERSION: $r"))
-      sys.exit(1)
-    }
+      s""""ratios":${ProbeLog.ratios(interp, gen)},"sf":"$src",${ProbeLog.hostJson()}}""",
+      inversions)
   }
 }

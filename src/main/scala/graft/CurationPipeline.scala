@@ -151,15 +151,7 @@ object CurationPipeline {
     val streamMode = args.headOption.contains("--stream")
     val rest = if (streamMode) args.drop(1) else args
     val dir = rest.headOption.getOrElse("/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftExtensions.register(spark)
+    val spark = Sessions.local(Sessions.cpus(8))
 
     val check = new Checks
     if (streamMode) runStream(spark, dir, check)
@@ -264,11 +256,8 @@ object CurationPipeline {
     // clean exit reclaims the store-root (repeated CI smokes would
     // otherwise accumulate full document copies in /tmp); a failed
     // invariant KEEPS it — the debuggable artifact — and says where
-    if (check.failures.isEmpty) {
-      java.nio.file.Files.walk(java.nio.file.Paths.get(root))
-        .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(f => java.nio.file.Files.delete(f))
-    } else println(s"[curation] store-root kept for debugging: $root")
+    if (check.failures.isEmpty) Dirs.deleteTree(java.nio.file.Paths.get(root))
+    else println(s"[curation] store-root kept for debugging: $root")
   }
 
   private def runBatch(spark: SparkSession, dir: String,

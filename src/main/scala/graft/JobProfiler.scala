@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Per-JOB wall-clock breakdown for one registered query — the
   * root-causing companion to [[CoresProbe]]: when a query reads ~1.0x
@@ -19,16 +18,7 @@ object JobProfiler {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val dir = args(1)
-    val cores = if (args.length > 2) args(2) else "32"
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(BenchSplits.confs)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftExtensions.register(spark)
+    val spark = Sessions.local(Sessions.positiveInt("cores", args.lift(2), 32))
 
     val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Double, String)]()

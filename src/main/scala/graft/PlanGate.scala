@@ -65,6 +65,14 @@ object PlanGate {
     Features.map { case (k, re) => k -> re.r.findAllIn(fin).size }
   }
 
+  /** The formatted AQE-final plan of registered query `name` on
+    * `sfDir`; the query runs to a collect first so AQE settles. */
+  def finalPlan(spark: SparkSession, name: String, sfDir: String): String = {
+    val df = SparkEntry.queries(name)(spark, sfDir)
+    df.collect()
+    df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+  }
+
   def line(q: String, fp: Seq[(String, Int)]): String =
     fp.map { case (k, v) => s""""$k":$v""" }
       .mkString(s"""{"q":"$q",""", ",", "}")
@@ -101,23 +109,11 @@ object PlanGate {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    GraftExtensions.register(spark)
+    val spark = Sessions.local(Sessions.cpus(8))
 
     val rows = SparkEntry.queries.keys.toSeq.sorted.map { n =>
-      val fp = try {
-        val df = SparkEntry.queries(n)(spark, sfDir)
-        df.collect() // AQE-final plan
-        fingerprint(
-          df.queryExecution.explainString(ExplainMode.fromString("formatted")))
-      } catch { case scala.util.control.NonFatal(e) =>
+      val fp = try fingerprint(finalPlan(spark, n, sfDir))
+      catch { case scala.util.control.NonFatal(e) =>
         System.err.println(s"[plangate] $n ERROR ${e.getClass.getSimpleName}")
         Seq("err" -> 1)
       }

@@ -30,37 +30,18 @@ import graft.streaming.{StreamPromote, StreamRefit}
   * on the checkpoint leg's time_ratio (a future edit reverting to the
   * fold shows as the ratio climbing toward the fold's).
   */
-object PromoteCandAxisProbe {
+object PromoteCandAxisProbe extends Probe {
 
   private val Reps = 5
 
-  def main(args: Array[String]): Unit = {
-    ProbeLog.hostStart()
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+  def run(spark: SparkSession): Probe.Row = {
     import spark.implicits._
-
-    def freshRoot(name: String): String = {
-      val p = java.nio.file.Paths.get(s"/tmp/graft-candaxis/$name")
-      if (java.nio.file.Files.exists(p))
-        java.nio.file.Files.walk(p)
-          .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(f => java.nio.file.Files.delete(f))
-      java.nio.file.Files.createDirectories(p)
-      p.toString
-    }
 
     /** A root with n stored candidates at batches 0..n-1, every one
       * published (the adversarial shape: the fold reads ALL of them,
       * the checkpoint reads one pointer + one directory). */
     def buildRoot(n: Int): String = {
-      val root = freshRoot(s"n$n")
+      val root = Dirs.fresh(s"/tmp/graft-candaxis/n$n").toString
       val fs = StreamRefit.hfs(spark, root)
       for (b <- 0 until n) {
         (0 until graft.text.ClassifierTrain.Dim).map { bk =>
@@ -110,19 +91,11 @@ object PromoteCandAxisProbe {
     val fd = axis.map(n => n -> bestOf(Reps)(foldRead(roots(n), n))).toMap
     val cpRatio = cp(128) / cp(16)
     val fdRatio = fd(128) / fd(16)
-    val line = s"""{"metric":"promote_cand_axis","axis":[16,128],""" +
+    Probe.Row("promote_cand_axis", s"""{"metric":"promote_cand_axis","axis":[16,128],""" +
       s""""checkpoint_sec":{"n16":${ProbeLog.fmt(cp(16), 4)},"n128":${ProbeLog.fmt(cp(128), 4)}},""" +
       s""""fold_sec":{"n16":${ProbeLog.fmt(fd(16), 4)},"n128":${ProbeLog.fmt(fd(128), 4)}},""" +
       s""""fold_ratio":${ProbeLog.fmt(fdRatio, 2)},""" +
       s""""ratios":{"st23_checkpoint_read":{"time_ratio":${ProbeLog.fmt(cpRatio, 2)}}},""" +
-      s"""${ProbeLog.hostJson()}}"""
-    println(line)
-    val regressions = ProbeLog.recordGated("promote_cand_axis", line)
-    spark.stop()
-    if (regressions.nonEmpty) {
-      regressions.foreach(r =>
-        System.err.println(s"[probe] REGRESSION vs committed PROBES.json: $r"))
-      sys.exit(1)
-    }
+      s"""${ProbeLog.hostJson()}}""")
   }
 }

@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   *
   * Run: `SPARK_GRAFT_SCALE_COPIES=10 sbt "runMain graft.ScaleProbe"`.
   */
-object ScaleProbe {
+object ScaleProbe extends Probe {
 
   /** The bucketed-candidate operators the probe exists to stress, plus
     * the labeled exact baselines (d05) for the all-pairs cost contrast. */
@@ -90,38 +90,19 @@ object ScaleProbe {
   /** Copy k keeps ids disjoint by a fixed stride. */
   private val IdStride = 10000000L
 
-  /** Probe scratch markers go through the Hadoop FileSystem API (the
-    * streaming byte-store precedent, StreamRefit.hfs): a probe root
-    * pointed at HDFS/S3/ABFS behaves exactly like the local /tmp
-    * roots, instead of silently never finding its `_READY` marker. */
-  private[graft] def readyExists(spark: SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/_READY")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
+  private val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+  private val copies = Probe.copies(10)
+  private val dir = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR",
+    s"/tmp/graft-scale-${Probe.srcTag(src)}-$copies")
 
-  private[graft] def markReady(spark: SparkSession, dir: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/_READY")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .create(p, true).close()
-  }
-
-  /** Basename of a source dir for tagging scratch roots — pure path
-    * string math, any FS scheme. */
-  private[graft] def srcTag(src: String): String =
-    new org.apache.hadoop.fs.Path(src).getName
-
-  /** Shared with [[CoresProbe]]: the same 10x near-dup docs+embeddings
-    * corpus, so data-scaling and compute-scaling verdicts are
-    * comparable. Returns true when THIS call synthesized (fresh dir) —
-    * probe mains record it as `synthesis_run` so the regression gate
-    * can annotate a timing firing whose GC profile carried the
-    * synthesis churn (the class that cost one adjudication per
-    * fresh-tmp round through r14). */
+  /** Shared with [[CoresProbe]] and [[CodegenAbProbe]]: the same 10x
+    * near-dup docs+embeddings corpus, so data-scaling and
+    * compute-scaling verdicts are comparable. True when THIS call
+    * synthesized ([[Probe.synthesizeOnce]]). */
   private[graft] def synthesize(spark: SparkSession, src: String, dir: String,
-      copies: Int): Boolean = {
-    if (ScaleProbe.readyExists(spark, dir)) return false
+      copies: Int): Boolean = Probe.synthesizeOnce(spark, dir) {
     val docs = sources.Tables.documents(spark, src)
-    (0 until copies).map { k =>
+    Probe.writeCopies(copies, s"$dir/documents.parquet") { k =>
       val suffix = s" variant $k"
       if (k == 0) docs
       else docs.select(
@@ -129,11 +110,9 @@ object ScaleProbe {
         concat(col("text"), lit(suffix)).as("text"),
         col("lang"), col("source"),
         (col("n_chars") + lit(suffix.length.toLong)).as("n_chars"))
-    }.reduce(_ unionByName _)
-      .repartition(32)
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    }
     val emb = sources.Tables.embeddings(spark, src)
-    (0 until copies).map { k =>
+    Probe.writeCopies(copies, s"$dir/embeddings.parquet") { k =>
       if (k == 0) emb
       else emb.select(
         (col("vec_id") + lit(k * IdStride)).as("vec_id"),
@@ -141,34 +120,10 @@ object ScaleProbe {
           x => (x * lit(1.0f + 0.01f * k) + lit(0.001f * k)).cast("float"))
           .as("embedding"),
         col("label"))
-    }.reduce(_ unionByName _)
-      .repartition(32)
-      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    ScaleProbe.markReady(spark, dir)
-    true
+    }
   }
 
-  def main(args: Array[String]): Unit = {
-    ProbeLog.hostStart()
-    val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val copies = sys.env.getOrElse("SPARK_GRAFT_SCALE_COPIES", "10").toInt
-    // the synthesized-corpus dir encodes the SOURCE sf too: a stale
-    // _READY dir from a different base would silently probe mixed
-    // corpora (found when a 100x sf0.01 run reused the 10x sf0.1 dir)
-    val srcTag = ScaleProbe.srcTag(src)
-    val dir = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR",
-      s"/tmp/graft-scale-$srcTag-$copies")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(BenchSplits.confs)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftExtensions.register(spark)
-
+  def run(spark: SparkSession): Probe.Row = {
     // hot-bucket drop counters, summed per metric name across the run
     val drops = scala.collection.concurrent.TrieMap[String, Long]()
     spark.listenerManager.register(
@@ -187,10 +142,7 @@ object ScaleProbe {
       })
 
     val synthesized = synthesize(spark, src, dir, copies)
-
-    // Bench-style untimed warm-up (JIT/codegen/footer costs)
-    val wdocs = sources.Tables.documents(spark, src)
-    wdocs.join(wdocs.select("doc_id"), "doc_id").agg(count(lit(1))).collect()
+    Probe.warm(sources.Tables.documents(spark, src), "doc_id")
 
     // Beyond 10x the LABELED quadratic/degenerate contrast rows
     // (d05 all-pairs, d06 fixed-3-plane, s12 fixed-3-plane ANN) are
@@ -205,16 +157,9 @@ object ScaleProbe {
         Set("d05_cosine_neardup", "d06_cosine_neardup_lsh",
           "s12_ann_lsh_fixed3"))
 
-    def runSet(d: String): Seq[(String, Double, Long)] = subset.map { n =>
-      System.err.println(s"[probe] $n @ $d")
-      val t0 = System.nanoTime()
-      val rows = SparkEntry.queries(n)(spark, d).count()
-      (n, (System.nanoTime() - t0) / 1e9, rows)
-    }
-
-    val base = runSet(src)
+    val base = Probe.time(spark, subset, src)
     drops.clear() // report drop metrics for the scaled corpus only
-    val scaled = runSet(dir)
+    val scaled = Probe.time(spark, subset, dir)
 
     // The two hyperplane-LSH consumers again, with planesPerTable sized
     // to the corpus (Ann.planesFor): the fixed 3-plane default has only
@@ -288,37 +233,21 @@ object ScaleProbe {
       "s11_window_contrast" -> (() => s11ViaWindow(dir))
     ).map { case (n, f) =>
       System.err.println(s"[probe] $n (sized/contrast)")
-      val t0 = System.nanoTime()
       // a contrast row that CANNOT complete at this scale is itself
       // the verdict (sec records the time to failure, rows = -1) — it
       // must never erase the subset results that did complete
-      val rows = try f() catch { case e: Throwable =>
+      Probe.timed(n)(try f() catch { case e: Throwable =>
         System.err.println(s"[probe] $n FAILED: ${e.getClass.getName}")
         -1L
-      }
-      (n, (System.nanoTime() - t0) / 1e9, rows)
+      })
     }
 
-    import ProbeLog.js
     val dropJs = drops.toSeq.sortBy(_._1)
       .map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
-    val metricName =
-      if (copies == 10) "scale_probe" else s"scale_probe_${copies}x"
-    val line = s"""{"metric":"$metricName","copies":$copies,""" +
-      s""""synthesis_run":$synthesized,""" +
-      s""""base":${js(base)},"scaled":${js(scaled)},""" +
-      s""""ratios":${ProbeLog.ratios(base, scaled)},""" +
-      s""""scaled_sized":${js(sized)},"planes_sized":$planes,""" +
-      s""""sized_cap":$sizedCap,""" +
-      s""""scaled_drops":$dropJs,"sf":"$src",${ProbeLog.hostJson()}}"""
-    println(line)
-    val regressions = ProbeLog.recordGated(metricName, line)
-    spark.stop()
-    if (regressions.nonEmpty) {
-      regressions.foreach(r =>
-        System.err.println(s"[probe] REGRESSION vs committed PROBES.json: $r"))
-      sys.exit(1)
-    }
+    Probe.scaledRow(Probe.metric("scale_probe", copies), copies,
+      synthesized, base, scaled, src,
+      extra = s""""scaled_sized":${ProbeLog.js(sized)},"planes_sized":$planes,""" +
+        s""""sized_cap":$sizedCap,"scaled_drops":$dropJs,""")
   }
 }
 
@@ -334,7 +263,7 @@ object ScaleProbe {
   * Run: `SPARK_GRAFT_SCALE_COPIES=10 sbt "runMain graft.EventScaleProbe"`;
   * record in BASELINE.md §4.
   */
-object EventScaleProbe {
+object EventScaleProbe extends Probe {
 
   private val Subset = Seq(
     "p19_rollup_cascade", // one-scan cascade: groups grow, scan 10x
@@ -346,70 +275,32 @@ object EventScaleProbe {
 
   private val IdStride = 100000000L
 
+  private val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+  private val copies = Probe.copies(10)
+
   /** Shared with [[StreamScaleProbe]]: same 10x per-key-density events
-    * corpus, so batch and streaming verdicts are comparable. Returns
-    * true when THIS call synthesized — see [[ScaleProbe.synthesize]]. */
+    * corpus, so batch and streaming verdicts are comparable. True when
+    * THIS call synthesized ([[Probe.synthesizeOnce]]). */
   private[graft] def synthesize(spark: SparkSession, src: String, dir: String,
-      copies: Int): Boolean = {
-    if (ScaleProbe.readyExists(spark, dir)) return false
+      copies: Int): Boolean = Probe.synthesizeOnce(spark, dir) {
     val ev = sources.Tables.events(spark, src)
-    (0 until copies).map { k =>
+    Probe.writeCopies(copies, s"$dir/events.parquet") { k =>
       if (k == 0) ev
       else ev.select(
         (col("event_id") + lit(k * IdStride)).as("event_id"),
         (col("ts") + expr(s"INTERVAL $k SECONDS")).as("ts"),
         col("user_id"), col("event_type"), col("value"), col("props"))
-    }.reduce(_ unionByName _)
-      .repartition(32)
-      .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    ScaleProbe.markReady(spark, dir)
-    true
+    }
   }
 
-  def main(args: Array[String]): Unit = {
-    ProbeLog.hostStart()
-    val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val copies = sys.env.getOrElse("SPARK_GRAFT_SCALE_COPIES", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(BenchSplits.confs)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftExtensions.register(spark)
-
-    val dir = s"/tmp/graft-evscale-${ScaleProbe.srcTag(src)}-$copies"
+  def run(spark: SparkSession): Probe.Row = {
+    val dir = s"/tmp/graft-evscale-${Probe.srcTag(src)}-$copies"
     val synthesized = synthesize(spark, src, dir, copies)
-
-    val wev = sources.Tables.events(spark, src)
-    wev.join(wev.select("event_id"), "event_id").agg(count(lit(1))).collect()
-
-    def runSet(d: String): Seq[(String, Double, Long)] = Subset.map { n =>
-      val t0 = System.nanoTime()
-      val rows = SparkEntry.queries(n)(spark, d).count()
-      (n, (System.nanoTime() - t0) / 1e9, rows)
-    }
-    val base = runSet(src)
-    val scaled = runSet(dir)
-
-    import ProbeLog.js
-    val metricName =
-      if (copies == 10) "event_scale_probe" else s"event_scale_probe_${copies}x"
-    val line = s"""{"metric":"$metricName","copies":$copies,""" +
-      s""""synthesis_run":$synthesized,""" +
-      s""""base":${js(base)},"scaled":${js(scaled)},""" +
-      s""""ratios":${ProbeLog.ratios(base, scaled)},"sf":"$src",${ProbeLog.hostJson()}}"""
-    println(line)
-    val regressions = ProbeLog.recordGated(metricName, line)
-    spark.stop()
-    if (regressions.nonEmpty) {
-      regressions.foreach(r =>
-        System.err.println(s"[probe] REGRESSION vs committed PROBES.json: $r"))
-      sys.exit(1)
-    }
+    Probe.warm(sources.Tables.events(spark, src), "event_id")
+    val base = Probe.time(spark, Subset, src)
+    val scaled = Probe.time(spark, Subset, dir)
+    Probe.scaledRow(Probe.metric("event_scale_probe", copies), copies,
+      synthesized, base, scaled, src)
   }
 }
 
@@ -433,7 +324,7 @@ object EventScaleProbe {
   * compare the per-query times against ScaleProbe's near-dup corpus at
   * the same row counts (BASELINE.md §4).
   */
-object SkewProbe {
+object SkewProbe extends Probe {
 
   private val Subset =
     Seq("d02_ngram_jaccard", "d09_containment", "d12_substring_spans")
@@ -442,11 +333,13 @@ object SkewProbe {
     * k=20 grams and d02's 3-word shingles by a wide margin. */
   private val DominantRun = Array.fill(66)("alpha").mkString(" ")
 
+  private val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+  private val copies = Probe.copies(10)
+
   private def synthesize(spark: SparkSession, src: String, dir: String,
-      copies: Int): Boolean = {
-    if (ScaleProbe.readyExists(spark, dir)) return false
+      copies: Int): Boolean = Probe.synthesizeOnce(spark, dir) {
     val docs = sources.Tables.documents(spark, src)
-    (0 until copies).map { k =>
+    Probe.writeCopies(copies, s"$dir/documents.parquet") { k =>
       val base = if (k == 0) docs else docs.select(
         (col("doc_id") + lit(k * 10000000L)).as("doc_id"),
         concat(col("text"), lit(s" variant $k")).as("text"),
@@ -455,42 +348,17 @@ object SkewProbe {
         concat(lit(DominantRun + " "), col("text")).as("text"),
         col("lang"), col("source"),
         (col("n_chars") + lit(DominantRun.length + 1L)).as("n_chars"))
-    }.reduce(_ unionByName _)
-      .repartition(32)
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    ScaleProbe.markReady(spark, dir)
-    true
+    }
   }
 
-  def main(args: Array[String]): Unit = {
-    ProbeLog.hostStart()
-    val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val copies = sys.env.getOrElse("SPARK_GRAFT_SCALE_COPIES", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(BenchSplits.confs)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftExtensions.register(spark)
-
-    val srcTag = ScaleProbe.srcTag(src)
+  def run(spark: SparkSession): Probe.Row = {
+    val srcTag = Probe.srcTag(src)
     val dir1 = s"/tmp/graft-skew-$srcTag-1"
     val dirN = s"/tmp/graft-skew-$srcTag-$copies"
     val synthesized = synthesize(spark, src, dir1, 1) |
       synthesize(spark, src, dirN, copies)
+    Probe.warm(sources.Tables.documents(spark, src), "doc_id")
 
-    val wdocs = sources.Tables.documents(spark, src)
-    wdocs.join(wdocs.select("doc_id"), "doc_id").agg(count(lit(1))).collect()
-
-    def runSet(d: String): Seq[(String, Double, Long)] = Subset.map { n =>
-      val t0 = System.nanoTime()
-      val rows = SparkEntry.queries(n)(spark, d).count()
-      (n, (System.nanoTime() - t0) / 1e9, rows)
-    }
     // BM25 with a HOT query term: "alpha" is in every document, so the
     // hot query's candidate set is the whole corpus. The heap path
     // (t23's production plan) ships <= 5 rows per query per task; the
@@ -517,31 +385,18 @@ object SkewProbe {
       s"t23_hot_heap_$copies" -> (() => bm25Heap(dirN)),
       "t23_hot_window_contrast_1" -> (() => bm25Window(dir1)),
       s"t23_hot_window_contrast_$copies" -> (() => bm25Window(dirN))
-    ).map { case (n, f) =>
-      val t0 = System.nanoTime()
-      val rows = f()
-      (n, (System.nanoTime() - t0) / 1e9, rows)
-    }
+    ).map { case (n, f) => Probe.timed(n)(f()) }
 
-    val skew1 = runSet(dir1)
-    val skewN = runSet(dirN)
+    val skew1 = Probe.time(spark, Subset, dir1)
+    val skewN = Probe.time(spark, Subset, dirN)
 
     import ProbeLog.js
-    val metricName =
-      if (copies == 10) "skew_probe" else s"skew_probe_${copies}x"
-    val line = s"""{"metric":"$metricName","copies":$copies,""" +
+    val metric = Probe.metric("skew_probe", copies)
+    Probe.Row(metric, s"""{"metric":"$metric","copies":$copies,""" +
       s""""synthesis_run":$synthesized,""" +
       s""""skew1":${js(skew1)},"skew$copies":${js(skewN)},""" +
       s""""ratios":${ProbeLog.ratios(skew1, skewN)},""" +
-      s""""bm25_hot":${js(hot)},"sf":"$src",${ProbeLog.hostJson()}}"""
-    println(line)
-    val regressions = ProbeLog.recordGated(metricName, line)
-    spark.stop()
-    if (regressions.nonEmpty) {
-      regressions.foreach(r =>
-        System.err.println(s"[probe] REGRESSION vs committed PROBES.json: $r"))
-      sys.exit(1)
-    }
+      s""""bm25_hot":${js(hot)},"sf":"$src",${ProbeLog.hostJson()}}""")
   }
 }
 
@@ -566,7 +421,7 @@ object SkewProbe {
   * Run: `SPARK_GRAFT_SCALE_COPIES=10 sbt "runMain graft.StreamScaleProbe"`;
   * verdict rows land in PROBES.json + BASELINE.md §4.
   */
-object StreamScaleProbe {
+object StreamScaleProbe extends Probe {
 
   private val Subset = Seq(
     "st12_stream_rollup_cascade",
@@ -622,39 +477,20 @@ object StreamScaleProbe {
     // routing, with a fired batch costing LESS (the build skip)
     "st25_stream_curated_corpus")
 
-  def main(args: Array[String]): Unit = {
-    ProbeLog.hostStart()
-    val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val copies = sys.env.getOrElse("SPARK_GRAFT_SCALE_COPIES", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(BenchSplits.confs)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftExtensions.register(spark)
+  private val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+  private val copies = Probe.copies(10)
 
-    val srcTag = ScaleProbe.srcTag(src)
+  def run(spark: SparkSession): Probe.Row = {
+    val srcTag = Probe.srcTag(src)
     val dir = s"/tmp/graft-evscale-$srcTag-$copies"
     val synthesizedEv = EventScaleProbe.synthesize(spark, src, dir, copies)
     val docDir = s"/tmp/graft-scale-$srcTag-$copies"
     val synthesized =
       ScaleProbe.synthesize(spark, src, docDir, copies) | synthesizedEv
+    Probe.warm(sources.Tables.events(spark, src), "event_id")
 
-    val wev = sources.Tables.events(spark, src)
-    wev.join(wev.select("event_id"), "event_id").agg(count(lit(1))).collect()
-
-    def runOne(n: String, d: String): (String, Double, Long) = {
-      System.err.println(s"[probe] $n @ $d")
-      val t0 = System.nanoTime()
-      val rows = SparkEntry.queries(n)(spark, d).count()
-      (n, (System.nanoTime() - t0) / 1e9, rows)
-    }
-    def runSet(evD: String, docD: String): Seq[(String, Double, Long)] =
-      Subset.map(runOne(_, evD)) ++ DocSubset.map(runOne(_, docD))
+    def runSet(evD: String, docD: String): Seq[Probe.Timing] =
+      Probe.time(spark, Subset, evD) ++ Probe.time(spark, DocSubset, docD)
     val base = runSet(src, src)
     val scaled = runSet(dir, docDir)
 
@@ -669,19 +505,9 @@ object StreamScaleProbe {
     // work growing with batches seen. Commit machinery (fixed cost x
     // 2x batches) pushes the TOTAL up; the per-batch metric is the
     // claim.
-    def freshRoot(name: String): String = {
-      val p = java.nio.file.Paths.get(s"/tmp/graft-stream-axis/$name")
-      if (java.nio.file.Files.exists(p)) {
-        java.nio.file.Files.walk(p)
-          .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(f => java.nio.file.Files.delete(f))
-      }
-      java.nio.file.Files.createDirectories(p)
-      p.toString
-    }
-    def timedSec(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
+    def freshRoot(name: String): String =
+      Dirs.fresh(s"/tmp/graft-stream-axis/$name").toString
+    def timedSec(rows: => Long): Double = Probe.timed("")(rows)._2
     val axisEv = sources.Tables.events(spark, src)
     val axisDocs = sources.Tables.documents(spark, src)
     val batchesAxis = Seq(
@@ -704,22 +530,9 @@ object StreamScaleProbe {
         s""""per_batch_ratio":${ProbeLog.fmt(perBatchRatio, 2)}}"""
     }.mkString("{", ",", "}")
 
-    import ProbeLog.js
-    val metricName =
-      if (copies == 10) "stream_scale_probe" else s"stream_scale_probe_${copies}x"
-    val line = s"""{"metric":"$metricName","copies":$copies,""" +
-      s""""synthesis_run":$synthesized,""" +
-      s""""base":${js(base)},"scaled":${js(scaled)},""" +
-      s""""ratios":${ProbeLog.ratios(base, scaled)},""" +
-      s""""batches_axis":$batchesJs,"sf":"$src",${ProbeLog.hostJson()}}"""
-    println(line)
-    val regressions = ProbeLog.recordGated(metricName, line)
-    spark.stop()
-    if (regressions.nonEmpty) {
-      regressions.foreach(r =>
-        System.err.println(s"[probe] REGRESSION vs committed PROBES.json: $r"))
-      sys.exit(1)
-    }
+    Probe.scaledRow(Probe.metric("stream_scale_probe", copies), copies,
+      synthesized, base, scaled, src,
+      extra = s""""batches_axis":$batchesJs,""")
   }
 }
 
@@ -738,7 +551,7 @@ object StreamScaleProbe {
   * Run: `SPARK_GRAFT_SF_DIR=/root/testdata/sf0.01
   * SPARK_GRAFT_SCALE_COPIES=100 sbt "runMain graft.ZipfScaleProbe"`.
   */
-object ZipfScaleProbe {
+object ZipfScaleProbe extends Probe {
 
   private val Subset = Seq(
     "d03_minhash_lsh", "d04_simhash", "st11_stream_ingest_dedup",
@@ -784,15 +597,17 @@ object ZipfScaleProbe {
     if (p == abc) p.reverse else p
   }
 
+  private val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+  private val copies = Probe.copies(100)
+
   private[graft] def synthesize(spark: SparkSession, src: String, dir: String,
-      copies: Int): Boolean = {
-    if (ScaleProbe.readyExists(spark, dir)) return false
+      copies: Int): Boolean = Probe.synthesizeOnce(spark, dir) {
     val docs = sources.Tables.documents(spark, src)
     val abc = "abcdefghijklmnopqrstuvwxyz"
     val perms = (1 until copies).map(permFor)
     require(perms.distinct.size == perms.size,
       "ZipfScaleProbe: per-copy alphabets must be pairwise distinct")
-    (0 until copies).map { k =>
+    Probe.writeCopies(copies, s"$dir/documents.parquet") { k =>
       if (k == 0) docs
       else {
         // 1% clique members stay near-duplicates (suffixed); the rest
@@ -806,59 +621,154 @@ object ZipfScaleProbe {
             .otherwise(translate(col("text"), abc, perms(k - 1))).as("text"),
           col("lang"), col("source"), col("n_chars"))
       }
-    }.reduce(_ unionByName _)
-      .repartition(32)
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    ScaleProbe.markReady(spark, dir)
-    true
+    }
   }
 
-  def main(args: Array[String]): Unit = {
-    ProbeLog.hostStart()
-    val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val copies = sys.env.getOrElse("SPARK_GRAFT_SCALE_COPIES", "100").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(BenchSplits.confs)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftExtensions.register(spark)
-
-    val srcTag = ScaleProbe.srcTag(src)
-    val dir = s"/tmp/graft-zipf-$srcTag-$copies"
+  def run(spark: SparkSession): Probe.Row = {
+    val dir = s"/tmp/graft-zipf-${Probe.srcTag(src)}-$copies"
     val synthesized = synthesize(spark, src, dir, copies)
+    Probe.warm(sources.Tables.documents(spark, src), "doc_id")
+    val base = Probe.time(spark, Subset, src)
+    val scaled = Probe.time(spark, Subset, dir)
+    Probe.scaledRow(Probe.metric("scale_probe_zipf", copies), copies,
+      synthesized, base, scaled, src)
+  }
+}
 
-    val wdocs = sources.Tables.documents(spark, src)
-    wdocs.join(wdocs.select("doc_id"), "doc_id").agg(count(lit(1))).collect()
+/** Data-scaling probe for the one expensive query no synthetic corpus
+  * covered: q51's PageRank reads the lineitem part–supplier graph,
+  * absent from the docs/embeddings/events corpora, so through round 9
+  * its scale behavior was argued ("per-round cost is one key join over
+  * edges"), never measured. This probe synthesizes a `copies`x edge
+  * multiset as key-offset DISJOINT copies of the base graph — rank
+  * mass never flows between copies, so per-iteration cost scales with
+  * |edges| while the round count stays the fixed 3 — and records the
+  * gated `pagerank_scale_probe` row (expect a near-flat time_ratio;
+  * super-linear growth would mean the per-round join or the
+  * convergence machinery degrades with graph size).
+  *
+  * Run: `sbt "runMain graft.PageRankScaleProbe"` (defaults: 10 copies
+  * of sf0.1's lineitem; SPARK_GRAFT_SF_DIR / SPARK_GRAFT_SCALE_COPIES
+  * override).
+  */
+object PageRankScaleProbe extends Probe {
 
-    def runSet(d: String): Seq[(String, Double, Long)] = Subset.map { n =>
-      System.err.println(s"[probe] $n @ $d")
+  private val IdStride = 10000000L
+
+  private val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+  private val copies = Probe.copies(10)
+
+  private def synthesize(spark: SparkSession, src: String, dir: String,
+      copies: Int): Boolean = Probe.synthesizeOnce(spark, dir) {
+    // only the two graph columns: q51 prunes to them anyway, and the
+    // probe corpus should not pay 14 unread lineitem columns of IO
+    val li = sources.Tables.lineitem(spark, src)
+      .select("l_partkey", "l_suppkey")
+    Probe.writeCopies(copies, s"$dir/lineitem.parquet") { k =>
+      li.select((col("l_partkey") + lit(k * IdStride)).as("l_partkey"),
+        (col("l_suppkey") + lit(k * IdStride)).as("l_suppkey"))
+    }
+  }
+
+  def run(spark: SparkSession): Probe.Row = {
+    val dir = s"/tmp/graft-prscale-${Probe.srcTag(src)}-$copies"
+    val synthesized = synthesize(spark, src, dir, copies)
+    val q51 = Seq("q51_pagerank")
+    Probe.time(spark, q51, src) // untimed warm-up: JIT + codegen
+    val base = Probe.time(spark, q51, src)
+    val scaled = Probe.time(spark, q51, dir)
+    Probe.scaledRow(Probe.metric("pagerank_scale_probe", copies), copies,
+      synthesized, base, scaled, src)
+  }
+}
+
+/** Chain-topology probe for ConnectedComponents — the driver-round
+  * floor measurement. Every dedup probe corpus builds CLIQUE-shaped
+  * duplicate groups (diameter 1–2), which never exercises the
+  * O(diameter) risk of min-label propagation: a CHAIN of near-dups
+  * (doc A ~ B ~ C ~ ..., the long-tail crawl topology where each
+  * revision resembles only its neighbors) has diameter = n, and a
+  * one-driver-action-per-round loop would pay n round-trips — at
+  * round-10's measured 1–2 s per round, a 4096-link chain would be
+  * HOURS. The pointer-jumping shortcut (ConnectedComponents round =
+  * hop + jump) bounds rounds at O(log diameter); this probe measures
+  * exactly that:
+  *
+  *  - operator leg: pure chain edge lists at 256 and 4096 nodes —
+  *    rounds must grow by ~log2(16x) = 4, never 16x, and the probe
+  *    HARD-FAILS if rounds exceed log2(n) + 6;
+  *  - composition leg: d07 (near-dup pairs -> CC -> clusters) on a
+  *    sliding-window chain corpus (doc i = tokens i..i+19, so only
+  *    distance <= 2 neighbors clear the 0.8 Jaccard bar) at 500 and
+  *    2000 docs — one giant path-shaped component of diameter ~n/2;
+  *    without the jump this leg does not finish inside maxIter=50.
+  *
+  * Run: `sbt "runMain graft.CcChainProbe"`; gated row `cc_chain_probe`.
+  */
+object CcChainProbe extends Probe {
+
+  private[graft] def synthesizeChain(spark: SparkSession, dir: String,
+      nDocs: Int): Unit = Probe.synthesizeOnce(spark, dir) {
+    val text = concat_ws(" ",
+      (0 until 20).map(j => concat(lit("tok"), col("id") + j)): _*)
+    spark.range(nDocs)
+      .select(col("id").as("doc_id"), text.as("text"),
+        lit("en").as("lang"), lit("chain").as("source"),
+        length(text).cast("long").as("n_chars"))
+      .repartition(32)
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+  }
+
+  def run(spark: SparkSession): Probe.Row = {
+    def ccChain(n: Long): (Double, Long, Int) = {
+      System.err.println(s"[probe] cc_chain @ $n nodes")
+      val edges = spark.range(n - 1)
+        .select(col("id").as("a"), (col("id") + 1).as("b"))
       val t0 = System.nanoTime()
-      val rows = SparkEntry.queries(n)(spark, d).count()
-      (n, (System.nanoTime() - t0) / 1e9, rows)
+      val (labels, rounds) =
+        operators.ConnectedComponents.runWithRounds(edges)
+      val rows = labels.count()
+      val sec = (System.nanoTime() - t0) / 1e9
+      // correctness on the way: one component, labeled by its min id
+      val lbl = labels.select("label").distinct().collect()
+      require(lbl.length == 1 && lbl(0).getLong(0) == 0L,
+        s"chain($n) mislabeled: ${lbl.take(3).mkString(",")}")
+      (sec, rows, rounds)
     }
-    val base = runSet(src)
-    val scaled = runSet(dir)
+    def d07Chain(nDocs: Int): (Double, Long) = {
+      val dir = s"/tmp/graft-ccchain-$nDocs"
+      synthesizeChain(spark, dir, nDocs)
+      val (_, sec, rows) = Probe.time(spark, Seq("d07_dedup_clusters"), dir).head
+      (sec, rows)
+    }
 
+    // untimed warm-up (JIT + codegen) on a tiny chain
+    ccChain(32)
+
+    val (sB, rB, roundsB) = ccChain(256)
+    val (sS, rS, roundsS) = ccChain(4096)
+    val (dB, dRowsB) = d07Chain(500)
+    val (dS, dRowsS) = d07Chain(2000)
+
+    def logBound(n: Long): Int =
+      (math.log(n.toDouble) / math.log(2.0)).ceil.toInt + 6
+    val roundFailures = Seq(
+      (roundsB > logBound(256)) ->
+        s"cc_chain(256): $roundsB rounds > log bound ${logBound(256)}",
+      (roundsS > logBound(4096)) ->
+        s"cc_chain(4096): $roundsS rounds > log bound ${logBound(4096)}",
+      (roundsS - roundsB > 6) ->
+        s"rounds grew $roundsB -> $roundsS for a 16x chain (not log-like)"
+    ).collect { case (true, msg) => msg }
+
+    val base = Seq(("cc_chain", sB, rB), ("d07_chain", dB, dRowsB))
+    val scaled = Seq(("cc_chain", sS, rS), ("d07_chain", dS, dRowsS))
     import ProbeLog.js
-    val metricName =
-      if (copies == 10) "scale_probe_zipf" else s"scale_probe_zipf_${copies}x"
-    val line = s"""{"metric":"$metricName","copies":$copies,""" +
-      s""""synthesis_run":$synthesized,""" +
+    Probe.Row("cc_chain_probe", s"""{"metric":"cc_chain_probe",""" +
       s""""base":${js(base)},"scaled":${js(scaled)},""" +
-      s""""ratios":${ProbeLog.ratios(base, scaled)},"sf":"$src",${ProbeLog.hostJson()}}"""
-    println(line)
-    val regressions = ProbeLog.recordGated(metricName, line)
-    spark.stop()
-    if (regressions.nonEmpty) {
-      regressions.foreach(r =>
-        System.err.println(s"[probe] REGRESSION vs committed PROBES.json: $r"))
-      sys.exit(1)
-    }
+      s""""ratios":${ProbeLog.ratios(base, scaled)},""" +
+      s""""rounds":{"cc_chain_base":$roundsB,"cc_chain_scaled":$roundsS},""" +
+      s""""sf":"synthetic-chain",${ProbeLog.hostJson()}}""", roundFailures)
   }
 }
 
@@ -907,206 +817,6 @@ object ZipfScaleProbe {
   * `cores_probe_100x` — the measured answer to "does capacity come
   * from data growing into the parallelism?".
   */
-/** Data-scaling probe for the one expensive query no synthetic corpus
-  * covered: q51's PageRank reads the lineitem part–supplier graph,
-  * absent from the docs/embeddings/events corpora, so through round 9
-  * its scale behavior was argued ("per-round cost is one key join over
-  * edges"), never measured. This probe synthesizes a `copies`x edge
-  * multiset as key-offset DISJOINT copies of the base graph — rank
-  * mass never flows between copies, so per-iteration cost scales with
-  * |edges| while the round count stays the fixed 3 — and records the
-  * gated `pagerank_scale_probe` row (expect a near-flat time_ratio;
-  * super-linear growth would mean the per-round join or the
-  * convergence machinery degrades with graph size).
-  *
-  * Run: `sbt "runMain graft.PageRankScaleProbe"` (defaults: 10 copies
-  * of sf0.1's lineitem; SPARK_GRAFT_SF_DIR / SPARK_GRAFT_SCALE_COPIES
-  * override).
-  */
-object PageRankScaleProbe {
-
-  private val IdStride = 10000000L
-
-  private def synthesize(spark: SparkSession, src: String, dir: String,
-      copies: Int): Boolean = {
-    if (ScaleProbe.readyExists(spark, dir)) return false
-    // only the two graph columns: q51 prunes to them anyway, and the
-    // probe corpus should not pay 14 unread lineitem columns of IO
-    val li = sources.Tables.lineitem(spark, src)
-      .select("l_partkey", "l_suppkey")
-    (0 until copies).map { k =>
-      li.select((col("l_partkey") + lit(k * IdStride)).as("l_partkey"),
-        (col("l_suppkey") + lit(k * IdStride)).as("l_suppkey"))
-    }.reduce(_ unionByName _)
-      .repartition(32)
-      .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
-    ScaleProbe.markReady(spark, dir)
-    true
-  }
-
-  def main(args: Array[String]): Unit = {
-    ProbeLog.hostStart()
-    val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val copies = sys.env.getOrElse("SPARK_GRAFT_SCALE_COPIES", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(BenchSplits.confs)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftExtensions.register(spark)
-
-    val srcTag = ScaleProbe.srcTag(src)
-    val dir = s"/tmp/graft-prscale-$srcTag-$copies"
-    val synthesized = synthesize(spark, src, dir, copies)
-
-    def run(d: String): (String, Double, Long) = {
-      System.err.println(s"[probe] q51_pagerank @ $d")
-      val t0 = System.nanoTime()
-      val rows = SparkEntry.queries("q51_pagerank")(spark, d).count()
-      ("q51_pagerank", (System.nanoTime() - t0) / 1e9, rows)
-    }
-    run(src) // untimed warm-up: JIT + codegen
-    val base = Seq(run(src))
-    val scaled = Seq(run(dir))
-
-    import ProbeLog.js
-    val metricName =
-      if (copies == 10) "pagerank_scale_probe"
-      else s"pagerank_scale_probe_${copies}x"
-    val line = s"""{"metric":"$metricName","copies":$copies,""" +
-      s""""synthesis_run":$synthesized,""" +
-      s""""base":${js(base)},"scaled":${js(scaled)},""" +
-      s""""ratios":${ProbeLog.ratios(base, scaled)},"sf":"$src",${ProbeLog.hostJson()}}"""
-    println(line)
-    val regressions = ProbeLog.recordGated(metricName, line)
-    spark.stop()
-    if (regressions.nonEmpty) {
-      regressions.foreach(r =>
-        System.err.println(s"[probe] REGRESSION vs committed PROBES.json: $r"))
-      sys.exit(1)
-    }
-  }
-}
-
-/** Chain-topology probe for ConnectedComponents — the driver-round
-  * floor measurement. Every dedup probe corpus builds CLIQUE-shaped
-  * duplicate groups (diameter 1–2), which never exercises the
-  * O(diameter) risk of min-label propagation: a CHAIN of near-dups
-  * (doc A ~ B ~ C ~ ..., the long-tail crawl topology where each
-  * revision resembles only its neighbors) has diameter = n, and a
-  * one-driver-action-per-round loop would pay n round-trips — at
-  * round-10's measured 1–2 s per round, a 4096-link chain would be
-  * HOURS. The pointer-jumping shortcut (ConnectedComponents round =
-  * hop + jump) bounds rounds at O(log diameter); this probe measures
-  * exactly that:
-  *
-  *  - operator leg: pure chain edge lists at 256 and 4096 nodes —
-  *    rounds must grow by ~log2(16x) = 4, never 16x, and the probe
-  *    HARD-FAILS if rounds exceed log2(n) + 6;
-  *  - composition leg: d07 (near-dup pairs -> CC -> clusters) on a
-  *    sliding-window chain corpus (doc i = tokens i..i+19, so only
-  *    distance <= 2 neighbors clear the 0.8 Jaccard bar) at 500 and
-  *    2000 docs — one giant path-shaped component of diameter ~n/2;
-  *    without the jump this leg does not finish inside maxIter=50.
-  *
-  * Run: `sbt "runMain graft.CcChainProbe"`; gated row `cc_chain_probe`.
-  */
-object CcChainProbe {
-
-  private[graft] def synthesizeChain(spark: SparkSession, dir: String,
-      nDocs: Int): Unit = {
-    if (ScaleProbe.readyExists(spark, dir)) return
-    val text = concat_ws(" ",
-      (0 until 20).map(j => concat(lit("tok"), col("id") + j)): _*)
-    spark.range(nDocs)
-      .select(col("id").as("doc_id"), text.as("text"),
-        lit("en").as("lang"), lit("chain").as("source"),
-        length(text).cast("long").as("n_chars"))
-      .repartition(32)
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    ScaleProbe.markReady(spark, dir)
-  }
-
-  def main(args: Array[String]): Unit = {
-    ProbeLog.hostStart()
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(BenchSplits.confs)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftExtensions.register(spark)
-
-    def ccChain(n: Long): (Double, Long, Int) = {
-      System.err.println(s"[probe] cc_chain @ $n nodes")
-      val edges = spark.range(n - 1)
-        .select(col("id").as("a"), (col("id") + 1).as("b"))
-      val t0 = System.nanoTime()
-      val (labels, rounds) =
-        operators.ConnectedComponents.runWithRounds(edges)
-      val rows = labels.count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      // correctness on the way: one component, labeled by its min id
-      val lbl = labels.select("label").distinct().collect()
-      require(lbl.length == 1 && lbl(0).getLong(0) == 0L,
-        s"chain($n) mislabeled: ${lbl.take(3).mkString(",")}")
-      (sec, rows, rounds)
-    }
-    def d07Chain(nDocs: Int): (Double, Long) = {
-      System.err.println(s"[probe] d07_chain @ $nDocs docs")
-      val dir = s"/tmp/graft-ccchain-$nDocs"
-      synthesizeChain(spark, dir, nDocs)
-      val t0 = System.nanoTime()
-      val rows = SparkEntry.queries("d07_dedup_clusters")(spark, dir).count()
-      ((System.nanoTime() - t0) / 1e9, rows)
-    }
-
-    // untimed warm-up (JIT + codegen) on a tiny chain
-    ccChain(32)
-
-    val (sB, rB, roundsB) = ccChain(256)
-    val (sS, rS, roundsS) = ccChain(4096)
-    val (dB, dRowsB) = d07Chain(500)
-    val (dS, dRowsS) = d07Chain(2000)
-
-    def logBound(n: Long): Int =
-      (math.log(n.toDouble) / math.log(2.0)).ceil.toInt + 6
-    val roundFailures = Seq(
-      (roundsB > logBound(256)) ->
-        s"cc_chain(256): $roundsB rounds > log bound ${logBound(256)}",
-      (roundsS > logBound(4096)) ->
-        s"cc_chain(4096): $roundsS rounds > log bound ${logBound(4096)}",
-      (roundsS - roundsB > 6) ->
-        s"rounds grew $roundsB -> $roundsS for a 16x chain (not log-like)"
-    ).collect { case (true, msg) => msg }
-
-    val base = Seq(("cc_chain", sB, rB), ("d07_chain", dB, dRowsB))
-    val scaled = Seq(("cc_chain", sS, rS), ("d07_chain", dS, dRowsS))
-    import ProbeLog.js
-    val line = s"""{"metric":"cc_chain_probe",""" +
-      s""""base":${js(base)},"scaled":${js(scaled)},""" +
-      s""""ratios":${ProbeLog.ratios(base, scaled)},""" +
-      s""""rounds":{"cc_chain_base":$roundsB,"cc_chain_scaled":$roundsS},""" +
-      s""""sf":"synthetic-chain",${ProbeLog.hostJson()}}"""
-    println(line)
-    val regressions = ProbeLog.recordGated("cc_chain_probe", line) ++
-      roundFailures
-    spark.stop()
-    if (regressions.nonEmpty) {
-      regressions.foreach(r =>
-        System.err.println(s"[probe] REGRESSION/ROUND-BOUND: $r"))
-      sys.exit(1)
-    }
-  }
-}
-
 object CoresProbe {
 
   /** Compute-heavy batch queries over the 10x docs/embeddings corpus:
@@ -1158,32 +868,17 @@ object CoresProbe {
   private val FedEmbSubset = Seq("s02_ann_lsh")
   private val FedEventSubset = Seq("q60_cohort_retention")
 
-  private def session(cores: Int): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(BenchSplits.confs)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftExtensions.register(spark)
-    spark
-  }
+  private val fed = sys.env.get("SPARK_GRAFT_CORES_MODE").contains("fed")
+  private val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
+    if (fed) "/root/testdata/sf0.01" else "/root/testdata/sf0.1")
+  private val copies = Probe.copies(if (fed) 100 else 10)
+  private val warm = sys.env.getOrElse("SPARK_GRAFT_WARMUP_DIR",
+    "/root/testdata/sf0.001")
+  private val (lo, hi) = Probe.coresAxis(sys.env)
 
   def main(args: Array[String]): Unit = {
     ProbeLog.hostStart()
-    val fed = sys.env.get("SPARK_GRAFT_CORES_MODE").contains("fed")
-    val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
-      if (fed) "/root/testdata/sf0.01" else "/root/testdata/sf0.1")
-    val copies = sys.env.getOrElse("SPARK_GRAFT_SCALE_COPIES",
-      if (fed) "100" else "10").toInt
-    val warm = sys.env.getOrElse("SPARK_GRAFT_WARMUP_DIR",
-      "/root/testdata/sf0.001")
-    val lo = sys.env.getOrElse("SPARK_GRAFT_CORES_LO", "8").toInt
-    val hi = sys.env.getOrElse("SPARK_GRAFT_CORES_HI", "32").toInt
-
-    val srcTag = ScaleProbe.srcTag(src)
+    val srcTag = Probe.srcTag(src)
     val docDir = s"/tmp/graft-scale-$srcTag-$copies"
     val evDir = s"/tmp/graft-evscale-$srcTag-$copies"
     val zipfDir = s"/tmp/graft-zipf-$srcTag-$copies"
@@ -1194,31 +889,24 @@ object CoresProbe {
     // warming both keeps the comparison honest rather than gifting
     // the second config a hot code cache)
     var synthesized = false
-    def measure(cores: Int): Seq[(String, Double, Long)] = {
-      val spark = session(cores)
+    def measure(cores: Int): Seq[Probe.Timing] = {
+      System.err.println(s"[probe] leg local[$cores]")
+      val spark = Sessions.local(cores)
       try {
         val work =
           if (fed) {
             synthesized |= ZipfScaleProbe.synthesize(spark, src, zipfDir, copies)
             synthesized |= ScaleProbe.synthesize(spark, src, docDir, copies)
             synthesized |= EventScaleProbe.synthesize(spark, src, evDir, copies)
-            FedDocSubset.map(_ -> zipfDir) ++
-              FedEmbSubset.map(_ -> docDir) ++
-              FedEventSubset.map(_ -> evDir)
+            Seq(FedDocSubset -> zipfDir, FedEmbSubset -> docDir,
+              FedEventSubset -> evDir)
           } else {
             synthesized |= ScaleProbe.synthesize(spark, src, docDir, copies)
             synthesized |= EventScaleProbe.synthesize(spark, src, evDir, copies)
-            DocSubset.map(_ -> docDir) ++ EventSubset.map(_ -> evDir)
+            Seq(DocSubset -> docDir, EventSubset -> evDir)
           }
-        work.foreach { case (n, _) =>
-          SparkEntry.queries(n)(spark, warm).count()
-        }
-        work.map { case (n, d) =>
-          System.err.println(s"[probe] $n @ local[$cores]")
-          val t0 = System.nanoTime()
-          val rows = SparkEntry.queries(n)(spark, d).count()
-          (n, (System.nanoTime() - t0) / 1e9, rows)
-        }
+        work.foreach { case (names, _) => Probe.time(spark, names, warm) }
+        work.flatMap { case (names, d) => Probe.time(spark, names, d) }
       } finally spark.stop()
     }
 
@@ -1236,17 +924,11 @@ object CoresProbe {
     }.mkString("{", ",", "}")
 
     import ProbeLog.js
-    val line = s"""{"metric":"$metric","cores_lo":$lo,"cores_hi":$hi,""" +
+    Probe.exitOn(Probe.record(Probe.Row(metric,
+      s"""{"metric":"$metric","cores_lo":$lo,"cores_hi":$hi,""" +
       s""""synthesis_run":$synthesized,""" +
       s""""lo":${js(loRun)},"hi":${js(hiRun)},""" +
       s""""ratios":${ProbeLog.ratios(loRun, hiRun)},""" +
-      s""""speedup":$speedup,"sf":"$src",${ProbeLog.hostJson()}}"""
-    println(line)
-    val regressions = ProbeLog.recordGated(metric, line)
-    if (regressions.nonEmpty) {
-      regressions.foreach(r =>
-        System.err.println(s"[probe] REGRESSION vs committed PROBES.json: $r"))
-      sys.exit(1)
-    }
+      s""""speedup":$speedup,"sf":"$src",${ProbeLog.hostJson()}}""")))
   }
 }

@@ -28,7 +28,7 @@ import graft.streaming.{StreamDrift, StreamLineage, StreamPromote,
   * climbing back toward 1.0 (it is gated only loosely; the committed
   * row is the record).
   */
-object St24ComposeAbProbe {
+object St24ComposeAbProbe extends Probe {
 
   /** The r15 composition, verbatim: both actors run their own shared
     * store/decide step (double hist/cumhist commit per batch). Output
@@ -39,33 +39,14 @@ object St24ComposeAbProbe {
     StreamPromote.processBatch(batch, batchId, root)
   }
 
-  def main(args: Array[String]): Unit = {
-    ProbeLog.hostStart()
-    val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftExtensions.register(spark)
+  private val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+  def run(spark: SparkSession): Probe.Row = {
     val docs = sources.Tables.documents(spark, src)
-    def freshRoot(name: String): String = {
-      val p = java.nio.file.Paths.get(s"/tmp/graft-st24ab/$name")
-      if (java.nio.file.Files.exists(p))
-        java.nio.file.Files.walk(p)
-          .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(f => java.nio.file.Files.delete(f))
-      java.nio.file.Files.createDirectories(p)
-      p.toString
-    }
     def runWith(name: String,
         perBatch: (org.apache.spark.sql.DataFrame, Long, String) => Unit)
         : (Double, Long) = {
-      val root = freshRoot(name)
+      val root = Dirs.fresh(s"/tmp/graft-st24ab/$name").toString
       // the window includes the topic publish, a constant both legs
       // share (it dilutes the ratio toward 1.0 slightly)
       val t0 = System.nanoTime()
@@ -99,19 +80,11 @@ object St24ComposeAbProbe {
     val ratio = singleSec / doubleSec
     def arr(rs: Seq[(Double, Long)]) =
       rs.map(r => ProbeLog.fmt(r._1, 3)).mkString("[", ",", "]")
-    val line = s"""{"metric":"st24_compose_ab",""" +
+    Probe.Row("st24_compose_ab", s"""{"metric":"st24_compose_ab",""" +
       s""""single_commit_sec":${ProbeLog.fmt(singleSec, 3)},""" +
       s""""double_commit_sec":${ProbeLog.fmt(doubleSec, 3)},""" +
       s""""runs":{"single":${arr(singles)},"double":${arr(doubles)}},""" +
       s""""ratios":{"st24_single_vs_double":{"time_ratio":${ProbeLog.fmt(ratio, 2)}}},""" +
-      s""""rows":${singles.head._2},"sf":"$src",${ProbeLog.hostJson()}}"""
-    println(line)
-    val regressions = ProbeLog.recordGated("st24_compose_ab", line)
-    spark.stop()
-    if (regressions.nonEmpty) {
-      regressions.foreach(r =>
-        System.err.println(s"[probe] REGRESSION vs committed PROBES.json: $r"))
-      sys.exit(1)
-    }
+      s""""rows":${singles.head._2},"sf":"$src",${ProbeLog.hostJson()}}""")
   }
 }

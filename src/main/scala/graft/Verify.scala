@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,17 +9,9 @@ object Verify {
     // optional extra args: run only these query names (local iteration);
     // the driver passes exactly two args and gets the full registry.
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     // full engine surface: SQL-callable native functions + the argmax
     // optimizer rule — every gate query runs THROUGH the extensions
-    GraftExtensions.register(spark)
+    val spark = Sessions.local(Sessions.cpus(4))
     // deliberately local java.io: outDir is the DRIVER's dump dir by
     // contract (the grading harness reads it off the local disk)
     new java.io.File(outDir).mkdirs()

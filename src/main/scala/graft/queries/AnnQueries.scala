@@ -1,9 +1,7 @@
 package graft.queries
 
-import java.nio.file.{Files, Paths}
-import java.util.Comparator
-
 import org.apache.spark.sql.functions._
+import graft.Dirs
 import graft.sinks.KeyedUpsert
 import graft.sources.Tables
 import graft.vector.{Ann, TopicBalance}
@@ -134,15 +132,8 @@ object AnnQueries {
          |       count(*) AS n_total
          |FROM merged GROUP BY cid ORDER BY cid""".stripMargin
 
-  private def freshDir(name: String): String = {
-    val p = Paths.get(s"/tmp/graft-stream/$name")
-    if (Files.exists(p)) {
-      Files.walk(p).sorted(Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(f => Files.delete(f))
-    }
-    Files.createDirectories(p)
-    p.toString
-  }
+  private def freshDir(name: String): String =
+    Dirs.fresh(s"/tmp/graft-stream/$name").toString
 
   val all: Map[String, Q] = Map(
 

@@ -1,10 +1,10 @@
 package graft.queries
 
-import java.nio.file.{Files, Path, Paths}
-import java.util.Comparator
+import java.nio.file.Path
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.Dirs
 import graft.functions.Fns
 import graft.sinks.{FileBloomIndex, KeyedUpsert, TableSinks}
 import graft.sources.{FileSources, Tables}
@@ -17,15 +17,8 @@ import graft.sources.{FileSources, Tables}
   */
 object SinkQueries {
 
-  private def freshDir(name: String): Path = {
-    val p = Paths.get(s"/tmp/graft-sink/$name")
-    if (Files.exists(p)) {
-      Files.walk(p).sorted(Comparator.reverseOrder[Path]())
-        .forEach(f => Files.delete(f))
-    }
-    Files.createDirectories(p)
-    p
-  }
+  private def freshDir(name: String): Path =
+    Dirs.fresh(s"/tmp/graft-sink/$name")
 
   val all: Map[String, Q] = Map(
 

@@ -1,9 +1,9 @@
 package graft.queries
 
-import java.nio.file.{Files, Path, Paths}
-import java.util.Comparator
+import java.nio.file.Path
 
 import org.apache.spark.sql.functions._
+import graft.Dirs
 import graft.sinks.KeyedUpsert
 import graft.sources.{Tables, Topic}
 import graft.streaming.{StreamOps, StreamingMedallion}
@@ -139,15 +139,8 @@ object StreamingQueries {
     }
   }
 
-  private def freshDir(name: String): Path = {
-    val p = Paths.get(s"/tmp/graft-stream/$name")
-    if (Files.exists(p)) {
-      Files.walk(p).sorted(Comparator.reverseOrder[Path]())
-        .forEach(f => Files.delete(f))
-    }
-    Files.createDirectories(p)
-    p
-  }
+  private def freshDir(name: String): Path =
+    Dirs.fresh(s"/tmp/graft-stream/$name")
 
 
   /** The st16/st25 SHARED oracle: t28's one-shot topology (quality

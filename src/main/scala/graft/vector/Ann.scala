@@ -40,7 +40,8 @@ object Ann {
   private def planeLit(p: Int, dim: Int): Column =
     array((0 until dim).map(i => lit(planeWeight(p, i))): _*)
 
-  /** [[planeLit]] exposed for the HashProfile micro-benchmark only. */
+  /** [[planeLit]] exposed for CodegenSpec and CodegenAbProbe's
+    * per-dot workloads. */
   private[graft] def planeLitPublic(p: Int, dim: Int): Column =
     planeLit(p, dim)
 
@@ -52,7 +53,7 @@ object Ann {
     * per-plane [[graft.functions.DotProduct]] composition unrolled
     * 24–88 dot loops into one generated method, blew the JVM
     * huge-method JIT limit, and ran the stage in the bytecode
-    * interpreter (37x slower than interpreted mode — HashProfile has
+    * interpreter (37x slower than interpreted mode — BASELINE.md has
     * the measurement). Same left-to-right per-plane summation, so
     * signs — and therefore buckets and every oracle — are unchanged. */
   def lshBuckets(v: Column, dim: Int, planesPerTable: Int, nTables: Int)

@@ -1,8 +1,5 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
-import java.util.Comparator
-
 import graft.sources.Tables
 import graft.streaming.IngestDedup
 import graft.text.Dedup
@@ -15,15 +12,6 @@ import graft.text.Dedup
   */
 class IngestDedupSpec extends SparkSpec {
 
-  private def fresh(name: String): Path = {
-    val p = Paths.get(s"/tmp/graft-stream/$name")
-    if (Files.exists(p))
-      Files.walk(p).sorted(Comparator.reverseOrder[Path]())
-        .forEach(f => Files.delete(f))
-    Files.createDirectories(p)
-    p
-  }
-
   private def pairsOf(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, java.math.BigDecimal)] =
     df.collect().map(r => (r.getLong(0), r.getLong(1),
       new java.math.BigDecimal(r.get(2).toString))).toSet
@@ -35,11 +23,11 @@ class IngestDedupSpec extends SparkSpec {
     batch should not be empty // the corpus must actually contain near-dups
 
     val fine = pairsOf(IngestDedup
-      .run(spark, docs, fresh("ingest-fine").toString,
+      .run(spark, docs, Dirs.fresh("/tmp/graft-stream/ingest-fine").toString,
         nFiles = 4, maxFilesPerTrigger = 1)
       .select("a", "b", "est_jaccard"))
     val coarse = pairsOf(IngestDedup
-      .run(spark, docs, fresh("ingest-coarse").toString,
+      .run(spark, docs, Dirs.fresh("/tmp/graft-stream/ingest-coarse").toString,
         nFiles = 6, maxFilesPerTrigger = 3)
       .select("a", "b", "est_jaccard"))
 
@@ -60,23 +48,23 @@ class IngestDedupSpec extends SparkSpec {
     val batch = rows(StreamingCorpusBuild.batchReference(docs))
     batch should not be empty
     val fine = rows(StreamingCorpusBuild.run(spark, docs,
-      fresh("corpus-fine").toString, nFiles = 4, maxFilesPerTrigger = 1))
+      Dirs.fresh("/tmp/graft-stream/corpus-fine").toString, nFiles = 4, maxFilesPerTrigger = 1))
     val coarse = rows(StreamingCorpusBuild.run(spark, docs,
-      fresh("corpus-coarse").toString, nFiles = 6, maxFilesPerTrigger = 3))
+      Dirs.fresh("/tmp/graft-stream/corpus-coarse").toString, nFiles = 6, maxFilesPerTrigger = 3))
     fine shouldBe batch
     coarse shouldBe batch
   }
 
   test("each pair is emitted exactly once across micro-batches") {
     val docs = Tables.documents(spark, SfDir)
-    val out = IngestDedup.run(spark, docs, fresh("ingest-once").toString,
+    val out = IngestDedup.run(spark, docs, Dirs.fresh("/tmp/graft-stream/ingest-once").toString,
       nFiles = 4, maxFilesPerTrigger = 1)
     out.count() shouldBe out.select("a", "b").distinct().count()
   }
 
   test("a replayed micro-batch rewrites instead of duplicating (crash-retry)") {
     import org.apache.spark.sql.functions.col
-    val root = fresh("ingest-replay").toString
+    val root = Dirs.fresh("/tmp/graft-stream/ingest-replay").toString
     val docs = Tables.documents(spark, SfDir)
     val b0 = docs.filter(col("doc_id") % 2 === 0)
     val b1 = docs.filter(col("doc_id") % 2 === 1)

@@ -8,11 +8,14 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
-/** Source guard: the bounded streaming run is wired in ONE place,
-  * `StreamOps.runBounded` / `runBoundedToParquet`. Any other main
-  * source whose CODE sets `"checkpointLocation"` or
-  * `Trigger.AvailableNow` is a hand-wired copy of that runner growing
-  * back. Comments may still name both. */
+/** Source guards against hand-wired copies growing back in main-source
+  * CODE (comments may still name what they guard):
+  *  - the bounded streaming run is wired in ONE place,
+  *    `StreamOps.runBounded` / `runBoundedToParquet`, so no other file
+  *    sets `"checkpointLocation"` or `Trigger.AvailableNow`;
+  *  - sessions come from ONE factory, `Sessions`, so no file other than
+  *    it and Bench (whose literals SessionsSpec pins it to) calls
+  *    `SparkSession.builder`. */
 class SourceGuardSpec extends AnyFunSuite with Matchers {
 
   private val Tokens = Seq("Trigger.AvailableNow", "\"checkpointLocation\"")
@@ -53,14 +56,17 @@ class SourceGuardSpec extends AnyFunSuite with Matchers {
   private def read(p: Path): String =
     new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
 
+  private lazy val mainSources: Seq[Path] =
+    Files.walk(Paths.get("src/main/scala")).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+
   test("only StreamOps sets a checkpoint location or the AvailableNow " +
       "trigger in main-source code") {
     // the scanner itself: comment mentions vanish, code and strings stay
     codeOf("/** Trigger.AvailableNow /* nested */ */ x // \"checkpointLocation\"\n" +
       "val s = \"a // b\"; val c = '\"'; y") shouldBe
       " x \nval s = \"a // b\"; val c = '\"'; y"
-    val files = Files.walk(Paths.get("src/main/scala")).iterator().asScala
-      .filter(_.toString.endsWith(".scala")).toSeq
+    val files = mainSources
     files.size should be > 100
     val (runner, others) =
       files.partition(_.getFileName.toString == "StreamOps.scala")
@@ -73,5 +79,11 @@ class SourceGuardSpec extends AnyFunSuite with Matchers {
       t <- Tokens if code.contains(t)
     } yield s"$f: $t"
     offenders shouldBe empty
+  }
+
+  test("only Bench and Sessions call SparkSession.builder in main-source code") {
+    mainSources.filter(f => codeOf(read(f)).contains("SparkSession.builder"))
+      .map(_.getFileName.toString).toSet shouldBe
+      Set("Bench.scala", "Sessions.scala")
   }
 }

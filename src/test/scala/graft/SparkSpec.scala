@@ -5,10 +5,10 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
 /** Shared local SparkSession for all specs. One JVM-wide session (Spark
-  * sessions are cheap to share, expensive to churn); small shuffle
-  * partition count keeps micro-fixture tests fast. The session is
-  * registered like every engine entry point's (native functions, the
-  * argmax rule, the checkpoint manager default).
+  * sessions are cheap to share, expensive to churn), built by the
+  * session factory at 4 cores, so specs plan with the bench's confs.
+  * The session is registered like every engine entry point's (native
+  * functions, the argmax rule, the checkpoint manager default).
   */
 trait SparkSpec extends AnyFunSuite with Matchers {
   lazy val spark: SparkSession = SparkSpec.session
@@ -21,15 +21,11 @@ trait SparkSpec extends AnyFunSuite with Matchers {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = Sessions.builder(4)
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
       // FAIR scheduling so the ST6 pool-isolation test exercises real
       // concurrent pools (pool assignment is a no-op under FIFO)
       .config("spark.scheduler.mode", "FAIR")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     GraftExtensions.register(s)
