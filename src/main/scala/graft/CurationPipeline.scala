@@ -191,7 +191,7 @@ object CurationPipeline {
     * Run: `sbt "runMain graft.CurationPipeline --stream [dir]"`. */
   private def runStream(spark: SparkSession, dir: String,
       check: Checks): Unit = {
-    import graft.streaming.{StreamingCuratedCorpus, StreamQuarantine}
+    import graft.streaming.{DriftGate, StreamingCuratedCorpus, StreamQuarantine}
     // a FRESH store-root per invocation (deliberately local — this
     // main is the local CI smoke): two concurrent runs on a fixed
     // path would interleave writes into one stream's checkpoint
@@ -206,7 +206,7 @@ object CurationPipeline {
     val routedCorpus = routed.filter(col("route") === "corpus").count()
     val gated = spark.read.parquet(s"$root/meta").count()
     val nTrain = m.map(_.getAs[Long]("n_docs")).sum
-    val fired = StreamingCuratedCorpus.firedBatches(docs, nSlices = 4)
+    val fired = DriftGate.firedBatches(docs, nSlices = 4)
     println(s"[curation] documents=$nDocs routed_corpus=$routedCorpus " +
       s"gated=$gated train=$nTrain fired_batches=" +
       fired.toSeq.sorted.mkString("{", ",", "}"))

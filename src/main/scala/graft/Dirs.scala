@@ -22,4 +22,17 @@ object Dirs {
     deleteTree(p)
     Files.createDirectories(p)
   }
+
+  /** The emptied scratch root of query `tag` over the testdata directory
+    * `sfDir`: `/tmp/graft-stream/<tag>-<sfDir>` for the streaming and ANN
+    * queries, `/tmp/graft-sink/...` for the sink queries, with every
+    * character of `sfDir` outside `[0-9a-zA-Z.]` replaced by `_`. */
+  def stream(tag: String, sfDir: String): Path =
+    query("/tmp/graft-stream", tag, sfDir)
+
+  def sink(tag: String, sfDir: String): Path =
+    query("/tmp/graft-sink", tag, sfDir)
+
+  private def query(base: String, tag: String, sfDir: String): Path =
+    fresh(s"$base/$tag-${sfDir.replaceAll("[^0-9a-zA-Z.]", "_")}")
 }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.streaming.{StreamPromote, StreamRefit}
+import graft.streaming.{Store, StreamPromote}
 
 /** CANDIDATES-AXIS probe for the st23 promotion gate (round 16): the
   * r15 verdict flagged that a firing batch collected the WHOLE `cand/`
@@ -42,7 +42,7 @@ object PromoteCandAxisProbe extends Probe {
       * the checkpoint reads one pointer + one directory). */
     def buildRoot(n: Int): String = {
       val root = Dirs.fresh(s"/tmp/graft-candaxis/n$n").toString
-      val fs = StreamRefit.hfs(spark, root)
+      val fs = Store.hfs(spark, root)
       for (b <- 0 until n) {
         (0 until graft.text.ClassifierTrain.Dim).map { bk =>
           (bk.toLong, (b * 100 + bk).toLong, -1L, 10L, 10L,
@@ -51,7 +51,7 @@ object PromoteCandAxisProbe extends Probe {
             "version", "status")
           .coalesce(1)
           .write.mode("overwrite").parquet(s"$root/cand/batch=$b")
-        StreamRefit.writeSmall(fs,
+        Store.publishTrail(fs,
           new org.apache.hadoop.fs.Path(s"$root/pub/batch-$b"),
           s"${b + 1},$b")
       }

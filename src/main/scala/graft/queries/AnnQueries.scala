@@ -132,9 +132,6 @@ object AnnQueries {
          |       count(*) AS n_total
          |FROM merged GROUP BY cid ORDER BY cid""".stripMargin
 
-  private def freshDir(name: String): String =
-    Dirs.fresh(s"/tmp/graft-stream/$name").toString
-
   val all: Map[String, Q] = Map(
 
     // exact cosine top-5 for a 1-in-25 query sample — the exact
@@ -433,7 +430,7 @@ object AnnQueries {
     // identical per-list state the one-shot batch assignment computes,
     // no matter how the delta was batched.
     "s06_stream_index_update" -> Q(ivfUpsertOracle) { (s, d) =>
-      val root = freshDir(s"s06-${d.replaceAll("[^0-9a-zA-Z.]", "_")}")
+      val root = Dirs.stream("s06", d)
       val out = s"$root/index"
       val emb = Tables.embeddings(s, d)
       val base = emb.filter(col("vec_id") % 10 =!= 0)

@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.nio.file.Path
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.Dirs
@@ -17,9 +15,6 @@ import graft.sources.{FileSources, Tables}
   */
 object SinkQueries {
 
-  private def freshDir(name: String): Path =
-    Dirs.fresh(s"/tmp/graft-sink/$name")
-
   val all: Map[String, Q] = Map(
 
     // K9 + S6: single-file headered CSV report written, then re-read
@@ -27,7 +22,7 @@ object SinkQueries {
     "k01_csv_roundtrip" -> Q(
       """SELECT event_type, count(*) AS n, round(sum(value), 2) AS total
         |FROM events GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
-      val dir = freshDir(s"k01-${d.replaceAll("[^0-9a-zA-Z.]", "_")}")
+      val dir = Dirs.sink("k01", d)
       TableSinks.csvReport(
         Tables.events(s, d).select("event_id", "event_type", "value"),
         s"$dir/report")
@@ -46,7 +41,7 @@ object SinkQueries {
       """SELECT strftime(ts, '%Y-%m-%d') AS datestamp, count(*) AS n
         |FROM events WHERE strftime(ts, '%Y-%m-%d') >= '2024-01-15'
         |GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
-      val dir = freshDir(s"k02-${d.replaceAll("[^0-9a-zA-Z.]", "_")}")
+      val dir = Dirs.sink("k02", d)
       val table = s"$dir/events_by_day"
       TableSinks.writePartitioned(
         Tables.events(s, d).withColumn("datestamp", Fns.datestamp(col("ts"))),
@@ -79,7 +74,7 @@ object SinkQueries {
         |              AS DOUBLE)
         |  FROM events GROUP BY 2)
         |ORDER BY phase, event_type""".stripMargin) { (s, d) =>
-      val dir = freshDir(s"k04-${d.replaceAll("[^0-9a-zA-Z.]", "_")}")
+      val dir = Dirs.sink("k04", d)
       val table = s"$dir/evolving"
       val ev = Tables.events(s, d)
         .withColumn("datestamp", Fns.datestamp(col("ts")))
@@ -115,7 +110,7 @@ object SinkQueries {
       """SELECT user_id, count(*) AS n, round(sum(value), 2) AS total
         |FROM events WHERE user_id % 10 <> 3
         |GROUP BY user_id ORDER BY user_id""".stripMargin) { (s, d) =>
-      val dir = freshDir(s"k06-${d.replaceAll("[^0-9a-zA-Z.]", "_")}")
+      val dir = Dirs.sink("k06", d)
       val out = s"$dir/t"
       val agg = Tables.events(s, d).groupBy("user_id")
         .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("total"))
@@ -151,7 +146,7 @@ object SinkQueries {
         |  SELECT 'latest', user_id, event_type, event_id, value
         |  FROM r2 WHERE rn = 1)
         |ORDER BY phase, user_id, event_type""".stripMargin) { (s, d) =>
-      val dir = freshDir(s"k05-${d.replaceAll("[^0-9a-zA-Z.]", "_")}")
+      val dir = Dirs.sink("k05", d)
       val out = s"$dir/tbl"
       val t0 = 1705708800L // 2024-01-20, same split as st03
       val ev = Tables.events(s, d)
@@ -180,7 +175,7 @@ object SinkQueries {
         |                                 event_type := event_type)) AS j
         |      FROM events)
         |GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
-      val dir = freshDir(s"k03-${d.replaceAll("[^0-9a-zA-Z.]", "_")}")
+      val dir = Dirs.sink("k03", d)
       // write a month=*/ JSON archive like the reference's blob layout
       Tables.events(s, d)
         .withColumn("month", date_format(col("ts"), "yyyy-MM"))
@@ -204,7 +199,7 @@ object SinkQueries {
       """SELECT user_id, count(*) AS n, round(sum(value), 2) AS total
         |FROM events WHERE user_id BETWEEN 40 AND 59
         |GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
-      val dir = freshDir(s"k07-${d.replaceAll("[^0-9a-zA-Z.]", "_")}")
+      val dir = Dirs.sink("k07", d)
       val table = s"$dir/events_clustered"
       TableSinks.writeClustered(
         Tables.events(s, d).select("user_id", "event_id", "value"),
@@ -247,7 +242,7 @@ object SinkQueries {
         |WHERE a.user_id IS NULL OR b.user_id IS NULL
         |   OR a.event_id != b.event_id
         |ORDER BY user_id, event_type""".stripMargin) { (s, d) =>
-      val dir = freshDir(s"k08-${d.replaceAll("[^0-9a-zA-Z.]", "_")}")
+      val dir = Dirs.sink("k08", d)
       val out = s"$dir/tbl"
       val t0 = 1705708800L // same split as k05/st03
       val keys = Seq("user_id", "event_type")
@@ -276,7 +271,7 @@ object SinkQueries {
       """SELECT event_type, count(*) AS n, round(sum(value), 2) AS total
         |FROM events WHERE strftime(ts, '%Y-%m-%d') >= '2024-01-15'
         |GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
-      val dir = freshDir(s"k09-${d.replaceAll("[^0-9a-zA-Z.]", "_")}")
+      val dir = Dirs.sink("k09", d)
       val table = s"$dir/events_orc"
       Tables.events(s, d)
         .withColumn("datestamp", Fns.datestamp(col("ts")))
@@ -311,7 +306,7 @@ object SinkQueries {
         |  UNION ALL SELECT 4, 'OPTIMIZE', (SELECT count(*) FROM k3)
         |  UNION ALL SELECT 5, 'RESTORE', (SELECT count(*) FROM k2))
         |ORDER BY version""".stripMargin) { (s, d) =>
-      val dir = freshDir(s"k11-${d.replaceAll("[^0-9a-zA-Z.]", "_")}")
+      val dir = Dirs.sink("k11", d)
       val out = s"$dir/tbl"
       val t0 = 1705708800L // same split as k05/k08
       val keys = Seq("user_id", "event_type")
@@ -350,7 +345,7 @@ object SinkQueries {
         |FROM events
         |WHERE user_id BETWEEN 20 AND 59 AND value BETWEEN 100 AND 600
         |GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
-      val dir = freshDir(s"k12-${d.replaceAll("[^0-9a-zA-Z.]", "_")}")
+      val dir = Dirs.sink("k12", d)
       val table = s"$dir/events_z"
       TableSinks.writeZOrdered(
         Tables.events(s, d).select("user_id", "event_id", "value"),
@@ -374,7 +369,7 @@ object SinkQueries {
       """SELECT event_id, user_id, event_type, round(value, 2) AS value
         |FROM events WHERE event_id IN (1000, 2024, 4999)
         |ORDER BY event_id""".stripMargin) { (s, d) =>
-      val dir = freshDir(s"k13-${d.replaceAll("[^0-9a-zA-Z.]", "_")}")
+      val dir = Dirs.sink("k13", d)
       val table = s"$dir/events_flat"
       val idx = s"$dir/events_flat_idx"
       Tables.events(s, d)
@@ -405,7 +400,7 @@ object SinkQueries {
         |FROM orders JOIN customer ON o_custkey = c_custkey
         |GROUP BY 1, 2 ORDER BY o_custkey""".stripMargin) { (s, d) =>
       val tag = d.replaceAll("[^0-9a-zA-Z]", "_")
-      val dir = freshDir(s"k10-$tag")
+      val dir = Dirs.fresh(s"/tmp/graft-sink/k10-$tag")
       val ot = s"k10_orders_$tag"
       val ct = s"k10_cust_$tag"
       s.sql(s"DROP TABLE IF EXISTS $ot")

@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.nio.file.Path
-
 import org.apache.spark.sql.functions._
 import graft.Dirs
 import graft.sinks.KeyedUpsert
@@ -139,10 +137,6 @@ object StreamingQueries {
     }
   }
 
-  private def freshDir(name: String): Path =
-    Dirs.fresh(s"/tmp/graft-stream/$name")
-
-
   /** The st16/st25 SHARED oracle: t28's one-shot topology (quality
     * gate → MinHash-LSH pairs → CC canonical keep → decontaminate →
     * leakage-safe split → md5-ranked 64-doc shards → pack manifest)
@@ -264,7 +258,7 @@ object StreamingQueries {
 
     // ST1/ST2/ST3/K4 end-to-end: streamed day rollup == batch day rollup.
     "st01_stream_day_rollup" -> Q(PipelineQueries.rollupSql("day")) { (s, d) =>
-      val root = freshDir(s"st01-${d.replaceAll("[^0-9a-zA-Z.]", "_")}")
+      val root = Dirs.stream("st01", d)
       val topic = s"$root/topic"
       val out = s"$root/rollup"
       val ckpt = s"$root/ckpt"
@@ -300,7 +294,7 @@ object StreamingQueries {
           |    ORDER BY unix_timestamp DESC, CAST(element AS BIGINT) DESC) AS rn
           |  FROM gold) WHERE rn = 1
           |ORDER BY id""".stripMargin) { (s, d) =>
-      val root = freshDir(s"st02-${d.replaceAll("[^0-9a-zA-Z.]", "_")}")
+      val root = Dirs.stream("st02", d)
       Topic.publishEvents(Tables.events(s, d), s"$root/topic", nFiles = 4)
       withShufflePartitions(s, 8) {
         StreamingMedallion.runLatest(s, s"$root/topic", s"$root/latest",
@@ -321,7 +315,7 @@ object StreamingQueries {
     // inside the lookback window and MERGEs them in — final state must
     // equal the full recompute.
     "st03_incremental_rollup" -> Q(PipelineQueries.rollupSql("day")) { (s, d) =>
-      val root = freshDir(s"st03-${d.replaceAll("[^0-9a-zA-Z.]", "_")}")
+      val root = Dirs.stream("st03", d)
       val out = s"$root/rollup"
       val gold = graft.pipeline.Medallion.gold(
         graft.pipeline.Medallion.silver(Tables.events(s, d)),
@@ -350,7 +344,7 @@ object StreamingQueries {
     // key, since a changed bucket's feed carries every current row of
     // that bucket — and must converge to exactly the full recompute.
     "st04_changes_since" -> Q(PipelineQueries.rollupSql("day")) { (s, d) =>
-      val root = freshDir(s"st04-${d.replaceAll("[^0-9a-zA-Z.]", "_")}")
+      val root = Dirs.stream("st04", d)
       val out = s"$root/rollup"
       val cols = Seq("id", "bucket_ts", "remote_id", "metric_id",
         "provider_id", "category_id", "sum_value", "avg_value",
@@ -430,7 +424,7 @@ object StreamingQueries {
       """SELECT event_id, CAST(floor(epoch(ts)) AS BIGINT) AS ts_s, user_id,
         |       event_type, value
         |FROM events ORDER BY event_id""".stripMargin) { (s, d) =>
-      val root = freshDir(s"st06-${d.replaceAll("[^0-9a-zA-Z.]", "_")}")
+      val root = Dirs.stream("st06", d)
       val ev = Tables.events(s, d)
       Topic.publishEvents(ev.unionAll(ev), s"$root/topic", nFiles = 4)
       withShufflePartitions(s, 8) {
@@ -462,7 +456,7 @@ object StreamingQueries {
         | AND a.event_type = 'view' AND b.event_type = 'purchase'
         | AND b.ts >= a.ts AND b.ts <= a.ts + INTERVAL 12 HOUR
         |ORDER BY view_id, purchase_id""".stripMargin) { (s, d) =>
-      val root = freshDir(s"st07-${d.replaceAll("[^0-9a-zA-Z.]", "_")}")
+      val root = Dirs.stream("st07", d)
       Topic.publishEvents(Tables.events(s, d), s"$root/topic", nFiles = 4)
       withShufflePartitions(s, 8) {
         val src = Topic.decodeEvents(
@@ -516,7 +510,7 @@ object StreamingQueries {
         |       CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
         |FROM s GROUP BY user_id, sid
         |ORDER BY user_id, session_start""".stripMargin) { (s, d) =>
-      val root = freshDir(s"st08-${d.replaceAll("[^0-9a-zA-Z.]", "_")}")
+      val root = Dirs.stream("st08", d)
       Topic.publishEvents(Tables.events(s, d), s"$root/topic", nFiles = 4)
       withShufflePartitions(s, 8) {
         val src = Topic.decodeEvents(
@@ -560,7 +554,7 @@ object StreamingQueries {
         |SELECT CAST(floor(epoch(w)) AS BIGINT) AS w_start, rank, event_type, n
         |FROM r WHERE rank <= 3
         |ORDER BY w_start, rank""".stripMargin) { (s, d) =>
-      val root = freshDir(s"st09-${d.replaceAll("[^0-9a-zA-Z.]", "_")}")
+      val root = Dirs.stream("st09", d)
       Topic.publishEvents(Tables.events(s, d), s"$root/topic", nFiles = 4)
       withShufflePartitions(s, 8) {
         val src = Topic.decodeEvents(
@@ -604,7 +598,7 @@ object StreamingQueries {
         |ORDER BY n.key""".stripMargin) { (s, d) =>
       import s.implicits._
       import graft.streaming.StatefulOps
-      val root = freshDir(s"st10-${d.replaceAll("[^0-9a-zA-Z.]", "_")}")
+      val root = Dirs.stream("st10", d)
       Topic.publishEvents(Tables.events(s, d), s"$root/topic", nFiles = 4)
       withShufflePartitions(s, 8) {
         val readings = Topic.decodeEvents(
@@ -658,7 +652,7 @@ object StreamingQueries {
           |FROM cand JOIN sigs sa ON a = sa.doc_id JOIN sigs sb ON b = sb.doc_id
           |WHERE len(list_filter(range(1, 13), i -> sa.sig[i] = sb.sig[i])) / 12.0 >= 0.5
           |ORDER BY a, b""".stripMargin) { (s, d) =>
-      val root = freshDir(s"st11-${d.replaceAll("[^0-9a-zA-Z.]", "_")}")
+      val root = Dirs.stream("st11", d)
       withShufflePartitions(s, 8) {
         graft.streaming.IngestDedup
           .run(s, Tables.documents(s, d), root.toString,
@@ -674,7 +668,7 @@ object StreamingQueries {
     // oracle computes all three grains independently from gold, so the
     // gate certifies streamed-partials == batch-exact at every grain.
     "st12_stream_rollup_cascade" -> Q(PipelineQueries.cascadeSql) { (s, d) =>
-      val root = freshDir(s"st12-${d.replaceAll("[^0-9a-zA-Z.]", "_")}")
+      val root = Dirs.stream("st12", d)
       Topic.publishEvents(Tables.events(s, d), s"$root/topic", nFiles = 4)
       withShufflePartitions(s, 8) {
         StreamingMedallion.runHourPartials(s, s"$root/topic",
@@ -708,7 +702,7 @@ object StreamingQueries {
         |  ON a.user_id = b.user_id
         | AND b.ts >= a.ts AND b.ts <= a.ts + INTERVAL 12 HOUR
         |ORDER BY view_id, purchase_id""".stripMargin) { (s, d) =>
-      val root = freshDir(s"st13-${d.replaceAll("[^0-9a-zA-Z.]", "_")}")
+      val root = Dirs.stream("st13", d)
       val ev = Tables.events(s, d)
       Topic.publishEvents(ev, s"$root/topic", nFiles = 4)
       val maxTs = ev.agg(max("ts")).head.getTimestamp(0)
@@ -796,7 +790,7 @@ object StreamingQueries {
         |ORDER BY phase, grp""".stripMargin) { (s, d) =>
       import graft.operators.Expectations
       import graft.operators.Expectations.Rule
-      val root = freshDir(s"st14-${d.replaceAll("[^0-9a-zA-Z.]", "_")}")
+      val root = Dirs.stream("st14", d)
       Topic.publishEvents(Tables.events(s, d), s"$root/topic", nFiles = 4)
       val rules = Seq(
         Rule("not_error", col("event_type") =!= "error"),
@@ -839,7 +833,7 @@ object StreamingQueries {
     // dim-maintenance notebook runs ([SU]:77-96).
     "st15_stream_scd2" -> Q(
       PipelineQueries.all("p20_scd2_dim").oracle.get) { (s, d) =>
-      val root = freshDir(s"st15-${d.replaceAll("[^0-9a-zA-Z.]", "_")}")
+      val root = Dirs.stream("st15", d)
       publishEventsTimeOrdered(s, Tables.events(s, d), s"$root/topic",
         nSlices = 4)
       withShufflePartitions(s, 8) {
@@ -864,7 +858,7 @@ object StreamingQueries {
     // pack manifest.
     "st16_stream_corpus_build" -> Q(corpusBuildOracle(""))
     { (s, d) =>
-      val root = freshDir(s"st16-${d.replaceAll("[^0-9a-zA-Z.]", "_")}")
+      val root = Dirs.stream("st16", d)
       withShufflePartitions(s, 8) {
         // Some(64): the t28 testdata shard shape the DuckDB oracle
         // pins; a production caller omits it and gets the derived
@@ -889,7 +883,7 @@ object StreamingQueries {
     // (or starves it from) the manifest: hash-red.
     "st25_stream_curated_corpus" ->
       Q(corpusBuildOracle(" WHERE doc_id % 4 <> 2")) { (s, d) =>
-      val root = freshDir(s"st25-${d.replaceAll("[^0-9a-zA-Z.]", "_")}")
+      val root = Dirs.stream("st25", d)
       withShufflePartitions(s, 8) {
         // Some(64): the oracle-pinned t28 shard shape (see st16)
         graft.streaming.StreamingCuratedCorpus.run(s,
@@ -922,7 +916,7 @@ object StreamingQueries {
          |        count(*) AS cnt
          |      FROM d GROUP BY 1, 2),
          |$driftTailSql""".stripMargin) { (s, d) =>
-      val root = freshDir(s"st17-${d.replaceAll("[^0-9a-zA-Z.]", "_")}")
+      val root = Dirs.stream("st17", d)
       withShufflePartitions(s, 8) {
         graft.streaming.StreamDrift.run(s, Tables.documents(s, d),
           root.toString, nSlices = 4)
@@ -952,7 +946,7 @@ object StreamingQueries {
          |h AS (SELECT batch, bucket, count(*) AS cnt
          |      FROM d GROUP BY 1, 2),
          |$driftTailSql""".stripMargin) { (s, d) =>
-      val root = freshDir(s"st18-${d.replaceAll("[^0-9a-zA-Z.]", "_")}")
+      val root = Dirs.stream("st18", d)
       withShufflePartitions(s, 8) {
         graft.streaming.StreamDrift.run(s, Tables.documents(s, d),
           root.toString, nSlices = 4,
@@ -994,7 +988,7 @@ object StreamingQueries {
          |      FROM d GROUP BY 1, 2),
          |$driftTailSql""".stripMargin
     } { (s, d) =>
-      val root = freshDir(s"st19-${d.replaceAll("[^0-9a-zA-Z.]", "_")}")
+      val root = Dirs.stream("st19", d)
       withShufflePartitions(s, 8) {
         graft.streaming.StreamDrift.run(s, Tables.documents(s, d),
           root.toString, nSlices = 4,
@@ -1032,7 +1026,7 @@ object StreamingQueries {
          |  FROM bw$iters w)
          |ORDER BY version, bucket""".stripMargin
     } { (s, d) =>
-      val root = freshDir(s"st20-${d.replaceAll("[^0-9a-zA-Z.]", "_")}")
+      val root = Dirs.stream("st20", d)
       withShufflePartitions(s, 8) {
         graft.streaming.StreamRefit.run(s, Tables.documents(s, d),
           root.toString, nSlices = 4)
@@ -1057,7 +1051,7 @@ object StreamingQueries {
         |            ELSE 'corpus' END AS route
         |FROM documents ORDER BY doc_id""".stripMargin
     } { (s, d) =>
-      val root = freshDir(s"st21-${d.replaceAll("[^0-9a-zA-Z.]", "_")}")
+      val root = Dirs.stream("st21", d)
       withShufflePartitions(s, 8) {
         graft.streaming.StreamQuarantine.run(s, Tables.documents(s, d),
           root.toString, nSlices = 4)
@@ -1118,7 +1112,7 @@ object StreamingQueries {
         |             ELSE r END, 4) AS hll_est
         |FROM raw ORDER BY batch, event_type""".stripMargin
     } { (s, d) =>
-      val root = freshDir(s"st22-${d.replaceAll("[^0-9a-zA-Z.]", "_")}")
+      val root = Dirs.stream("st22", d)
       withShufflePartitions(s, 8) {
         graft.streaming.StreamSketch.run(s, Tables.events(s, d),
           root.toString, nSlices = 4)
@@ -1173,7 +1167,7 @@ object StreamingQueries {
          |  FROM bw$iters w, acc2)
          |ORDER BY fired_batch, bucket""".stripMargin
     } { (s, d) =>
-      val root = freshDir(s"st23-${d.replaceAll("[^0-9a-zA-Z.]", "_")}")
+      val root = Dirs.stream("st23", d)
       withShufflePartitions(s, 8) {
         graft.streaming.StreamPromote.run(s, Tables.documents(s, d),
           root.toString, nSlices = 4)
@@ -1215,7 +1209,7 @@ object StreamingQueries {
          |FROM documents, acc2
          |ORDER BY doc_id""".stripMargin
     } { (s, d) =>
-      val root = freshDir(s"st24-${d.replaceAll("[^0-9a-zA-Z.]", "_")}")
+      val root = Dirs.stream("st24", d)
       withShufflePartitions(s, 8) {
         graft.streaming.StreamLineage.run(s, Tables.documents(s, d),
           root.toString, nSlices = 4)

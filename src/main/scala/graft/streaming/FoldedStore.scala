@@ -1,6 +1,11 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
+import java.io.FileNotFoundException
+import java.nio.charset.StandardCharsets.UTF_8
+
+import scala.util.Using
+
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
@@ -50,7 +55,8 @@ private[streaming] final case class FoldedStore(part: String, cum: String,
   private def predecessor(spark: SparkSession, root: String,
       batchId: Long): Option[DataFrame] = {
     val p = new Path(s"$root/$cum/batch=${batchId - 1}")
-    if (StreamRefit.hfs(spark, root).exists(p)) Some(read(spark, p.toString))
+    if (Store.committed(Store.hfs(spark, root), p))
+      Some(read(spark, p.toString))
     else None
   }
 
@@ -62,4 +68,85 @@ private[streaming] final case class FoldedStore(part: String, cum: String,
 
   private def read(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(dir).select(cols.map(col): _*)
+}
+
+/** The actors' one store layer over the Hadoop FileSystem API (the
+  * KeyedUpsert precedent), so a production root on HDFS/S3/ABFS works
+  * the same as a local test root. Two kinds of store live under a root:
+  *
+  *  - parquet stores of `batch=<id>` directories. Spark writes
+  *    `_SUCCESS` last, so a directory counts as committed only once it
+  *    holds one; a crash mid-write leaves a directory that readers of
+  *    earlier state skip;
+  *  - small-file trails of `batch-<id>` entries (`dec/`, `pub/`) and the
+  *    `threshold.ppm` marker. An entry is published by writing a
+  *    hidden temp file and renaming it into place, so a crash inside the
+  *    write leaves no entry at all, never an empty or partial one.
+  */
+private[graft] object Store {
+
+  def hfs(spark: SparkSession, root: String): FileSystem =
+    new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** The body of the trail entry `p`, or None when it is absent. */
+  def readTrail(fs: FileSystem, p: Path): Option[String] =
+    try Some(Using.resource(fs.open(p))(in =>
+      new String(in.readAllBytes(), UTF_8)))
+    catch { case _: FileNotFoundException => None }
+
+  /** Publishes `body` at `p` by temp file + rename. An entry already at
+    * `p` is kept: every trail entry is a pure function of
+    * strictly-earlier state, so a replay would write the same bytes. */
+  def publishTrail(fs: FileSystem, p: Path, body: String): Unit =
+    if (!fs.exists(p)) {
+      val tmp = new Path(p.getParent, s".${p.getName}.tmp")
+      Using.resource(fs.create(tmp, true))(_.write(body.getBytes(UTF_8)))
+      if (!fs.rename(tmp, p)) {
+        fs.delete(tmp, false)
+        require(fs.exists(p), s"could not publish $p")
+      }
+    }
+
+  /** Batch ids ≤ `upTo` under `root/dir` from `<prefix><id>` entry
+    * names (`batch=` for the parquet stores, `batch-` for the trails),
+    * ascending — the ONE listing parser every reader shares, so
+    * completeness checks that compare two stores parse both identically.
+    * A foreign entry (temp file, partial copy) is skipped, not a
+    * NumberFormatException: these listings also back the self-heal
+    * paths for damaged roots, where a foreign file is most plausible. */
+  def batchIdsUnder(fs: FileSystem, root: String, dir: String,
+      upTo: Long = Long.MaxValue, prefix: String = "batch="): Seq[Long] = {
+    val p = new Path(root, dir)
+    if (!fs.exists(p)) Seq.empty
+    else fs.listStatus(p).toSeq.map(_.getPath.getName)
+      .collect { case n if n.startsWith(prefix) &&
+          n.length > prefix.length &&
+          n.drop(prefix.length).forall(_.isDigit) =>
+        n.stripPrefix(prefix).toLong }
+      .filter(_ <= upTo).sorted
+  }
+
+  /** Whether the parquet directory `dir` holds a finished write. */
+  def committed(fs: FileSystem, dir: Path): Boolean =
+    fs.exists(new Path(dir, "_SUCCESS"))
+
+  /** The committed `batch=` directories of `root/dir` before `batchId`,
+    * or None when there are none (a first batch, or one whose only
+    * predecessor is a crashed write — reading that store would fail
+    * schema inference). A partial directory among them is filtered out
+    * by name; there is none in contract, so the plan is the plain
+    * `batch < batchId` read. */
+  def committedBefore(spark: SparkSession, root: String, dir: String,
+      batchId: Long): Option[DataFrame] = {
+    val fs = hfs(spark, root)
+    val (done, partial) = batchIdsUnder(fs, root, dir, batchId - 1)
+      .partition(b => committed(fs, new Path(s"$root/$dir/batch=$b")))
+    if (done.isEmpty) None
+    else {
+      val all = spark.read.parquet(s"$root/$dir")
+        .filter(col("batch") < batchId)
+      Some(if (partial.isEmpty) all
+        else all.filter(!col("batch").isin(partial: _*)))
+    }
+  }
 }

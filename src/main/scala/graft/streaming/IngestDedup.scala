@@ -70,17 +70,11 @@ object IngestDedup {
   def processBatch(batch: DataFrame, batchId: Long, root: String,
       k: Int = 12, bands: Int = 4, minEst: Double = 0.5): Unit = {
     val sp = batch.sparkSession
-    // previous batches' signatures only: batch < current id, which
-    // also excludes a crashed attempt's own partial index write
-    // Hadoop-FS existence probe (not java.nio): a local-only check
-    // reads "absent" on an HDFS/S3 store-root every batch — the index
-    // would silently reset and every batch dedup only against itself
-    val index =
-      if (StreamRefit.hfs(sp, root)
-          .exists(new org.apache.hadoop.fs.Path(root, "index")))
-        sp.read.parquet(s"$root/index")
-          .filter(col("batch") < batchId).select("id", "sig")
-      else sp.createDataFrame(new java.util.ArrayList[Row](), sigSchema)
+    // previous batches' committed signatures only: batch < current id,
+    // which also excludes a crashed attempt's own partial index write
+    val index = Store.committedBefore(sp, root, "index", batchId)
+      .map(_.select("id", "sig"))
+      .getOrElse(sp.createDataFrame(new java.util.ArrayList[Row](), sigSchema))
     // signatures are computed ONCE per batch: written to the index
     // first, then the stored rows feed candidate generation — the
     // raw-docs form would re-shingle and re-aggregate the same text a

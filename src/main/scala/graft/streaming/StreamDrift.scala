@@ -107,7 +107,7 @@ object StreamDrift {
     * idempotently to its own subdirectory. With `cumulative = true`
     * it is then folded into the running checkpoint `cumhist/batch=b`
     * ([[FoldedStore]]). The checkpoint is what keeps
-    * [[StreamRefit.decisionFor]]'s prev side at O(cells) per batch
+    * [[DriftGate.decisionFor]]'s prev side at O(cells) per batch
     * FOREVER: without it, every arrival re-collected the whole hist
     * store (O(batches × cells) per batch, quadratic over the stream's
     * lifetime at the metadata level). The fold costs one extra tiny

@@ -47,8 +47,8 @@ object StreamLineage {
   /** One micro-batch: the shared store/decide step ONCE, then route
     * the data and gate the model off the same derived decision. */
   def processBatch(batch: DataFrame, batchId: Long, root: String,
-      thresholdPpm: Long = StreamRefit.ThresholdPpm): Unit =
-    StreamRefit.withDecision(batch, batchId, root, thresholdPpm,
+      thresholdPpm: Long = DriftGate.ThresholdPpm): Unit =
+    DriftGate.withDecision(batch, batchId, root, thresholdPpm,
         keepDocs = true) { (b, fired) =>
       StreamQuarantine.routeBatch(b, batchId, root, fired)
       StreamPromote.gateBatch(b.sparkSession, batchId, root, thresholdPpm,
@@ -58,15 +58,19 @@ object StreamLineage {
   /** The per-document lineage: (doc_id, batch, route,
     * serving_version) — serving_version 0 for batch 0 (no model
     * existed at its ingest). */
-  def lineage(spark: SparkSession, root: String): DataFrame = {
+  def lineage(spark: SparkSession, root: String): DataFrame =
     // the serving map comes from the pub/ byte trail (one FS listing +
     // |candidates| tiny reads — never a parquet scan of the 64-rows-
     // per-candidate store), cand-fold self-heal for pre-pub roots
-    val cands = StreamPromote.publishedVersions(spark, root)
-    val routed = StreamQuarantine.routed(spark, root)
-    // serving at batch b = version published on the LATEST fired < b;
-    // folded into one literal CASE over the bounded candidate list
-    val serving = cands.foldLeft(lit(0L)) {
+    lineageOf(StreamQuarantine.routed(spark, root),
+      StreamPromote.publishedVersions(spark, root))
+
+  /** `routed` with each batch's serving version: the version published
+    * on the LATEST fired batch < b, folded into one literal CASE over
+    * the bounded (fired batch, version) list. */
+  private def lineageOf(routed: DataFrame,
+      published: Seq[(Long, Long)]): DataFrame = {
+    val serving = published.foldLeft(lit(0L)) {
       case (acc, (fired, version)) =>
         when(col("batch") > fired, lit(version)).otherwise(acc)
     }
@@ -79,7 +83,7 @@ object StreamLineage {
     * the registered st24 entry. */
   def run(spark: SparkSession, docs: DataFrame, root: String,
       nSlices: Int = 4,
-      thresholdPpm: Long = StreamRefit.ThresholdPpm): DataFrame = {
+      thresholdPpm: Long = DriftGate.ThresholdPpm): DataFrame = {
     StreamDrift.runSliced(spark, docs, root, nSlices)(
       processBatch(_, _, root, thresholdPpm))
     lineage(spark, root)
@@ -89,20 +93,10 @@ object StreamLineage {
     * reference joined with the st23 fold's published versions — the
     * spec's invariance reference. */
   def batchReference(docs: DataFrame, nSlices: Int = 4,
-      thresholdPpm: Long = StreamRefit.ThresholdPpm): DataFrame = {
-    val routed = StreamQuarantine.batchReference(docs, nSlices,
-      thresholdPpm)
-    val published = StreamPromote
-      .batchReference(docs, nSlices, thresholdPpm)
-      .collect { case (fired, _, _, _, _, _, Some(v), "published") =>
-        fired -> v
-      }.distinct.sortBy(_._1)
-    val serving = published.foldLeft(lit(0L)) {
-      case (acc, (fired, version)) =>
-        when(col("batch") > fired, lit(version)).otherwise(acc)
-    }
-    routed.select(col("doc_id"), col("batch"), col("route"),
-        serving.as("serving_version"))
-      .orderBy("doc_id")
-  }
+      thresholdPpm: Long = DriftGate.ThresholdPpm): DataFrame =
+    lineageOf(StreamQuarantine.batchReference(docs, nSlices, thresholdPpm),
+      StreamPromote.batchReference(docs, nSlices, thresholdPpm)
+        .collect { case (fired, _, _, _, _, _, Some(v), "published") =>
+          fired -> v
+        }.distinct.sortBy(_._1))
 }

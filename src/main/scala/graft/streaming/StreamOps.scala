@@ -36,7 +36,7 @@ object StreamOps {
   def runSliced(spark: SparkSession, root: String, publish: String => Unit,
       decode: DataFrame => DataFrame)(perBatch: (DataFrame, Long) => Unit)
       : Unit = {
-    StreamRefit.hfs(spark, root).mkdirs(new org.apache.hadoop.fs.Path(root))
+    Store.hfs(spark, root).mkdirs(new org.apache.hadoop.fs.Path(root))
     publish(s"$root/topic")
     runBounded(decode(Topic.readStream(spark, s"$root/topic",
       maxFilesPerTrigger = 1)), s"$root/ckpt")(perBatch)

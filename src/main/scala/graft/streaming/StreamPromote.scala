@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.Path
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -14,11 +15,10 @@ import graft.text.{ClassifierTrain, TextFns}
   * with t37's out-of-sample machinery into the full lifecycle:
   * detect → refit → evaluate → promote-or-reject.
   *
-  * Per micro-batch (stores shared with [[StreamRefit]]: docs/, hist/,
-  * the append-only dec/ decision bytes, the threshold lineage marker):
-  *  1. persist the batch's documents and its [[StreamRefit.axis]]
-  *     histogram; derive ONLY this batch's firing decision
-  *     ([[StreamRefit.decisionFor]]) and store it;
+  * Per micro-batch (stores shared with st20 through [[DriftGate]]:
+  * docs/, hist/, the dec/ trail, the threshold lineage marker):
+  *  1. persist the batch's documents; the gate decides ONLY this
+  *     batch's firing;
   *  2. on batch 0 (bootstrap) or a firing batch b:
   *     - the clean pool is the never-fired batches ≤ b (a firing b is
   *       suspect and never trains or evaluates);
@@ -72,86 +72,71 @@ object StreamPromote {
   /** One micro-batch: store → decide → on firing, fit the challenger,
     * evaluate both models out-of-sample, promote or reject. */
   def processBatch(batch: DataFrame, batchId: Long, root: String,
-      thresholdPpm: Long = StreamRefit.ThresholdPpm): Unit =
-    StreamRefit.withDecision(batch, batchId, root, thresholdPpm,
+      thresholdPpm: Long = DriftGate.ThresholdPpm): Unit =
+    DriftGate.withDecision(batch, batchId, root, thresholdPpm,
         keepDocs = true) { (_, own) =>
       gateBatch(batch.sparkSession, batchId, root, thresholdPpm, own)
     }
 
-  /** Promotion state STRICTLY BEFORE `batchId`:
-    * (published count, fired batch of the latest published candidate —
-    * −1 if none). The healthy path reads ONE tiny `pub/` checkpoint
-    * byte-file (the latest entry < b — each firing batch appends its
-    * post-state, a pure function of strictly-earlier state, so replays
-    * overwrite identical bytes and a late replay's `< b` filter stays
-    * blind to later entries); a root whose pub/ trail is missing or
-    * behind its cand/ store (pre-upgrade, or a crash between the cand
-    * and pub commits — the streaming contract replays such a batch,
-    * but a direct processBatch caller might not) SELF-HEALS by folding
-    * the candidate store once, exactly like dec/'s decisionFor heal.
-    * This is what keeps a firing batch's read O(64) champion rows
-    * forever instead of the whole candidate history. */
+  /** Promotion state STRICTLY BEFORE `batchId`: (published count,
+    * fired batch of the latest published candidate — −1 if none). The
+    * healthy path reads ONE tiny `pub/` entry, the latest < b: each
+    * firing batch appends its post-state, a pure function of
+    * strictly-earlier state, so a late replay's `< b` filter stays
+    * blind to later entries. This is what keeps a firing batch's read
+    * O(64) champion rows forever instead of the whole candidate
+    * history. */
   private[graft] def pubStateBefore(spark: SparkSession,
-      root: String, batchId: Long): (Long, Long) = {
-    val fs = StreamRefit.hfs(spark, root)
-    val pubBatches =
-      StreamRefit.batchIdsUnder(fs, root, "pub", batchId - 1, "batch-")
-    val candBatches = StreamRefit.batchIdsUnder(fs, root, "cand", batchId - 1)
-    if (candBatches.isEmpty) (0L, -1L)
-    else if (pubBatches.nonEmpty && pubBatches.max >= candBatches.max) {
-      val raw = StreamRefit.readSmall(fs, new org.apache.hadoop.fs.Path(
-        s"$root/pub/batch-${pubBatches.max}")).trim.split(',')
-      (raw(0).toLong, raw(1).toLong)
-    } else {
-      // self-heal: fold the candidate store once (bounded: ≤ 64 rows
-      // per candidate), the derivation pub/ checkpoints
-      val published = spark.read.parquet(s"$root/cand")
-        .select(col("batch").cast("long").as("fired"), col("status"))
-        .filter(col("fired") < batchId && col("status") === "published")
-        .select("fired").distinct().collect().map(_.getLong(0)).sorted
-      (published.length.toLong, published.lastOption.getOrElse(-1L))
-    }
-  }
+      root: String, batchId: Long): (Long, Long) =
+    published(spark, root, batchId - 1, latestOnly = true).lastOption
+      .fold((0L, -1L)) { case (fired, version) => (version, fired) }
 
   /** Every published (fired batch → version) pair, in batch order —
-    * the serving map st24's lineage joins against. The healthy path
-    * derives it from the `pub/` byte trail ALONE (an entry at batch f
-    * records its post-f state, so f is a publish iff its recorded
-    * latest == f, and its version is its recorded count — equal by
-    * construction to the version gateBatch wrote into cand/): one FS
-    * listing + |candidates| tiny byte reads, no parquet scan of the
-    * 64-rows-per-candidate store. A root whose pub/ trail is missing
-    * or behind cand/ (pre-checkpoint) self-heals by folding the
-    * candidate store once — the same discipline as
-    * [[pubStateBefore]]. */
+    * the serving map st24's lineage joins against, from the `pub/`
+    * trail alone: one FS listing + |candidates| tiny reads, no parquet
+    * scan of the 64-rows-per-candidate store. */
   private[graft] def publishedVersions(spark: SparkSession,
-      root: String): Seq[(Long, Long)] = {
-    val fs = StreamRefit.hfs(spark, root)
-    val pubBatches = StreamRefit.batchIdsUnder(fs, root, "pub",
-      prefix = "batch-")
-    val candBatches = StreamRefit.batchIdsUnder(fs, root, "cand")
-    // enumeration needs the trail COMPLETE (every candidate batch has
-    // its pub entry) — a max-based check suffices for pubStateBefore,
-    // whose single latest entry carries cumulative state, but here a
-    // hole (pre-checkpoint root + one replayed firing batch) would
-    // silently drop the missing batches' publications from the map
-    if (candBatches.isEmpty) Seq.empty
-    else if (candBatches.toSet.subsetOf(pubBatches.toSet))
-      pubBatches.flatMap { f =>
-        val raw = StreamRefit.readSmall(fs,
-          new org.apache.hadoop.fs.Path(s"$root/pub/batch-$f"))
-          .trim.split(',')
-        if (raw(1).toLong == f) Some(f -> raw(0).toLong) else None
-      }
+      root: String): Seq[(Long, Long)] =
+    published(spark, root, Long.MaxValue, latestOnly = false)
+
+  /** The published (fired batch, version) pairs of candidates ≤ `upTo`,
+    * in batch order. An entry at batch f records the post-f state
+    * (count, latest), so (latest, count) is a published pair, equal by
+    * construction to the version gateBatch wrote into cand/. With
+    * `latestOnly` only the latest entry is read, which needs the trail
+    * to reach cand/'s latest batch; otherwise every entry is read,
+    * which needs one per cand/ batch — a hole (pre-checkpoint root plus
+    * one replayed firing batch) would drop publications from the map.
+    * A trail short of that (pre-upgrade, or a crash between the cand
+    * and pub commits — the streaming contract replays such a batch,
+    * a direct processBatch caller might not) SELF-HEALS by folding the
+    * candidate store once (bounded: ≤ 64 rows per candidate). */
+  private def published(spark: SparkSession, root: String, upTo: Long,
+      latestOnly: Boolean): Seq[(Long, Long)] = {
+    val fs = Store.hfs(spark, root)
+    val pub = Store.batchIdsUnder(fs, root, "pub", upTo, "batch-")
+    val cand = Store.batchIdsUnder(fs, root, "cand", upTo)
+    lazy val covered =
+      if (latestOnly) pub.lastOption.exists(_ >= cand.last)
+      else cand.toSet.subsetOf(pub.toSet)
+    if (cand.isEmpty) Seq.empty
+    else if (covered)
+      (if (latestOnly) pub.takeRight(1) else pub).map { f =>
+        val Array(count, latest) = Store.readTrail(fs, pubEntry(root, f))
+          .get.trim.split(',').map(_.toLong)
+        latest -> count
+      }.distinct
     else
-      // self-heal: one bounded fold of the candidate store
       spark.read.parquet(s"$root/cand")
         .select(col("batch").cast("long").as("fired"), col("version"),
           col("status"))
-        .filter(col("status") === "published")
+        .filter(col("fired") <= upTo && col("status") === "published")
         .distinct().collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toSeq.sortBy(_._1)
   }
+
+  private def pubEntry(root: String, batchId: Long): Path =
+    new Path(s"$root/pub/batch-$batchId")
 
   /** The MODEL-plane action alone, given an already-derived decision —
     * invoked by [[processBatch]] and by the COMPOSING caller (st24's
@@ -164,7 +149,7 @@ object StreamPromote {
     import spark.implicits._
     if (batchId == 0L || own) {
       val (_, cleanDocs) =
-        StreamRefit.cleanPool(spark, root, batchId, thresholdPpm)
+        DriftGate.cleanPool(spark, root, batchId, thresholdPpm)
       // promotion state before b: one pub/ checkpoint read; the
       // champion's weights then come from ONE ≤64-row candidate
       // directory — never the whole candidate history
@@ -182,44 +167,54 @@ object StreamPromote {
           Some(IndexedSeq.tabulate(ClassifierTrain.Dim)(b =>
             w.getOrElse(b.toLong, 0L)))
         }
-      val trainPool = ClassifierTrain.pool(
-        cleanDocs.filter(
-          TextFns.splitAssign(col("doc_id")) === "train"),
-        col("lang") === "en").persist()
-      val challenger = try ClassifierTrain.fitWeights(trainPool)
-        finally trainPool.unpersist()
-      val valPool = ClassifierTrain.pool(
-        cleanDocs.filter(TextFns.splitAssign(col("doc_id")) === "val"),
-        col("lang") === "en")
-      // ONE evaluation scan: champion + challenger scored side by side
-      def okCount(w: IndexedSeq[Long]) = count(when(
-        col("y").cast("double") *
-          ClassifierTrain.score(col("ws"), w) > 0.0, lit(1)))
-      val evalRow = valPool.agg(
-        champion.map(okCount).getOrElse(coalesce(max(lit(-1L)), lit(-1L)))
-          .as("champ_ok"),
-        okCount(challenger).as("chall_ok"),
-        count(lit(1)).as("n_val")).head() // bounded: 1 row
-      val (champOk, challOk, nVal) =
-        (evalRow.getLong(0), evalRow.getLong(1), evalRow.getLong(2))
-      val accepted = champion.isEmpty || challOk >= champOk
-      val version: Option[Long] =
-        if (accepted) Some(1L + publishedCount) else None
-      val status = if (accepted) "published" else "rejected"
-      challenger.zipWithIndex.map { case (wt, b) =>
-        (b.toLong, wt, champOk, challOk, nVal, version, status)
-      }.toDF("bucket", "weight", "champ_ok", "chall_ok", "n_val",
+      val c = challenge(cleanDocs, champion, publishedCount)
+      c.rows.toDF("bucket", "weight", "champ_ok", "chall_ok", "n_val",
           "version", "status")
         .write.mode("overwrite").parquet(s"$root/cand/batch=$batchId")
       // this batch's post-state checkpoint, AFTER the cand commit (a
       // crash in between leaves pub/ behind cand/ — the self-heal case)
       val (nextCount, nextLatest) =
-        if (accepted) (publishedCount + 1L, batchId)
+        if (c.version.isDefined) (publishedCount + 1L, batchId)
         else (publishedCount, latestPublished)
-      StreamRefit.writeSmall(StreamRefit.hfs(spark, root),
-        new org.apache.hadoop.fs.Path(s"$root/pub/batch-$batchId"),
+      Store.publishTrail(Store.hfs(spark, root), pubEntry(root, batchId),
         s"$nextCount,$nextLatest")
     }
+  }
+
+  /** An evaluated challenger: published as `version`, or rejected. */
+  private final case class Candidate(weights: IndexedSeq[Long],
+      champOk: Long, challOk: Long, nVal: Long, version: Option[Long]) {
+    /** Its stored rows: (bucket, weight, champ_ok, chall_ok, n_val,
+      * version, status). */
+    def rows: Seq[(Long, Long, Long, Long, Long, Option[Long], String)] =
+      weights.zipWithIndex.map { case (wt, b) =>
+        (b.toLong, wt, champOk, challOk, nVal, version,
+          if (version.isDefined) "published" else "rejected")
+      }
+  }
+
+  /** The CHALLENGER fits on `cleanDocs`' TRAIN split; champion AND
+    * challenger are then scored on its VAL split in ONE aggregate
+    * projection (champ_ok = −1 without a champion). It is published as
+    * version 1 + `publishedBefore` iff chall_ok ≥ champ_ok — ties
+    * promote — or there is no champion. */
+  private def challenge(cleanDocs: DataFrame,
+      champion: Option[IndexedSeq[Long]], publishedBefore: Long): Candidate = {
+    def split(s: String) =
+      cleanDocs.filter(TextFns.splitAssign(col("doc_id")) === s)
+    val challenger = StreamRefit.fit(split("train"))
+    def okCount(w: IndexedSeq[Long]) = count(when(
+      col("y").cast("double") *
+        ClassifierTrain.score(col("ws"), w) > 0.0, lit(1)))
+    val r = ClassifierTrain.pool(split("val"), col("lang") === "en").agg(
+      champion.map(okCount).getOrElse(coalesce(max(lit(-1L)), lit(-1L)))
+        .as("champ_ok"),
+      okCount(challenger).as("chall_ok"),
+      count(lit(1)).as("n_val")).head() // bounded: 1 row
+    val (champOk, challOk) = (r.getLong(0), r.getLong(1))
+    Candidate(challenger, champOk, challOk, r.getLong(2),
+      if (champion.isEmpty || challOk >= champOk) Some(1L + publishedBefore)
+      else None)
   }
 
   /** The candidate history: every evaluated challenger's 64 weights,
@@ -235,7 +230,7 @@ object StreamPromote {
     * the registered st23 entry. */
   def run(spark: SparkSession, docs: DataFrame, root: String,
       nSlices: Int = 4,
-      thresholdPpm: Long = StreamRefit.ThresholdPpm): DataFrame = {
+      thresholdPpm: Long = DriftGate.ThresholdPpm): DataFrame = {
     StreamDrift.runSliced(spark, docs, root, nSlices)(
       processBatch(_, _, root, thresholdPpm))
     candidates(spark, root)
@@ -245,21 +240,14 @@ object StreamPromote {
     * doc_id mod nSlices, candidates folded in batch order) — the
     * spec's invariance reference. */
   def batchReference(docs: DataFrame, nSlices: Int = 4,
-      thresholdPpm: Long = StreamRefit.ThresholdPpm)
+      thresholdPpm: Long = DriftGate.ThresholdPpm)
       : Seq[(Long, Long, Long, Long, Long, Long, Option[Long], String)] = {
     val sliced = docs.select(
         pmod(col("doc_id"), lit(nSlices.toLong)).as("batch"),
         col("doc_id"), col("text"), col("lang"))
       .persist()
     try {
-      val fired = StreamDrift
-        .batchReference(docs, nSlices, StreamRefit.axis)
-        .collect()
-        .map { r =>
-          r.getLong(0) -> (BigInt(r.getLong(3)) * 1000000 >
-            BigInt(thresholdPpm) * BigInt(r.getLong(1)) *
-              BigInt(r.getLong(2)))
-        }.toMap
+      val fired = DriftGate.firedBatches(docs, nSlices, thresholdPpm)
       val out = Seq.newBuilder[(Long, Long, Long, Long, Long, Long,
         Option[Long], String)]
       var champion: Option[IndexedSeq[Long]] = None
@@ -267,33 +255,13 @@ object StreamPromote {
       for (b <- 0L until nSlices.toLong) {
         if (b == 0L || fired(b)) {
           val clean = (0L to b).filter(c => !fired(c))
-          val cleanDocs = sliced.filter(col("batch").isin(clean: _*))
-          val trainPool = ClassifierTrain.pool(
-            cleanDocs.filter(
-              TextFns.splitAssign(col("doc_id")) === "train"),
-            col("lang") === "en").persist()
-          val challenger = try ClassifierTrain.fitWeights(trainPool)
-            finally trainPool.unpersist()
-          val valPool = ClassifierTrain.pool(
-            cleanDocs.filter(
-              TextFns.splitAssign(col("doc_id")) === "val"),
-            col("lang") === "en")
-          def okCount(w: IndexedSeq[Long]) = count(when(
-            col("y").cast("double") *
-              ClassifierTrain.score(col("ws"), w) > 0.0, lit(1)))
-          val r = valPool.agg(
-            champion.map(okCount).getOrElse(coalesce(max(lit(-1L)), lit(-1L))),
-            okCount(challenger), count(lit(1))).head()
-          val (champOk, challOk, nVal) =
-            (r.getLong(0), r.getLong(1), r.getLong(2))
-          val accepted = champion.isEmpty || challOk >= champOk
-          val version = if (accepted) Some(published + 1L) else None
-          val status = if (accepted) "published" else "rejected"
-          if (accepted) { champion = Some(challenger); published += 1L }
-          challenger.zipWithIndex.foreach { case (wt, bk) =>
-            out += ((b, bk.toLong, wt, champOk, challOk, nVal, version,
-              status))
+          val c = challenge(sliced.filter(col("batch").isin(clean: _*)),
+            champion, published)
+          if (c.version.isDefined) {
+            champion = Some(c.weights); published += 1L
           }
+          out ++= c.rows.map { case (bk, wt, co, cl, n, v, st) =>
+            (b, bk, wt, co, cl, n, v, st) }
         }
       }
       out.result()

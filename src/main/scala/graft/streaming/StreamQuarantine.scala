@@ -14,16 +14,11 @@ import org.apache.spark.sql.functions._
   * launched mid-ingest picks the poisoned batch up).
   *
   * Per micro-batch:
-  *  1. write the batch's histogram over [[StreamRefit.axis]] (st18's
-  *     token-length log-buckets) to the accumulated `hist/batch=<id>`
-  *     store — overwrite-idempotent, ≤ ~12 cells;
-  *  2. decide THIS batch's firing from the accumulated store
-  *     ([[StreamRefit.decisionFor]]: exact integer cross-multiplied
-  *     threshold test in BigInt against strictly-earlier batches —
-  *     later batches' histograms, present during a replay, never
-  *     enter batch b's prev-side sums) and record it in the
-  *     append-only `dec/` store;
-  *  3. write the batch's documents to
+  *  1. the [[DriftGate]] writes the batch's histogram (≤ ~12 cells)
+  *     and decides THIS batch's firing against strictly-earlier
+  *     batches only — later batches' histograms, present during a
+  *     replay, never enter batch b's prev side;
+  *  2. write the batch's documents to
   *     `routed/route=<corpus|quarantine>/batch=<id>` — the route is a
   *     deterministic function of the accumulated store, so a
   *     crash/replay recomputes the identical decision and overwrites
@@ -48,14 +43,11 @@ object StreamQuarantine {
 
   /** One micro-batch: histogram → decision → routed write. */
   def processBatch(batch: DataFrame, batchId: Long, root: String,
-      thresholdPpm: Long = StreamRefit.ThresholdPpm): Unit =
-    // same lineage rule as StreamRefit: a restart with a different
+      thresholdPpm: Long = DriftGate.ThresholdPpm): Unit =
+    // the gate's lineage rule matters here: a restart with a different
     // threshold would re-decide old batches differently and leave a
-    // batch's docs present under BOTH route directories. The route
-    // needs ONLY this batch's decision — one bounded decisionFor
-    // collect against strictly-earlier histograms, stored append-only
-    // so audits/replays read instead of re-deriving
-    StreamRefit.withDecision(batch, batchId, root, thresholdPpm,
+    // batch's docs present under BOTH route directories
+    DriftGate.withDecision(batch, batchId, root, thresholdPpm,
         keepDocs = false) { (b, fired) =>
       routeBatch(b, batchId, root, fired)
     }
@@ -85,7 +77,7 @@ object StreamQuarantine {
     * registered st21 entry. */
   def run(spark: SparkSession, docs: DataFrame, root: String,
       nSlices: Int = 4,
-      thresholdPpm: Long = StreamRefit.ThresholdPpm): DataFrame = {
+      thresholdPpm: Long = DriftGate.ThresholdPpm): DataFrame = {
     StreamDrift.runSliced(spark, docs, root, nSlices)(
       processBatch(_, _, root, thresholdPpm))
     routed(spark, root)
@@ -97,18 +89,11 @@ object StreamQuarantine {
     * collected; the routing itself is a map-side CASE over the corpus
     * (the audited-bounded driver-action class). */
   def batchReference(docs: DataFrame, nSlices: Int = 4,
-      thresholdPpm: Long = StreamRefit.ThresholdPpm): DataFrame = {
-    val fired = StreamDrift
-      .batchReference(docs, nSlices, StreamRefit.axis)
-      .collect() // bounded: one row per batch
-      .map { r =>
-        r.getLong(0) -> (BigInt(r.getLong(3)) * 1000000 >
-          BigInt(thresholdPpm) * BigInt(r.getLong(1)) * BigInt(r.getLong(2)))
-      }.toMap
-    val route = fired.foldLeft(lit("corpus")) { case (acc, (b, f)) =>
-      if (f) when(col("batch") === b, lit("quarantine")).otherwise(acc)
-      else acc
-    }
+      thresholdPpm: Long = DriftGate.ThresholdPpm): DataFrame = {
+    val route = DriftGate.firedBatches(docs, nSlices, thresholdPpm)
+      .toSeq.sorted.foldLeft(lit("corpus")) { (acc, b) =>
+        when(col("batch") === b, lit("quarantine")).otherwise(acc)
+      }
     docs.select(col("doc_id"),
         pmod(col("doc_id"), lit(nSlices.toLong)).as("batch"))
       .withColumn("route", route)

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, LongType, StringType, StructField, StructType}
@@ -94,15 +95,8 @@ object StreamingCorpusBuild {
     * every write overwrites this batch's own subdirectory. */
   def processBatch(batch: DataFrame, batchId: Long, root: String): Unit = {
     val sp = batch.sparkSession
-    // accumulated-state existence goes through the Hadoop FileSystem
-    // API — a java.nio probe answers for the LOCAL fs only, and on an
-    // HDFS/S3 store-root it would read "absent" every batch, silently
-    // resetting the signature index and both shingle stores
-    val fs = StreamRefit.hfs(sp, root)
     def prev(dir: String): Option[DataFrame] =
-      if (fs.exists(new org.apache.hadoop.fs.Path(root, dir)))
-        Some(sp.read.parquet(s"$root/$dir").filter(col("batch") < batchId))
-      else None
+      Store.committedBefore(sp, root, dir, batchId)
     // NOT respread: measured 3–5 s SLOWER with Spread.across(batch)
     // here — the per-batch stores written straight off this cache
     // (meta, trainsh) would go from 1 file to shuffle-partitions
@@ -148,7 +142,8 @@ object StreamingCorpusBuild {
       sh.filter(!col("ev")).select("doc_id", "sh")
         .write.mode("overwrite").parquet(s"$root/trainsh/batch=$batchId")
       val newEvalAll = sh.filter(col("ev")).select("sh").distinct()
-      val newEval = prev("evalsh") match {
+      val evalPrev = prev("evalsh")
+      val newEval = evalPrev match {
         case Some(p) => newEvalAll.join(broadcast(p.select("sh")),
           Seq("sh"), "left_anti")
         case None => newEvalAll
@@ -160,7 +155,7 @@ object StreamingCorpusBuild {
       // (doc, shingle) overlap is counted at the later arrival, once.
       val newEvalStored = sp.read
         .parquet(s"$root/evalsh/batch=$batchId").select("sh")
-      val evalAll = prev("evalsh").map(_.select("sh"))
+      val evalAll = evalPrev.map(_.select("sh"))
         .fold(newEvalStored)(_.unionByName(newEvalStored))
       val newTrain = sp.read.parquet(s"$root/trainsh/batch=$batchId")
         .select("doc_id", "sh")
@@ -200,8 +195,7 @@ object StreamingCorpusBuild {
     val nSh = spark.read.parquet(s"$root/trainsh")
       .groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
     val contam =
-      if (StreamRefit.hfs(spark, root)
-          .exists(new org.apache.hadoop.fs.Path(root, "shared")))
+      if (Store.hfs(spark, root).exists(new Path(root, "shared")))
         spark.read.parquet(s"$root/shared")
           .groupBy("doc_id").agg(sum("n_shared_delta").as("n_shared"))
           .join(nSh, "doc_id")

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -20,7 +21,7 @@ import org.apache.spark.sql.functions._
   * Per micro-batch (the [[StreamLineage]] single-commit discipline —
   * the shared store/decide step runs ONCE):
   *  1. threshold lineage check, histogram + cumhist checkpoint, own
-  *     firing decision ([[StreamRefit.ownDecision]] — stored
+  *     firing decision ([[DriftGate.withDecision]] — stored
   *     append-only in dec/, read not re-derived by any later actor);
   *  2. route the batch ([[StreamQuarantine.routeBatch]]) — every
   *     arrival lands under `routed/route=<corpus|quarantine>`, so the
@@ -58,8 +59,8 @@ object StreamingCuratedCorpus {
   /** One micro-batch: shared store/decide ONCE, route always, build
     * only when clean. Idempotent under whole-batch replay. */
   def processBatch(batch: DataFrame, batchId: Long, root: String,
-      thresholdPpm: Long = StreamRefit.ThresholdPpm): Unit =
-    StreamRefit.withDecision(batch, batchId, root, thresholdPpm,
+      thresholdPpm: Long = DriftGate.ThresholdPpm): Unit =
+    DriftGate.withDecision(batch, batchId, root, thresholdPpm,
         keepDocs = false) { (b, fired) =>
       StreamQuarantine.routeBatch(b, batchId, root, fired)
       if (!fired)
@@ -75,7 +76,7 @@ object StreamingCuratedCorpus {
     * passes Some(64), the testdata shape its DuckDB SQL pins. */
   def run(spark: SparkSession, docs: DataFrame, root: String,
       nSlices: Int = 4,
-      thresholdPpm: Long = StreamRefit.ThresholdPpm,
+      thresholdPpm: Long = DriftGate.ThresholdPpm,
       shardSize: Option[Int] = None): DataFrame = {
     StreamDrift.runSliced(spark, docs, root, nSlices)(
       processBatch(_, _, root, thresholdPpm))
@@ -85,32 +86,20 @@ object StreamingCuratedCorpus {
     // the real story instead (pathological by construction: drift is
     // relative to accumulated prior, so batch 0 never fires and an
     // all-fired stream requires every later batch to break from it).
-    require(StreamRefit.hfs(spark, root)
-        .exists(new org.apache.hadoop.fs.Path(root, "meta")),
+    require(Store.hfs(spark, root).exists(new Path(root, "meta")),
       s"StreamingCuratedCorpus: every batch of $root fired — no clean " +
         "arrival ever reached the build; there is no corpus to publish")
     StreamingCorpusBuild.publish(spark, root, shardSize)
   }
-
-  /** The fired-batch set of `docs` under the doc_id-mod-nSlices
-    * slicing — the [[graft.FiringPatternCanarySpec]] derivation as a
-    * library call (one bounded collect: one row per batch). */
-  def firedBatches(docs: DataFrame, nSlices: Int = 4,
-      thresholdPpm: Long = StreamRefit.ThresholdPpm): Set[Long] =
-    StreamDrift.batchReference(docs, nSlices, StreamRefit.axis)
-      .collect() // bounded: one row per batch
-      .filter(r => BigInt(r.getLong(3)) * 1000000 >
-        BigInt(thresholdPpm) * BigInt(r.getLong(1)) * BigInt(r.getLong(2)))
-      .map(_.getLong(0)).toSet
 
   /** The same manifest computed without the stream: the one-shot
     * st16 topology over the docs of NON-FIRED batches only — the
     * spec's invariance reference and the shape the sf0.01 oracle
     * hard-codes (batch 2 fired). */
   def batchReference(docs: DataFrame, nSlices: Int = 4,
-      thresholdPpm: Long = StreamRefit.ThresholdPpm,
+      thresholdPpm: Long = DriftGate.ThresholdPpm,
       shardSize: Option[Int] = None): DataFrame = {
-    val fired = firedBatches(docs, nSlices, thresholdPpm)
+    val fired = DriftGate.firedBatches(docs, nSlices, thresholdPpm)
     val clean =
       if (fired.isEmpty) docs
       else docs.filter(!pmod(col("doc_id"), lit(nSlices.toLong))

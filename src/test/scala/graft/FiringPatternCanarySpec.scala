@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.streaming.StreamRefit
+import graft.streaming.DriftGate
 
 /** Firing-pattern canary — the SchemaCanarySpec precedent applied to
   * the five streaming oracles that PIN the sf0.01 drift firing
@@ -11,7 +11,7 @@ import graft.streaming.StreamRefit
   * st23_stream_promote, st24_stream_lineage,
   * st25_stream_curated_corpus): on the driver's sf0.01
   * documents table, doc_id-mod-4 slicing fires the st18 token-length
-  * drift test exactly at batch 2 under [[StreamRefit.ThresholdPpm]]
+  * drift test exactly at batch 2 under [[DriftGate.ThresholdPpm]]
   * (ratios ~112000 / 176000 / 48000 ppm vs the 150000 threshold). A
   * testdata regeneration that shifts the token-length mix could move
   * that firing batch and turn all five queries hash-red with the
@@ -44,14 +44,14 @@ class FiringPatternCanarySpec extends SparkSpec {
 
   /** The fired-batch set the engine derives — delegated to the
     * library's own derivation
-    * ([[graft.streaming.StreamingCuratedCorpus.firedBatches]]:
+    * ([[graft.streaming.DriftGate.firedBatches]]:
     * StreamDrift's one-shot batch reference on the st18 axis + the
     * exact BigInt cross-multiplied threshold test, the same
-    * arithmetic StreamRefit.decisionFor applies per micro-batch).
+    * arithmetic DriftGate.decisionFor applies per micro-batch).
     * One copy of the formula: a canary that drifted from the engine's
     * actual derivation would pin the wrong pattern. */
   private def firedSet(docs: DataFrame, nSlices: Int = 4): Set[Long] =
-    graft.streaming.StreamingCuratedCorpus.firedBatches(docs, nSlices)
+    DriftGate.firedBatches(docs, nSlices)
 
   test("canary: sf0.01 doc_id-mod-4 drift fires exactly at batch 2 — " +
       "st20/st21/st23/st24/st25 oracles pin this pattern") {

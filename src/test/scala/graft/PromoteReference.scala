@@ -50,7 +50,7 @@ private[graft] object PromoteReference {
           BigInt(prev.getOrElse(k, 0L)) * n).abs
       }.sum
       b -> (drift * 1000000 >
-        BigInt(graft.streaming.StreamRefit.ThresholdPpm) * n * pn)
+        BigInt(graft.streaming.DriftGate.ThresholdPpm) * n * pn)
     }.toMap
     var champion: Option[IndexedSeq[Long]] = None
     var published = 0L

@@ -15,7 +15,9 @@ import org.scalatest.matchers.should.Matchers
   *    sets `"checkpointLocation"` or `Trigger.AvailableNow`;
   *  - sessions come from ONE factory, `Sessions`, so no file other than
   *    it and Bench (whose literals SessionsSpec pins it to) calls
-  *    `SparkSession.builder`. */
+  *    `SparkSession.builder`;
+  *  - the drift gate's firing rule, `drift_num · 10^6 > ppm · n · prev_n`,
+  *    is stated once, in `DriftGate.fires`. */
 class SourceGuardSpec extends AnyFunSuite with Matchers {
 
   private val Tokens = Seq("Trigger.AvailableNow", "\"checkpointLocation\"")
@@ -85,5 +87,16 @@ class SourceGuardSpec extends AnyFunSuite with Matchers {
     mainSources.filter(f => codeOf(read(f)).contains("SparkSession.builder"))
       .map(_.getFileName.toString).toSet shouldBe
       Set("Bench.scala", "Sessions.scala")
+  }
+
+  test("only DriftGate states the firing comparison in main-source code") {
+    val firing = """\*\s*1000000\s*>""".r
+    val (gate, others) =
+      mainSources.partition(_.getFileName.toString == "DriftGate.scala")
+    gate.size shouldBe 1
+    // positive control: the gate's own rule is found as code, once
+    firing.findAllIn(codeOf(read(gate.head))).size shouldBe 1
+    others.filter(f => firing.findFirstIn(codeOf(read(f))).isDefined)
+      .map(_.toString) shouldBe empty
   }
 }

@@ -1,7 +1,11 @@
 package graft
 
+import java.io.IOException
 import java.nio.file.{Files, Paths}
 
+import org.apache.hadoop.fs.{FSDataOutputStream, Path => HPath, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.util.Progressable
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryException
@@ -14,7 +18,8 @@ import graft.streaming._
   * never landed, so each actor's per-batch work must be idempotent in
   * the batch id. The crash table drives all nine actors whose
   * `processBatch` runs through [[StreamOps.runBounded]]; the heal specs
-  * damage the two [[FoldedStore]] running checkpoints. */
+  * damage the two [[FoldedStore]] running checkpoints; the last two
+  * crash inside a single store write. */
 class StreamReplaySpec extends SparkSpec {
   import spark.implicits._
 
@@ -125,7 +130,7 @@ class StreamReplaySpec extends SparkSpec {
       StreamSketch.processBatch(slice(healEvents, "event_id", b), b,
         s"$root/s")
       StreamDrift.processBatch(slice(docs, "doc_id", b), b, s"$root/d",
-        StreamRefit.axis, cumulative = true)
+        DriftGate.axis, cumulative = true)
     }
     for (b <- 0L to 3L) {
       if (damage && b == 2L) {
@@ -145,7 +150,7 @@ class StreamReplaySpec extends SparkSpec {
 
   /** Each surviving `<cum>/batch=b` as sorted rows, by batch. */
   private def checkpoints(root: String, cum: String): Map[Long, Seq[String]] =
-    StreamRefit.batchIdsUnder(StreamRefit.hfs(spark, root), root, cum)
+    Store.batchIdsUnder(Store.hfs(spark, root), root, cum)
       .map(b => b -> rows(spark.read.parquet(s"$root/$cum/batch=$b"))).toMap
 
   private lazy val healed = {
@@ -175,8 +180,97 @@ class StreamReplaySpec extends SparkSpec {
     // through the strictly-before read of the stored hists
     for (b <- 0L to 3L)
       withClue(s"batch $b: ") {
-        StreamRefit.decisionFor(spark, s"$hurt/d", b) shouldBe
-          StreamRefit.decisionFor(spark, s"$ok/d", b)
+        DriftGate.decisionFor(spark, s"$hurt/d", b) shouldBe
+          DriftGate.decisionFor(spark, s"$ok/d", b)
       }
+  }
+
+  test("a crash inside a trail write leaves no entry: the replay " +
+      "re-derives the firing decision and the threshold marker") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.crashfs.impl", classOf[CrashingFs].getName)
+    // sf0.001 sliced doc_id mod 3 fires at batch 1 alone
+    DriftGate.firedBatches(docs, nSlices = 3) shouldBe Set(1L)
+    def slice(b: Long) = docs.filter(pmod($"doc_id", lit(3L)) === b)
+    /** Crash inside the write of the entry `at` names during batch b,
+      * then replay batch b. */
+    def crashThenReplay(root: String, b: Long)(at: HPath => Boolean): Unit = {
+      CrashingFs.armed = Some(at)
+      intercept[IOException](StreamQuarantine.processBatch(slice(b), b, root))
+      CrashingFs.armed shouldBe None
+      StreamQuarantine.processBatch(slice(b), b, root)
+    }
+    val want = rows(StreamQuarantine.batchReference(docs, nSlices = 3))
+    // the firing batch's dec/ entry: an empty entry would read as clean
+    val dec = "crashfs://" + tmp("crash-dec")
+    StreamQuarantine.processBatch(slice(0L), 0L, dec)
+    crashThenReplay(dec, 1L)(p =>
+      p.getParent.getName == "dec" && p.getName.contains("batch-1"))
+    StreamQuarantine.processBatch(slice(2L), 2L, dec)
+    rows(StreamQuarantine.routed(spark, dec)) shouldBe want
+    // the threshold marker: an empty one would fail every restart
+    val marker = "crashfs://" + tmp("crash-marker")
+    crashThenReplay(marker, 0L)(_.getName.contains("threshold.ppm"))
+    for (b <- 1L to 2L) StreamQuarantine.processBatch(slice(b), b, marker)
+    rows(StreamQuarantine.routed(spark, marker)) shouldBe want
+  }
+
+  test("a crash inside batch 0's first store write replays to the " +
+      "uncrashed stores: readers skip the uncommitted directory") {
+    val batch0 = docs.filter(pmod($"doc_id", lit(4L)) === 0L)
+    /** Batch 0 on a fresh root, and on one where a crashed attempt left
+      * only `index/batch=0/_temporary/0/`. */
+    def both(run: String => Unit): (String, String) = {
+      val (clean, crashed) = (tmp("uncrashed"), tmp("crashed"))
+      Files.createDirectories(
+        Paths.get(crashed, "index", "batch=0", "_temporary", "0"))
+      run(clean); run(crashed)
+      (clean, crashed)
+    }
+    val (dedup, dedupCrashed) = both(IngestDedup.processBatch(batch0, 0L, _))
+    for (store <- Seq("index", "pairs"))
+      rows(spark.read.parquet(s"$dedupCrashed/$store")) shouldBe
+        rows(spark.read.parquet(s"$dedup/$store"))
+    val (build, buildCrashed) =
+      both(StreamingCorpusBuild.processBatch(batch0, 0L, _))
+    rows(StreamingCorpusBuild.publish(spark, buildCrashed)) shouldBe
+      rows(StreamingCorpusBuild.publish(spark, build))
+  }
+}
+
+/** The local file system under the `crashfs:` scheme. The first `create`
+  * of a path that [[CrashingFs.armed]] accepts crashes inside the write:
+  * the file is created empty, then the call throws. */
+class CrashingFs extends RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("crashfs:///")
+
+  override def create(f: HPath, overwrite: Boolean, bufferSize: Int,
+      replication: Short, blockSize: Long,
+      progress: Progressable): FSDataOutputStream =
+    crashAt(f, super.create(f, overwrite, bufferSize, replication,
+      blockSize, progress))
+
+  override def create(f: HPath, permission: FsPermission,
+      overwrite: Boolean, bufferSize: Int, replication: Short,
+      blockSize: Long, progress: Progressable): FSDataOutputStream =
+    crashAt(f, super.create(f, permission, overwrite, bufferSize,
+      replication, blockSize, progress))
+
+  private def crashAt(f: HPath, out: FSDataOutputStream): FSDataOutputStream =
+    if (!CrashingFs.fire(f)) out
+    else {
+      out.close()
+      throw new IOException(s"injected crash inside the write of $f")
+    }
+}
+
+object CrashingFs {
+  @volatile var armed: Option[HPath => Boolean] = None
+
+  /** Whether `f` is the armed write; disarms when it is. */
+  def fire(f: HPath): Boolean = synchronized {
+    val hit = armed.exists(_(f))
+    if (hit) armed = None
+    hit
   }
 }

@@ -530,7 +530,7 @@ class StreamingSpec extends SparkSpec {
 
   test("st21 drift->quarantine: stream == batch reference, exactly the " +
       "firing batch's docs are quarantined, replay never flips a route") {
-    import graft.streaming.{StreamQuarantine, StreamRefit}
+    import graft.streaming.{DriftGate, StreamQuarantine}
     // st20's controlled-drift corpus: slice 2's long documents jump
     // the token-length log-bucket -> drift fires exactly at batch 2
     val long = ("stream " * 40).trim
@@ -566,9 +566,10 @@ class StreamingSpec extends SparkSpec {
     StreamQuarantine.processBatch(
       docs.filter(pmod($"doc_id", lit(3L)) === 1L), 1L, root)
     rows(StreamQuarantine.routed(spark, root)) shouldBe streamed
-    // the route decision table StreamRefit derives agrees with where
-    // the docs physically landed
-    StreamRefit.decisions(spark, root).toMap.apply(2L) shouldBe true
+    // the gate's one-shot fired set agrees with where the docs
+    // physically landed
+    streamed.filter(_._3 == "quarantine").map(_._2).toSet shouldBe
+      DriftGate.firedBatches(docs, nSlices = 3)
     // threshold LINEAGE: a restart against the same root with a
     // different threshold would re-decide old batches and leave a
     // batch under BOTH route directories — refused loudly instead
@@ -709,7 +710,7 @@ class StreamingSpec extends SparkSpec {
     }.toDF("doc_id", "text", "lang")
     // the corpus fires exactly at batch 2 under the mod-3 slicing —
     // the assumption every assertion below builds on, made explicit
-    StreamingCuratedCorpus.firedBatches(docs, nSlices = 3) shouldBe
+    graft.streaming.DriftGate.firedBatches(docs, nSlices = 3) shouldBe
       Set(2L)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().toSeq.map(_.toSeq)
@@ -784,7 +785,7 @@ class StreamingSpec extends SparkSpec {
   test("a torn docs/ directory (no hist/ twin) never joins a training " +
       "pool — the clean-pool complement intersects the dec-known set " +
       "in BOTH the refit and the promotion gate") {
-    import graft.streaming.{StreamPromote, StreamRefit}
+    import graft.streaming.{DriftGate, StreamPromote, StreamRefit}
     val long = ("stream " * 40).trim
     val docs = (0 until 30).map { i =>
       (i % 3, i % 2) match {
@@ -821,7 +822,7 @@ class StreamingSpec extends SparkSpec {
     val torn = tmp("torn-refit")
     StreamRefit.processBatch(slice(0L), 0L, torn)
     poison.write.parquet(s"$torn/docs/batch=1")
-    StreamRefit.tornBatches(spark, torn, 2L) shouldBe Seq(1L)
+    DriftGate.tornBatches(spark, torn, 2L) shouldBe Seq(1L)
     StreamRefit.processBatch(slice(2L), 2L, torn)
     refitWeights(torn) shouldBe refW
     // same contract through the promotion gate
@@ -960,12 +961,12 @@ class StreamingSpec extends SparkSpec {
 
   test("promotion-state readers on a synthetic 5-candidate trail: " +
       "rejects, non-contiguous ids, and a mid-trail hole") {
-    import graft.streaming.{StreamPromote, StreamRefit}
+    import graft.streaming.{Store, StreamPromote}
     // outcomes exactly as gateBatch stores them: cand/batch=k rows +
     // the cumulative pub/batch-k pointer. publish@0 (v1), reject@2,
     // publish@5 (v2), reject@7, publish@9 (v3) — non-contiguous ids.
     val root = tmp("st23synth")
-    val fs = StreamRefit.hfs(spark, root)
+    val fs = Store.hfs(spark, root)
     val outcomes = Seq( // (batch, published?, versionIfPublished)
       (0L, true, Some(1L)), (2L, false, None), (5L, true, Some(2L)),
       (7L, false, None), (9L, true, Some(3L)))
@@ -979,7 +980,7 @@ class StreamingSpec extends SparkSpec {
         .coalesce(1).write.mode("overwrite")
         .parquet(s"$root/cand/batch=$b")
       if (pub) { count += 1; latest = b }
-      StreamRefit.writeSmall(fs,
+      Store.publishTrail(fs,
         new org.apache.hadoop.fs.Path(s"$root/pub/batch-$b"),
         s"$count,$latest")
     }
