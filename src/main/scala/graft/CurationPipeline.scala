@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.queries.TextQueries
@@ -177,6 +177,23 @@ object CurationPipeline {
       } else println(s"[curation] ok   $name")
   }
 
+  /** The manifest shape both modes hold: every shard but the last
+    * holds `shardSize` docs, the pos ranges tile [1, nTrain]
+    * contiguously, and every shard has at least one pack. */
+  private def shardChecks(check: Checks, m: Array[Row], shardSize: Int,
+      nTrain: Long): Unit = {
+    val shards = m.sortBy(_.getAs[Long]("shard"))
+    check("shards_full_except_last")(shards.dropRight(1)
+      .forall(_.getAs[Long]("n_docs") == shardSize.toLong))
+    val ranges = shards.map(r => (r.getAs[Long]("pos_lo"), r.getAs[Long]("pos_hi")))
+    check("pos_ranges_tile")(
+      ranges.headOption.forall(_._1 == 1L) &&
+        ranges.lastOption.forall(_._2 == nTrain) &&
+        ranges.sliding(2).filter(_.length == 2)
+          .forall(w => w(0)._2 + 1 == w(1)._1))
+    check("packs_positive")(m.forall(_.getAs[Long]("n_packs") >= 1L))
+  }
+
   /** STREAMING front-door mode (round 17): the arrival-time twin of
     * the batch arc — publish the directory as doc_id-mod-4 waves,
     * run the st25 composition (drift gate → quarantine routing →
@@ -236,17 +253,7 @@ object CurationPipeline {
     check("manifest_accounts_train")(m.forall(r =>
       r.getAs[Long]("n_docs") ==
         r.getAs[Long]("pos_hi") - r.getAs[Long]("pos_lo") + 1L))
-    check("shards_full_except_last")(
-      m.sortBy(_.getAs[Long]("shard")).dropRight(1)
-        .forall(_.getAs[Long]("n_docs") == expectShard.toLong))
-    val ranges = m.sortBy(_.getAs[Long]("shard"))
-      .map(r => (r.getAs[Long]("pos_lo"), r.getAs[Long]("pos_hi")))
-    check("pos_ranges_tile")(
-      ranges.headOption.forall(_._1 == 1L) &&
-        ranges.lastOption.forall(_._2 == nTrain) &&
-        ranges.sliding(2).filter(_.length == 2)
-          .forall(w => w(0)._2 + 1 == w(1)._1))
-    check("packs_positive")(m.forall(_.getAs[Long]("n_packs") >= 1L))
+    shardChecks(check, m, expectShard, nTrain)
     // 7: the released manifest EQUALS the one-shot batch topology
     // over the non-fired arrivals — the st25 contract, enforced here
     // on the driver's own data directory
@@ -285,17 +292,7 @@ object CurationPipeline {
       val nTrain = byName("train")
       check("manifest_accounts_train")(
         m.map(_.getAs[Long]("n_docs")).sum == nTrain)
-      check("shards_full_except_last")(
-        m.sortBy(_.getAs[Long]("shard")).dropRight(1)
-          .forall(_.getAs[Long]("n_docs") == shardSize.toLong))
-      val ranges = m.sortBy(_.getAs[Long]("shard"))
-        .map(r => (r.getAs[Long]("pos_lo"), r.getAs[Long]("pos_hi")))
-      check("pos_ranges_tile")(
-        ranges.headOption.forall(_._1 == 1L) &&
-          ranges.lastOption.forall(_._2 == nTrain) &&
-          ranges.sliding(2).filter(_.length == 2)
-            .forall(w => w(0)._2 + 1 == w(1)._1))
-      check("packs_positive")(m.forall(_.getAs[Long]("n_packs") >= 1L))
+      shardChecks(check, m, shardSize, nTrain)
       // 4. the registered t28 composition it reuses is green on the
       // same directory, and containment holds: t28 gates harder
       // (quality threshold + decontamination), so its manifest can

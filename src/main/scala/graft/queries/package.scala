@@ -13,6 +13,5 @@ package object queries {
   object Q {
     def apply(oracle: String)(fn: (SparkSession, String) => DataFrame): Q =
       Q(fn, Some(oracle))
-    def noOracle(fn: (SparkSession, String) => DataFrame): Q = Q(fn, None)
   }
 }

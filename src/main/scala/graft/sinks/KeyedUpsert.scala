@@ -32,15 +32,17 @@ import org.apache.spark.sql.types._
   *    directory that currently holds it. A crash before the rename
   *    leaves the previous version fully intact (the half-written commit
   *    dir is unreferenced garbage, reclaimed by vacuum).
-  *  - the manifest header records the table's metadata as Delta's log
-  *    `metaData` action does: the schema (`#schema=`), the key columns
-  *    (`#keys=`) and the bucket count (`#numBuckets=`). A read is one
-  *    manifest listing, one manifest read and a listing of the live
-  *    bucket dirs; the manifest, not a `DataSource` resolution, names
-  *    the files a query reads ([[SnapshotIndex]]), and no Spark job
-  *    runs. A filter that fixes every key column to a literal reads
-  *    the one bucket those literals hash into. An older, schema-less
-  *    manifest is read by inference.
+  *  - the manifest header records the commit (`#operation=`,
+  *    `#commitMs=`, `#touchedBuckets=`, `#filesWritten=`) and the
+  *    table's metadata as Delta's log `metaData` action does: the key
+  *    columns (`#keys=`), the bucket count (`#numBuckets=`) and the
+  *    schema (`#schema=`). All seven lines are required: a manifest
+  *    that lacks one fails by name. A read is one manifest listing, one
+  *    manifest read and a listing of the live bucket dirs; the
+  *    manifest, not a `DataSource` resolution, names the files a query
+  *    reads ([[SnapshotIndex]]), and no Spark job runs. A filter that
+  *    fixes every key column to a literal reads the one bucket those
+  *    literals hash into.
   *
   * The manifest chain doubles as a version log (the reference's
   * `DESCRIBE HISTORY` / `startingVersion` replay, `Query the Metric
@@ -64,9 +66,9 @@ object KeyedUpsert {
   private val ManifestDir = "_manifests"
   private val DataDir = "data"
   private val SrcCol = "__src" // merge tag: 1 incoming, 0 existing
-  /** Header keys that describe the table, not one commit: every commit
-    * carries them forward, in this order. */
-  private val TableMeta = Seq("keys", "numBuckets", "schema")
+  /** The header lines every manifest carries, in this order. */
+  private val HeaderKeys = Seq("operation", "commitMs", "touchedBuckets",
+    "filesWritten", "keys", "numBuckets", "schema")
 
   /** `__bucket = pmod(xxhash64(keys), n)`; [[SnapshotIndex]] evaluates
     * the same expression over a lookup's literals. */
@@ -74,34 +76,10 @@ object KeyedUpsert {
     df.withColumn(BucketCol,
       pmod(xxhash64(keyCols.map(col): _*), lit(n.toLong)))
 
-  /** The `#keys=`/`#numBuckets=` header lines of a table bucketed by
-    * `keyCols` into `n` buckets. */
-  private def layoutMeta(keyCols: Seq[String], n: Int): Map[String, String] =
-    Map("keys" -> keyCols.mkString(","), "numBuckets" -> n.toString)
-
-  private def fsOf(spark: SparkSession, p: Path): FileSystem =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def manifestFile(target: Path, v: Long): Path =
-    new Path(target, f"$ManifestDir/v$v%08d.txt")
-
   private def versionOf(name: String): Option[Long] =
     if (name.startsWith("v") && name.endsWith(".txt"))
       name.stripPrefix("v").stripSuffix(".txt").toLongOption
     else None
-
-  /** (version, status) of every manifest, ascending, from ONE listing;
-    * a missing manifest dir (a table never written) lists as empty. */
-  private def manifests(fs: FileSystem, target: Path): Seq[(Long, FileStatus)] =
-    try fs.listStatus(new Path(target, ManifestDir)).toSeq
-      .flatMap(s => versionOf(s.getPath.getName).map(_ -> s)).sortBy(_._1)
-    catch { case _: FileNotFoundException => Seq.empty }
-
-  /** Committed versions, ascending; empty for a table never written. */
-  def versions(spark: SparkSession, targetDir: String): Seq[Long] = {
-    val target = new Path(targetDir)
-    manifests(fsOf(spark, target), target).map(_._1)
-  }
 
   /** One DESCRIBE HISTORY row: the commit metadata recorded in the
     * manifest header at commit time (`Query the Metric tables/Query the
@@ -112,112 +90,212 @@ object KeyedUpsert {
   case class Commit(version: Long, operation: String, commitMs: Long,
       touchedBuckets: Long, filesWritten: Long)
 
-  /** DESCRIBE HISTORY analog, ascending by version. Manifests written
-    * before headers existed surface as operation "unknown" with the
-    * file modification time; a count the header lacks reads as -1. */
-  def history(spark: SparkSession, targetDir: String): Seq[Commit] = {
-    val target = new Path(targetDir)
-    val fs = fsOf(spark, target)
-    manifests(fs, target).map { case (v, s) =>
-      val h = loadManifest(fs, target, v).header
-      def count(k: String) = h.get(k).flatMap(_.toLongOption)
-      Commit(v, h.getOrElse("operation", "unknown"),
-        count("commitMs").getOrElse(s.getModificationTime),
-        count("touchedBuckets").getOrElse(-1L),
-        count("filesWritten").getOrElse(-1L))
-    }
+  /** The table metadata every header carries forward: key columns,
+    * bucket count and the schema as one JSON line. */
+  private case class Meta(keys: Seq[String], numBuckets: Int,
+      schemaJson: String) {
+    lazy val schema: StructType =
+      DataType.fromJson(schemaJson).asInstanceOf[StructType]
   }
 
-  /** One version's manifest: the `#key=value` header (commit metadata,
-    * the table metadata) and bucket -> table-relative live directory. */
-  private case class Manifest(header: Map[String, String],
+  /** One version's manifest: its commit, the table metadata, and
+    * bucket -> table-relative live directory. */
+  private case class Manifest(commit: Commit, meta: Meta,
       buckets: Map[Long, String]) {
-    lazy val schema: Option[StructType] =
-      header.get("schema").map(DataType.fromJson(_).asInstanceOf[StructType])
-    /** The key columns and bucket count, when the header records both. */
-    lazy val layout: Option[(Seq[String], Int)] =
-      for (k <- header.get("keys"); n <- header.get("numBuckets"))
-        yield (k.split(',').toSeq, n.toInt)
-    def tableMeta: Map[String, String] =
-      header.view.filterKeys(TableMeta.contains).toMap
 
     /** A MERGE or DELETE must bucket keys as the table does: with other
       * key columns or another bucket count a key would go live in a
       * second bucket and read back twice. */
-    def requireLayout(targetDir: String, keyCols: Seq[String], n: Int): Unit = {
-      val asked = layoutMeta(keyCols, n)
-      require(asked.forall { case (k, v) => header.get(k).forall(_ == v) },
-        s"$targetDir is bucketed by keys=${header.getOrElse("keys", "?")} " +
-        s"numBuckets=${header.getOrElse("numBuckets", "?")}; this call " +
-        s"asks for keys=${asked("keys")} numBuckets=$n")
-    }
+    def requireLayout(targetDir: String, keyCols: Seq[String], n: Int): Unit =
+      require(meta.keys == keyCols && meta.numBuckets == n,
+        s"$targetDir is bucketed by keys=${meta.keys.mkString(",")} " +
+        s"numBuckets=${meta.numBuckets}; this call asks for " +
+        s"keys=${keyCols.mkString(",")} numBuckets=$n")
   }
 
-  /** Read and parse the version's manifest in ONE file read. */
-  private def loadManifest(fs: FileSystem, target: Path,
-      version: Long): Manifest = {
-    val in = fs.open(manifestFile(target, version))
-    val text = try new String(in.readAllBytes(), StandardCharsets.UTF_8)
-      finally in.close()
-    val (header, body) = text.linesIterator.filter(_.nonEmpty).toSeq
-      .partition(_.startsWith("#"))
-    Manifest(
-      header.flatMap { line =>
-        line.stripPrefix("#").split("=", 2) match {
-          case Array(k, v) => Some(k -> v)
-          case _ => None
+  /** One table's manifest chain: the table path, its FileSystem and ONE
+    * lazy `_manifests/` listing, against which every version resolves. */
+  private final class Table(spark: SparkSession, val dir: String) {
+    val target = new Path(dir)
+    val fs: FileSystem = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+    /** Committed versions, ascending; a missing manifest dir (a table
+      * never written) lists as empty. */
+    lazy val versions: Seq[Long] =
+      try fs.listStatus(new Path(target, ManifestDir)).toSeq
+        .flatMap(s => versionOf(s.getPath.getName)).sorted
+      catch { case _: FileNotFoundException => Seq.empty }
+
+    private def file(v: Long): Path = new Path(target, f"$ManifestDir/v$v%08d.txt")
+
+    /** Resolve a requested version (default latest) against the
+      * retained chain, failing with a meaningful message (naming the
+      * earliest retained version) when it was vacuumed — instead of a
+      * raw FileNotFoundException from the manifest read. */
+    def resolve(requested: Option[Long]): Long = {
+      if (versions.isEmpty) throw new IllegalArgumentException(
+        s"no committed version in $dir")
+      requested match {
+        case None => versions.last
+        case Some(v) if versions.contains(v) => v
+        case Some(v) => throw new IllegalArgumentException(
+          s"version $v of $dir has been vacuumed or never existed; " +
+          s"earliest available is ${versions.head}, latest is ${versions.last}")
+      }
+    }
+
+    /** Read and parse the version's manifest in ONE file read. */
+    def load(v: Long): Manifest = {
+      val in = fs.open(file(v))
+      val text = try new String(in.readAllBytes(), StandardCharsets.UTF_8)
+        finally in.close()
+      val (header, body) = text.linesIterator.filter(_.nonEmpty).toSeq
+        .partition(_.startsWith("#"))
+      val h = header.map(_.stripPrefix("#").split("=", 2))
+        .collect { case Array(k, x) => k -> x }.toMap
+      def get(k: String): String = h.getOrElse(k,
+        throw new IllegalStateException(s"manifest ${file(v)} has no #$k= line"))
+      Manifest(
+        Commit(v, get("operation"), get("commitMs").toLong,
+          get("touchedBuckets").toLong, get("filesWritten").toLong),
+        Meta(get("keys").split(',').toSeq, get("numBuckets").toInt, get("schema")),
+        body.map { line =>
+          val Array(bk, rel) = line.split('\t')
+          bk.toLong -> rel
+        }.toMap)
+    }
+
+    def manifest(requested: Option[Long] = None): Manifest = load(resolve(requested))
+
+    /** Scan `dirs` (bucket -> table-relative dir) of manifest `m` with
+      * its recorded schema, on a [[SnapshotIndex]]: no path resolution,
+      * no footer read. No dirs reads zero rows of that schema. */
+    def scan(m: Manifest, dirs: Map[Long, String]): DataFrame =
+      spark.baseRelationToDataFrame(HadoopFsRelation(
+        new SnapshotIndex(fs, target, dirs, m.meta.keys, m.meta.numBuckets),
+        new StructType(), Shim.asNullable(m.meta.schema), None,
+        new ParquetFileFormat, Map.empty)(spark))
+
+    /** Publish `mapping` as version `v`: write a temp file, then rename
+      * — the rename IS the commit; it fails (loudly) if the version was
+      * concurrently taken. The header records the DESCRIBE HISTORY
+      * metadata: operation name, wall-clock commit time, and how many
+      * bucket directories and files this commit (re)wrote; then the
+      * table metadata `meta`. Then vacuum down to `retain` versions. */
+    def commit(v: Long, mapping: Map[Long, String], operation: String,
+        touchedBuckets: Long, filesWritten: Long, meta: Meta,
+        retain: Int): Unit = {
+      val manifests = new Path(target, ManifestDir)
+      fs.mkdirs(manifests)
+      val tmp = new Path(manifests, s".tmp-$v-${System.nanoTime()}")
+      val out = fs.create(tmp, false)
+      val header = HeaderKeys.zip(Seq(operation, System.currentTimeMillis(),
+        touchedBuckets, filesWritten, meta.keys.mkString(","),
+        meta.numBuckets, meta.schemaJson)).map { case (k, x) => s"#$k=$x\n" }
+      try out.write((header.mkString + mapping.toSeq.sortBy(_._1)
+        .map { case (bk, rel) => s"$bk\t$rel" }
+        .mkString("\n")).getBytes(StandardCharsets.UTF_8))
+      finally out.close()
+      val dst = file(v)
+      if (fs.exists(dst) || !fs.rename(tmp, dst)) {
+        fs.delete(tmp, false)
+        throw new IllegalStateException(
+          s"concurrent commit of version $v to $target")
+      }
+      vacuum(v, retain)
+    }
+
+    /** The one bucket writer behind MERGE, DELETE and OPTIMIZE: cluster
+      * `rows` (carrying [[BucketCol]]) by bucket so each bucket is whole
+      * in one task — one file per bucket — sorted by `sortCols` inside
+      * it: parquet row-group min/max on the leading sort column then
+      * lets a point lookup (read().filter(key === x)) skip row groups.
+      * Commits version `v` as `base` with the `replaced` buckets
+      * remapped to the fresh commit dir; a replaced bucket that
+      * received no rows leaves the manifest. The header records the
+      * layout (`keyCols`, `n`) and `rows`' schema.
+      * `repartition` (not rebalance) lets AQE coalesce small buckets
+      * into one task but never split one. */
+    def write(v: Long, rows: DataFrame, sortCols: Seq[String],
+        base: Map[Long, String], replaced: Set[Long], operation: String,
+        retain: Int, keyCols: Seq[String], n: Int): Unit = {
+      val commitRel = f"$DataDir/c$v%08d-${System.nanoTime()}"
+      val commitDir = new Path(target, commitRel)
+      rows.repartition(col(BucketCol))
+        .sortWithinPartitions((BucketCol +: sortCols).map(col): _*)
+        .write
+        // the manifest rename is the commit point; nothing reads _SUCCESS
+        .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+        .partitionBy(BucketCol).parquet(commitDir.toString)
+      // one glob yields both the written buckets and files; a plain
+      // FileStatus never loads permissions, where listFiles' located
+      // status forks `ls -ld` per file on a local FS without native IO
+      val files = fs.globStatus(new Path(commitDir, s"$BucketCol=*/*.parquet"))
+        .toSeq.map(_.getPath)
+      val written = files.map(_.getParent.getName.stripPrefix(s"$BucketCol="))
+        .distinct.map(_.toLong)
+      commit(v, base -- replaced ++
+        written.map(bk => bk -> s"$commitRel/$BucketCol=$bk"),
+        operation, replaced.size.toLong, files.size.toLong,
+        Meta(keyCols, n, StructType(rows.schema.filterNot(_.name == BucketCol)).json),
+        retain)
+    }
+
+    /** Drop manifests older than the newest `retain` and any commit dir
+      * no retained manifest references. The chain is this handle's
+      * listing plus the just-committed `latest` (a racing commit in
+      * between would have taken `latest` first). Only dirs whose version
+      * is <= `latest` are candidates, so an in-flight writer's
+      * not-yet-committed directory is never reclaimed from under it. */
+    private def vacuum(latest: Long, retain: Int): Unit = {
+      val (expired, kept) = (versions :+ latest).partition(_ <= latest - retain)
+      val referenced = kept.flatMap(v => load(v).buckets.values)
+        .map(_.split('/')(1)).toSet // data/<commit>/__bucket=K -> <commit>
+      val dataDir = new Path(target, DataDir)
+      if (fs.exists(dataDir)) fs.listStatus(dataDir).toSeq
+        .map(_.getPath)
+        .filter { p =>
+          val name = p.getName
+          !referenced.contains(name) &&
+            name.stripPrefix("c").takeWhile(_.isDigit).toLongOption
+              .exists(_ <= latest)
         }
-      }.toMap,
-      body.map { line =>
-        val Array(bk, rel) = line.split('\t')
-        bk.toLong -> rel
-      }.toMap)
-  }
-
-  /** Scan `dirs` (bucket -> table-relative dir) of manifest `m`. With a
-    * recorded schema the relation is built straight on a
-    * [[SnapshotIndex]]: no path resolution, no footer read. Without
-    * one (a manifest older than the `#schema=` line), infer it. */
-  private def scan(spark: SparkSession, target: Path, m: Manifest,
-      dirs: Map[Long, String]): DataFrame = m.schema match {
-    case Some(s) => spark.baseRelationToDataFrame(HadoopFsRelation(
-      new SnapshotIndex(fsOf(spark, target), target, dirs, m.layout),
-      new StructType(), Shim.asNullable(s), None, new ParquetFileFormat,
-      Map.empty)(spark))
-    case None => spark.read.parquet(dirs.values.toSeq.sorted
-      .map(rel => new Path(target, rel).toString): _*)
-  }
-
-  /** Publish `mapping` as version `v`: write a temp file, then rename —
-    * the rename IS the commit; it fails (loudly) if the version was
-    * concurrently taken. The header records the DESCRIBE HISTORY
-    * metadata: operation name, wall-clock commit time, and how many
-    * bucket directories and files this commit (re)wrote; then the
-    * table metadata `meta` (keys, bucket count, schema as one JSON
-    * line). */
-  private def commitManifest(fs: FileSystem, target: Path, v: Long,
-      mapping: Map[Long, String], operation: String,
-      touchedBuckets: Long, filesWritten: Long,
-      meta: Map[String, String]): Unit = {
-    val dir = new Path(target, ManifestDir)
-    fs.mkdirs(dir)
-    val tmp = new Path(dir, s".tmp-$v-${System.nanoTime()}")
-    val out = fs.create(tmp, false)
-    val header = s"#operation=$operation\n" +
-      s"#commitMs=${System.currentTimeMillis()}\n" +
-      s"#touchedBuckets=$touchedBuckets\n" +
-      s"#filesWritten=$filesWritten\n" +
-      TableMeta.flatMap(k => meta.get(k).map(v => s"#$k=$v\n")).mkString
-    try out.write((header + mapping.toSeq.sortBy(_._1)
-      .map { case (bk, rel) => s"$bk\t$rel" }
-      .mkString("\n")).getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    val dst = manifestFile(target, v)
-    if (fs.exists(dst) || !fs.rename(tmp, dst)) {
-      fs.delete(tmp, false)
-      throw new IllegalStateException(
-        s"concurrent commit of version $v to $target")
+        .foreach(fs.delete(_, true))
+      expired.foreach(v => fs.delete(file(v), false))
     }
+  }
+
+  /** Committed versions, ascending; empty for a table never written. */
+  def versions(spark: SparkSession, targetDir: String): Seq[Long] =
+    new Table(spark, targetDir).versions
+
+  /** DESCRIBE HISTORY analog, ascending by version. */
+  def history(spark: SparkSession, targetDir: String): Seq[Commit] = {
+    val t = new Table(spark, targetDir)
+    t.versions.map(t.load(_).commit)
+  }
+
+  /** The prologue MERGE and DELETE share: `rows` bucketed and persisted
+    * for `body`, with ONE pass deciding emptiness AND the touched
+    * buckets (filling the persist on the way — a separate `isEmpty`
+    * cost a full extra evaluation of the input plan, guide §1.2). An
+    * empty `rows` commits nothing; otherwise `body` gets the bucketed
+    * rows, the buckets they touch, the table and its current manifest
+    * (None for a table never written), whose layout must match. */
+  private def touching(spark: SparkSession, targetDir: String,
+      rows: DataFrame, keyCols: Seq[String], n: Int)(
+      body: (DataFrame, Set[Long], Table, Option[Manifest]) => Unit): Unit = {
+    val b = bucketed(rows, keyCols, n).persist()
+    try {
+      val touched = b.select(BucketCol).distinct()
+        .collect().map(_.getLong(0)).toSet // bounded by numBuckets
+      if (touched.nonEmpty) {
+        val t = new Table(spark, targetDir)
+        val m = t.versions.lastOption.map(t.load)
+        m.foreach(_.requireLayout(targetDir, keyCols, n))
+        body(b, touched, t, m)
+      }
+    } finally b.unpersist()
   }
 
   /** Upsert `batch` into `targetDir` matching on `keyCols`. Within a
@@ -235,22 +313,10 @@ object KeyedUpsert {
       keyCols: Seq[String], numBuckets: Int = 64,
       tieBreak: Option[String] = None,
       keepMaxOnMerge: Boolean = false,
-      retainVersions: Int = 8): Unit = {
-    val b = bucketed(batch, keyCols, numBuckets).persist()
-    try {
-      // ONE pass decides emptiness AND the touched buckets (filling
-      // the persist on the way): the former separate
-      // `if (batch.isEmpty) return` cost a full extra evaluation of
-      // the batch plan — often an aggregation — per upsert call
-      // (guide §1.2: don't compute things twice)
-      val touched = b.select(BucketCol).distinct()
-        .collect().map(_.getLong(0)).toSet // bounded by numBuckets
-      if (touched.isEmpty) return // empty batch: nothing to commit
-      val target = new Path(targetDir)
-      val fs = fsOf(spark, target)
-      val current = versions(spark, targetDir).lastOption
-      if (current.isEmpty && fs.exists(target) &&
-          fs.listStatus(target).exists { s =>
+      retainVersions: Int = 8): Unit =
+    touching(spark, targetDir, batch, keyCols, numBuckets) { (b, touched, t, m) =>
+      if (m.isEmpty && t.fs.exists(t.target) &&
+          t.fs.listStatus(t.target).exists { s =>
             val n = s.getPath.getName
             // any directory that isn't ours (incl. legacy __bucket=*/
             // datestamp=* partition dirs), or any non-marker file. An
@@ -268,16 +334,14 @@ object KeyedUpsert {
           "initialize over an unmanaged/legacy layout; migrate the " +
           "existing rows with an explicit initial upsert into a fresh " +
           "directory (or delete the legacy data) first")
-      val m = current.map(loadManifest(fs, target, _))
-        .getOrElse(Manifest(Map.empty, Map.empty))
-      m.requireLayout(targetDir, keyCols, numBuckets)
+      val live = m.fold(Map.empty[Long, String])(_.buckets)
       // live dirs of ONLY the touched buckets — pruning by manifest,
       // no full-table listing or scan
-      val existing = m.buckets.view.filterKeys(touched).toMap
+      val existing = live.view.filterKeys(touched).toMap
       val incoming = b.withColumn(SrcCol, lit(1))
       val rows = if (existing.isEmpty) incoming else
         bucketed( // leaf dirs carry no bucket col; recompute
-          scan(spark, target, m, existing), keyCols, numBuckets)
+          t.scan(m.get, existing), keyCols, numBuckets)
           .select(b.columns.map(col): _*).withColumn(SrcCol, lit(0))
           .union(incoming)
       // ONE bucket-clustered pass: the in-batch dedup and the merge
@@ -288,51 +352,12 @@ object KeyedUpsert {
       val src = Seq(col(SrcCol).desc)
       val w = Window.partitionBy((BucketCol +: keyCols).map(col): _*)
         .orderBy((if (keepMaxOnMerge) tb ++ src else src ++ tb): _*)
-      writeBuckets(fs, target, current.getOrElse(0L) + 1,
+      t.write(m.fold(1L)(_.commit.version + 1),
         rows.repartition(col(BucketCol))
           .withColumn("__rn", row_number().over(w))
           .filter(col("__rn") === 1).drop("__rn", SrcCol),
-        keyCols, m.buckets, touched, "MERGE", retainVersions,
-        layoutMeta(keyCols, numBuckets))
-    } finally b.unpersist()
-  }
-
-  /** The one bucket writer behind MERGE, DELETE and OPTIMIZE: cluster
-    * `rows` (carrying [[BucketCol]]) by bucket so each bucket is whole
-    * in one task — one file per bucket — sorted by `sortCols` inside
-    * it: parquet row-group min/max on the leading sort column then
-    * lets a point lookup (read().filter(key === x)) skip row groups.
-    * Publishes version `v` as `base` with the `replaced` buckets
-    * remapped to the fresh commit dir; a replaced bucket that received
-    * no rows leaves the manifest. The header records `layout` (the
-    * `#keys=`/`#numBuckets=` lines) and `rows`' schema.
-    * `repartition` (not rebalance) lets AQE coalesce small buckets into
-    * one task but never split one. */
-  private def writeBuckets(fs: FileSystem, target: Path, v: Long,
-      rows: DataFrame, sortCols: Seq[String], base: Map[Long, String],
-      replaced: Set[Long], operation: String, retain: Int,
-      layout: Map[String, String]): Unit = {
-    val commitRel = f"$DataDir/c$v%08d-${System.nanoTime()}"
-    val commitDir = new Path(target, commitRel)
-    rows.repartition(col(BucketCol))
-      .sortWithinPartitions((BucketCol +: sortCols).map(col): _*)
-      .write
-      // the manifest rename is the commit point; nothing reads _SUCCESS
-      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-      .partitionBy(BucketCol).parquet(commitDir.toString)
-    // one glob yields both the written buckets and files; a plain
-    // FileStatus never loads permissions, where listFiles' located
-    // status forks `ls -ld` per file on a local FS without native IO
-    val files = fs.globStatus(new Path(commitDir, s"$BucketCol=*/*.parquet"))
-      .toSeq.map(_.getPath)
-    val written = files.map(_.getParent.getName.stripPrefix(s"$BucketCol="))
-      .distinct.map(_.toLong)
-    commitManifest(fs, target, v, base -- replaced ++
-      written.map(bk => bk -> s"$commitRel/$BucketCol=$bk"),
-      operation, replaced.size.toLong, files.size.toLong, layout +
-        ("schema" -> StructType(rows.schema.filterNot(_.name == BucketCol)).json))
-    vacuum(fs, target, v, retain)
-  }
+        keyCols, live, touched, "MERGE", retainVersions, keyCols, numBuckets)
+    }
 
   /** MERGE WHEN MATCHED THEN DELETE: remove every row whose key appears
     * in `keys`. Cost is O(|keys| + touched buckets) like [[upsert]]:
@@ -343,33 +368,23 @@ object KeyedUpsert {
     * ones the table records. */
   def delete(spark: SparkSession, targetDir: String, keys: DataFrame,
       keyCols: Seq[String], numBuckets: Int = 64,
-      retainVersions: Int = 8): Unit = {
-    val k = bucketed(keys.select(keyCols.map(col): _*)
-      .dropDuplicates(keyCols), keyCols, numBuckets).persist()
-    try {
-      // one pass decides emptiness AND the touched buckets (the former
-      // separate isEmpty cost a full extra evaluation of `keys`)
-      val touchedAll = k.select(BucketCol).distinct()
-        .collect().map(_.getLong(0)) // bounded by numBuckets
-      if (touchedAll.isEmpty) return // no keys: nothing to delete
-      val target = new Path(targetDir)
-      val fs = fsOf(spark, target)
-      val current = resolveVersion(spark, targetDir, None)
-      val m = loadManifest(fs, target, current)
-      m.requireLayout(targetDir, keyCols, numBuckets)
-      val touched = touchedAll.filter(m.buckets.contains).toSet
-      if (touched.isEmpty) return // no key hashes into a live bucket
-      val existing = bucketed(
-        scan(spark, target, m, m.buckets.view.filterKeys(touched).toMap),
-        keyCols, numBuckets)
-      // a USING join moves the keys first; keep the table's column order
-      writeBuckets(fs, target, current + 1,
-        existing.join(k.select(keyCols.map(col): _*), keyCols, "left_anti")
-          .select(existing.columns.map(col): _*),
-        keyCols, m.buckets, touched, "DELETE", retainVersions,
-        layoutMeta(keyCols, numBuckets))
-    } finally k.unpersist()
-  }
+      retainVersions: Int = 8): Unit =
+    touching(spark, targetDir, keys.select(keyCols.map(col): _*)
+        .dropDuplicates(keyCols), keyCols, numBuckets) { (k, touchedAll, t, cur) =>
+      val m = cur.getOrElse(t.manifest()) // a table never written: fails by name
+      val touched = touchedAll.filter(m.buckets.contains)
+      if (touched.nonEmpty) { // some key hashes into a live bucket
+        val existing = bucketed(
+          t.scan(m, m.buckets.view.filterKeys(touched).toMap),
+          keyCols, numBuckets)
+        // a USING join moves the keys first; keep the table's column order
+        t.write(m.commit.version + 1,
+          existing.join(k.select(keyCols.map(col): _*), keyCols, "left_anti")
+            .select(existing.columns.map(col): _*),
+          keyCols, m.buckets, touched, "DELETE", retainVersions, keyCols,
+          numBuckets)
+      }
+    }
 
   /** OPTIMIZE analog for the versioned table: rewrite the live snapshot
     * into one fresh commit (optionally sorted by `sortCols` inside each
@@ -381,18 +396,13 @@ object KeyedUpsert {
     * pinnable. */
   def compact(spark: SparkSession, targetDir: String,
       sortCols: Seq[String] = Seq.empty, retainVersions: Int = 8): Unit = {
-    val target = new Path(targetDir)
-    val fs = fsOf(spark, target)
-    val current = resolveVersion(spark, targetDir, None)
-    val m = loadManifest(fs, target, current)
-    if (m.buckets.isEmpty) return
-    // leaf dirs don't store the bucket value; tag each bucket's frame
-    val parts = m.buckets.toSeq.sortBy(_._1).map { case (bk, rel) =>
-      scan(spark, target, m, Map(bk -> rel)).withColumn(BucketCol, lit(bk))
-    }
-    writeBuckets(fs, target, current + 1, parts.reduce(_.unionByName(_)),
-      sortCols, Map.empty, m.buckets.keySet, "OPTIMIZE", retainVersions,
-      m.tableMeta - "schema")
+    val t = new Table(spark, targetDir)
+    val m = t.manifest()
+    if (m.buckets.nonEmpty) // leaf dirs carry no bucket col; recompute
+      t.write(m.commit.version + 1,
+        bucketed(t.scan(m, m.buckets), m.meta.keys, m.meta.numBuckets),
+        sortCols, Map.empty, m.buckets.keySet, "OPTIMIZE", retainVersions,
+        m.meta.keys, m.meta.numBuckets)
   }
 
   /** RESTORE analog (Delta's `RESTORE TABLE ... TO VERSION AS OF v`):
@@ -405,66 +415,18 @@ object KeyedUpsert {
     * version's table metadata. O(manifest), independent of table size. */
   def restore(spark: SparkSession, targetDir: String, version: Long,
       retainVersions: Int = 8): Unit = {
-    val target = new Path(targetDir)
-    val fs = fsOf(spark, target)
-    val v = resolveVersion(spark, targetDir, Some(version))
-    val latest = resolveVersion(spark, targetDir, None)
-    val m = loadManifest(fs, target, v)
-    commitManifest(fs, target, latest + 1, m.buckets, "RESTORE", 0L, 0L,
-      m.tableMeta)
-    vacuum(fs, target, latest + 1, retainVersions)
-  }
-
-  /** Drop manifests older than the newest `retain` and any commit dir
-    * no retained manifest references. Only dirs whose version is <= the
-    * just-committed one are candidates, so an in-flight writer's
-    * not-yet-committed directory is never reclaimed from under it. */
-  private def vacuum(fs: FileSystem, target: Path, latest: Long,
-      retain: Int): Unit = {
-    val (expired, kept) = manifests(fs, target).map(_._1)
-      .partition(_ <= latest - retain)
-    val referenced = kept.flatMap(v => loadManifest(fs, target, v).buckets.values)
-      .map(_.split('/')(1)).toSet // data/<commit>/__bucket=K -> <commit>
-    val dataDir = new Path(target, DataDir)
-    if (fs.exists(dataDir)) fs.listStatus(dataDir).toSeq
-      .map(_.getPath)
-      .filter { p =>
-        val name = p.getName
-        !referenced.contains(name) &&
-          name.stripPrefix("c").takeWhile(_.isDigit).toLongOption
-            .exists(_ <= latest)
-      }
-      .foreach(fs.delete(_, true))
-    expired.foreach(v => fs.delete(manifestFile(target, v), false))
-  }
-
-  /** Resolve a requested version against the retained manifest chain,
-    * failing with a meaningful message (naming the earliest retained
-    * version) when the version was vacuumed — instead of a raw
-    * FileNotFoundException from the manifest read. */
-  private def resolveVersion(spark: SparkSession, targetDir: String,
-      requested: Option[Long]): Long = {
-    val vs = versions(spark, targetDir)
-    if (vs.isEmpty) throw new IllegalArgumentException(
-      s"no committed version in $targetDir")
-    requested match {
-      case None => vs.last
-      case Some(v) if vs.contains(v) => v
-      case Some(v) => throw new IllegalArgumentException(
-        s"version $v of $targetDir has been vacuumed or never existed; " +
-        s"earliest available is ${vs.head}, latest is ${vs.last}")
-    }
+    val t = new Table(spark, targetDir)
+    val m = t.manifest(Some(version))
+    t.commit(t.resolve(None) + 1, m.buckets, "RESTORE", 0L, 0L, m.meta,
+      retainVersions)
   }
 
   /** The live file layout at `version` (default latest): bucket ->
     * table-relative directory. The unit a scale audit inspects: an
     * upsert must remap only the buckets it touched. */
   def snapshot(spark: SparkSession, targetDir: String,
-      version: Option[Long] = None): Map[Long, String] = {
-    val target = new Path(targetDir)
-    val v = resolveVersion(spark, targetDir, version)
-    loadManifest(fsOf(spark, target), target, v).buckets
-  }
+      version: Option[Long] = None): Map[Long, String] =
+    new Table(spark, targetDir).manifest(version).buckets
 
   /** Read the table at `version` (default: latest committed snapshot)
     * with the schema its manifest records: one manifest listing, one
@@ -475,12 +437,9 @@ object KeyedUpsert {
     * schema. */
   def read(spark: SparkSession, targetDir: String,
       version: Option[Long] = None): DataFrame = {
-    val target = new Path(targetDir)
-    val v = resolveVersion(spark, targetDir, version)
-    val m = loadManifest(fsOf(spark, target), target, v)
-    require(m.buckets.nonEmpty || m.schema.nonEmpty,
-      s"$targetDir at version $v is empty and its manifest records no schema")
-    scan(spark, target, m, m.buckets)
+    val t = new Table(spark, targetDir)
+    val m = t.manifest(version)
+    t.scan(m, m.buckets)
   }
 
   /** startingVersion-style incremental replay: the current rows of
@@ -489,15 +448,10 @@ object KeyedUpsert {
     * instead of the whole table. */
   def changesSince(spark: SparkSession, targetDir: String,
       sinceVersion: Long): DataFrame = {
-    val target = new Path(targetDir)
-    val fs = fsOf(spark, target)
-    val latest = resolveVersion(spark, targetDir, None)
-    val base = loadManifest(fs, target,
-      resolveVersion(spark, targetDir, Some(sinceVersion))).buckets
-    val now = loadManifest(fs, target, latest)
-    val changed = now.buckets.filter { case (bk, rel) => !base.get(bk).contains(rel) }
-    if (changed.isEmpty) scan(spark, target, now, now.buckets).limit(0)
-    else scan(spark, target, now, changed)
+    val t = new Table(spark, targetDir)
+    val base = t.manifest(Some(sinceVersion)).buckets
+    val now = t.manifest()
+    t.scan(now, now.buckets.filter { case (bk, rel) => !base.get(bk).contains(rel) })
   }
 
   /** Semantic row-level diff between two committed versions: one row
@@ -518,26 +472,18 @@ object KeyedUpsert {
   def diff(spark: SparkSession, targetDir: String, fromVersion: Long,
       keyCols: Seq[String], toVersion: Option[Long] = None): DataFrame = {
     require(keyCols.nonEmpty, "diff needs the table's key columns")
-    val target = new Path(targetDir)
-    val fs = fsOf(spark, target)
-    val mFrom = loadManifest(fs, target,
-      resolveVersion(spark, targetDir, Some(fromVersion)))
-    val mTo = loadManifest(fs, target,
-      resolveVersion(spark, targetDir, toVersion))
+    val t = new Table(spark, targetDir)
+    val (mFrom, mTo) = (t.manifest(Some(fromVersion)), t.manifest(toVersion))
     val changed = (mFrom.buckets.keySet ++ mTo.buckets.keySet)
       .filter(bk => mFrom.buckets.get(bk) != mTo.buckets.get(bk))
-    def side(m: Manifest): DataFrame = {
-      val dirs = m.buckets.view.filterKeys(changed).toMap
-      if (dirs.nonEmpty) scan(spark, target, m, dirs)
-      else scan(spark, target, mTo, mTo.buckets).limit(0)
-    }
-    def fingerprinted(df: DataFrame, as: String): DataFrame = {
+    def side(m: Manifest, as: String): DataFrame = {
+      val df = t.scan(m, m.buckets.view.filterKeys(changed).toMap)
       val others = df.columns.filterNot(keyCols.contains).sorted
       df.select(keyCols.map(col) :+
         md5(to_json(struct(others.map(col): _*))).as(as): _*)
     }
-    fingerprinted(side(mFrom), "__fp_a")
-      .join(fingerprinted(side(mTo), "__fp_b"), keyCols, "full_outer")
+    side(mFrom, "__fp_a")
+      .join(side(mTo, "__fp_b"), keyCols, "full_outer")
       .withColumn("change",
         when(col("__fp_a").isNull, "added")
           .when(col("__fp_b").isNull, "removed")
@@ -551,8 +497,8 @@ object KeyedUpsert {
     * listed once each, on first use, with a plain `listStatus` — no
     * `InMemoryFileIndex`, glob or existence check, and no located
     * status, which forks `ls -ld` per file on a local FS without
-    * native IO. With the table's `layout` (key columns, bucket count)
-    * known, [[listFiles]] reads only the bucket a full-key point
+    * native IO. With the table's layout (`keys`, `numBuckets`),
+    * [[listFiles]] reads only the bucket a full-key point
     * lookup hashes into: a filter holding `key = literal` for every
     * key column, each literal non-null and of the column's exact type.
     * Float and double keys never prune: their equality folds `-0.0`
@@ -560,7 +506,7 @@ object KeyedUpsert {
     * the hash folding them alike. Any other filter reads every live
     * dir. */
   private final class SnapshotIndex(fs: FileSystem, target: Path,
-      dirs: Map[Long, String], layout: Option[(Seq[String], Int)])
+      dirs: Map[Long, String], keys: Seq[String], numBuckets: Int)
       extends FileIndex {
 
     private val paths = dirs.toSeq.sortBy(_._1)
@@ -575,30 +521,29 @@ object KeyedUpsert {
 
     /** The bucket every row matching `filters` lives in, if they fix
       * each key column to a literal: `pmod(xxhash64(literals in key
-      * order), n)`, the expression [[bucketed]] writes. */
-    private def pointBucket(filters: Seq[Expression]): Option[Long] =
-      layout.flatMap { case (keys, n) =>
-        def conjuncts(e: Expression): Seq[Expression] = e match {
-          case And(l, r) => conjuncts(l) ++ conjuncts(r)
-          case other => Seq(other)
-        }
-        def hashStable(t: DataType): Boolean = t match {
-          case BooleanType | ByteType | ShortType | IntegerType | LongType |
-               DateType | TimestampType | TimestampNTZType | BinaryType |
-               StringType | _: DecimalType => true // StringType: binary collation only
-          case _ => false
-        }
-        val fixed = filters.flatMap(conjuncts).collect {
-          case EqualTo(a: Attribute, l: Literal) => a -> l
-          case EqualTo(l: Literal, a: Attribute) => a -> l
-        }.collect {
-          case (a, l) if l.value != null && l.dataType == a.dataType &&
-            hashStable(a.dataType) => a.name -> l
-        }.toMap
-        Option.when(keys.forall(fixed.contains))(
-          Pmod(new XxHash64(keys.map(fixed)), Literal(n.toLong)).eval()
-            .asInstanceOf[Long])
+      * order), numBuckets)`, the expression [[bucketed]] writes. */
+    private def pointBucket(filters: Seq[Expression]): Option[Long] = {
+      def conjuncts(e: Expression): Seq[Expression] = e match {
+        case And(l, r) => conjuncts(l) ++ conjuncts(r)
+        case other => Seq(other)
       }
+      def hashStable(t: DataType): Boolean = t match {
+        case BooleanType | ByteType | ShortType | IntegerType | LongType |
+             DateType | TimestampType | TimestampNTZType | BinaryType |
+             StringType | _: DecimalType => true // StringType: binary collation only
+        case _ => false
+      }
+      val fixed = filters.flatMap(conjuncts).collect {
+        case EqualTo(a: Attribute, l: Literal) => a -> l
+        case EqualTo(l: Literal, a: Attribute) => a -> l
+      }.collect {
+        case (a, l) if l.value != null && l.dataType == a.dataType &&
+          hashStable(a.dataType) => a.name -> l
+      }.toMap
+      Option.when(keys.forall(fixed.contains))(
+        Pmod(new XxHash64(keys.map(fixed)), Literal(numBuckets.toLong)).eval()
+          .asInstanceOf[Long])
+    }
 
     override def rootPaths: Seq[Path] = paths.map(_._2)
 
@@ -618,9 +563,4 @@ object KeyedUpsert {
 
     override def partitionSchema: StructType = new StructType()
   }
-
-  /** foreachBatch hook for streaming update-mode aggregates (K3/K4). */
-  def sink(targetDir: String, keyCols: Seq[String], numBuckets: Int = 64)
-      : (DataFrame, Long) => Unit =
-    (batch, _) => upsert(batch.sparkSession, targetDir, batch, keyCols, numBuckets)
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -150,9 +150,13 @@ object DriftGate {
   private[graft] def tornBatches(spark: SparkSession, root: String,
       batchId: Long): Seq[Long] = {
     val fs = Store.hfs(spark, root)
-    (Store.batchIdsUnder(fs, root, "docs", batchId).toSet --
-      Store.batchIdsUnder(fs, root, "hist", batchId)).toSeq.sorted
+    tornBatches(fs, root, batchId, Store.batchIdsUnder(fs, root, "hist", batchId))
   }
+
+  /** [[tornBatches]] against `hist`, the caller's `hist/` listing. */
+  private def tornBatches(fs: FileSystem, root: String, batchId: Long,
+      hist: Seq[Long]): Seq[Long] =
+    (Store.batchIdsUnder(fs, root, "docs", batchId).toSet -- hist).toSeq.sorted
 
   /** The CLEAN POOL of a bootstrap/firing batch b: the fired batches
     * ≤ b (ascending) and the stored docs of every batch ≤ b that
@@ -167,10 +171,12 @@ object DriftGate {
       batchId: Long, thresholdPpm: Long): (Seq[Long], DataFrame) = {
     // every histogram batch ≤ b through the dec/ read-through: the hist
     // store's directories cover non-contiguous ids, and a replay with
-    // later batches present stops at b
-    val fired = Store.batchIdsUnder(Store.hfs(spark, root), root, "hist",
-      batchId).filter(ownDecision(spark, root, _, thresholdPpm))
-    val excluded = (fired ++ tornBatches(spark, root, batchId)).distinct.sorted
+    // later batches present stops at b; the same listing finds the
+    // torn batches
+    val fs = Store.hfs(spark, root)
+    val hist = Store.batchIdsUnder(fs, root, "hist", batchId)
+    val fired = hist.filter(ownDecision(spark, root, _, thresholdPpm))
+    val excluded = (fired ++ tornBatches(fs, root, batchId, hist)).distinct.sorted
     val docs = spark.read.parquet(s"$root/docs")
       .filter(col("batch").cast("long") <= batchId &&
         (if (excluded.isEmpty) lit(true)

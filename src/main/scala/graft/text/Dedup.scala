@@ -153,17 +153,6 @@ object Dedup {
 
   // -------------------------------------------------------------- minhash
 
-  /** MinHash signature: k independent hash views, each the lexicographic
-    * min of md5("<seed>|<shingle>") over the shingle set. Single-row
-    * expression form (used for small/row-local cases; the distributed
-    * pipeline uses [[minhashSignatures]]). */
-  def minhashSignature(text: Column, k: Int = 12, n: Int = 3): Column = {
-    val sh = shingleArray(text, n)
-    transform(sequence(lit(0), lit(k - 1)),
-      s => array_min(transform(sh,
-        x => md5(concat(s.cast("string"), lit("|"), x)))))
-  }
-
   /** Distributed signature table (id, sig array<string>): shingles are
     * exploded once and the k minima run as ONE codegen'd hash
     * aggregation (k `min` aggregates over the shingle rows) — no

@@ -14,7 +14,7 @@ class BucketedJoinSpec extends SparkSpec {
   import spark.implicits._
 
   test("join of two bucketed tables plans with no shuffle exchange") {
-    val root = java.nio.file.Files.createTempDirectory("graft-bucketed")
+    val root = tmp("bucketed")
     val events = graft.sources.Tables.events(spark, SfDir)
       .select($"event_id", $"user_id", $"value")
     val users = events.groupBy($"user_id")

@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -8,9 +8,6 @@ import graft.sinks.KeyedUpsert
 
 class KeyedUpsertSpec extends SparkSpec {
   import spark.implicits._
-
-  private def tmp(): String =
-    Files.createTempDirectory("graft-upsert").toString + "/t"
 
   /** Distinct commit dirs the live snapshot spans. */
   private def commitDirs(dir: String): Int =
@@ -28,7 +25,7 @@ class KeyedUpsertSpec extends SparkSpec {
       .map { case (k, t, v) => k -> ((t, v)) }.toMap
 
   test("insert then update then insert-new merges by key") {
-    val dir = tmp()
+    val dir = tmp("upsert")
     KeyedUpsert.upsert(spark, dir,
       Seq(("a", 1), ("b", 2)).toDF("k", "v"), Seq("k"), numBuckets = 4)
     KeyedUpsert.upsert(spark, dir,
@@ -38,7 +35,7 @@ class KeyedUpsertSpec extends SparkSpec {
   }
 
   test("diff reports added/updated/removed; identical rewrites are silent") {
-    val dir = tmp()
+    val dir = tmp("upsert")
     KeyedUpsert.upsert(spark, dir,
       Seq(("a", 1), ("b", 2), ("c", 3)).toDF("k", "v"), Seq("k"),
       numBuckets = 4)
@@ -58,7 +55,7 @@ class KeyedUpsertSpec extends SparkSpec {
   }
 
   test("replaying the same batch is idempotent") {
-    val dir = tmp()
+    val dir = tmp("upsert")
     val batch = Seq(("a", 1), ("b", 2)).toDF("k", "v")
     KeyedUpsert.upsert(spark, dir, batch, Seq("k"), numBuckets = 4)
     KeyedUpsert.upsert(spark, dir, batch, Seq("k"), numBuckets = 4)
@@ -66,7 +63,7 @@ class KeyedUpsertSpec extends SparkSpec {
   }
 
   test("within-batch duplicates collapse; tieBreak picks the max") {
-    val dir = tmp()
+    val dir = tmp("upsert")
     KeyedUpsert.upsert(spark, dir,
       Seq(("a", 1), ("a", 9), ("a", 5)).toDF("k", "v"), Seq("k"),
       numBuckets = 4, tieBreak = Some("v"))
@@ -75,7 +72,7 @@ class KeyedUpsertSpec extends SparkSpec {
   }
 
   test("keepMaxOnMerge: an out-of-order older batch cannot regress a key") {
-    val dir = tmp()
+    val dir = tmp("upsert")
     KeyedUpsert.upsert(spark, dir,
       Seq(("a", 10, "new")).toDF("k", "ts", "v"), Seq("k"),
       numBuckets = 4, tieBreak = Some("ts"), keepMaxOnMerge = true)
@@ -91,7 +88,7 @@ class KeyedUpsertSpec extends SparkSpec {
   }
 
   test("untouched buckets are not rewritten (scale property)") {
-    val dir = tmp()
+    val dir = tmp("upsert")
     val many = spark.range(0, 400)
       .select(concat(lit("k"), col("id")).as("k"), col("id").as("v"))
     KeyedUpsert.upsert(spark, dir, many, Seq("k"), numBuckets = 16)
@@ -108,7 +105,7 @@ class KeyedUpsertSpec extends SparkSpec {
   }
 
   test("a crashed commit (data written, manifest never published) is invisible") {
-    val dir = tmp()
+    val dir = tmp("upsert")
     KeyedUpsert.upsert(spark, dir,
       Seq(("a", 1), ("b", 2)).toDF("k", "v"), Seq("k"), numBuckets = 4)
     // simulate a writer that died after writing its commit dir but
@@ -130,7 +127,7 @@ class KeyedUpsertSpec extends SparkSpec {
   }
 
   test("time travel: version pinning and bucket-granular changesSince") {
-    val dir = tmp()
+    val dir = tmp("upsert")
     KeyedUpsert.upsert(spark, dir,
       Seq(("a", 1), ("b", 2)).toDF("k", "v"), Seq("k"), numBuckets = 4)
     KeyedUpsert.upsert(spark, dir,
@@ -154,7 +151,7 @@ class KeyedUpsertSpec extends SparkSpec {
   }
 
   test("history records operation, commit time and touched buckets") {
-    val dir = tmp()
+    val dir = tmp("upsert")
     KeyedUpsert.upsert(spark, dir,
       Seq(("a", 1), ("b", 2), ("c", 3)).toDF("k", "v"), Seq("k"),
       numBuckets = 4)
@@ -176,31 +173,72 @@ class KeyedUpsertSpec extends SparkSpec {
       Map("a" -> 1, "c" -> 3)
   }
 
-  test("history reports files written; a manifest without the count reads -1") {
-    val dir = tmp()
+  test("history reports files written; a manifest missing a header line fails by name") {
+    val dir = tmp("upsert")
     KeyedUpsert.upsert(spark, dir,
       (0 until 40).map(k => (k, k)).toDF("k", "v"), Seq("k"), numBuckets = 4)
     KeyedUpsert.restore(spark, dir, 1L)
     KeyedUpsert.history(spark, dir).map(c => (c.touchedBuckets, c.filesWritten)) shouldBe
       Seq((4L, 4L), (0L, 0L))
-    val v1 = KeyedUpsert.read(spark, dir, Some(1L))
-    val (schema, rows) = (v1.schema, v1.as[(Int, Int)].collect().toSet)
-    // a manifest committed before the header lines existed: the count
-    // reads -1 and the snapshot is read by schema inference
-    val m = java.nio.file.Paths.get(s"$dir/_manifests/v00000001.txt")
-    val lines = java.nio.file.Files.readAllLines(m)
-    lines.removeIf(l => l.startsWith("#filesWritten=") || l.startsWith("#schema="))
-    java.nio.file.Files.write(m, lines)
-    java.nio.file.Files.deleteIfExists(m.resolveSibling(".v00000001.txt.crc"))
-    KeyedUpsert.history(spark, dir).head.filesWritten shouldBe -1L
-    val inferred = KeyedUpsert.read(spark, dir, Some(1L))
-    inferred.schema shouldBe schema
-    inferred.as[(Int, Int)].collect().toSet shouldBe rows
+    val rows = KeyedUpsert.read(spark, dir, Some(1L)).as[(Int, Int)].collect().toSet
     rows.size shouldBe 40
+    // the latest manifest loses one header line at a time: every call
+    // that loads it fails naming the file and the line, nothing
+    // commits, and version 1 is untouched
+    val Seq(v1, v2) = Seq(1, 2).map(v => Paths.get(f"$dir/_manifests/v$v%08d.txt"))
+    val (bytes1, bytes2) = (Files.readAllBytes(v1), Files.readAllBytes(v2))
+    Files.deleteIfExists(v2.resolveSibling(s".${v2.getFileName}.crc"))
+    for (key <- Seq("operation", "commitMs", "touchedBuckets", "filesWritten",
+        "keys", "numBuckets", "schema")) withClue(s"#$key=: ") {
+      val lines = Files.readAllLines(v2)
+      lines.removeIf(_.startsWith(s"#$key=")) shouldBe true
+      Files.write(v2, lines)
+      val calls = Seq[(String, () => Any)](
+        "read" -> (() => KeyedUpsert.read(spark, dir)),
+        "history" -> (() => KeyedUpsert.history(spark, dir)),
+        "upsert" -> (() => KeyedUpsert.upsert(spark, dir,
+          Seq((0, 9)).toDF("k", "v"), Seq("k"), numBuckets = 4)))
+      for ((name, call) <- calls) withClue(s"$name: ") {
+        intercept[IllegalStateException](call()).getMessage shouldBe
+          s"manifest $v2 has no #$key= line"
+      }
+      KeyedUpsert.versions(spark, dir) shouldBe Seq(1L, 2L)
+      Files.readAllBytes(v1) shouldBe bytes1
+      KeyedUpsert.read(spark, dir, Some(1L)).as[(Int, Int)].collect().toSet shouldBe rows
+      Files.write(v2, bytes2)
+    }
+    KeyedUpsert.read(spark, dir).as[(Int, Int)].collect().toSet shouldBe rows
+  }
+
+  test("read, restore, changesSince and diff each list _manifests/ once") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.countfs.impl", classOf[CountingFs].getName)
+    val local = tmp("upsert")
+    KeyedUpsert.upsert(spark, local,
+      Seq(("a", 1), ("b", 2)).toDF("k", "v"), Seq("k"), numBuckets = 4)
+    KeyedUpsert.upsert(spark, local,
+      Seq(("b", 20), ("c", 3)).toDF("k", "v"), Seq("k"), numBuckets = 4)
+    val dir = "countfs://" + local
+    val calls = Seq[(String, () => Any)](
+      "read" -> (() => KeyedUpsert.read(spark, dir).collect()),
+      "changesSince" -> (() => KeyedUpsert.changesSince(spark, dir, 1L).collect()),
+      "diff" -> (() => KeyedUpsert.diff(spark, dir, 1L, Seq("k")).collect()),
+      "restore" -> (() => KeyedUpsert.restore(spark, dir, 1L)))
+    for ((name, call) <- calls) withClue(s"$name: ") {
+      CountingFs.reset()
+      call()
+      CountingFs.manifestListings.get shouldBe 1
+    }
+    // a read is one listing, one manifest read, one listing per live dir
+    val live = KeyedUpsert.snapshot(spark, local).size
+    CountingFs.reset()
+    KeyedUpsert.read(spark, dir).count() shouldBe 2L
+    (CountingFs.manifestListings.get, CountingFs.manifestReads.get,
+      CountingFs.bucketListings.get) shouldBe ((1, 1, live))
   }
 
   test("restore re-publishes an old snapshot as a new pinnable commit") {
-    val dir = tmp()
+    val dir = tmp("upsert")
     KeyedUpsert.upsert(spark, dir,
       Seq(("a", 1), ("b", 2)).toDF("k", "v"), Seq("k"), numBuckets = 4)
     KeyedUpsert.upsert(spark, dir,
@@ -222,7 +260,7 @@ class KeyedUpsertSpec extends SparkSpec {
   }
 
   test("delete removes matched keys, drops emptied buckets, keeps history") {
-    val dir = tmp()
+    val dir = tmp("upsert")
     KeyedUpsert.upsert(spark, dir,
       Seq(("a", 1), ("b", 2), ("c", 3), ("d", 4)).toDF("k", "v"),
       Seq("k"), numBuckets = 4)
@@ -242,7 +280,7 @@ class KeyedUpsertSpec extends SparkSpec {
   }
 
   test("an empty snapshot whose non-empty versions were vacuumed reads as zero rows") {
-    val dir = tmp()
+    val dir = tmp("upsert")
     KeyedUpsert.upsert(spark, dir, Seq(("solo", 1)).toDF("k", "v"),
       Seq("k"), numBuckets = 4)
     KeyedUpsert.delete(spark, dir, Seq("solo").toDF("k"), Seq("k"),
@@ -255,7 +293,7 @@ class KeyedUpsertSpec extends SparkSpec {
   }
 
   test("delete that empties a bucket removes it from the manifest") {
-    val dir = tmp()
+    val dir = tmp("upsert")
     KeyedUpsert.upsert(spark, dir, Seq(("solo", 1)).toDF("k", "v"),
       Seq("k"), numBuckets = 4)
     KeyedUpsert.snapshot(spark, dir).size shouldBe 1
@@ -266,7 +304,7 @@ class KeyedUpsertSpec extends SparkSpec {
   }
 
   test("compact rewrites the snapshot to one file per bucket, data intact") {
-    val dir = tmp()
+    val dir = tmp("upsert")
     for (i <- 1 to 4)
       KeyedUpsert.upsert(spark, dir,
         (i * 100 until i * 100 + 50).map(j => (s"k$j", j)).toDF("k", "v"),
@@ -286,7 +324,7 @@ class KeyedUpsertSpec extends SparkSpec {
   }
 
   test("bucket files are written sorted by key (row-group skip layout)") {
-    val dir = tmp()
+    val dir = tmp("upsert")
     val rows = (1 to 2000).map(i => (f"k$i%05d", i))
     KeyedUpsert.upsert(spark, dir, rows.toDF("k", "v"), Seq("k"),
       numBuckets = 4)
@@ -302,7 +340,7 @@ class KeyedUpsertSpec extends SparkSpec {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
     import scala.concurrent.ExecutionContext.Implicits.global
-    val dir = tmp()
+    val dir = tmp("upsert")
     KeyedUpsert.upsert(spark, dir, Seq(("seed", 0)).toDF("k", "v"),
       Seq("k"), numBuckets = 4)
     // two writers race from the same observed version; the manifest
@@ -334,7 +372,7 @@ class KeyedUpsertSpec extends SparkSpec {
   }
 
   test("upsert refuses to initialize over an unmanaged legacy layout") {
-    val dir = tmp()
+    val dir = tmp("upsert") + "/t"
     // a pre-manifest table: data present, no _manifests/ chain
     Seq(("a", 1)).toDF("k", "v").withColumn("__bucket", lit(0L))
       .write.partitionBy("__bucket").parquet(dir)
@@ -348,7 +386,7 @@ class KeyedUpsertSpec extends SparkSpec {
   }
 
   test("reading a vacuumed version fails with a named earliest version") {
-    val dir = tmp()
+    val dir = tmp("upsert")
     for (i <- 1 to 5)
       KeyedUpsert.upsert(spark, dir,
         Seq((s"k$i", i)).toDF("k", "v"), Seq("k"), numBuckets = 4,
@@ -364,7 +402,7 @@ class KeyedUpsertSpec extends SparkSpec {
   }
 
   test("vacuum keeps the newest retainVersions and reclaims the rest") {
-    val dir = tmp()
+    val dir = tmp("upsert")
     for (i <- 1 to 5)
       KeyedUpsert.upsert(spark, dir,
         Seq((s"k$i", i)).toDF("k", "v"), Seq("k"), numBuckets = 4,
@@ -376,7 +414,7 @@ class KeyedUpsertSpec extends SparkSpec {
   }
 
   test("every commit writes one file per touched bucket, however spread the batch") {
-    val dir = tmp()
+    val dir = tmp("upsert")
     def batch(lo: Int, hi: Int, ts: Int) =
       (lo until hi).map(k => (k, ts, s"v$k")).toDF("k", "ts", "v").repartition(8)
     KeyedUpsert.upsert(spark, dir, batch(0, 400, 1), Seq("k"), numBuckets = 8)
@@ -405,7 +443,7 @@ class KeyedUpsertSpec extends SparkSpec {
 
   test("merge matches a Map fold over seeded random batches, replay idempotent") {
     for (keepMax <- Seq(false, true)) {
-      val dir = tmp()
+      val dir = tmp("upsert")
       val rng = new scala.util.Random(42)
       var model = Map.empty[Int, (Int, String)]
       val batches = (1 to 6).map { b =>
@@ -435,7 +473,7 @@ class KeyedUpsertSpec extends SparkSpec {
   }
 
   test("keepMaxOnMerge: an incoming row with an equal tieBreak wins") {
-    val dir = tmp()
+    val dir = tmp("upsert")
     KeyedUpsert.upsert(spark, dir, Seq((1, 5, "old")).toDF("k", "ts", "v"),
       Seq("k"), numBuckets = 4, tieBreak = Some("ts"), keepMaxOnMerge = true)
     KeyedUpsert.upsert(spark, dir, Seq((1, 5, "new")).toDF("k", "ts", "v"),
@@ -450,7 +488,7 @@ class KeyedUpsertSpec extends SparkSpec {
     import org.apache.spark.sql.execution.command.DataWritingCommandExec
     import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
     import org.apache.spark.sql.util.QueryExecutionListener
-    val dir = tmp()
+    val dir = tmp("upsert")
     KeyedUpsert.upsert(spark, dir,
       (0 until 100).map(k => (k, 1)).toDF("k", "v"), Seq("k"), numBuckets = 4)
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
@@ -523,7 +561,7 @@ class KeyedUpsertSpec extends SparkSpec {
           Map(s"a$gen" -> i.toLong),
           Row(i * 0.5, if (i % 2 == 0) null else s"l$i"))
       }, 2), schema)
-    val dir = tmp()
+    val dir = tmp("upsert")
     KeyedUpsert.upsert(spark, dir, rows(0 until 40, 1), Seq("id"), numBuckets = 4)
     check(dir, 1L)
     KeyedUpsert.upsert(spark, dir, rows(30 until 50, 2), Seq("id"), numBuckets = 4)
@@ -565,7 +603,7 @@ class KeyedUpsertSpec extends SparkSpec {
   }
 
   test("an upsert or delete with other keys or bucket count fails, table unchanged") {
-    val dir = tmp()
+    val dir = tmp("upsert")
     KeyedUpsert.upsert(spark, dir,
       Seq(("a", 1, 1), ("b", 2, 2)).toDF("k", "j", "v"), Seq("k"), numBuckets = 8)
     def state() = (KeyedUpsert.versions(spark, dir),
@@ -600,7 +638,7 @@ class KeyedUpsertSpec extends SparkSpec {
   }
 
   test("a full-key lookup reads one bucket; any other filter reads every live file") {
-    val dir = tmp()
+    val dir = tmp("upsert")
     val rng = new scala.util.Random(7)
     // 5 x 6 (s, n) keys over 4 buckets: every bucket holds several keys
     def batch(b: Int) = (1 to 24).map(_ =>
@@ -647,19 +685,10 @@ class KeyedUpsertSpec extends SparkSpec {
     KeyedUpsert.restore(spark, dir, 1L)
     val v1 = batches.head.map(r => (r._1, r._2) -> r._3).toMap
     check(v1.keys.toSeq.map { case (s, n) => (s"after restore ($s, $n)", lookup(s, n), 1L) })
-    // a manifest without #keys=/#numBuckets= reads every live file
-    val latest = KeyedUpsert.versions(spark, dir).last
-    val m = java.nio.file.Paths.get(f"$dir/_manifests/v$latest%08d.txt")
-    val lines = java.nio.file.Files.readAllLines(m)
-    lines.removeIf(l => l.startsWith("#keys=") || l.startsWith("#numBuckets="))
-    java.nio.file.Files.write(m, lines)
-    java.nio.file.Files.deleteIfExists(m.resolveSibling(s".${m.getFileName}.crc"))
-    check(v1.keys.toSeq.map { case (s, n) =>
-      (s"stripped ($s, $n)", lookup(s, n), live().size.toLong) })
   }
 
   test("a double key column never prunes") {
-    val dir = tmp()
+    val dir = tmp("upsert")
     KeyedUpsert.upsert(spark, dir,
       Seq((0.0, 1), (-0.0, 2), (1.5, 3), (Double.NaN, 4), (2.5, 5)).toDF("d", "v"),
       Seq("d"), numBuckets = 4)

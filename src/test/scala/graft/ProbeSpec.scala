@@ -20,7 +20,7 @@ class ProbeSpec extends SparkSpec {
     val before = read(probes)
     val committed = before.split("\n")
       .find(l => ProbeLog.metricOf(l).contains("cc_chain_probe")).get
-    val scratch = Files.createTempDirectory("probespec").resolve("PROBES.json")
+    val scratch = Paths.get(tmp("probespec"), "PROBES.json")
     Files.write(scratch, (committed + "\n").getBytes(StandardCharsets.UTF_8))
     System.setProperty("graft.probes.file", scratch.toString)
     val row = try {

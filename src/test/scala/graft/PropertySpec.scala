@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import graft.sinks.KeyedUpsert
@@ -25,7 +24,7 @@ class PropertySpec extends SparkSpec {
       Gen.choose(0, 9).map(k => s"k$k"), Gen.choose(0, 1000)))
     val seqGen = Gen.listOfN(3, batchGen)
     val prop = Prop.forAll(seqGen) { batches =>
-      val dir = Files.createTempDirectory("graft-prop").toString + "/t"
+      val dir = tmp("prop")
       val model = scala.collection.mutable.Map[String, Int]()
       batches.foreach { batch =>
         // model: within a batch the max value per key wins (tieBreak)

@@ -17,7 +17,9 @@ import org.scalatest.matchers.should.Matchers
   *    it and Bench (whose literals SessionsSpec pins it to) calls
   *    `SparkSession.builder`;
   *  - the drift gate's firing rule, `drift_num · 10^6 > ppm · n · prev_n`,
-  *    is stated once, in `DriftGate.fires`. */
+  *    is stated once, in `DriftGate.fires`;
+  *  - KeyedUpsert reads its tables only through the manifest, so
+  *    `spark.read` (a `DataSource` resolution) never occurs in it. */
 class SourceGuardSpec extends AnyFunSuite with Matchers {
 
   private val Tokens = Seq("Trigger.AvailableNow", "\"checkpointLocation\"")
@@ -98,5 +100,15 @@ class SourceGuardSpec extends AnyFunSuite with Matchers {
     firing.findAllIn(codeOf(read(gate.head))).size shouldBe 1
     others.filter(f => firing.findFirstIn(codeOf(read(f))).isDefined)
       .map(_.toString) shouldBe empty
+  }
+
+  test("KeyedUpsert never calls spark.read in main-source code") {
+    val (sink, others) =
+      mainSources.partition(_.getFileName.toString == "KeyedUpsert.scala")
+    sink.size shouldBe 1
+    codeOf(read(sink.head)) should not include "spark.read"
+    // positive control: the scanner finds the call where it is code
+    others.filter(f => codeOf(read(f)).contains("spark.read.parquet"))
+      .map(_.getFileName.toString) should contain("DriftGate.scala")
   }
 }

@@ -3,9 +3,7 @@ package graft
 import java.io.IOException
 import java.nio.file.{Files, Paths}
 
-import org.apache.hadoop.fs.{FSDataOutputStream, Path => HPath, RawLocalFileSystem}
-import org.apache.hadoop.fs.permission.FsPermission
-import org.apache.hadoop.util.Progressable
+import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryException
@@ -22,9 +20,6 @@ import graft.streaming._
   * crash inside a single store write. */
 class StreamReplaySpec extends SparkSpec {
   import spark.implicits._
-
-  private def tmp(name: String): String =
-    Files.createTempDirectory(s"graft-replay-$name").toString
 
   private def rows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).toSeq.sorted
@@ -235,42 +230,5 @@ class StreamReplaySpec extends SparkSpec {
       both(StreamingCorpusBuild.processBatch(batch0, 0L, _))
     rows(StreamingCorpusBuild.publish(spark, buildCrashed)) shouldBe
       rows(StreamingCorpusBuild.publish(spark, build))
-  }
-}
-
-/** The local file system under the `crashfs:` scheme. The first `create`
-  * of a path that [[CrashingFs.armed]] accepts crashes inside the write:
-  * the file is created empty, then the call throws. */
-class CrashingFs extends RawLocalFileSystem {
-  override def getUri: java.net.URI = java.net.URI.create("crashfs:///")
-
-  override def create(f: HPath, overwrite: Boolean, bufferSize: Int,
-      replication: Short, blockSize: Long,
-      progress: Progressable): FSDataOutputStream =
-    crashAt(f, super.create(f, overwrite, bufferSize, replication,
-      blockSize, progress))
-
-  override def create(f: HPath, permission: FsPermission,
-      overwrite: Boolean, bufferSize: Int, replication: Short,
-      blockSize: Long, progress: Progressable): FSDataOutputStream =
-    crashAt(f, super.create(f, permission, overwrite, bufferSize,
-      replication, blockSize, progress))
-
-  private def crashAt(f: HPath, out: FSDataOutputStream): FSDataOutputStream =
-    if (!CrashingFs.fire(f)) out
-    else {
-      out.close()
-      throw new IOException(s"injected crash inside the write of $f")
-    }
-}
-
-object CrashingFs {
-  @volatile var armed: Option[HPath => Boolean] = None
-
-  /** Whether `f` is the armed write; disarms when it is. */
-  def fire(f: HPath): Boolean = synchronized {
-    val hit = armed.exists(_(f))
-    if (hit) armed = None
-    hit
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.pipeline.{Dims, Medallion}
@@ -11,8 +10,24 @@ import graft.streaming.{StreamOps, StreamingMedallion}
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmp(name: String): String =
-    Files.createTempDirectory(s"graft-$name").toString
+  /** The controlled-drift corpus of the st20-st24 actor tests, sliced
+    * doc_id mod 3: slices 0 and 1 share one token-length log-bucket (no
+    * firing at batch 1, but slice 1 brings NEW vocabulary into the
+    * clean pool), slice 2 is long documents whose bucket jump (drift
+    * ratio 2.0 >> 0.15) fires the gate at batch 2. */
+  private lazy val driftDocs = {
+    val long = ("stream " * 40).trim
+    (0 until 30).map { i =>
+      (i % 3, i % 2) match {
+        case (0, 0) => (i.toLong, "the cat sat on mat", "en")
+        case (0, _) => (i.toLong, "der hund lief im wald", "de")
+        case (1, 0) => (i.toLong, "a dog ran fast today", "en")
+        case (1, _) => (i.toLong, "am berg steht ein baum", "de")
+        case (_, 0) => (i.toLong, long, "en")
+        case _      => (i.toLong, long + " nacht", "de")
+      }
+    }.toDF("doc_id", "text", "lang")
+  }
 
   test("topic publish/decode round-trips the events table exactly") {
     val dir = tmp("topic")
@@ -280,7 +295,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming SCD2 fold is idempotent under batch replay") {
     import graft.streaming.StreamingScd2
-    val dir = Files.createTempDirectory("scd2fold").toString
+    val dir = tmp("scd2fold")
     val keys = Seq("user_id"); val attrs = Seq("event_type")
     def fold(rows: Seq[(Long, String, Long, Long)]): Unit =
       StreamingScd2.foldBatch(
@@ -349,7 +364,7 @@ class StreamingSpec extends SparkSpec {
     // on restart the source re-delivers it and the fold must converge
     // to the byte-identical dimension instead of corrupting history
     import graft.streaming.StreamingScd2
-    val root = Files.createTempDirectory("scd2crash").toString
+    val root = tmp("scd2crash")
     def publishSlice(rows: Seq[(Long, Long, String, Long)],
         append: Boolean, mtime: Long): Unit = {
       val ev = rows.toDF("event_id", "user_id", "event_type", "t")
@@ -399,8 +414,7 @@ class StreamingSpec extends SparkSpec {
       "reference; per-batch store replay is idempotent") {
     import graft.streaming.StreamDrift
     val docs = graft.sources.Tables.documents(spark, SfDir)
-    val root = java.nio.file.Files
-      .createTempDirectory("st17spec").toString
+    val root = tmp("st17spec")
     val streamed = StreamDrift.run(spark, docs, root, nSlices = 4)
       .collect().toSeq
     val ref = StreamDrift.batchReference(docs, nSlices = 4)
@@ -424,8 +438,7 @@ class StreamingSpec extends SparkSpec {
       .collect().map(_.getLong(0)).toSeq shouldBe
       Seq(0L, 1L, 1L, 2L, 2L, 3L, 9L, 10L)
     val docs = graft.sources.Tables.documents(spark, SfDir)
-    val root = java.nio.file.Files
-      .createTempDirectory("st18spec").toString
+    val root = tmp("st18spec")
     val axis = StreamDrift.tokenLogBucket
     val streamed = StreamDrift.run(spark, docs, root, nSlices = 4,
       bucket = axis).collect().toSeq
@@ -466,8 +479,7 @@ class StreamingSpec extends SparkSpec {
       Option(r.get(0)).map(_.asInstanceOf[Long])).toSeq shouldBe
       Seq(Some(0L), Some(1L), Some(2L), Some(0L), None)
     val docs = graft.sources.Tables.documents(spark, SfDir)
-    val root = java.nio.file.Files
-      .createTempDirectory("st19spec").toString
+    val root = tmp("st19spec")
     val streamed = StreamDrift.run(spark, docs, root, nSlices = 4,
       bucket = axis).collect().toSeq
     val ref = StreamDrift.batchReference(docs, nSlices = 4,
@@ -481,23 +493,8 @@ class StreamingSpec extends SparkSpec {
   test("st20 drift->refit: stream == batch reference, the firing batch " +
       "refits on the accumulated clean pool, replay is idempotent") {
     import graft.streaming.StreamRefit
-    // controlled drift, nSlices = 3: slices 0 and 1 share the same
-    // token-length log-bucket (no firing at batch 1 — but slice 1
-    // brings NEW vocabulary into the clean pool), slice 2 is long
-    // documents (bucket jump -> drift ratio 2.0 >> 0.15, fires)
-    val long = ("stream " * 40).trim
-    val docs = (0 until 30).map { i =>
-      (i % 3, i % 2) match {
-        case (0, 0) => (i.toLong, "the cat sat on mat", "en")
-        case (0, _) => (i.toLong, "der hund lief im wald", "de")
-        case (1, 0) => (i.toLong, "a dog ran fast today", "en")
-        case (1, _) => (i.toLong, "am berg steht ein baum", "de")
-        case (_, 0) => (i.toLong, long, "en")
-        case _      => (i.toLong, long + " nacht", "de")
-      }
-    }.toDF("doc_id", "text", "lang")
-    val root = java.nio.file.Files
-      .createTempDirectory("st20spec").toString
+    val docs = driftDocs // nSlices = 3: fires at batch 2 alone
+    val root = tmp("st20spec")
     val streamed = StreamRefit.run(spark, docs, root, nSlices = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3))).toSeq
@@ -533,19 +530,8 @@ class StreamingSpec extends SparkSpec {
     import graft.streaming.{DriftGate, StreamQuarantine}
     // st20's controlled-drift corpus: slice 2's long documents jump
     // the token-length log-bucket -> drift fires exactly at batch 2
-    val long = ("stream " * 40).trim
-    val docs = (0 until 30).map { i =>
-      (i % 3, i % 2) match {
-        case (0, 0) => (i.toLong, "the cat sat on mat", "en")
-        case (0, _) => (i.toLong, "der hund lief im wald", "de")
-        case (1, 0) => (i.toLong, "a dog ran fast today", "en")
-        case (1, _) => (i.toLong, "am berg steht ein baum", "de")
-        case (_, 0) => (i.toLong, long, "en")
-        case _      => (i.toLong, long + " nacht", "de")
-      }
-    }.toDF("doc_id", "text", "lang")
-    val root = java.nio.file.Files
-      .createTempDirectory("st21spec").toString
+    val docs = driftDocs
+    val root = tmp("st21spec")
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1),
         r.getString(2))).toSeq
@@ -598,19 +584,8 @@ class StreamingSpec extends SparkSpec {
     // st20's controlled-drift corpus: batch 1 brings new vocabulary
     // (clean), batch 2's long docs fire -> one bootstrap candidate +
     // one evaluated challenger
-    val long = ("stream " * 40).trim
-    val docs = (0 until 30).map { i =>
-      (i % 3, i % 2) match {
-        case (0, 0) => (i.toLong, "the cat sat on mat", "en")
-        case (0, _) => (i.toLong, "der hund lief im wald", "de")
-        case (1, 0) => (i.toLong, "a dog ran fast today", "en")
-        case (1, _) => (i.toLong, "am berg steht ein baum", "de")
-        case (_, 0) => (i.toLong, long, "en")
-        case _      => (i.toLong, long + " nacht", "de")
-      }
-    }.toDF("doc_id", "text", "lang")
-    val root = java.nio.file.Files
-      .createTempDirectory("st23spec").toString
+    val docs = driftDocs
+    val root = tmp("st23spec")
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4), r.getLong(5),
@@ -653,19 +628,8 @@ class StreamingSpec extends SparkSpec {
     import graft.streaming.StreamLineage
     // st20's controlled-drift corpus: batch 2 fires -> quarantined
     // AND evaluated; versions serve from the NEXT batch on
-    val long = ("stream " * 40).trim
-    val docs = (0 until 30).map { i =>
-      (i % 3, i % 2) match {
-        case (0, 0) => (i.toLong, "the cat sat on mat", "en")
-        case (0, _) => (i.toLong, "der hund lief im wald", "de")
-        case (1, 0) => (i.toLong, "a dog ran fast today", "en")
-        case (1, _) => (i.toLong, "am berg steht ein baum", "de")
-        case (_, 0) => (i.toLong, long, "en")
-        case _      => (i.toLong, long + " nacht", "de")
-      }
-    }.toDF("doc_id", "text", "lang")
-    val root = java.nio.file.Files
-      .createTempDirectory("st24spec").toString
+    val docs = driftDocs
+    val root = tmp("st24spec")
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2),
         r.getLong(3))).toSeq
@@ -714,8 +678,7 @@ class StreamingSpec extends SparkSpec {
       Set(2L)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().toSeq.map(_.toSeq)
-    val root = java.nio.file.Files
-      .createTempDirectory("st25spec").toString
+    val root = tmp("st25spec")
     val streamed = rows(
       StreamingCuratedCorpus.run(spark, docs, root, nSlices = 3))
     streamed should not be empty
@@ -752,8 +715,7 @@ class StreamingSpec extends SparkSpec {
     // a DIFFERENT slicing (mod 5 mixes the length profiles, so no
     // batch fires and the composition degrades to st16 + routing):
     // stream == that slicing's own non-fired reference
-    val root5 = java.nio.file.Files
-      .createTempDirectory("st25spec5").toString
+    val root5 = tmp("st25spec5")
     rows(StreamingCuratedCorpus.run(spark, docs, root5, nSlices = 5)) shouldBe
       rows(StreamingCuratedCorpus.batchReference(docs, nSlices = 5))
   }
@@ -786,17 +748,7 @@ class StreamingSpec extends SparkSpec {
       "pool — the clean-pool complement intersects the dec-known set " +
       "in BOTH the refit and the promotion gate") {
     import graft.streaming.{DriftGate, StreamPromote, StreamRefit}
-    val long = ("stream " * 40).trim
-    val docs = (0 until 30).map { i =>
-      (i % 3, i % 2) match {
-        case (0, 0) => (i.toLong, "the cat sat on mat", "en")
-        case (0, _) => (i.toLong, "der hund lief im wald", "de")
-        case (1, 0) => (i.toLong, "a dog ran fast today", "en")
-        case (1, _) => (i.toLong, "am berg steht ein baum", "de")
-        case (_, 0) => (i.toLong, long, "en")
-        case _      => (i.toLong, long + " nacht", "de")
-      }
-    }.toDF("doc_id", "text", "lang")
+    val docs = driftDocs
     def slice(k: Long) = docs.filter(pmod($"doc_id", lit(3L)) === k)
     // poison: slice-0 texts with LABELS FLIPPED — if a torn directory
     // leaked into the clean pool the perceptron gradient cancels
@@ -862,8 +814,7 @@ class StreamingSpec extends SparkSpec {
     val b2 = (900L until 906L).map(i => (i, long, "en"))
     def df(s: Seq[(Long, String, String)]) =
       s.toDF("doc_id", "text", "lang")
-    val root = java.nio.file.Files
-      .createTempDirectory("st23reject").toString
+    val root = tmp("st23reject")
     StreamPromote.processBatch(df(b0), 0L, root)
     StreamPromote.processBatch(df(b1), 1L, root)
     StreamPromote.processBatch(df(b2), 2L, root) // length jump: fires
@@ -895,17 +846,7 @@ class StreamingSpec extends SparkSpec {
     import graft.streaming.StreamPromote
     import scala.jdk.CollectionConverters._
     // the st20 controlled-drift corpus: candidates at batches 0 and 2
-    val long = ("stream " * 40).trim
-    val docs = (0 until 30).map { i =>
-      (i % 3, i % 2) match {
-        case (0, 0) => (i.toLong, "the cat sat on mat", "en")
-        case (0, _) => (i.toLong, "der hund lief im wald", "de")
-        case (1, 0) => (i.toLong, "a dog ran fast today", "en")
-        case (1, _) => (i.toLong, "am berg steht ein baum", "de")
-        case (_, 0) => (i.toLong, long, "en")
-        case _      => (i.toLong, long + " nacht", "de")
-      }
-    }.toDF("doc_id", "text", "lang")
+    val docs = driftDocs
     val root = tmp("st23pub")
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
@@ -1011,8 +952,7 @@ class StreamingSpec extends SparkSpec {
       "final merge equals the whole-corpus estimate, replay idempotent") {
     import graft.streaming.StreamSketch
     val ev = graft.sources.Tables.events(spark, SfDir)
-    val root = java.nio.file.Files
-      .createTempDirectory("st22spec").toString
+    val root = tmp("st22spec")
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2),
         r.getDouble(3))).toSeq
@@ -1049,8 +989,7 @@ class StreamingSpec extends SparkSpec {
     val ev = (0 until 40).filter(_ % 4 != 2)
       .map(i => (i.toLong, s"type${i % 3}", (i % 7).toLong))
       .toDF("event_id", "event_type", "user_id")
-    val root = java.nio.file.Files
-      .createTempDirectory("st22empty").toString
+    val root = tmp("st22empty")
     for (b <- 0L until 4L)
       StreamSketch.processBatch(
         ev.filter(pmod($"event_id", lit(4L)) === b), b, root)

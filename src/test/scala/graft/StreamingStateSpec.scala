@@ -13,9 +13,6 @@ import graft.sources.{Tables, Topic}
 class StreamingStateSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmp(name: String): String =
-    Files.createTempDirectory(s"graft-$name").toString
-
   test("watermark dedup runs on the RocksDB state store provider") {
     val dir = tmp("rocks")
     val events = Tables.events(spark, SfDir).limit(300)

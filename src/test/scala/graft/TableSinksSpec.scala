@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.sinks.TableSinks
 import graft.sources.FileSources
@@ -8,11 +7,8 @@ import graft.sources.FileSources
 class TableSinksSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmp(): String =
-    Files.createTempDirectory("graft-sinks").toString
-
   test("purge drops exactly the partitions below the cutoff") {
-    val dir = tmp() + "/t"
+    val dir = tmp("sinks") + "/t"
     val df = Seq(("2024-01-01", 1), ("2024-01-02", 2), ("2024-01-03", 3))
       .toDF("datestamp", "v")
     TableSinks.writePartitioned(df, dir, "datestamp", "overwrite")
@@ -24,7 +20,7 @@ class TableSinksSpec extends SparkSpec {
   }
 
   test("compaction rewrites many-file partitions without changing rows") {
-    val dir = tmp() + "/t"
+    val dir = tmp("sinks") + "/t"
     // 20 files in one partition (repartition before write)
     val df = spark.range(0, 1000)
       .select(lit("2024-01-01").as("datestamp"), col("id"))
@@ -56,7 +52,7 @@ class TableSinksSpec extends SparkSpec {
   }
 
   test("schema evolution: merged read null-fills, backfill rewrites only legacy partitions") {
-    val dir = tmp() + "/t"
+    val dir = tmp("sinks") + "/t"
     // v1 era: two partitions without `q`
     TableSinks.writePartitioned(
       Seq(("2024-01-01", 1L), ("2024-01-02", 2L)).toDF("datestamp", "v"),
@@ -82,7 +78,7 @@ class TableSinksSpec extends SparkSpec {
   }
 
   test("backfill over many legacy partitions runs as one batched rewrite") {
-    val dir = tmp() + "/t"
+    val dir = tmp("sinks") + "/t"
     // 30 legacy partitions without `q`, 5 modern ones with it
     val legacy = spark.range(0, 30).select(
       concat(lit("2024-01-"), format_string("%02d", $"id" + 1))
@@ -113,7 +109,7 @@ class TableSinksSpec extends SparkSpec {
   }
 
   test("backfill aborts before any swap when a partition value re-renders") {
-    val dir = tmp() + "/t"
+    val dir = tmp("sinks") + "/t"
     // zero-padded partition value: partition inference reads part=0123
     // as integer 123, so the staged dir name diverges from the live one
     TableSinks.writePartitioned(
@@ -135,7 +131,7 @@ class TableSinksSpec extends SparkSpec {
   }
 
   test("partition pruning reaches the scan on datestamp filters") {
-    val dir = tmp() + "/t"
+    val dir = tmp("sinks") + "/t"
     val df = Seq(("2024-01-01", 1), ("2024-01-02", 2)).toDF("datestamp", "v")
     TableSinks.writePartitioned(df, dir, "datestamp", "overwrite")
     val q = spark.read.parquet(dir).filter($"datestamp" === "2024-01-02")
@@ -145,7 +141,7 @@ class TableSinksSpec extends SparkSpec {
   }
 
   test("clustered write yields disjoint per-file key ranges") {
-    val dir = tmp() + "/clustered"
+    val dir = tmp("sinks") + "/clustered"
     val df = spark.range(0, 10000).select(
       (col("id") * 37 % 1000).as("k"), col("id").as("payload"))
     TableSinks.writeClustered(df, dir, "k", numFiles = 8)
@@ -164,8 +160,8 @@ class TableSinksSpec extends SparkSpec {
   }
 
   test("z-order bounds per-file ranges on BOTH cluster columns") {
-    val dir = tmp() + "/zorder"
-    val dirC = tmp() + "/zorder-contrast"
+    val dir = tmp("sinks") + "/zorder"
+    val dirC = tmp("sinks") + "/zorder-contrast"
     // modular scrambling: k2 is a scattered function of k1, so at
     // bucket granularity the two behave as independent dimensions
     val df = spark.range(0, 20000).select(
@@ -194,8 +190,8 @@ class TableSinksSpec extends SparkSpec {
 
   test("bloom index prunes files for point lookups min/max cannot help") {
     import graft.sinks.FileBloomIndex
-    val dir = tmp() + "/bloomidx"
-    val idx = tmp() + "/bloomidx-side"
+    val dir = tmp("sinks") + "/bloomidx"
+    val idx = tmp("sinks") + "/bloomidx-side"
     // ids scattered over 16 files: every file's [min, max] covers
     // every id, so footer stats would scan all 16
     spark.range(0, 40000).select(col("id"), (col("id") % 97).as("payload"))
@@ -218,7 +214,7 @@ class TableSinksSpec extends SparkSpec {
   }
 
   test("fileRangesOf names the column and file on a bad column") {
-    val dir = tmp() + "/ranges_guard"
+    val dir = tmp("sinks") + "/ranges_guard"
     val df = spark.range(0, 100).select(col("id").as("k"),
       concat(lit("s"), col("id")).as("s"))
     TableSinks.writeClustered(df, dir, "k", numFiles = 2)

@@ -19,9 +19,6 @@ import graft.streaming.StreamingMedallion
 class TriggerPathSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmp(name: String): String =
-    Files.createTempDirectory(s"graft-$name").toString
-
   /** Commands of every process the JVM starts while `body` runs. */
   private def spawnsDuring(body: => Unit): Seq[String] = {
     val rec = new Recording()
