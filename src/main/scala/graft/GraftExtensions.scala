@@ -7,9 +7,11 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.graftshim.Shim
 import graft.functions.{ByteStride, DotProduct, HeavyHittersAgg,
   NfcNormalize, RegexpExtractAllNegate, TopKAgg}
+import graft.sinks.DriverLookup
 
 /** SparkSessionExtensions entry point: makes the engine's native
-  * expressions SQL-callable. Activate at session build with
+  * expressions SQL-callable and plans KeyedUpsert full-key lookups on
+  * the driver ([[graft.sinks.DriverLookup]]). Activate at session build with
   * `.config("spark.sql.extensions", "graft.GraftExtensions")`, or call
   * [[GraftExtensions.register]] on an already-built session.
   */
@@ -20,6 +22,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         new ExpressionInfo("graft.functions", name), builder))
     }
     ext.injectOptimizerRule(_ => graft.plans.TopOnePerKeyToArgmax)
+    ext.injectPlannerStrategy(_ => DriverLookup)
   }
 }
 
@@ -60,7 +63,9 @@ object GraftExtensions {
   val FileSystemCheckpointManager = "org.apache.spark.sql.execution" +
     ".streaming.checkpointing.FileSystemBasedCheckpointFileManager"
 
-  /** Register on an existing session (extensions only run at build).
+  /** Register on an existing session (extensions only run at build):
+    * the functions, the argmax rule and the [[DriverLookup]] strategy,
+    * the rule and the strategy once however often this is called.
     *
     * Also sets one session default: [[CheckpointManagerConf]] becomes
     * [[FileSystemCheckpointManager]] unless the session already has a
@@ -88,5 +93,8 @@ object GraftExtensions {
         spark.experimental.extraOptimizations :+
           graft.plans.TopOnePerKeyToArgmax
     }
+    if (!spark.experimental.extraStrategies.contains(DriverLookup))
+      spark.experimental.extraStrategies =
+        DriverLookup +: spark.experimental.extraStrategies
   }
 }

@@ -3,13 +3,9 @@ package graft.sinks
 import java.io.FileNotFoundException
 import java.nio.charset.StandardCharsets
 
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{And, Attribute, EqualTo,
-  Expression, Literal, Pmod, XxHash64}
-import org.apache.spark.sql.execution.datasources.{FileIndex,
-  HadoopFsRelation, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.HadoopFsRelation
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -42,7 +38,11 @@ import org.apache.spark.sql.types._
   *    manifest, not a `DataSource` resolution, names the files a query
   *    reads ([[SnapshotIndex]]), and no Spark job runs. A filter that
   *    fixes every key column to a literal reads the one bucket those
-  *    literals hash into.
+  *    literals hash into. On a session with [[graft.GraftExtensions]]
+  *    registered, such a lookup also runs no job when collected: if the
+  *    bucket's files add up to at most `spark.sql.files.maxPartitionBytes`
+  *    it is read on the driver ([[DriverLookupExec]]); a larger bucket,
+  *    and every other query, runs Spark's file scan.
   *
   * The manifest chain doubles as a version log (the reference's
   * `DESCRIBE HISTORY` / `startingVersion` replay, `Query the Metric
@@ -241,16 +241,20 @@ object KeyedUpsert {
         retain)
     }
 
-    /** Drop manifests older than the newest `retain` and any commit dir
-      * no retained manifest references. The chain is this handle's
-      * listing plus the just-committed `latest` (a racing commit in
-      * between would have taken `latest` first). Only dirs whose version
-      * is <= `latest` are candidates, so an in-flight writer's
-      * not-yet-committed directory is never reclaimed from under it. */
+    /** Drop manifests older than the newest `retain`, then any commit
+      * dir no retained manifest references: in this order, a crash in
+      * between leaves only orphan dirs (reclaimed by the next vacuum),
+      * never a listed version whose data is gone. The chain is this
+      * handle's listing plus the just-committed `latest` (a racing
+      * commit in between would have taken `latest` first). Only dirs
+      * whose version is <= `latest` are candidates, so an in-flight
+      * writer's not-yet-committed directory is never reclaimed from
+      * under it. */
     private def vacuum(latest: Long, retain: Int): Unit = {
       val (expired, kept) = (versions :+ latest).partition(_ <= latest - retain)
       val referenced = kept.flatMap(v => load(v).buckets.values)
         .map(_.split('/')(1)).toSet // data/<commit>/__bucket=K -> <commit>
+      expired.foreach(v => fs.delete(file(v), false))
       val dataDir = new Path(target, DataDir)
       if (fs.exists(dataDir)) fs.listStatus(dataDir).toSeq
         .map(_.getPath)
@@ -261,7 +265,6 @@ object KeyedUpsert {
               .exists(_ <= latest)
         }
         .foreach(fs.delete(_, true))
-      expired.foreach(v => fs.delete(file(v), false))
     }
   }
 
@@ -432,9 +435,12 @@ object KeyedUpsert {
     * with the schema its manifest records: one manifest listing, one
     * manifest read and, when the query is planned, one listing per live
     * dir; no `DataSource` resolution and no Spark job. A filter that
-    * fixes every key column to a literal scans one bucket. A
-    * fully-deleted snapshot (no live bucket) reads as zero rows of that
-    * schema. */
+    * fixes every key column to a literal lists and scans one bucket;
+    * with [[DriverLookup]] installed (`GraftExtensions`), collecting it
+    * runs no job either while that bucket is at most
+    * `spark.sql.files.maxPartitionBytes`, and falls back to the scan
+    * above that. A fully-deleted snapshot (no live bucket) reads as zero
+    * rows of that schema. */
   def read(spark: SparkSession, targetDir: String,
       version: Option[Long] = None): DataFrame = {
     val t = new Table(spark, targetDir)
@@ -490,77 +496,5 @@ object KeyedUpsert {
           .when(col("__fp_a") =!= col("__fp_b"), "updated"))
       .filter(col("change").isNotNull)
       .select(keyCols.map(col) :+ col("change"): _*)
-  }
-
-  /** The files of one snapshot as the manifest names them (Delta's
-    * log-driven file index): `dirs` (bucket -> table-relative dir) are
-    * listed once each, on first use, with a plain `listStatus` — no
-    * `InMemoryFileIndex`, glob or existence check, and no located
-    * status, which forks `ls -ld` per file on a local FS without
-    * native IO. With the table's layout (`keys`, `numBuckets`),
-    * [[listFiles]] reads only the bucket a full-key point
-    * lookup hashes into: a filter holding `key = literal` for every
-    * key column, each literal non-null and of the column's exact type.
-    * Float and double keys never prune: their equality folds `-0.0`
-    * into `0.0` and every NaN into one, and the index does not lean on
-    * the hash folding them alike. Any other filter reads every live
-    * dir. */
-  private final class SnapshotIndex(fs: FileSystem, target: Path,
-      dirs: Map[Long, String], keys: Seq[String], numBuckets: Int)
-      extends FileIndex {
-
-    private val paths = dirs.toSeq.sortBy(_._1)
-      .map { case (bk, rel) => bk -> new Path(target, rel) }
-
-    private lazy val files: Seq[(Long, Seq[FileStatus])] = paths.map {
-      case (bk, p) => bk -> fs.listStatus(p).toSeq.filter { s =>
-        val n = s.getPath.getName // Spark's data-file rule: no .crc, _SUCCESS
-        s.isFile && s.getLen > 0 && !n.startsWith(".") && !n.startsWith("_")
-      }
-    }
-
-    /** The bucket every row matching `filters` lives in, if they fix
-      * each key column to a literal: `pmod(xxhash64(literals in key
-      * order), numBuckets)`, the expression [[bucketed]] writes. */
-    private def pointBucket(filters: Seq[Expression]): Option[Long] = {
-      def conjuncts(e: Expression): Seq[Expression] = e match {
-        case And(l, r) => conjuncts(l) ++ conjuncts(r)
-        case other => Seq(other)
-      }
-      def hashStable(t: DataType): Boolean = t match {
-        case BooleanType | ByteType | ShortType | IntegerType | LongType |
-             DateType | TimestampType | TimestampNTZType | BinaryType |
-             StringType | _: DecimalType => true // StringType: binary collation only
-        case _ => false
-      }
-      val fixed = filters.flatMap(conjuncts).collect {
-        case EqualTo(a: Attribute, l: Literal) => a -> l
-        case EqualTo(l: Literal, a: Attribute) => a -> l
-      }.collect {
-        case (a, l) if l.value != null && l.dataType == a.dataType &&
-          hashStable(a.dataType) => a.name -> l
-      }.toMap
-      Option.when(keys.forall(fixed.contains))(
-        Pmod(new XxHash64(keys.map(fixed)), Literal(numBuckets.toLong)).eval()
-          .asInstanceOf[Long])
-    }
-
-    override def rootPaths: Seq[Path] = paths.map(_._2)
-
-    override def listFiles(partitionFilters: Seq[Expression],
-        dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-      val read = pointBucket(dataFilters)
-        .fold(files)(bk => files.filter(_._1 == bk))
-      Seq(PartitionDirectory(InternalRow.empty, read.flatMap(_._2).toArray))
-    }
-
-    override def inputFiles: Array[String] =
-      files.flatMap(_._2).map(_.getPath.toString).toArray
-
-    override def refresh(): Unit = () // a snapshot never changes
-
-    override def sizeInBytes: Long = files.flatMap(_._2).map(_.getLen).sum
-
-    override def partitionSchema: StructType = new StructType()
   }
 }

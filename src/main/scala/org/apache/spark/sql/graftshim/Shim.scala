@@ -1,15 +1,19 @@
 package org.apache.spark.sql.graftshim
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression}
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.datasources.{DataSourceStrategy,
+  DataSourceUtils, HadoopFsRelation}
+import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
 
 /** Column <-> catalyst Expression bridge. Spark 4 made the converters
   * `private[sql]` (`org.apache.spark.sql.classic.ExpressionUtils`), so
   * extension libraries provide this one-file shim inside the sql
   * namespace — the only non-`graft` package in this repo. It also
-  * reaches the `private[spark]` `StructType.asNullable`.
+  * reaches the `private[spark]` `StructType.asNullable` and the
+  * `protected[sql]` filter helpers of Spark's file scan planning.
   */
 object Shim {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -25,4 +29,17 @@ object Shim {
       builder: Seq[Expression] => Expression): Unit =
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       name, builder, "scala_udf")
+
+  /** `exprs` with each attribute named as in `output`, as
+    * FileSourceStrategy hands data filters to a `FileIndex`. */
+  def normalizeExprs(exprs: Seq[Expression],
+      output: Seq[AttributeReference]): Seq[Expression] =
+    DataSourceStrategy.normalizeExprs(exprs, output)
+
+  /** The data-source filters FileSourceStrategy pushes into
+    * `relation`'s reader for the (normalized) `filters`. */
+  def pushedFilters(relation: HadoopFsRelation,
+      filters: Seq[Expression]): Seq[Filter] =
+    filters.flatMap(DataSourceStrategy.translateFilter(_,
+      DataSourceUtils.supportNestedPredicatePushdown(relation)))
 }

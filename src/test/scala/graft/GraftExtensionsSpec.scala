@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
+import graft.sinks.{DriverLookup, DriverLookupExec, KeyedUpsert}
+
 class GraftExtensionsSpec extends SparkSpec {
 
   test("registered SQL functions evaluate through spark.sql") {
@@ -12,17 +15,34 @@ class GraftExtensionsSpec extends SparkSpec {
     r.getDouble(1) shouldBe 11.0
   }
 
+  test("register installs the argmax rule and the lookup strategy once") {
+    GraftExtensions.register(spark)
+    GraftExtensions.register(spark)
+    spark.experimental.extraStrategies.count(_ == DriverLookup) shouldBe 1
+    spark.experimental.extraOptimizations
+      .count(_ == graft.plans.TopOnePerKeyToArgmax) shouldBe 1
+  }
+
   test("a fresh session built with the extensions class resolves them too") {
-    val s2 = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .appName("graft-ext-test")
-      .getOrCreate()
+    import spark.implicits._
+    val dir = tmp("ext")
+    KeyedUpsert.upsert(spark, dir, Seq(("a", 1), ("b", 2)).toDF("k", "v"),
+      Seq("k"), numBuckets = 4)
+    // what `spark.sql.extensions=graft.GraftExtensions` runs at session
+    // build; that static conf is read from the SparkContext, which this
+    // JVM already has, so the class is handed to the builder directly
+    val s2 = SparkSession.builder().withExtensions(new GraftExtensions).create()
     try {
-      GraftExtensions.register(s2) // getOrCreate may reuse the shared session
+      s2.experimental.extraStrategies shouldBe empty // never registered
       s2.sql("SELECT vec_dot(array(1.0D), array(2.0D))")
         .head.getDouble(0) shouldBe 2.0
-    } finally ()
+      val lookup = KeyedUpsert.read(s2, dir).filter($"k" === "b")
+      lookup.collect().map(_.getInt(1)).toSeq shouldBe Seq(2)
+      lookup.queryExecution.executedPlan shouldBe a[DriverLookupExec]
+    } finally {
+      SparkSession.setActiveSession(spark)
+      SparkSession.setDefaultSession(spark)
+    }
   }
 
   test("nfc_normalize composes decomposed text and passes NFC through") {

@@ -23,11 +23,11 @@ class IngestDedupSpec extends SparkSpec {
     batch should not be empty // the corpus must actually contain near-dups
 
     val fine = pairsOf(IngestDedup
-      .run(spark, docs, Dirs.fresh("/tmp/graft-stream/ingest-fine").toString,
+      .run(spark, docs, tmp("ingest-fine"),
         nFiles = 4, maxFilesPerTrigger = 1)
       .select("a", "b", "est_jaccard"))
     val coarse = pairsOf(IngestDedup
-      .run(spark, docs, Dirs.fresh("/tmp/graft-stream/ingest-coarse").toString,
+      .run(spark, docs, tmp("ingest-coarse"),
         nFiles = 6, maxFilesPerTrigger = 3)
       .select("a", "b", "est_jaccard"))
 
@@ -48,23 +48,23 @@ class IngestDedupSpec extends SparkSpec {
     val batch = rows(StreamingCorpusBuild.batchReference(docs))
     batch should not be empty
     val fine = rows(StreamingCorpusBuild.run(spark, docs,
-      Dirs.fresh("/tmp/graft-stream/corpus-fine").toString, nFiles = 4, maxFilesPerTrigger = 1))
+      tmp("corpus-fine"), nFiles = 4, maxFilesPerTrigger = 1))
     val coarse = rows(StreamingCorpusBuild.run(spark, docs,
-      Dirs.fresh("/tmp/graft-stream/corpus-coarse").toString, nFiles = 6, maxFilesPerTrigger = 3))
+      tmp("corpus-coarse"), nFiles = 6, maxFilesPerTrigger = 3))
     fine shouldBe batch
     coarse shouldBe batch
   }
 
   test("each pair is emitted exactly once across micro-batches") {
     val docs = Tables.documents(spark, SfDir)
-    val out = IngestDedup.run(spark, docs, Dirs.fresh("/tmp/graft-stream/ingest-once").toString,
+    val out = IngestDedup.run(spark, docs, tmp("ingest-once"),
       nFiles = 4, maxFilesPerTrigger = 1)
     out.count() shouldBe out.select("a", "b").distinct().count()
   }
 
   test("a replayed micro-batch rewrites instead of duplicating (crash-retry)") {
     import org.apache.spark.sql.functions.col
-    val root = Dirs.fresh("/tmp/graft-stream/ingest-replay").toString
+    val root = tmp("ingest-replay")
     val docs = Tables.documents(spark, SfDir)
     val b0 = docs.filter(col("doc_id") % 2 === 0)
     val b1 = docs.filter(col("doc_id") % 2 === 1)

@@ -1,10 +1,12 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.sinks.KeyedUpsert
+import graft.sinks.{DriverLookupExec, KeyedUpsert}
 
 class KeyedUpsertSpec extends SparkSpec {
   import spark.implicits._
@@ -23,6 +25,67 @@ class KeyedUpsertSpec extends SparkSpec {
   private def contents(dir: String): Map[Int, (Int, String)] =
     KeyedUpsert.read(spark, dir).as[(Int, Int, String)].collect()
       .map { case (k, t, v) => k -> ((t, v)) }.toMap
+
+  /** A session on the shared context without the DriverLookup strategy:
+    * every read plans Spark's file scan. */
+  private lazy val scanOnly = spark.newSession()
+
+  /** The nodes of `df`'s executed plan, through AQE stages. */
+  private def planNodes(df: DataFrame): Seq[SparkPlan] =
+    new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) {
+      case n => n
+    }
+
+  private def driverServed(df: DataFrame): Boolean =
+    planNodes(df).exists(_.isInstanceOf[DriverLookupExec])
+
+  /** `df`'s rows as `Row.toString` prints them, byte arrays by value. */
+  private def sortedRows(df: DataFrame): Seq[String] = {
+    def show(v: Any): String = v match {
+      case b: Array[Byte] => b.mkString("bytes(", ",", ")")
+      case r: Row => r.toSeq.map(show).mkString("[", ",", "]")
+      case m: scala.collection.Map[_, _] =>
+        m.map { case (k, x) => s"${show(k)} -> ${show(x)}" }.mkString("Map(", ", ", ")")
+      case s: scala.collection.Seq[_] => s.map(show).mkString("Seq(", ", ", ")")
+      case x => String.valueOf(x)
+    }
+    df.collect().map(show).toSeq.sorted
+  }
+
+  /** `f`'s rows of the table at `dir` (`version`), read on the driver,
+    * which must plan it, and checked equal to Spark's scan of them. */
+  private def bothPaths(dir: String, f: Column,
+      version: Option[Long] = None): Seq[String] = {
+    val driver = KeyedUpsert.read(spark, dir, version).filter(f)
+    val scan = KeyedUpsert.read(scanOnly, dir, version).filter(f)
+    val rows = sortedRows(driver)
+    driverServed(driver) shouldBe true
+    planNodes(scan).exists(_.isInstanceOf[FileSourceScanExec]) shouldBe true
+    rows shouldBe sortedRows(scan)
+    rows
+  }
+
+  /** Spark jobs started while `body` runs, counted by its job group. */
+  private def jobsIn(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val group = "keyed-upsert-job-guard"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      org.apache.spark.ListenerBusDrain(sc)
+      sc.setJobGroup(group, "KeyedUpsert")
+      try body finally sc.clearJobGroup()
+      org.apache.spark.ListenerBusDrain(sc)
+      jobs.get
+    } finally sc.removeSparkListener(listener)
+  }
 
   test("insert then update then insert-new merges by key") {
     val dir = tmp("upsert")
@@ -469,6 +532,9 @@ class KeyedUpsertSpec extends SparkSpec {
       }
       upsert(batches.last) // replay of the last batch changes nothing
       withClue(s"keepMaxOnMerge=$keepMax replay: ") { contents(dir) shouldBe model }
+      for ((k, (t, v)) <- model) withClue(s"keepMaxOnMerge=$keepMax lookup $k: ") {
+        bothPaths(dir, $"k" === k) shouldBe Seq(Row(k, t, v).toString)
+      }
     }
   }
 
@@ -482,9 +548,7 @@ class KeyedUpsertSpec extends SparkSpec {
   }
 
   test("an upsert onto live rows plans one shuffle and no broadcast") {
-    import org.apache.spark.sql.execution.{CommandResultExec, SparkPlan}
-    import org.apache.spark.sql.execution.QueryExecution
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.{CommandResultExec, QueryExecution}
     import org.apache.spark.sql.execution.command.DataWritingCommandExec
     import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
     import org.apache.spark.sql.util.QueryExecutionListener
@@ -578,28 +642,14 @@ class KeyedUpsertSpec extends SparkSpec {
   }
 
   test("resolving a snapshot runs no Spark job after MERGE, DELETE, OPTIMIZE, RESTORE") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val group = "keyed-upsert-read-guard"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null &&
-            e.properties.getProperty("spark.jobGroup.id") == group)
-          jobs.incrementAndGet()
+    afterEachOperation { (dir, v) =>
+      withClue(s"version $v: ") {
+        jobsIn {
+          KeyedUpsert.read(spark, dir)
+          KeyedUpsert.read(spark, dir, Some(v))
+        } shouldBe 0
+      }
     }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try afterEachOperation { (dir, v) =>
-      org.apache.spark.ListenerBusDrain(sc)
-      jobs.set(0)
-      sc.setJobGroup(group, "KeyedUpsert.read")
-      try {
-        KeyedUpsert.read(spark, dir)
-        KeyedUpsert.read(spark, dir, Some(v))
-      } finally sc.clearJobGroup()
-      org.apache.spark.ListenerBusDrain(sc)
-      withClue(s"version $v: ") { jobs.get shouldBe 0 }
-    } finally sc.removeSparkListener(listener)
   }
 
   test("an upsert or delete with other keys or bucket count fails, table unchanged") {
@@ -625,15 +675,14 @@ class KeyedUpsertSpec extends SparkSpec {
     }
   }
 
-  /** Rows and the scan's `numFiles` metric of one collected query. */
+  /** Rows and the `numFiles` metric of one collected query, read on
+    * the driver or by Spark's scan. */
   private def scanned(df: DataFrame): (Seq[String], Long) = {
-    import org.apache.spark.sql.execution.FileSourceScanExec
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-    val rows = df.collect().map(_.toString).toSeq.sorted
-    val files = new AdaptiveSparkPlanHelper {}
-      .collect(df.queryExecution.executedPlan) {
-        case s: FileSourceScanExec => s.metrics("numFiles").value
-      }
+    val rows = sortedRows(df)
+    val files = planNodes(df).collect {
+      case s: FileSourceScanExec => s.metrics("numFiles").value
+      case d: DriverLookupExec => d.metrics("numFiles").value
+    }
     (rows, files.sum)
   }
 
@@ -657,9 +706,13 @@ class KeyedUpsertSpec extends SparkSpec {
     def check(cells: Seq[(String, org.apache.spark.sql.Column, Long)]): Unit = {
       val reference = spark.read.parquet(live(): _*)
       for ((name, f, files) <- cells) withClue(s"$name: ") {
-        val (rows, read) = scanned(KeyedUpsert.read(spark, dir).filter(f))
+        val df = KeyedUpsert.read(spark, dir).filter(f)
+        val (rows, read) = scanned(df)
         rows shouldBe scanned(reference.filter(f))._1
         read shouldBe files
+        // a one-bucket read is served on the driver, with Spark's rows
+        driverServed(df) shouldBe (files == 1L)
+        rows shouldBe sortedRows(KeyedUpsert.read(scanOnly, dir).filter(f))
       }
     }
     def allKeys(when: String): Unit = {
@@ -699,6 +752,84 @@ class KeyedUpsertSpec extends SparkSpec {
       rows shouldBe scanned(reference.filter($"d" === d))._1
       rows should not be empty
       files shouldBe live.size.toLong
+    }
+  }
+
+  test("a driver-served lookup starts no job and reads what Spark's scan reads") {
+    // every storage-relevant type, after each kind of commit, latest and pinned
+    afterEachOperation { (dir, v) =>
+      for (id <- Seq(0, 3, 7, 31, 45, 99)) withClue(s"version $v id $id: ") {
+        bothPaths(dir, $"id" === id) shouldBe
+          bothPaths(dir, $"id" === id, Some(v))
+      }
+    }
+    val dir = tmp("upsert")
+    KeyedUpsert.upsert(spark, dir,
+      (0 until 200).map(k => (k, s"v$k")).toDF("k", "v"), Seq("k"), numBuckets = 4)
+    def lookup(k: Int) = KeyedUpsert.read(spark, dir).filter($"k" === k)
+    jobsIn(lookup(42).collect()) shouldBe 0
+    jobsIn(lookup(42).head()) shouldBe 0 // under a limit, via executeTake
+    bothPaths(dir, $"k" === 42) shouldBe Seq("[42,v42]")
+    bothPaths(dir, $"k" === 1000) shouldBe empty // absent: its bucket, no row
+    // the path taken and why, in metrics and in the plan string
+    val df = lookup(42).select("v")
+    df.collect().map(_.getString(0)).toSeq shouldBe Seq("v42")
+    val exec = planNodes(df).collect { case d: DriverLookupExec => d }.head
+    val bytes = new java.io.File(dir, KeyedUpsert.snapshot(spark, dir)(exec.bucket))
+      .listFiles().filter(_.getName.endsWith(".parquet")).map(_.length).sum
+    Seq("numFiles", "numOutputRows", "bucketBytes").map(exec.metrics(_).value) shouldBe
+      Seq(1L, 1L, bytes)
+    exec.simpleString(10) should include(
+      s"bucket=${exec.bucket} files=1 bytes=$bytes <= maxPartitionBytes=524288")
+    // under an aggregate the exec runs as a one-partition RDD
+    lookup(42).count() shouldBe 1L
+    val agg = lookup(42).groupBy().count()
+    agg.collect().map(_.getLong(0)).toSeq shouldBe Seq(1L)
+    driverServed(agg) shouldBe true
+    jobsIn(lookup(42).count()) should be > 0 // the guard sees jobs
+    // a bucket over maxPartitionBytes stays on Spark's scan
+    val key = "spark.sql.files.maxPartitionBytes"
+    val bound = spark.conf.get(key)
+    spark.conf.set(key, (bytes - 1).toString)
+    try {
+      val over = lookup(42)
+      sortedRows(over) shouldBe Seq("[42,v42]")
+      driverServed(over) shouldBe false
+      planNodes(over).exists(_.isInstanceOf[FileSourceScanExec]) shouldBe true
+    } finally spark.conf.set(key, bound)
+  }
+
+  test("a crash inside vacuum leaves every listed version readable or named vacuumed") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.delcrashfs.impl", classOf[DeleteCrashingFs].getName)
+    val arms = Seq[(String, org.apache.hadoop.fs.Path => Boolean)](
+      "manifest delete" -> (_.getParent.getName == "_manifests"),
+      "data-dir delete" -> (_.getParent.getName == "data"))
+    for ((name, arm) <- arms) withClue(s"$name: ") {
+      val local = tmp("upsert")
+      val dir = "delcrashfs://" + local
+      // every commit rewrites all four buckets: a vacuum's expired
+      // version references only dirs the latest one does not
+      def upsert(v: Int): Unit = KeyedUpsert.upsert(spark, dir,
+        (0 until 20).map(k => (k, v)).toDF("k", "v"), Seq("k"),
+        numBuckets = 4, retainVersions = 1)
+      upsert(1)
+      upsert(2)
+      DeleteCrashingFs.armed = Some(arm)
+      intercept[java.io.IOException](upsert(3))
+      DeleteCrashingFs.armed shouldBe None
+      KeyedUpsert.versions(spark, dir) should contain(3L)
+      for (v <- KeyedUpsert.versions(spark, dir)) withClue(s"version $v: ") {
+        try KeyedUpsert.read(spark, dir, Some(v)).as[(Int, Int)].collect()
+          .toSet shouldBe (0 until 20).map((_, v.toInt)).toSet
+        catch {
+          case e: IllegalArgumentException => e.getMessage should include("vacuumed")
+        }
+      }
+      upsert(4) // reclaims what the crash left
+      KeyedUpsert.versions(spark, dir) shouldBe Seq(4L)
+      new java.io.File(local, "data").list().toSet shouldBe
+        KeyedUpsert.snapshot(spark, dir).values.map(_.split('/')(1)).toSet
     }
   }
 

@@ -233,8 +233,8 @@ class ProbeLogSpec extends AnyFunSuite with Matchers {
   }
 
   test("record replaces by parsed metric and gates against the old row") {
-    val f = java.nio.file.Files.createTempDirectory("probelog")
-      .resolve("PROBES.json")
+    val root = java.nio.file.Files.createTempDirectory("probelog")
+    val f = root.resolve("PROBES.json")
     System.setProperty("graft.probes.file", f.toString)
     try {
       ProbeLog.record("a", line(ratios = """"q":{"time_ratio":1.0}""")
@@ -252,6 +252,9 @@ class ProbeLogSpec extends AnyFunSuite with Matchers {
       ProbeLog.currentLine("a").get should include("9.9")
       // a metric with no committed row gates clean
       ProbeLog.recordGated("c", """{"metric":"c","v":2}""") shouldBe Seq.empty
-    } finally System.clearProperty("graft.probes.file")
+    } finally {
+      System.clearProperty("graft.probes.file")
+      Dirs.deleteTree(root)
+    }
   }
 }

@@ -34,16 +34,33 @@ class CrashingFs extends RawLocalFileSystem {
     }
 }
 
-object CrashingFs {
+/** One armed crash: the first path [[armed]] accepts fires it. */
+class Trap {
   @volatile var armed: Option[HPath => Boolean] = None
 
-  /** Whether `f` is the armed write; disarms when it is. */
+  /** Whether `f` is the armed path; disarms when it is. */
   def fire(f: HPath): Boolean = synchronized {
     val hit = armed.exists(_(f))
     if (hit) armed = None
     hit
   }
 }
+
+object CrashingFs extends Trap
+
+/** The local file system under the `delcrashfs:` scheme. The first
+  * `delete` of a path that [[DeleteCrashingFs.armed]] accepts throws
+  * before anything is deleted. */
+class DeleteCrashingFs extends RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("delcrashfs:///")
+
+  override def delete(f: HPath, recursive: Boolean): Boolean =
+    if (DeleteCrashingFs.fire(f))
+      throw new IOException(s"injected crash before the delete of $f")
+    else super.delete(f, recursive)
+}
+
+object DeleteCrashingFs extends Trap
 
 /** The local file system under the `countfs:` scheme, counting the
   * `_manifests/` listings, the manifest reads and the `__bucket=`
