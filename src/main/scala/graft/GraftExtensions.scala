@@ -7,11 +7,11 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.graftshim.Shim
 import graft.functions.{ByteStride, DotProduct, HeavyHittersAgg,
   NfcNormalize, RegexpExtractAllNegate, TopKAgg}
-import graft.sinks.DriverLookup
+import graft.sinks.DriverScan
 
 /** SparkSessionExtensions entry point: makes the engine's native
-  * expressions SQL-callable and plans KeyedUpsert full-key lookups on
-  * the driver ([[graft.sinks.DriverLookup]]). Activate at session build with
+  * expressions SQL-callable and plans small KeyedUpsert snapshot scans
+  * on the driver ([[graft.sinks.DriverScan]]). Activate at session build with
   * `.config("spark.sql.extensions", "graft.GraftExtensions")`, or call
   * [[GraftExtensions.register]] on an already-built session.
   */
@@ -22,7 +22,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         new ExpressionInfo("graft.functions", name), builder))
     }
     ext.injectOptimizerRule(_ => graft.plans.TopOnePerKeyToArgmax)
-    ext.injectPlannerStrategy(_ => DriverLookup)
+    ext.injectPlannerStrategy(_ => DriverScan)
   }
 }
 
@@ -64,7 +64,7 @@ object GraftExtensions {
     ".streaming.checkpointing.FileSystemBasedCheckpointFileManager"
 
   /** Register on an existing session (extensions only run at build):
-    * the functions, the argmax rule and the [[DriverLookup]] strategy,
+    * the functions, the argmax rule and the [[DriverScan]] strategy,
     * the rule and the strategy once however often this is called.
     *
     * Also sets one session default: [[CheckpointManagerConf]] becomes
@@ -93,8 +93,8 @@ object GraftExtensions {
         spark.experimental.extraOptimizations :+
           graft.plans.TopOnePerKeyToArgmax
     }
-    if (!spark.experimental.extraStrategies.contains(DriverLookup))
+    if (!spark.experimental.extraStrategies.contains(DriverScan))
       spark.experimental.extraStrategies =
-        DriverLookup +: spark.experimental.extraStrategies
+        DriverScan +: spark.experimental.extraStrategies
   }
 }

@@ -39,10 +39,13 @@ import org.apache.spark.sql.types._
   *    reads ([[SnapshotIndex]]), and no Spark job runs. A filter that
   *    fixes every key column to a literal reads the one bucket those
   *    literals hash into. On a session with [[graft.GraftExtensions]]
-  *    registered, such a lookup also runs no job when collected: if the
-  *    bucket's files add up to at most `spark.sql.files.maxPartitionBytes`
-  *    it is read on the driver ([[DriverLookupExec]]); a larger bucket,
-  *    and every other query, runs Spark's file scan.
+  *    registered, a scan also runs no job when collected: if the files
+  *    it selects (that one bucket's, else every live file) add up to at
+  *    most `spark.sql.files.maxPartitionBytes`, it is read on the driver
+  *    with its filters and projection ([[DriverScanExec]]); a larger
+  *    scan runs Spark's file scan. A MERGE's or DELETE's read of small
+  *    touched buckets takes the driver path too, and feeds its shuffle
+  *    from one task.
   *
   * The manifest chain doubles as a version log (the reference's
   * `DESCRIBE HISTORY` / `startingVersion` replay, `Query the Metric
@@ -435,12 +438,13 @@ object KeyedUpsert {
     * with the schema its manifest records: one manifest listing, one
     * manifest read and, when the query is planned, one listing per live
     * dir; no `DataSource` resolution and no Spark job. A filter that
-    * fixes every key column to a literal lists and scans one bucket;
-    * with [[DriverLookup]] installed (`GraftExtensions`), collecting it
-    * runs no job either while that bucket is at most
-    * `spark.sql.files.maxPartitionBytes`, and falls back to the scan
-    * above that. A fully-deleted snapshot (no live bucket) reads as zero
-    * rows of that schema. */
+    * fixes every key column to a literal lists and scans one bucket.
+    * With [[DriverScan]] installed (`GraftExtensions`), collecting,
+    * `head()` or `take` of any filter and projection of it runs no job
+    * either while the files it selects are at most
+    * `spark.sql.files.maxPartitionBytes` in all, and falls back to
+    * Spark's scan above that. A fully-deleted snapshot (no live bucket)
+    * reads as zero rows of that schema. */
   def read(spark: SparkSession, targetDir: String,
       version: Option[Long] = None): DataFrame = {
     val t = new Table(spark, targetDir)

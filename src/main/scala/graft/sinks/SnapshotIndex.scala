@@ -2,6 +2,7 @@ package graft.sinks
 
 import java.util.concurrent.ConcurrentHashMap
 
+import scala.collection.mutable.ArrayBuffer
 import scala.reflect.ClassTag
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
@@ -35,8 +36,8 @@ import org.apache.spark.util.SerializableConfiguration
   * no `InMemoryFileIndex`, glob or existence check, and no located
   * status, which forks `ls -ld` per file on a local FS without
   * native IO. With the table's layout (`keys`, `numBuckets`),
-  * [[listFiles]] reads only the bucket a full-key point
-  * lookup hashes into: a filter holding `key = literal` for every
+  * [[select]] (and so [[listFiles]]) picks only the bucket a full-key
+  * point lookup hashes into: a filter holding `key = literal` for every
   * key column, each literal non-null and of the column's exact type.
   * Float and double keys never prune: their equality folds `-0.0`
   * into `0.0` and every NaN into one, and the index does not lean on
@@ -89,16 +90,18 @@ private[sinks] final class SnapshotIndex(fs: FileSystem, target: Path,
         .asInstanceOf[Long])
   }
 
-  /** The bucket `filters` fix and its data files. */
-  private[sinks] def point(filters: Seq[Expression]): Option[(Long, Seq[FileStatus])] =
-    pointBucket(filters).map(bk => bk -> bucketFiles(bk))
+  /** The bucket `filters` fix, if any, and the data files a scan under
+    * them reads: that bucket's, or else every live file. */
+  private[sinks] def select(filters: Seq[Expression]): (Option[Long], Seq[FileStatus]) = {
+    val bk = pointBucket(filters)
+    bk -> bk.fold(files)(bucketFiles)
+  }
 
   override def rootPaths: Seq[Path] = paths.map(_._2)
 
   override def listFiles(partitionFilters: Seq[Expression],
       dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
-    Seq(PartitionDirectory(InternalRow.empty,
-      pointBucket(dataFilters).fold(files)(bucketFiles).toArray))
+    Seq(PartitionDirectory(InternalRow.empty, select(dataFilters)._2.toArray))
 
   override def inputFiles: Array[String] = files.map(_.getPath.toString).toArray
 
@@ -109,16 +112,17 @@ private[sinks] final class SnapshotIndex(fs: FileSystem, target: Path,
   override def partitionSchema: StructType = new StructType()
 }
 
-/** Plans a full-key point lookup on a KeyedUpsert snapshot as one
-  * [[DriverLookupExec]], which answers it on the driver with no Spark
-  * job: the lookup's filters fix one bucket ([[SnapshotIndex]]'s
-  * `pointBucket`) and that bucket's files add up to at most
-  * `spark.sql.files.maxPartitionBytes`, a bucket Spark would read as
-  * one split anyway. A lookup that reads metadata columns, holds a
+/** Plans a scan of a KeyedUpsert snapshot small enough to read in one
+  * split as one [[DriverScanExec]], which answers it on the driver with
+  * no Spark job: the files it selects ([[SnapshotIndex]]'s `select`: the
+  * bucket a full-key lookup fixes, otherwise every live file) add up to
+  * at most `spark.sql.files.maxPartitionBytes`, which Spark would read
+  * as one split anyway. The filters and the projection above the
+  * relation are the exec's. A scan that reads metadata columns, holds a
   * subquery, or runs under `ignoreMissingFiles`/`ignoreCorruptFiles`
-  * (which only Spark's scan RDD honours), and every other plan, falls
-  * through to Spark's own strategies. */
-object DriverLookup extends SparkStrategy {
+  * (which only Spark's scan RDD honours), a larger one, and every other
+  * plan fall through to Spark's own strategies. */
+object DriverScan extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case PhysicalOperation(projects, filters, l @ LogicalRelation(
         r @ HadoopFsRelation(index: SnapshotIndex, _, _, _, _, _), _, _, _, _))
@@ -127,30 +131,35 @@ object DriverLookup extends SparkStrategy {
       val conf = r.sparkSession.sessionState.conf
       val bound = conf.filesMaxPartitionBytes
       val normalized = Shim.normalizeExprs(filters, l.output)
-      index.point(normalized).collect {
-        case (bk, files) if files.map(_.getLen).sum <= bound &&
-            !conf.ignoreMissingFiles && !conf.ignoreCorruptFiles =>
-          DriverLookupExec(projects, filters, l.output, r, bk, files, bound,
-            Shim.pushedFilters(r, normalized))
-      }.toSeq
+      val (bucket, files) = index.select(normalized)
+      if (files.map(_.getLen).sum <= bound &&
+          !conf.ignoreMissingFiles && !conf.ignoreCorruptFiles)
+        Seq(DriverScanExec(projects, filters, l.output, r, bucket, files, bound,
+          Shim.pushedFilters(r, normalized)))
+      else Nil
     case _ => Nil
   }
 }
 
-/** A full-key lookup of one KeyedUpsert bucket, read on the driver:
-  * `executeCollect` reads `files` in the calling thread with Spark's
-  * own parquet reader (its schema handling, rebase modes and `pushed`
-  * filters, so row groups are skipped by min/max on the sorted key),
-  * keeps the rows ALL `filters` hold for — the pushed filters only
-  * prune — and projects them to `projects`. Like
-  * `LocalTableScanExec`, it runs no job when it is the plan root;
-  * `execute()` (under an aggregate or a join) returns the same rows as
-  * a one-partition RDD. `bound` is the size limit the planner checked
-  * the bucket's bytes against. */
-case class DriverLookupExec(projects: Seq[NamedExpression],
+/** A small KeyedUpsert snapshot scan, read on the driver: `executeCollect`
+  * reads `files` (the fixed `bucket`'s, or every live file when it is
+  * None) in the calling thread with Spark's own parquet reader (its
+  * schema handling, rebase modes and `pushed` filters, so row groups are
+  * skipped by min/max), keeps the rows ALL `filters` hold for — the
+  * pushed filters only prune; no filter keeps every row — and projects
+  * them to `projects`. `executeTake(n)` reads file by file and stops at
+  * the `n`-th row. Like `LocalTableScanExec`, it runs no job when it is
+  * the plan root; `execute()` (under an aggregate, a join or a MERGE's
+  * union) returns the same rows as a one-partition RDD. `bound` is the
+  * size limit the planner checked the files' bytes against. As in
+  * `FileSourceScanExec`, the relation and the files are driver-side
+  * only: a codegen stage above the exec may ship this plan node in its
+  * closure. */
+case class DriverScanExec(projects: Seq[NamedExpression],
     filters: Seq[Expression], relationOutput: Seq[Attribute],
-    relation: HadoopFsRelation, bucket: Long, files: Seq[FileStatus],
-    bound: Long, pushed: Seq[Filter]) extends LeafExecNode {
+    @transient relation: HadoopFsRelation, bucket: Option[Long],
+    @transient files: Seq[FileStatus], bound: Long, pushed: Seq[Filter])
+    extends LeafExecNode {
 
   override def output: Seq[Attribute] = projects.map(_.toAttribute)
 
@@ -159,35 +168,48 @@ case class DriverLookupExec(projects: Seq[NamedExpression],
   override lazy val metrics: Map[String, SQLMetric] = Map(
     "numFiles" -> SQLMetrics.createMetric(sparkContext, "number of files read"),
     "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"),
-    "bucketBytes" -> SQLMetrics.createSizeMetric(sparkContext, "bucket size"))
+    "bytes" -> SQLMetrics.createSizeMetric(sparkContext, "size of files read"))
 
   override def simpleString(maxFields: Int): String =
-    s"DriverLookup bucket=$bucket files=${files.size} bytes=$bytes <= " +
-      s"maxPartitionBytes=$bound " +
+    s"DriverScan ${bucket.fold("buckets=all")(bk => s"bucket=$bk")} " +
+      s"files=${files.size} bytes=$bytes <= maxPartitionBytes=$bound " +
       truncatedString(output, "[", ", ", "]", maxFields) +
       truncatedString(pushed, " PushedFilters: [", ", ", "]", maxFields)
 
-  override def executeCollect(): Array[InternalRow] = {
+  override def executeCollect(): Array[InternalRow] = read(Int.MaxValue)
+
+  override def executeTake(n: Int): Array[InternalRow] = read(n)
+
+  /** The first `limit` kept rows, projected; files are opened in order
+    * and none after the one that yields the `limit`-th row. */
+  private def read(limit: Int): Array[InternalRow] = {
     val refs = AttributeSet(projects ++ filters)
     val (required, fields) = relationOutput.zip(relation.dataSchema)
       .filter(p => refs.contains(p._1)).unzip
     val reader = readerFactory(StructType(fields))
-    val keep = Predicate.create(filters.reduce(And), required)
-    keep.initialize(0)
+    val keep = filters.reduceOption(And).map(Predicate.create(_, required))
+    keep.foreach(_.initialize(0))
     val project = UnsafeProjection.create(projects, required)
     project.initialize(0)
-    val rows: Array[InternalRow] = files.toArray.flatMap { f =>
+    val rows = ArrayBuffer.empty[InternalRow]
+    val next = files.iterator
+    var (opened, openedBytes) = (0L, 0L)
+    while (rows.size < limit && next.hasNext) {
+      val f = next.next()
       val r = reader.buildReader(PartitionedFile(InternalRow.empty,
         SparkPath.fromFileStatus(f), 0L, f.getLen, Array.empty,
         f.getModificationTime, f.getLen, Map.empty))
-      try Iterator.continually(r).takeWhile(_.next()).map(_.get())
-        .filter(keep.eval).map(project(_).copy()).toArray
+      try rows ++= Iterator.continually(r).takeWhile(_.next()).map(_.get())
+        .filter(row => keep.forall(_.eval(row))).take(limit - rows.size)
+        .map(project(_).copy())
       finally r.close()
+      opened += 1
+      openedBytes += f.getLen
     }
-    metrics("numFiles").set(files.size.toLong)
-    metrics("bucketBytes").set(bytes)
-    metrics("numOutputRows").add(rows.length.toLong)
-    rows
+    metrics("numFiles").set(opened)
+    metrics("bytes").set(openedBytes)
+    metrics("numOutputRows").add(rows.size.toLong)
+    rows.toArray
   }
 
   /** Spark's parquet reader (the one its DSv2 scan runs) for the
@@ -219,8 +241,6 @@ case class DriverLookupExec(projects: Seq[NamedExpression],
       required, relation.partitionSchema, pushed.toArray, None,
       new ParquetOptions(relation.options, sql))
   }
-
-  override def executeTake(n: Int): Array[InternalRow] = executeCollect().take(n)
 
   override protected def doExecute(): RDD[InternalRow] =
     sparkContext.parallelize(executeCollect().toSeq, 1)

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import graft.sinks.{DriverLookup, DriverLookupExec, KeyedUpsert}
+import graft.sinks.{DriverScan, DriverScanExec, KeyedUpsert}
 
 class GraftExtensionsSpec extends SparkSpec {
 
@@ -18,7 +18,7 @@ class GraftExtensionsSpec extends SparkSpec {
   test("register installs the argmax rule and the lookup strategy once") {
     GraftExtensions.register(spark)
     GraftExtensions.register(spark)
-    spark.experimental.extraStrategies.count(_ == DriverLookup) shouldBe 1
+    spark.experimental.extraStrategies.count(_ == DriverScan) shouldBe 1
     spark.experimental.extraOptimizations
       .count(_ == graft.plans.TopOnePerKeyToArgmax) shouldBe 1
   }
@@ -38,7 +38,7 @@ class GraftExtensionsSpec extends SparkSpec {
         .head.getDouble(0) shouldBe 2.0
       val lookup = KeyedUpsert.read(s2, dir).filter($"k" === "b")
       lookup.collect().map(_.getInt(1)).toSeq shouldBe Seq(2)
-      lookup.queryExecution.executedPlan shouldBe a[DriverLookupExec]
+      lookup.queryExecution.executedPlan shouldBe a[DriverScanExec]
     } finally {
       SparkSession.setActiveSession(spark)
       SparkSession.setDefaultSession(spark)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.sinks.{DriverLookupExec, KeyedUpsert}
+import graft.sinks.{DriverScanExec, KeyedUpsert}
 
 class KeyedUpsertSpec extends SparkSpec {
   import spark.implicits._
@@ -26,7 +26,7 @@ class KeyedUpsertSpec extends SparkSpec {
     KeyedUpsert.read(spark, dir).as[(Int, Int, String)].collect()
       .map { case (k, t, v) => k -> ((t, v)) }.toMap
 
-  /** A session on the shared context without the DriverLookup strategy:
+  /** A session on the shared context without the DriverScan strategy:
     * every read plans Spark's file scan. */
   private lazy val scanOnly = spark.newSession()
 
@@ -37,7 +37,7 @@ class KeyedUpsertSpec extends SparkSpec {
     }
 
   private def driverServed(df: DataFrame): Boolean =
-    planNodes(df).exists(_.isInstanceOf[DriverLookupExec])
+    planNodes(df).exists(_.isInstanceOf[DriverScanExec])
 
   /** `df`'s rows as `Row.toString` prints them, byte arrays by value. */
   private def sortedRows(df: DataFrame): Seq[String] = {
@@ -681,7 +681,7 @@ class KeyedUpsertSpec extends SparkSpec {
     val rows = sortedRows(df)
     val files = planNodes(df).collect {
       case s: FileSourceScanExec => s.metrics("numFiles").value
-      case d: DriverLookupExec => d.metrics("numFiles").value
+      case d: DriverScanExec => d.metrics("numFiles").value
     }
     (rows, files.sum)
   }
@@ -701,6 +701,7 @@ class KeyedUpsertSpec extends SparkSpec {
     def live() = KeyedUpsert.snapshot(spark, dir).values.toSeq.sorted
       .map(rel => s"$dir/$rel")
     def lookup(s: String, n: Long) = $"s" === s && $"n" === n
+    val bound = spark.conf.get("spark.sql.files.maxPartitionBytes").toLong
     /** Each filter reads `files` files, and the rows a plain parquet
       * read of the live dirs returns under the same filter. */
     def check(cells: Seq[(String, org.apache.spark.sql.Column, Long)]): Unit = {
@@ -710,9 +711,15 @@ class KeyedUpsertSpec extends SparkSpec {
         val (rows, read) = scanned(df)
         rows shouldBe scanned(reference.filter(f))._1
         read shouldBe files
-        // a one-bucket read is served on the driver, with Spark's rows
-        driverServed(df) shouldBe (files == 1L)
-        rows shouldBe sortedRows(KeyedUpsert.read(scanOnly, dir).filter(f))
+        // served on the driver exactly when the files Spark's scan reads
+        // are at most the bound, with Spark's rows
+        val scan = KeyedUpsert.read(scanOnly, dir).filter(f)
+        rows shouldBe sortedRows(scan)
+        val bytes = planNodes(scan).collect {
+          case s: FileSourceScanExec => s.metrics("filesSize").value
+        }.sum
+        bytes should be > 0L
+        driverServed(df) shouldBe (bytes <= bound)
       }
     }
     def allKeys(when: String): Unit = {
@@ -774,13 +781,13 @@ class KeyedUpsertSpec extends SparkSpec {
     // the path taken and why, in metrics and in the plan string
     val df = lookup(42).select("v")
     df.collect().map(_.getString(0)).toSeq shouldBe Seq("v42")
-    val exec = planNodes(df).collect { case d: DriverLookupExec => d }.head
-    val bytes = new java.io.File(dir, KeyedUpsert.snapshot(spark, dir)(exec.bucket))
+    val exec = planNodes(df).collect { case d: DriverScanExec => d }.head
+    val bytes = new java.io.File(dir, KeyedUpsert.snapshot(spark, dir)(exec.bucket.get))
       .listFiles().filter(_.getName.endsWith(".parquet")).map(_.length).sum
-    Seq("numFiles", "numOutputRows", "bucketBytes").map(exec.metrics(_).value) shouldBe
+    Seq("numFiles", "numOutputRows", "bytes").map(exec.metrics(_).value) shouldBe
       Seq(1L, 1L, bytes)
     exec.simpleString(10) should include(
-      s"bucket=${exec.bucket} files=1 bytes=$bytes <= maxPartitionBytes=524288")
+      s"DriverScan bucket=${exec.bucket.get} files=1 bytes=$bytes <= maxPartitionBytes=524288")
     // under an aggregate the exec runs as a one-partition RDD
     lookup(42).count() shouldBe 1L
     val agg = lookup(42).groupBy().count()
@@ -797,6 +804,117 @@ class KeyedUpsertSpec extends SparkSpec {
       driverServed(over) shouldBe false
       planNodes(over).exists(_.isInstanceOf[FileSourceScanExec]) shouldBe true
     } finally spark.conf.set(key, bound)
+  }
+
+  test("a range read over every live file runs on the driver, and on Spark's scan above the bound") {
+    import graft.pipeline.Medallion
+    // hour partials as runHourPartials keys them: `id` over the grain's
+    // columns, 3 remotes x 48 hours x 2 metrics over 4 buckets
+    val day = 86400L
+    def partials(remotes: Seq[Long], gen: Int): DataFrame =
+      (for (r <- remotes; h <- 0 until 48; m <- 1 to 2) yield
+        (h * 3600L, r, m, (r % 2).toInt, m + 1,
+          BigDecimal(r * 1000 + h * 10 + m + gen) / 4, (h % 5 + gen).toLong,
+          BigDecimal(h) / 2, BigDecimal(h + gen)))
+        .toDF("bucket_ts", "remote_id", "metric_id", "provider_id",
+          "category_id", "dec_sum", "n", "dec_min", "dec_max")
+        .withColumn("id", graft.functions.Fns.servingId($"remote_id",
+          $"bucket_ts", $"metric_id", $"provider_id", $"category_id"))
+    def range(s: org.apache.spark.sql.SparkSession, dir: String,
+        version: Option[Long], r: Long, d: Long): DataFrame =
+      Medallion.finalizeRollup(KeyedUpsert.read(s, dir, version).filter(
+        $"remote_id" === r && $"bucket_ts" >= d * day && $"bucket_ts" < (d + 1) * day))
+    val dir = tmp("upsert")
+    def check(v: Long): Unit = for (version <- Seq(None, Some(v));
+        r <- Seq(1L, 2L, 9L); d <- Seq(0L, 1L)) withClue(s"v$v $version r$r d$d: ") {
+      val df = range(spark, dir, version, r, d)
+      var rows = Seq.empty[String]
+      jobsIn { rows = sortedRows(df) } shouldBe 0
+      driverServed(df) shouldBe true
+      rows shouldBe sortedRows(range(scanOnly, dir, version, r, d))
+      if (r != 9L && KeyedUpsert.read(spark, dir, version)
+          .filter($"remote_id" === r).count() > 0) rows should not be empty
+    }
+    val upsert = (df: DataFrame) =>
+      KeyedUpsert.upsert(spark, dir, df, Seq("id"), numBuckets = 4)
+    upsert(partials(Seq(1L, 2L), 1))
+    check(1L)
+    upsert(partials(Seq(2L, 3L), 2)) // onto live rows
+    check(2L)
+    KeyedUpsert.delete(spark, dir, partials(Seq(1L), 1).select("id"), Seq("id"),
+      numBuckets = 4)
+    check(3L)
+    KeyedUpsert.compact(spark, dir, sortCols = Seq("id"))
+    check(4L)
+    KeyedUpsert.restore(spark, dir, 2L)
+    check(5L)
+    // the path taken and why: no fixed bucket, every live file, its bytes
+    val live = KeyedUpsert.snapshot(spark, dir).values.toSeq
+      .flatMap(rel => new java.io.File(dir, rel).listFiles())
+      .filter(_.getName.endsWith(".parquet"))
+    live.size shouldBe 4
+    val bytes = live.map(_.length).sum
+    val df = range(spark, dir, None, 2L, 1L)
+    val n = df.collect().length
+    n should be > 0
+    val exec = planNodes(df).collect { case d: DriverScanExec => d }.head
+    exec.bucket shouldBe None
+    Seq("numFiles", "numOutputRows", "bytes").map(exec.metrics(_).value) shouldBe
+      Seq(4L, n.toLong, bytes)
+    exec.simpleString(10) should include(
+      s"DriverScan buckets=all files=4 bytes=$bytes <= maxPartitionBytes=524288")
+    // one byte over the bound: Spark's scan, the same rows
+    val key = "spark.sql.files.maxPartitionBytes"
+    val bound = spark.conf.get(key)
+    spark.conf.set(key, (bytes - 1).toString)
+    try {
+      val over = range(spark, dir, None, 2L, 1L)
+      sortedRows(over) shouldBe sortedRows(df)
+      driverServed(over) shouldBe false
+      planNodes(over).exists(_.isInstanceOf[FileSourceScanExec]) shouldBe true
+    } finally spark.conf.set(key, bound)
+  }
+
+  test("an unfiltered driver read keeps every row; head and take stop at the file that fills them") {
+    val dir = tmp("upsert")
+    KeyedUpsert.upsert(spark, dir,
+      (0 until 200).map(k => (k, s"v$k")).toDF("k", "v"), Seq("k"), numBuckets = 4)
+    val all = KeyedUpsert.read(spark, dir)
+    jobsIn(all.collect()) shouldBe 0
+    driverServed(all) shouldBe true
+    sortedRows(all) shouldBe sortedRows(KeyedUpsert.read(scanOnly, dir))
+    all.collect().length shouldBe 200
+    var first: Option[Row] = None
+    jobsIn { first = Some(KeyedUpsert.read(spark, dir).head()) } shouldBe 0
+    first should not be empty
+    // rows per live file, in the order the exec opens them (by bucket)
+    val perFile = KeyedUpsert.snapshot(spark, dir).toSeq.sortBy(_._1)
+      .map { case (_, rel) => spark.read.parquet(s"$dir/$rel").count() }
+    perFile.size shouldBe 4
+    val cumulative = perFile.scanLeft(0L)(_ + _).tail
+    for (n <- Seq(1, perFile.head.toInt, perFile.head.toInt + 1, 200, 250))
+      withClue(s"limit $n: ") {
+        val df = KeyedUpsert.read(spark, dir).limit(n)
+        var rows = Array.empty[Row]
+        jobsIn { rows = df.collect() } shouldBe 0
+        rows.length shouldBe math.min(n, 200)
+        val exec = planNodes(df).collect { case d: DriverScanExec => d }.head
+        val opened = cumulative.indexWhere(_ >= n) match {
+          case -1 => 4
+          case i => i + 1
+        }
+        exec.metrics("numFiles").value shouldBe opened.toLong
+        exec.metrics("numOutputRows").value shouldBe rows.length.toLong
+      }
+    // a fully-deleted snapshot: zero rows of the recorded schema
+    KeyedUpsert.delete(spark, dir, (0 until 200).toDF("k"), Seq("k"), numBuckets = 4)
+    KeyedUpsert.snapshot(spark, dir) shouldBe empty
+    val none = KeyedUpsert.read(spark, dir)
+    jobsIn(none.collect() shouldBe empty) shouldBe 0
+    driverServed(none) shouldBe true
+    none.schema.map(f => (f.name, f.dataType)) shouldBe
+      Seq(("k", IntegerType), ("v", StringType))
+    none.count() shouldBe 0L
   }
 
   test("a crash inside vacuum leaves every listed version readable or named vacuumed") {
