@@ -35,7 +35,7 @@ import org.apache.spark.sql.execution.ExplainMode
   * means the plan lost broadcastability outright, not that a
   * threshold moved.
   *
-  * Run: `sbt "runMain graft.PlanGate"` (~10 min; streaming/sink queries
+  * Run: `sbt "runMain graft.PlanGate"` (~5 min; streaming/sink queries
   * execute their pipelines to reach a final plan — their fingerprint
   * covers the batch assembly of their result, the streaming micro-batch
   * plans stay covered by StreamingSpec).
@@ -66,20 +66,17 @@ object PlanGate {
   }
 
   /** The formatted AQE-final plan of registered query `name` on
-    * `sfDir`, from its second run in this JVM: the first run is
-    * discarded, because it plans against inputs that earlier queries
-    * left cached but not yet materialized, and AQE reuses shuffle stages
-    * along paths that depend on stage finish order (d03 read exch
-    * 5, 4, 4, 4 and q54 17, 18, 18, 18 over repeated runs). Each run
-    * builds the query afresh and collects it so AQE settles. */
+    * `sfDir`, run from an empty cache: many queries persist inputs and
+    * leave them cached, and a query planned against another one's
+    * cached frames gets a plan that depends on which queries ran before
+    * it and whether their caches were materialized yet (d03 read exch
+    * 5, 4, 4, 4 over repeated runs in one JVM). The query collects
+    * first so AQE settles. */
   def finalPlan(spark: SparkSession, name: String, sfDir: String): String = {
-    def run() = {
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      df.collect()
-      df
-    }
-    run()
-    run().queryExecution.explainString(ExplainMode.fromString("formatted"))
+    spark.catalog.clearCache()
+    val df = SparkEntry.queries(name)(spark, sfDir)
+    df.collect()
+    df.queryExecution.explainString(ExplainMode.fromString("formatted"))
   }
 
   def line(q: String, fp: Seq[(String, Int)]): String =

@@ -39,13 +39,14 @@ import org.apache.spark.sql.types._
   *    reads ([[SnapshotIndex]]), and no Spark job runs. A filter that
   *    fixes every key column to a literal reads the one bucket those
   *    literals hash into. On a session with [[graft.GraftExtensions]]
-  *    registered, a scan also runs no job when collected: if the files
-  *    it selects (that one bucket's, else every live file) add up to at
-  *    most `spark.sql.files.maxPartitionBytes`, it is read on the driver
-  *    with its filters and projection ([[DriverScanExec]]); a larger
-  *    scan runs Spark's file scan. A MERGE's or DELETE's read of small
-  *    touched buckets takes the driver path too, and feeds its shuffle
-  *    from one task.
+  *    registered, a scan also runs no job when collected: if it is the
+  *    whole query (a filter and projection, collected or taken) and the
+  *    files it selects (that one bucket's, else every live file) are at
+  *    most [[DriverScan.MaxFiles]] and add up to at most
+  *    `spark.sql.files.maxPartitionBytes`, it is read on the driver
+  *    with its filters and projection ([[DriverScanExec]]). A larger
+  *    scan, and a scan under an aggregate, a join or a MERGE's union,
+  *    runs Spark's file scan.
   *
   * The manifest chain doubles as a version log (the reference's
   * `DESCRIBE HISTORY` / `startingVersion` replay, `Query the Metric
@@ -442,9 +443,10 @@ object KeyedUpsert {
     * With [[DriverScan]] installed (`GraftExtensions`), collecting,
     * `head()` or `take` of any filter and projection of it runs no job
     * either while the files it selects are at most
-    * `spark.sql.files.maxPartitionBytes` in all, and falls back to
-    * Spark's scan above that. A fully-deleted snapshot (no live bucket)
-    * reads as zero rows of that schema. */
+    * [[DriverScan.MaxFiles]] and `spark.sql.files.maxPartitionBytes` in
+    * all, and falls back to Spark's scan above either bound. A
+    * fully-deleted snapshot (no live bucket) reads as zero rows of that
+    * schema. */
   def read(spark: SparkSession, targetDir: String,
       version: Option[Long] = None): DataFrame = {
     val t = new Table(spark, targetDir)

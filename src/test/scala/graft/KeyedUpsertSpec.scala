@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.sinks.{DriverScanExec, KeyedUpsert}
+import graft.sinks.{DriverScan, DriverScanExec, KeyedUpsert}
 
 class KeyedUpsertSpec extends SparkSpec {
   import spark.implicits._
@@ -701,7 +701,8 @@ class KeyedUpsertSpec extends SparkSpec {
     def live() = KeyedUpsert.snapshot(spark, dir).values.toSeq.sorted
       .map(rel => s"$dir/$rel")
     def lookup(s: String, n: Long) = $"s" === s && $"n" === n
-    val bound = spark.conf.get("spark.sql.files.maxPartitionBytes").toLong
+    val bound = math.min(spark.conf.get("spark.sql.files.maxPartitionBytes").toLong,
+      DriverScan.MaxBytes)
     /** Each filter reads `files` files, and the rows a plain parquet
       * read of the live dirs returns under the same filter. */
     def check(cells: Seq[(String, org.apache.spark.sql.Column, Long)]): Unit = {
@@ -712,14 +713,14 @@ class KeyedUpsertSpec extends SparkSpec {
         rows shouldBe scanned(reference.filter(f))._1
         read shouldBe files
         // served on the driver exactly when the files Spark's scan reads
-        // are at most the bound, with Spark's rows
+        // are at most the bounds, with Spark's rows
         val scan = KeyedUpsert.read(scanOnly, dir).filter(f)
         rows shouldBe sortedRows(scan)
         val bytes = planNodes(scan).collect {
           case s: FileSourceScanExec => s.metrics("filesSize").value
         }.sum
         bytes should be > 0L
-        driverServed(df) shouldBe (bytes <= bound)
+        driverServed(df) shouldBe (bytes <= bound && read <= DriverScan.MaxFiles)
       }
     }
     def allKeys(when: String): Unit = {
@@ -787,12 +788,15 @@ class KeyedUpsertSpec extends SparkSpec {
     Seq("numFiles", "numOutputRows", "bytes").map(exec.metrics(_).value) shouldBe
       Seq(1L, 1L, bytes)
     exec.simpleString(10) should include(
-      s"DriverScan bucket=${exec.bucket.get} files=1 bytes=$bytes <= maxPartitionBytes=524288")
-    // under an aggregate the exec runs as a one-partition RDD
+      s"DriverScan bucket=${exec.bucket.get} files=1 <= maxFiles=8 " +
+        s"bytes=$bytes <= maxBytes=524288")
+    // under an aggregate, Spark's scan: only a root collect or take is
+    // read on the driver
     lookup(42).count() shouldBe 1L
     val agg = lookup(42).groupBy().count()
     agg.collect().map(_.getLong(0)).toSeq shouldBe Seq(1L)
-    driverServed(agg) shouldBe true
+    driverServed(agg) shouldBe false
+    planNodes(agg).exists(_.isInstanceOf[FileSourceScanExec]) shouldBe true
     jobsIn(lookup(42).count()) should be > 0 // the guard sees jobs
     // a bucket over maxPartitionBytes stays on Spark's scan
     val key = "spark.sql.files.maxPartitionBytes"
@@ -806,7 +810,7 @@ class KeyedUpsertSpec extends SparkSpec {
     } finally spark.conf.set(key, bound)
   }
 
-  test("a range read over every live file runs on the driver, and on Spark's scan above the bound") {
+  test("a range read over every live file runs on the driver, and on Spark's scan above either bound") {
     import graft.pipeline.Medallion
     // hour partials as runHourPartials keys them: `id` over the grain's
     // columns, 3 remotes x 48 hours x 2 metrics over 4 buckets
@@ -849,9 +853,10 @@ class KeyedUpsertSpec extends SparkSpec {
     KeyedUpsert.restore(spark, dir, 2L)
     check(5L)
     // the path taken and why: no fixed bucket, every live file, its bytes
-    val live = KeyedUpsert.snapshot(spark, dir).values.toSeq
-      .flatMap(rel => new java.io.File(dir, rel).listFiles())
+    def liveFiles(d: String) = KeyedUpsert.snapshot(spark, d).values.toSeq
+      .flatMap(rel => new java.io.File(d, rel).listFiles())
       .filter(_.getName.endsWith(".parquet"))
+    val live = liveFiles(dir)
     live.size shouldBe 4
     val bytes = live.map(_.length).sum
     val df = range(spark, dir, None, 2L, 1L)
@@ -862,7 +867,7 @@ class KeyedUpsertSpec extends SparkSpec {
     Seq("numFiles", "numOutputRows", "bytes").map(exec.metrics(_).value) shouldBe
       Seq(4L, n.toLong, bytes)
     exec.simpleString(10) should include(
-      s"DriverScan buckets=all files=4 bytes=$bytes <= maxPartitionBytes=524288")
+      s"DriverScan buckets=all files=4 <= maxFiles=8 bytes=$bytes <= maxBytes=524288")
     // one byte over the bound: Spark's scan, the same rows
     val key = "spark.sql.files.maxPartitionBytes"
     val bound = spark.conf.get(key)
@@ -870,6 +875,27 @@ class KeyedUpsertSpec extends SparkSpec {
     try {
       val over = range(spark, dir, None, 2L, 1L)
       sortedRows(over) shouldBe sortedRows(df)
+      driverServed(over) shouldBe false
+      planNodes(over).exists(_.isInstanceOf[FileSourceScanExec]) shouldBe true
+    } finally spark.conf.set(key, bound)
+    // one file over the file cap, far under the byte bound: Spark's scan
+    val wide = tmp("upsert")
+    KeyedUpsert.upsert(spark, wide, partials(Seq(1L, 2L, 3L), 1), Seq("id"),
+      numBuckets = DriverScan.MaxFiles + 1)
+    KeyedUpsert.snapshot(spark, wide).size shouldBe DriverScan.MaxFiles + 1
+    val many = range(spark, wide, None, 2L, 1L)
+    sortedRows(many) shouldBe sortedRows(range(scanOnly, wide, None, 2L, 1L))
+    sortedRows(many) should not be empty
+    driverServed(many) shouldBe false
+    planNodes(many).exists(_.isInstanceOf[FileSourceScanExec]) shouldBe true
+    // over MaxBytes under Spark's default maxPartitionBytes: Spark's scan
+    val big = tmp("upsert")
+    KeyedUpsert.upsert(spark, big, partials(1L to 400L, 1), Seq("id"), numBuckets = 4)
+    liveFiles(big).map(_.length).sum should be > DriverScan.MaxBytes
+    spark.conf.set(key, (128L << 20).toString)
+    try {
+      val over = range(spark, big, None, 2L, 1L)
+      sortedRows(over) shouldBe sortedRows(range(scanOnly, big, None, 2L, 1L))
       driverServed(over) shouldBe false
       planNodes(over).exists(_.isInstanceOf[FileSourceScanExec]) shouldBe true
     } finally spark.conf.set(key, bound)
