@@ -42,11 +42,15 @@ import org.apache.spark.sql.types._
   *    registered, a scan also runs no job when collected: if it is the
   *    whole query (a filter and projection, collected or taken) and the
   *    files it selects (that one bucket's, else every live file) are at
-  *    most [[DriverScan.MaxFiles]] and add up to at most
-  *    `spark.sql.files.maxPartitionBytes`, it is read on the driver
-  *    with its filters and projection ([[DriverScanExec]]). A larger
-  *    scan, and a scan under an aggregate, a join or a MERGE's union,
-  *    runs Spark's file scan.
+  *    most [[DriverScan.MaxFiles]] and add up to at most the smaller
+  *    of [[DriverScan.MaxBytes]] and `spark.sql.files.maxPartitionBytes`,
+  *    it is read on the driver with its filters and projection
+  *    ([[DriverScanExec]]). The driver decodes each data file once per
+  *    JVM and keeps its rows in a bounded cache ([[DriverScan.Decoded]],
+  *    at most [[DriverScan.CacheBytes]]); since a commit never rewrites
+  *    a file, a later driver read of it opens nothing. A larger scan,
+  *    and a scan under an aggregate, a join or a MERGE's union, runs
+  *    Spark's file scan.
   *
   * The manifest chain doubles as a version log (the reference's
   * `DESCRIBE HISTORY` / `startingVersion` replay, `Query the Metric
@@ -443,8 +447,11 @@ object KeyedUpsert {
     * With [[DriverScan]] installed (`GraftExtensions`), collecting,
     * `head()` or `take` of any filter and projection of it runs no job
     * either while the files it selects are at most
-    * [[DriverScan.MaxFiles]] and `spark.sql.files.maxPartitionBytes` in
-    * all, and falls back to Spark's scan above either bound. A
+    * [[DriverScan.MaxFiles]] and, in all, at most the smaller of
+    * [[DriverScan.MaxBytes]] and `spark.sql.files.maxPartitionBytes`,
+    * and falls back to Spark's scan above either bound. Such a read
+    * decodes only the files the driver has not decoded before: the rows
+    * of each are cached per JVM ([[DriverScan.Decoded]]). A
     * fully-deleted snapshot (no live bucket) reads as zero rows of that
     * schema. */
   def read(spark: SparkSession, targetDir: String,

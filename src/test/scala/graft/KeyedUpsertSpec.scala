@@ -39,6 +39,10 @@ class KeyedUpsertSpec extends SparkSpec {
   private def driverServed(df: DataFrame): Boolean =
     planNodes(df).exists(_.isInstanceOf[DriverScanExec])
 
+  /** The `DriverScanExec` of `df`'s executed plan. */
+  private def driverExec(df: DataFrame): DriverScanExec =
+    planNodes(df).collect { case d: DriverScanExec => d }.head
+
   /** `df`'s rows as `Row.toString` prints them, byte arrays by value. */
   private def sortedRows(df: DataFrame): Seq[String] = {
     def show(v: Any): String = v match {
@@ -598,8 +602,8 @@ class KeyedUpsertSpec extends SparkSpec {
 
   /** A table whose key sits between columns of every storage-relevant
     * type, some nullable, run through MERGE (twice: the second onto live
-    * rows), DELETE, OPTIMIZE and RESTORE with `check(dir, version)` after
-    * each commit. */
+    * rows), DELETE, OPTIMIZE, RESTORE and a MERGE that vacuums all but
+    * its own version, with `check(dir, version)` after each commit. */
   private def afterEachOperation(check: (String, Long) => Unit): Unit = {
     val schema = StructType(Seq(
       StructField("amount", DecimalType(18, 2)),
@@ -639,6 +643,10 @@ class KeyedUpsertSpec extends SparkSpec {
     check(dir, 4L)
     KeyedUpsert.restore(spark, dir, 2L)
     check(dir, 5L)
+    KeyedUpsert.upsert(spark, dir, rows(45 until 55, 3), Seq("id"), numBuckets = 4,
+      retainVersions = 1)
+    KeyedUpsert.versions(spark, dir) shouldBe Seq(6L)
+    check(dir, 6L)
   }
 
   test("resolving a snapshot runs no Spark job after MERGE, DELETE, OPTIMIZE, RESTORE") {
@@ -782,7 +790,7 @@ class KeyedUpsertSpec extends SparkSpec {
     // the path taken and why, in metrics and in the plan string
     val df = lookup(42).select("v")
     df.collect().map(_.getString(0)).toSeq shouldBe Seq("v42")
-    val exec = planNodes(df).collect { case d: DriverScanExec => d }.head
+    val exec = driverExec(df)
     val bytes = new java.io.File(dir, KeyedUpsert.snapshot(spark, dir)(exec.bucket.get))
       .listFiles().filter(_.getName.endsWith(".parquet")).map(_.length).sum
     Seq("numFiles", "numOutputRows", "bytes").map(exec.metrics(_).value) shouldBe
@@ -862,7 +870,7 @@ class KeyedUpsertSpec extends SparkSpec {
     val df = range(spark, dir, None, 2L, 1L)
     val n = df.collect().length
     n should be > 0
-    val exec = planNodes(df).collect { case d: DriverScanExec => d }.head
+    val exec = driverExec(df)
     exec.bucket shouldBe None
     Seq("numFiles", "numOutputRows", "bytes").map(exec.metrics(_).value) shouldBe
       Seq(4L, n.toLong, bytes)
@@ -924,7 +932,7 @@ class KeyedUpsertSpec extends SparkSpec {
         var rows = Array.empty[Row]
         jobsIn { rows = df.collect() } shouldBe 0
         rows.length shouldBe math.min(n, 200)
-        val exec = planNodes(df).collect { case d: DriverScanExec => d }.head
+        val exec = driverExec(df)
         val opened = cumulative.indexWhere(_ >= n) match {
           case -1 => 4
           case i => i + 1
@@ -941,6 +949,180 @@ class KeyedUpsertSpec extends SparkSpec {
     none.schema.map(f => (f.name, f.dataType)) shouldBe
       Seq(("k", IntegerType), ("v", StringType))
     none.count() shouldBe 0L
+  }
+
+  /** `numFiles` and `cachedFiles` of `df` read on the driver, collected. */
+  private def fileCounts(df: DataFrame): (Long, Long) = {
+    df.collect()
+    val e = driverExec(df)
+    (e.metrics("numFiles").value, e.metrics("cachedFiles").value)
+  }
+
+  test("a repeat driver read is served from the cache; after an upsert only its bucket misses") {
+    val dir = tmp("upsert")
+    def upsert(ks: Seq[Int], gen: Int): Unit = KeyedUpsert.upsert(spark, dir,
+      ks.map(k => (k, s"v$k-$gen")).toDF("k", "v"), Seq("k"), numBuckets = 4)
+    upsert(0 until 100, 1)
+    def all() = KeyedUpsert.read(spark, dir)
+    // a take that stops inside a file it missed on caches nothing
+    fileCounts(all().limit(1)) shouldBe ((1L, 0L))
+    fileCounts(all().limit(1)) shouldBe ((1L, 0L))
+    fileCounts(all()) shouldBe ((4L, 0L))
+    fileCounts(all()) shouldBe ((4L, 4L))
+    fileCounts(all().limit(1)) shouldBe ((1L, 1L))
+    fileCounts(all().filter($"k" === 42).select("v")) shouldBe ((1L, 1L))
+    upsert(Seq(42), 2) // one key: one bucket rewritten
+    fileCounts(all()) shouldBe ((4L, 3L))
+    fileCounts(all()) shouldBe ((4L, 4L))
+    fileCounts(KeyedUpsert.read(spark, dir, Some(1L))) shouldBe ((4L, 4L))
+    all().filter($"k" === 42).select("v").as[String].collect().toSeq shouldBe Seq("v42-2")
+    // the rows a read returns are copies: changing them leaves the cache intact
+    val want = sortedRows(KeyedUpsert.read(scanOnly, dir))
+    want.size shouldBe 100
+    val rows = driverExec(all()).executeCollect()
+    rows.length shouldBe 100
+    rows.foreach(_.setInt(0, -1))
+    sortedRows(all()) shouldBe want
+  }
+
+  test("a cached driver read equals Spark's scan after every operation; a warm one opens no data file") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.countfs.impl", classOf[CountingFs].getName)
+    val queries = Seq[(String, DataFrame => DataFrame)](
+      "all" -> (df => df),
+      "key" -> (_.filter($"id" === 31)),
+      "non-key" -> (_.filter($"name".isNotNull && $"id" > 10).select("name", "blob", "id")))
+    afterEachOperation { (local, v) =>
+      val dir = "countfs://" + local
+      for (version <- Seq(None, Some(v)); (name, q) <- queries; pass <- Seq("cold", "warm"))
+        withClue(s"version $v $version $name $pass: ") {
+          val df = q(KeyedUpsert.read(spark, dir, version))
+          var rows = Seq.empty[String]
+          CountingFs.reset()
+          jobsIn { rows = sortedRows(df) } shouldBe 0
+          val opens = CountingFs.dataFileOpens.get
+          val e = driverExec(df)
+          val (files, cached) = (e.metrics("numFiles").value, e.metrics("cachedFiles").value)
+          files should be > 0L
+          (opens > 0) shouldBe (cached < files)
+          if (pass == "warm") (opens, cached) shouldBe ((0, files))
+          rows shouldBe sortedRows(q(KeyedUpsert.read(scanOnly, dir, version)))
+        }
+    }
+  }
+
+  test("driver reads beside a concurrent writer equal Spark's scan of the version each resolved") {
+    import scala.jdk.CollectionConverters._
+    val dir = tmp("upsert")
+    def batch(gen: Int) = (0 until 60).filter(k => gen == 0 || k % 6 == gen % 6)
+      .map(k => (k, gen, s"v$k-$gen")).toDF("k", "g", "v")
+    KeyedUpsert.upsert(spark, dir, batch(0), Seq("k"), numBuckets = 4)
+    val queries = Seq[DataFrame => DataFrame](df => df, _.filter($"k" === 7),
+      _.filter($"g" > 0).select("v"))
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long, Boolean, Seq[String])]()
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val readers = (0 until 2).map { i =>
+      val t = new Thread(() => try {
+        var n = 0
+        while (!stop.get) {
+          val q = (i + n) % queries.size
+          n += 1
+          val v = KeyedUpsert.versions(spark, dir).last
+          val df = queries(q)(KeyedUpsert.read(spark, dir, Some(v)))
+          seen.add((q, v, driverServed(df), sortedRows(df)))
+        }
+      } catch { case e: Throwable => errors.add(e) }, s"reader-$i")
+      t.start()
+      t
+    }
+    try for (gen <- 1 to 6)
+      KeyedUpsert.upsert(spark, dir, batch(gen), Seq("k"), numBuckets = 4)
+    finally {
+      stop.set(true)
+      readers.foreach(_.join())
+    }
+    errors.asScala.toSeq shouldBe empty
+    val reads = seen.asScala.toSeq
+    reads.map(_._2).distinct.size should be > 1
+    val reference = reads.map(r => (r._1, r._2)).distinct.map { case (q, v) =>
+      (q, v) -> sortedRows(queries(q)(KeyedUpsert.read(scanOnly, dir, Some(v))))
+    }.toMap
+    for ((q, v, served, rows) <- reads) withClue(s"query $q version $v: ") {
+      served shouldBe true
+      rows shouldBe reference((q, v))
+    }
+  }
+
+  test("a changed reader conf misses the cache and keeps the entry of the old conf") {
+    val dir = tmp("upsert")
+    KeyedUpsert.upsert(spark, dir,
+      (0 until 50).map(k => (k, s"v$k")).toDF("k", "v"), Seq("k"), numBuckets = 4)
+    def read() = KeyedUpsert.read(spark, dir)
+    val want = sortedRows(KeyedUpsert.read(scanOnly, dir))
+    fileCounts(read()) shouldBe ((4L, 0L))
+    for ((key, value) <- Seq("spark.sql.session.timeZone" -> "America/Los_Angeles",
+        "spark.sql.parquet.int96RebaseModeInRead" -> "LEGACY")) withClue(s"$key: ") {
+      fileCounts(read()) shouldBe ((4L, 4L))
+      val before = spark.conf.get(key)
+      spark.conf.set(key, value)
+      try {
+        fileCounts(read()) shouldBe ((4L, 0L))
+        fileCounts(read()) shouldBe ((4L, 4L))
+        sortedRows(read()) shouldBe want
+      } finally spark.conf.set(key, before)
+      fileCounts(read()) shouldBe ((4L, 4L))
+    }
+  }
+
+  test("the decoded-file cache stays within its byte budget and decodes an evicted file again") {
+    import graft.sinks.DecodedFiles
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{UnsafeProjection, UnsafeRow}
+    import org.apache.spark.unsafe.types.UTF8String
+    val toUnsafe = UnsafeProjection.create(Array[DataType](IntegerType, StringType))
+    def rowsOf(file: Int, n: Int = 100): Array[UnsafeRow] = (0 until n).map(j =>
+      toUnsafe(InternalRow(j, UTF8String.fromString(s"f$file-r$j"))).copy()).toArray
+    def show(rows: Array[UnsafeRow]) =
+      rows.map(r => (r.getInt(0), r.getUTF8String(1).toString)).toSeq
+    val perFile = DecodedFiles.weigh(rowsOf(0))
+    val budget = 3 * perFile + perFile / 2 // room for three files
+    val cache = new DecodedFiles(budget)
+    val schema = new StructType().add("j", IntegerType).add("s", StringType)
+    def key(file: Int) = DecodedFiles.Key(s"file:/t/f$file.parquet", 1000L + file, 0L,
+      schema, Map.empty, Seq("tz" -> "UTC"))
+    var decodes = 0
+    def load(file: Int, n: Int = 100) = cache.load(key(file)) {
+      decodes += 1
+      rowsOf(file, n)
+    }
+    def held(files: Seq[Int]) = files.map(f => cache.cached(key(f)).isDefined)
+    for (f <- 0 until 10) withClue(s"file $f: ") {
+      val (rows, hit) = load(f)
+      hit shouldBe false
+      show(rows) shouldBe show(rowsOf(f))
+      cache.bytes should be <= budget
+    }
+    decodes shouldBe 10
+    cache.bytes shouldBe 3 * perFile
+    held(0 until 10) shouldBe (0 until 10).map(_ >= 7) // in recency order 7, 8, 9
+    held(Seq(7)) shouldBe Seq(true) // 7 is now the most recently used: 10 evicts 8
+    load(10)._2 shouldBe false
+    held(7 to 10) shouldBe Seq(true, false, true, true)
+    // an evicted file decodes again, whole
+    val (again, hit) = load(0)
+    hit shouldBe false
+    decodes shouldBe 12
+    show(again) shouldBe show(rowsOf(0))
+    load(0)._2 shouldBe true
+    decodes shouldBe 12
+    cache.bytes should be <= budget
+    // a file heavier than the whole budget is returned and never held
+    val (big, bigHit) = load(99, 400)
+    bigHit shouldBe false
+    show(big) shouldBe show(rowsOf(99, 400))
+    held(Seq(99)) shouldBe Seq(false)
+    cache.bytes should be <= budget
   }
 
   test("a crash inside vacuum leaves every listed version readable or named vacuumed") {

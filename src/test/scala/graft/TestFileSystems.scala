@@ -63,8 +63,8 @@ class DeleteCrashingFs extends RawLocalFileSystem {
 object DeleteCrashingFs extends Trap
 
 /** The local file system under the `countfs:` scheme, counting the
-  * `_manifests/` listings, the manifest reads and the `__bucket=`
-  * directory listings it serves. */
+  * `_manifests/` listings, the manifest reads, the `__bucket=`
+  * directory listings and the parquet data-file opens it serves. */
 class CountingFs extends RawLocalFileSystem {
   override def getUri: java.net.URI = java.net.URI.create("countfs:///")
 
@@ -76,13 +76,16 @@ class CountingFs extends RawLocalFileSystem {
 
   override def open(f: HPath, bufferSize: Int): FSDataInputStream = {
     if (f.getParent.getName == "_manifests") CountingFs.manifestReads.incrementAndGet()
+    if (f.getName.endsWith(".parquet")) CountingFs.dataFileOpens.incrementAndGet()
     super.open(f, bufferSize)
   }
 }
 
 object CountingFs {
-  val manifestListings, manifestReads, bucketListings = new AtomicInteger()
+  val manifestListings, manifestReads, bucketListings, dataFileOpens =
+    new AtomicInteger()
 
   def reset(): Unit =
-    Seq(manifestListings, manifestReads, bucketListings).foreach(_.set(0))
+    Seq(manifestListings, manifestReads, bucketListings, dataFileOpens)
+      .foreach(_.set(0))
 }
