@@ -42,27 +42,48 @@ import org.apache.spark.sql.execution.ExplainMode
   */
 object PlanGate {
 
-  /** Counted plan-shape features: name -> regex over the formatted
-    * AQE-final plan (details sections included, so Exchange arguments
-    * like SinglePartition are visible). `cg` counts codegen'd operators
-    * — formatted mode renders them as `+- * Op (n)` / `:- * Op (n)`. */
+  /** Counted plan-shape features: name -> regex over one operator's
+    * details entry in the formatted plan (its `Name [codegen id : k]`
+    * header line, then its arguments, so an Exchange's SinglePartition
+    * is visible). Each operator counts once: `exch` counts shuffle,
+    * broadcast and reused exchanges, `cg` the codegen'd operators,
+    * `single` the operators whose arguments name SinglePartition. */
   val Features: Seq[(String, String)] = Seq(
-    "smj" -> "SortMergeJoin",
-    "bhj" -> "BroadcastHashJoin",
-    "shj" -> "ShuffledHashJoin",
-    "bnlj" -> "BroadcastNestedLoop",
-    "cart" -> "CartesianProduct",
-    "exch" -> "Exchange",
+    "smj" -> "^SortMergeJoin",
+    "bhj" -> "^BroadcastHashJoin",
+    "shj" -> "^ShuffledHashJoin",
+    "bnlj" -> "^BroadcastNestedLoop",
+    "cart" -> "^CartesianProduct",
+    "exch" -> "^\\w*Exchange",
     "single" -> "SinglePartition",
-    "cg" -> "[+:]- \\* ")
+    "cg" -> "\\[codegen id : \\d+\\]")
 
-  /** Feature counts over the AQE-final section only: the "Initial
-    * Plan" section that follows renders the pre-adaptive plan, whose
+  /** An operator's details entry: `(n) Name ...` and its argument
+    * lines, up to a blank line, the next entry or a section heading. */
+  private val Entry = """(?m)^\((\d+)\) (.*(?:\n(?!\(\d+\) |=|Subquery:).+)*)""".r
+
+  /** An `AdaptiveSparkPlan (a)` line, its `== Final Plan ==` (or
+    * `Current Plan`) heading and the final root `(r)` below it. */
+  private val FinalSection =
+    """(?m)^.*?\((\d+)\).*\n[ +-]*== (?:Final|Current) Plan ==\n.*?\((\d+)\)""".r
+
+  /** Feature counts over the whole AQE-final plan, one per operator,
+    * taken from the numbered details entries. Formatted mode numbers an
+    * `AdaptiveSparkPlan`'s final plan first (its root last), then the
+    * operators only its Initial Plan holds, then the plan node itself.
+    * The ids between the final root and the plan node are therefore the
+    * Initial Plan's alone, and are skipped: the pre-adaptive plan's
     * operator set legitimately differs (SMJ->BHJ conversion, coalesced
-    * exchanges). */
+    * exchanges). This holds at every level, including the plan a cached
+    * frame's `InMemoryRelation` prints inside the tree, where the tree
+    * text's order and indentation do not mark where sections end; so an
+    * AQE build-side swap moves no operator in or out of the count. */
   def fingerprint(formatted: String): Seq[(String, Int)] = {
-    val fin = formatted.split("== Initial Plan ==")(0)
-    Features.map { case (k, re) => k -> re.r.findAllIn(fin).size }
+    val initialOnly = FinalSection.findAllMatchIn(formatted)
+      .flatMap(m => m.group(2).toInt + 1 until m.group(1).toInt).toSet
+    val counted = Entry.findAllMatchIn(formatted)
+      .collect { case m if !initialOnly(m.group(1).toInt) => m.group(2) }.toSeq
+    Features.map { case (k, re) => k -> counted.count(re.r.findFirstIn(_).isDefined) }
   }
 
   /** The formatted AQE-final plan of registered query `name` on

@@ -125,7 +125,7 @@ object Multimodal {
     * classic average-hash construction, so near-identical media differ
     * in few bits and the hash drops straight into the SAME banded-LSH
     * machinery as text SimHash
-    * ([[graft.text.Dedup.hashBandPairs]]). The bit test is the
+    * ([[graft.text.Dedup.hashBandPairsManaged]]). The bit test is the
     * all-integer cross-multiplication `s*N > tot*c` (never a float
     * mean), so any engine replays every bit exactly.
     *

@@ -147,7 +147,7 @@ object MultimodalQueries {
     // multimodal near-dup: 64-bit aHash perceptual fingerprint (64
     // equal spans of the decoded byte stream, bit = span mean > global
     // mean, all-integer comparisons) fed through the SAME banded-LSH
-    // machinery as text SimHash (Dedup.hashBandPairs): 16-bit-band
+    // machinery as text SimHash (Dedup.hashBandPairsManaged): 16-bit-band
     // blocking, occupancy-derived hot-bucket cap, Hamming <= 6. The
     // dedup family's member for image/audio/video columns — swap the
     // byte-stub decode for a real codec and the plan is unchanged.

@@ -39,18 +39,12 @@ import org.apache.spark.sql.types._
   *    reads ([[SnapshotIndex]]), and no Spark job runs. A filter that
   *    fixes every key column to a literal reads the one bucket those
   *    literals hash into. On a session with [[graft.GraftExtensions]]
-  *    registered, a scan also runs no job when collected: if it is the
-  *    whole query (a filter and projection, collected or taken) and the
-  *    files it selects (that one bucket's, else every live file) are at
-  *    most [[DriverScan.MaxFiles]] and add up to at most the smaller
-  *    of [[DriverScan.MaxBytes]] and `spark.sql.files.maxPartitionBytes`,
-  *    it is read on the driver with its filters and projection
-  *    ([[DriverScanExec]]). The driver decodes each data file once per
-  *    JVM and keeps its rows in a bounded cache ([[DriverScan.Decoded]],
-  *    at most [[DriverScan.CacheBytes]]); since a commit never rewrites
-  *    a file, a later driver read of it opens nothing. A larger scan,
-  *    and a scan under an aggregate, a join or a MERGE's union, runs
-  *    Spark's file scan.
+  *    registered, a small scan that is the whole query (a filter and
+  *    projection, collected or taken) also runs no job: it is read on
+  *    the driver ([[DriverScanExec]]), by the size rule stated once in
+  *    [[DriverScan]], and each data file it reads is decoded once per
+  *    JVM ([[DriverScan.Decoded]]). A larger scan, and a scan under an
+  *    aggregate, a join or a MERGE's union, runs Spark's file scan.
   *
   * The manifest chain doubles as a version log (the reference's
   * `DESCRIBE HISTORY` / `startingVersion` replay, `Query the Metric
@@ -446,12 +440,8 @@ object KeyedUpsert {
     * fixes every key column to a literal lists and scans one bucket.
     * With [[DriverScan]] installed (`GraftExtensions`), collecting,
     * `head()` or `take` of any filter and projection of it runs no job
-    * either while the files it selects are at most
-    * [[DriverScan.MaxFiles]] and, in all, at most the smaller of
-    * [[DriverScan.MaxBytes]] and `spark.sql.files.maxPartitionBytes`,
-    * and falls back to Spark's scan above either bound. Such a read
-    * decodes only the files the driver has not decoded before: the rows
-    * of each are cached per JVM ([[DriverScan.Decoded]]). A
+    * either while the files it selects are within [[DriverScan]]'s
+    * size rule, and falls back to Spark's scan above it. A
     * fully-deleted snapshot (no live bucket) reads as zero rows of that
     * schema. */
   def read(spark: SparkSession, targetDir: String,

@@ -123,11 +123,11 @@ private[sinks] final class SnapshotIndex(fs: FileSystem, target: Path,
   * driver anyway. A scan under an aggregate, a join or a MERGE's union
   * keeps Spark's file scan, so its rows are read and shuffled by tasks.
   *
-  * "Small" is measured, not assumed. The files the scan selects
-  * ([[SnapshotIndex]]'s `select`: the bucket a full-key lookup fixes,
-  * otherwise every live file) number at most [[MaxFiles]] and add up to
-  * at most [[MaxBytes]] and `spark.sql.files.maxPartitionBytes`. A file
-  * the driver has not decoded before ([[Decoded]] misses) costs about
+  * The rule: the files the scan selects ([[SnapshotIndex]]'s `select`:
+  * the bucket a full-key lookup fixes, otherwise every live file) number
+  * at most [[MaxFiles]] and add up to at most [[MaxBytes]]; no session
+  * conf moves either cap. "Small" is measured, not assumed. A file the
+  * driver has not decoded before ([[Decoded]] misses) costs about
   * 1.4 ms plus about 0.02 ms per KB, read one after another, where
   * Spark's scan spreads the files over its tasks after a fixed job
   * cost. A range read under `Medallion.finalizeRollup` (one remote-day
@@ -157,8 +157,7 @@ object DriverScan extends SparkStrategy {
   /** The most files a driver read takes on; see the table above. */
   val MaxFiles = 8
 
-  /** The most bytes a driver read takes on, whatever the session's
-    * `maxPartitionBytes` (Spark's default is 128 MB). */
+  /** The most bytes a driver read takes on; see the table above. */
   val MaxBytes: Long = 512L * 1024
 
   /** The decoded bytes [[Decoded]] holds at most. Parquet files decode
@@ -184,11 +183,10 @@ object DriverScan extends SparkStrategy {
         if l.output.size == r.dataSchema.size &&
           !(projects ++ filters).exists(SubqueryExpression.hasSubquery) =>
       val conf = r.sparkSession.sessionState.conf
-      val bound = math.min(conf.filesMaxPartitionBytes, MaxBytes)
       val (bucket, files) = index.select(Shim.normalizeExprs(filters, l.output))
-      Option.when(files.size <= MaxFiles && files.map(_.getLen).sum <= bound &&
+      Option.when(files.size <= MaxFiles && files.map(_.getLen).sum <= MaxBytes &&
           !conf.ignoreMissingFiles && !conf.ignoreCorruptFiles)(
-        DriverScanExec(projects, filters, l.output, r, bucket, files, bound))
+        DriverScanExec(projects, filters, l.output, r, bucket, files))
     case _ => None
   }
 }
@@ -212,8 +210,6 @@ private[graft] final class DecodedFiles(budget: Long) {
     .weigher[Key, Array[UnsafeRow]]((_, rows) => math.min(weigh(rows), Int.MaxValue).toInt)
     .build[Key, Array[UnsafeRow]]()
 
-  def cached(key: Key): Option[Array[UnsafeRow]] = Option(cache.getIfPresent(key))
-
   /** `key`'s rows and whether they were cached; on a miss `decode`
     * yields them (every row of the file) and they are stored. */
   def load(key: Key)(decode: => Array[UnsafeRow]): (Array[UnsafeRow], Boolean) = {
@@ -224,9 +220,6 @@ private[graft] final class DecodedFiles(budget: Long) {
     }
     (rows, !decoded)
   }
-
-  /** Stores `rows`, every row of `key`'s file, unless it is cached. */
-  def offer(key: Key, rows: Array[UnsafeRow]): Unit = cache.asMap.putIfAbsent(key, rows)
 
   /** The weight of everything cached. */
   def bytes: Long = cache.asMap.values.asScala.map(weigh).sum
@@ -247,28 +240,25 @@ private[graft] object DecodedFiles {
     rows.iterator.map(_.getSizeInBytes + RowOverhead).sum
 }
 
-/** A small KeyedUpsert snapshot scan at the root of a query, read on
-  * the driver: `executeCollect` reads `files` (the fixed `bucket`'s, or
-  * every live file when it is None) in the calling thread. A file is
-  * decoded whole with Spark's own parquet reader (its schema handling
-  * and rebase modes) for the relation's full schema, once per JVM: its
-  * rows are kept in [[DriverScan.Decoded]], and a later read of the file
-  * under the same conf opens nothing. Every read then keeps the rows ALL
-  * `filters` hold for (no filter keeps every row) and projects fresh
-  * copies to `projects`. `executeTake(n)` goes file by file and stops
-  * at the `n`-th row; a file it stops in before its end is not cached,
-  * so no entry is ever partial. Like `LocalTableScanExec`, it runs no
+/** A small KeyedUpsert snapshot scan at the root of a query (the rule
+  * is [[DriverScan]]'s), read on the driver: `executeCollect` reads
+  * `files` (the fixed `bucket`'s, or every live file when it is None) in
+  * the calling thread. A file is decoded whole with Spark's own parquet
+  * reader (its schema handling and rebase modes) for the relation's full
+  * schema, once per JVM: its rows are kept in [[DriverScan.Decoded]],
+  * and a later read of the file under the same conf opens nothing.
+  * Every read then keeps the rows ALL `filters` hold for (no filter
+  * keeps every row) and projects fresh copies to `projects`.
+  * `executeTake(n)` goes file by file the same way and stops at the file
+  * that yields the `n`-th row. Like `LocalTableScanExec`, it runs no
   * job; `execute()` (a root `.rdd`, `foreach` or cache) returns the
-  * same rows as a one-partition RDD. `bound` is the byte limit the
-  * planner checked the files against: [[DriverScan.MaxBytes]] or the
-  * session's `maxPartitionBytes`, whichever is smaller. As in
-  * `FileSourceScanExec`, the relation and the files are driver-side
-  * only: the `CollectLimitExec` above the exec may ship this plan node
-  * in a closure. */
+  * same rows as a one-partition RDD. As in `FileSourceScanExec`, the
+  * relation and the files are driver-side only: the `CollectLimitExec`
+  * above the exec may ship this plan node in a closure. */
 case class DriverScanExec(projects: Seq[NamedExpression],
     filters: Seq[Expression], relationOutput: Seq[Attribute],
     @transient relation: HadoopFsRelation, bucket: Option[Long],
-    @transient files: Seq[FileStatus], bound: Long)
+    @transient files: Seq[FileStatus])
     extends LeafExecNode {
 
   override def output: Seq[Attribute] = projects.map(_.toAttribute)
@@ -284,7 +274,7 @@ case class DriverScanExec(projects: Seq[NamedExpression],
   override def simpleString(maxFields: Int): String =
     s"DriverScan ${bucket.fold("buckets=all")(bk => s"bucket=$bk")} " +
       s"files=${files.size} <= maxFiles=${DriverScan.MaxFiles} " +
-      s"bytes=$bytes <= maxBytes=$bound " +
+      s"bytes=$bytes <= maxBytes=${DriverScan.MaxBytes} " +
       truncatedString(output, "[", ", ", "]", maxFields)
 
   override def executeCollect(): Array[InternalRow] = read(Int.MaxValue)
@@ -292,7 +282,8 @@ case class DriverScanExec(projects: Seq[NamedExpression],
   override def executeTake(n: Int): Array[InternalRow] = read(n)
 
   /** The first `limit` kept rows, projected; files are consulted in
-    * order and none after the one that yields the `limit`-th row.
+    * order, each decoded whole or served from the cache, and none after
+    * the one that yields the `limit`-th row.
     * `numFiles` and `bytes` count the files consulted, `cachedFiles`
     * those of them served from the cache. */
   private def read(limit: Int): Array[InternalRow] = {
@@ -308,31 +299,15 @@ case class DriverScanExec(projects: Seq[NamedExpression],
     val project = UnsafeProjection.create(projects, relationOutput)
     project.initialize(0)
     val rows = ArrayBuffer.empty[InternalRow]
-    def serve(decoded: Iterator[InternalRow]): Unit =
-      rows ++= decoded.filter(row => keep.forall(_.eval(row)))
-        .take(limit - rows.size).map(project(_).copy())
     val next = files.iterator
     var (opened, openedBytes, cached) = (0L, 0L, 0L)
     while (rows.size < limit && next.hasNext) {
       val f = next.next()
       val key = DecodedFiles.Key(f.getPath.toString, f.getLen, f.getModificationTime,
         relation.dataSchema, relation.options, conf)
-      val hit = if (limit == Int.MaxValue) {
-        val (all, wasCached) = DriverScan.Decoded.load(key)(decode(reader, f)(_.toArray))
-        serve(all.iterator)
-        wasCached
-      } else DriverScan.Decoded.cached(key) match {
-        case Some(all) =>
-          serve(all.iterator)
-          true
-        case None => // decode only as far as the limit needs
-          decode(reader, f) { it =>
-            val all = ArrayBuffer.empty[UnsafeRow]
-            serve(it.map { row => all += row; row })
-            if (!it.hasNext) DriverScan.Decoded.offer(key, all.toArray)
-          }
-          false
-      }
+      val (all, hit) = DriverScan.Decoded.load(key)(decode(reader, f))
+      rows ++= all.iterator.filter(row => keep.forall(_.eval(row)))
+        .take(limit - rows.size).map(project(_).copy())
       opened += 1
       openedBytes += f.getLen
       if (hit) cached += 1
@@ -344,16 +319,15 @@ case class DriverScanExec(projects: Seq[NamedExpression],
     rows.toArray
   }
 
-  /** `use` applied to `f`'s rows as `reader` decodes them, each copied
-    * to an `UnsafeRow` of the relation's full schema; `f` is closed
-    * after. */
-  private def decode[T](reader: ParquetPartitionReaderFactory, f: FileStatus)(
-      use: Iterator[UnsafeRow] => T): T = {
+  /** Every row of `f` as `reader` decodes it, each copied to an
+    * `UnsafeRow` of the relation's full schema; `f` is closed after. */
+  private def decode(reader: ParquetPartitionReaderFactory, f: FileStatus):
+      Array[UnsafeRow] = {
     val r = reader.buildReader(PartitionedFile(InternalRow.empty,
       SparkPath.fromFileStatus(f), 0L, f.getLen, Array.empty,
       f.getModificationTime, f.getLen, Map.empty))
     val toUnsafe = UnsafeProjection.create(relation.dataSchema)
-    try use(Iterator.continually(r).takeWhile(_.next()).map(_ => toUnsafe(r.get()).copy()))
+    try Iterator.continually(r).takeWhile(_.next()).map(_ => toUnsafe(r.get()).copy()).toArray
     finally r.close()
   }
 

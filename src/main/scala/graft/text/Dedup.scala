@@ -566,14 +566,9 @@ object Dedup {
     * hash (m05, [[graft.multimodal.Multimodal.perceptualHash]]) both
     * feed this — one banding machinery, every modality that can
     * produce a Hamming-space fingerprint. `metricName` labels the
-    * drop-counter observation and must be query-unique. */
-  def hashBandPairs(hashes: DataFrame, maxHamming: Int, cap: Int,
-      metricName: String, refineThreshold: Int = 2000): DataFrame =
-    hashBandPairsManaged(hashes, maxHamming, cap, metricName,
-      refineThreshold)._1
-
-  /** [[hashBandPairs]] plus a release handle for the capped band cache
-    * (see [[minhashLshPairsManaged]] for the call contract). */
+    * drop-counter observation and must be query-unique. Returns the
+    * pairs and a release handle for the capped band cache (see
+    * [[minhashLshPairsManaged]] for the call contract). */
   def hashBandPairsManaged(hashes: DataFrame, maxHamming: Int, cap: Int,
       metricName: String, refineThreshold: Int = 2000)
       : (DataFrame, () => Unit) = {

@@ -709,8 +709,6 @@ class KeyedUpsertSpec extends SparkSpec {
     def live() = KeyedUpsert.snapshot(spark, dir).values.toSeq.sorted
       .map(rel => s"$dir/$rel")
     def lookup(s: String, n: Long) = $"s" === s && $"n" === n
-    val bound = math.min(spark.conf.get("spark.sql.files.maxPartitionBytes").toLong,
-      DriverScan.MaxBytes)
     /** Each filter reads `files` files, and the rows a plain parquet
       * read of the live dirs returns under the same filter. */
     def check(cells: Seq[(String, org.apache.spark.sql.Column, Long)]): Unit = {
@@ -728,7 +726,7 @@ class KeyedUpsertSpec extends SparkSpec {
           case s: FileSourceScanExec => s.metrics("filesSize").value
         }.sum
         bytes should be > 0L
-        driverServed(df) shouldBe (bytes <= bound && read <= DriverScan.MaxFiles)
+        driverServed(df) shouldBe (bytes <= DriverScan.MaxBytes && read <= DriverScan.MaxFiles)
       }
     }
     def allKeys(when: String): Unit = {
@@ -806,16 +804,19 @@ class KeyedUpsertSpec extends SparkSpec {
     driverServed(agg) shouldBe false
     planNodes(agg).exists(_.isInstanceOf[FileSourceScanExec]) shouldBe true
     jobsIn(lookup(42).count()) should be > 0 // the guard sees jobs
-    // a bucket over maxPartitionBytes stays on Spark's scan
-    val key = "spark.sql.files.maxPartitionBytes"
-    val bound = spark.conf.get(key)
-    spark.conf.set(key, (bytes - 1).toString)
-    try {
-      val over = lookup(42)
-      sortedRows(over) shouldBe Seq("[42,v42]")
-      driverServed(over) shouldBe false
-      planNodes(over).exists(_.isInstanceOf[FileSourceScanExec]) shouldBe true
-    } finally spark.conf.set(key, bound)
+    // a bucket over MaxBytes stays on Spark's scan: one bucket of
+    // incompressible values
+    val wide = tmp("upsert")
+    val rng = new scala.util.Random(11)
+    KeyedUpsert.upsert(spark, wide, (0 until 20000).map(k =>
+      (k, rng.alphanumeric.take(60).mkString)).toDF("k", "v"), Seq("k"), numBuckets = 1)
+    new java.io.File(wide, KeyedUpsert.snapshot(spark, wide)(0L)).listFiles()
+      .filter(_.getName.endsWith(".parquet")).map(_.length).sum should be > DriverScan.MaxBytes
+    val over = KeyedUpsert.read(spark, wide).filter($"k" === 42)
+    sortedRows(over) shouldBe sortedRows(KeyedUpsert.read(scanOnly, wide).filter($"k" === 42))
+    sortedRows(over).size shouldBe 1
+    driverServed(over) shouldBe false
+    planNodes(over).exists(_.isInstanceOf[FileSourceScanExec]) shouldBe true
   }
 
   test("a range read over every live file runs on the driver, and on Spark's scan above either bound") {
@@ -876,16 +877,19 @@ class KeyedUpsertSpec extends SparkSpec {
       Seq(4L, n.toLong, bytes)
     exec.simpleString(10) should include(
       s"DriverScan buckets=all files=4 <= maxFiles=8 bytes=$bytes <= maxBytes=524288")
-    // one byte over the bound: Spark's scan, the same rows
+    // maxPartitionBytes does not move the rule: with splits smaller than
+    // the selected bytes, the read stays on the driver
     val key = "spark.sql.files.maxPartitionBytes"
-    val bound = spark.conf.get(key)
+    val split = spark.conf.get(key)
     spark.conf.set(key, (bytes - 1).toString)
     try {
-      val over = range(spark, dir, None, 2L, 1L)
-      sortedRows(over) shouldBe sortedRows(df)
-      driverServed(over) shouldBe false
-      planNodes(over).exists(_.isInstanceOf[FileSourceScanExec]) shouldBe true
-    } finally spark.conf.set(key, bound)
+      val under = range(spark, dir, None, 2L, 1L)
+      var rows = Seq.empty[String]
+      jobsIn { rows = sortedRows(under) } shouldBe 0
+      driverServed(under) shouldBe true
+      rows shouldBe sortedRows(range(scanOnly, dir, None, 2L, 1L))
+      rows shouldBe sortedRows(df)
+    } finally spark.conf.set(key, split)
     // one file over the file cap, far under the byte bound: Spark's scan
     val wide = tmp("upsert")
     KeyedUpsert.upsert(spark, wide, partials(Seq(1L, 2L, 3L), 1), Seq("id"),
@@ -896,17 +900,15 @@ class KeyedUpsertSpec extends SparkSpec {
     sortedRows(many) should not be empty
     driverServed(many) shouldBe false
     planNodes(many).exists(_.isInstanceOf[FileSourceScanExec]) shouldBe true
-    // over MaxBytes under Spark's default maxPartitionBytes: Spark's scan
+    // over MaxBytes, far under the file cap: Spark's scan
     val big = tmp("upsert")
     KeyedUpsert.upsert(spark, big, partials(1L to 400L, 1), Seq("id"), numBuckets = 4)
     liveFiles(big).map(_.length).sum should be > DriverScan.MaxBytes
-    spark.conf.set(key, (128L << 20).toString)
-    try {
-      val over = range(spark, big, None, 2L, 1L)
-      sortedRows(over) shouldBe sortedRows(range(scanOnly, big, None, 2L, 1L))
-      driverServed(over) shouldBe false
-      planNodes(over).exists(_.isInstanceOf[FileSourceScanExec]) shouldBe true
-    } finally spark.conf.set(key, bound)
+    val over = range(spark, big, None, 2L, 1L)
+    sortedRows(over) shouldBe sortedRows(range(scanOnly, big, None, 2L, 1L))
+    sortedRows(over) should not be empty
+    driverServed(over) shouldBe false
+    planNodes(over).exists(_.isInstanceOf[FileSourceScanExec]) shouldBe true
   }
 
   test("an unfiltered driver read keeps every row; head and take stop at the file that fills them") {
@@ -964,10 +966,13 @@ class KeyedUpsertSpec extends SparkSpec {
       ks.map(k => (k, s"v$k-$gen")).toDF("k", "v"), Seq("k"), numBuckets = 4)
     upsert(0 until 100, 1)
     def all() = KeyedUpsert.read(spark, dir)
-    // a take that stops inside a file it missed on caches nothing
+    val first = sortedRows(KeyedUpsert.read(scanOnly, dir))
+    // a take decodes the file it stops in whole and caches it
     fileCounts(all().limit(1)) shouldBe ((1L, 0L))
-    fileCounts(all().limit(1)) shouldBe ((1L, 0L))
-    fileCounts(all()) shouldBe ((4L, 0L))
+    fileCounts(all().limit(1)) shouldBe ((1L, 1L))
+    val whole = all()
+    sortedRows(whole) shouldBe first // the cached file holds every row
+    Seq("numFiles", "cachedFiles").map(driverExec(whole).metrics(_).value) shouldBe Seq(4L, 1L)
     fileCounts(all()) shouldBe ((4L, 4L))
     fileCounts(all().limit(1)) shouldBe ((1L, 1L))
     fileCounts(all().filter($"k" === 42).select("v")) shouldBe ((1L, 1L))
@@ -1096,7 +1101,9 @@ class KeyedUpsertSpec extends SparkSpec {
       decodes += 1
       rowsOf(file, n)
     }
-    def held(files: Seq[Int]) = files.map(f => cache.cached(key(f)).isDefined)
+    /** Whether each of `files` was held, in order; loading one makes it
+      * the most recently used, and a miss decodes and stores it. */
+    def hits(files: Int*) = files.map(f => load(f)._2)
     for (f <- 0 until 10) withClue(s"file $f: ") {
       val (rows, hit) = load(f)
       hit shouldBe false
@@ -1104,24 +1111,27 @@ class KeyedUpsertSpec extends SparkSpec {
       cache.bytes should be <= budget
     }
     decodes shouldBe 10
+    // room for three: the last three loaded, and nothing else
     cache.bytes shouldBe 3 * perFile
-    held(0 until 10) shouldBe (0 until 10).map(_ >= 7) // in recency order 7, 8, 9
-    held(Seq(7)) shouldBe Seq(true) // 7 is now the most recently used: 10 evicts 8
-    load(10)._2 shouldBe false
-    held(7 to 10) shouldBe Seq(true, false, true, true)
+    hits(9, 8, 7) shouldBe Seq(true, true, true) // least recent first: 9, 8, 7
+    decodes shouldBe 10
+    load(10)._2 shouldBe false // evicts 9, the least recently used
+    hits(7, 8, 10) shouldBe Seq(true, true, true)
+    decodes shouldBe 11
     // an evicted file decodes again, whole
-    val (again, hit) = load(0)
+    val (again, hit) = load(9)
     hit shouldBe false
     decodes shouldBe 12
-    show(again) shouldBe show(rowsOf(0))
-    load(0)._2 shouldBe true
-    decodes shouldBe 12
+    show(again) shouldBe show(rowsOf(9))
+    hits(9, 0) shouldBe Seq(true, false)
+    decodes shouldBe 13
     cache.bytes should be <= budget
     // a file heavier than the whole budget is returned and never held
     val (big, bigHit) = load(99, 400)
     bigHit shouldBe false
     show(big) shouldBe show(rowsOf(99, 400))
-    held(Seq(99)) shouldBe Seq(false)
+    load(99, 400)._2 shouldBe false
+    decodes shouldBe 15
     cache.bytes should be <= budget
   }
 

@@ -273,7 +273,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("LSH candidate plans count bucket occupancy by aggregation — zero Window nodes") {
-    // Buckets.cap and hashBandPairs must never count occupancy with
+    // Buckets.cap and hashBandPairsManaged must never count occupancy with
     // count(..).over(Window.partitionBy(bucket)): that buffers the
     // mega-bucket the cap exists to kill through ONE WindowExec task
     // before the filter drops it. groupBy+join keeps the hot key in
